@@ -16,27 +16,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Default codegen cache is 100 entries; with a ~400-query catalog a
-      // full roster sweep between a query's two timed runs (the
-      // pass-separated contract below) evicts everything, so pass 2
-      // re-pays Janino compilation on every query. Measured in isolation
-      // this bump moved the total by ~nothing (Janino source-compile is
-      // cheap); the expensive part is the JIT'd machine code behind it,
-      // which -XX:ReservedCodeCacheSize=1g in build.sbt keeps resident
-      // (~35 s across the catalog, measured: 292.9 -> 258.4 s). Kept
-      // anyway: evicted generated classes become unreachable and their
-      // C2 code is flushed with them, so the two settings only hold
-      // steady-state together. A long-lived executor JVM compiles a
-      // repeated plan once — steady-state query cost is the number that
-      // predicts cluster behavior, so keep the whole catalog resident.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     // Warm the JVM/codegen/scan paths once so the first timed query isn't
     // charged for session startup; queries run in sorted order for
     // run-to-run comparability.

@@ -181,18 +181,9 @@ case class WinnowingFingerprint(child: Expression, k: Int, w: Int)
 }
 
 object TextFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles2", exprs => ShingleHashSet(exprs.head, 2), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles3", exprs => ShingleHashSet(exprs.head, 3), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash32", exprs => MinHashSignature(exprs.head, 32), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow", exprs => WinnowingFingerprint(exprs.head, 8, 4), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_bands", exprs => MinHashBands(exprs.head, 16), "built-in")
-  }
+  /** Same as [[GraftFunctions.register]]: registers every graft function
+    * the session does not already resolve. */
+  def register(spark: SparkSession): Unit = GraftFunctions.register(spark)
 
   def shingles2(c: Column): Column = call_function("graft_shingles2", c)
   def shingles3(c: Column): Column = call_function("graft_shingles3", c)

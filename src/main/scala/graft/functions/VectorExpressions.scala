@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -173,12 +175,39 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
 
 /** Session-scoped registration + Column-level API for graft expressions. */
 object GraftFunctions {
+  private def fn(name: String, usage: String, builder: FunctionBuilder) =
+    (FunctionIdentifier(name), new ExpressionInfo("graft", null, name, usage, ""), builder)
+
+  /** Every graft SQL function. [[graft.plans.GraftExtensions]] injects them
+    * when a session is built; `register` adds them to a running session. */
+  val all: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("graft_dot", "codegen float-array dot product",
+      es => FloatDotProduct(es(0), es(1))),
+    fn("graft_sorted_intersect", "codegen sorted-long intersection count",
+      es => SortedLongIntersectCount(es(0), es(1))),
+    fn("graft_self_dot", "codegen float-array self dot (sum of squares)",
+      es => FloatSelfDot(es.head)),
+    fn("graft_shingles2", "sorted distinct hashed word 2-gram set",
+      es => ShingleHashSet(es.head, 2)),
+    fn("graft_shingles3", "sorted distinct hashed word 3-gram set",
+      es => ShingleHashSet(es.head, 3)),
+    fn("graft_minhash32", "32-hash MinHash signature",
+      es => MinHashSignature(es.head, 32)),
+    fn("graft_winnow", "winnowing fingerprint set",
+      es => WinnowingFingerprint(es.head, 8, 4)),
+    fn("graft_minhash_bands", "UDTF: 16 LSH band rows per signature",
+      es => MinHashBands(es.head, 16)),
+  )
+
+  /** Registers each of [[all]] that the session does not already resolve
+    * (check-before-add), so a builder may call `register` once per query
+    * build: re-registering would replace the function and log a warning
+    * each time. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => FloatDotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_intersect",
-      exprs => SortedLongIntersectCount(exprs(0), exprs(1)), "built-in")
+    val registry = spark.sessionState.functionRegistry
+    all.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
   }
 
   /** Codegen'd float-array dot product (requires `register(spark)`). */

@@ -133,7 +133,7 @@ object Recommender extends QueryModule {
     * partitioned BY USER (per-user state only — scales to any user
     * count). */
   private def scoreTop3(owned: DataFrame, model: DataFrame): DataFrame = {
-    // Round-15 stage-level profile (ProfileOne, sf0.1): the chain's real
+    // Round-15 stage-level profile (Cli profile, sf0.1): the chain's real
     // bytes are the ×M-fanned (u, cand) partial-agg write (~50 MB), its
     // final-agg read, and the ~18 MB per-user window exchange. A
     // pre-partition of `owned` by u (so the agg / anti-join / window could

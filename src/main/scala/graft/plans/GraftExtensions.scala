@@ -1,11 +1,7 @@
 package graft.plans
 
-import graft.functions.{FloatDotProduct, FloatSelfDot, MinHashBands,
-  MinHashSignature, ShingleHashSet, SortedLongIntersectCount,
-  WinnowingFingerprint}
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** The library's `SparkSessionExtensions` installer — the deploy-grade
   * registration point for everything graft adds to a session: the as-of
@@ -14,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * Two ways to activate, both covered by ExtensionsSpec:
   *   - config: `spark.sql.extensions=graft.plans.GraftExtensions`
   *     (cluster-wide, no code change — the spark-submit path), or
-  *   - code: `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  *   - code: `.withExtensions(new GraftExtensions)` on the session builder.
   *
   * The per-query `register(spark)` calls inside the operator modules stay
   * as a self-contained fallback (temp-function registry), so queries also
@@ -22,33 +18,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * resolve session-wide without any per-query setup.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def fn(name: String, usage: String,
-      builder: Seq[Expression] => Expression) =
-    (FunctionIdentifier(name),
-      new ExpressionInfo("graft", null, name, usage, ""),
-      builder)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => SelfDotRewrite)
-    Seq(
-      fn("graft_dot", "codegen float-array dot product",
-        es => FloatDotProduct(es(0), es(1))),
-      fn("graft_sorted_intersect", "codegen sorted-long intersection count",
-        es => SortedLongIntersectCount(es(0), es(1))),
-      fn("graft_self_dot", "codegen float-array self dot (sum of squares)",
-        es => FloatSelfDot(es.head)),
-      fn("graft_shingles2", "sorted distinct hashed word 2-gram set",
-        es => ShingleHashSet(es.head, 2)),
-      fn("graft_shingles3", "sorted distinct hashed word 3-gram set",
-        es => ShingleHashSet(es.head, 3)),
-      fn("graft_minhash32", "32-hash MinHash signature",
-        es => MinHashSignature(es.head, 32)),
-      fn("graft_winnow", "winnowing fingerprint set",
-        es => WinnowingFingerprint(es.head, 8, 4)),
-      fn("graft_minhash_bands", "UDTF: 16 LSH band rows per signature",
-        es => MinHashBands(es.head, 16)),
-    ).foreach(ext.injectFunction)
+    GraftFunctions.all.foreach(ext.injectFunction)
   }
 }

@@ -99,6 +99,7 @@ class ContractSpec extends AnyFunSuite {
     * two sweeps keeps every assertion and halves the catalog executions. */
   private def sweep(parts: String): (Map[String, Seq[String]], Map[String, Long]) = {
     val gated = SparkEntry.oracleSql.keySet
+    val prior = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", parts)
     try {
       val rows = Map.newBuilder[String, Seq[String]]
@@ -112,7 +113,7 @@ class ContractSpec extends AnyFunSuite {
         } else counts += name -> df.count()
       }
       (rows.result(), counts.result())
-    } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
   }
   private lazy val sweepAt1 = sweep("1")
   private lazy val sweepAt7 = sweep("7")

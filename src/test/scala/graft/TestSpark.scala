@@ -5,16 +5,6 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites (cheap, avoids per-suite JVM
   * restarts; `local[4]` mirrors the driver's verify config). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4)
   val sf: String = "/root/testdata/sf0.001"
 }
