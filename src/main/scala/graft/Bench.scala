@@ -66,9 +66,6 @@ object Bench {
     // failure keeps the pass-1 timing but is LOUD on stderr — it is the
     // signature of a non-idempotent query (state the hygiene clear
     // doesn't cover), invisible otherwise.
-    // Resolve the query map ONCE: SparkEntry.queries is a def that
-    // rebuilds the full catalog map from every module, and nothing that
-    // isn't the query itself belongs inside the timed window.
     val roster = SparkEntry.queries.toSeq.sortBy(_._1)
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()

@@ -3,15 +3,19 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** One §2-category worth of registered operators.
-  *
-  * Each implemented operator contributes one entry to `queries` and — when
-  * SQL-expressible — a DuckDB-dialect twin in `oracleSql`. `SparkEntry`
-  * concatenates all modules.
-  */
+/** One registered query: its Spark form and, when SQL-expressible, the
+  * DuckDB-dialect twin the oracle compares it with. `oracle = None` marks a
+  * rows-only query (COVERAGE.md names the test that gates each one). */
+final case class Query(
+    name: String,
+    build: (SparkSession, String) => DataFrame,
+    oracle: Option[String])
+
+/** One §2-category worth of registered queries. `SparkEntry` concatenates
+  * every module's catalog; names are globally unique (asserted by
+  * ContractSpec). */
 trait QueryModule {
-  def queries: Map[String, (SparkSession, String) => DataFrame]
-  def oracleSql: Map[String, String]
+  def catalog: Seq[Query]
 }
 
 /** Shared helpers for oracle-safe (hash-matchable) query results.
@@ -29,7 +33,7 @@ object OracleSafe {
     * roundings — observed 1-ulp misses); both engines' string→double parse
     * IS correctly rounded, so exact-decimal → string → double is
     * bit-identical across engines. */
-  private def d2d(c: Column): Column = c.cast("string").cast("double")
+  def d2d(c: Column): Column = c.cast("string").cast("double")
 
   /** Exact money sum: cast to DECIMAL(18,4) pre-sum, back to double post-sum.
     * Bit-identical across Spark and DuckDB regardless of add order. */

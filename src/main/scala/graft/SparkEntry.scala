@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
   /** Every registered module. Order defines nothing semantic; names must be
-    * globally unique (asserted by GraftSpec). */
+    * globally unique (asserted by ContractSpec). */
   def modules: Seq[QueryModule] = Seq(
     ops.Relational,
     ops.Joins,
@@ -42,12 +42,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.Relational.pricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.flatMap(_.queries).toMap
+  /** Spark form of every registered query, by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    modules.flatMap(_.catalog).map(q => q.name -> q.build).toMap
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    modules.flatMap(_.oracleSql).toMap
+  /** DuckDB-dialect oracle SQL of every query that has one, by name. */
+  lazy val oracleSql: Map[String, String] =
+    modules.flatMap(_.catalog).flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

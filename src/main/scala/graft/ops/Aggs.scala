@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{OracleSafe, QueryModule, Tables}
+import graft.{OracleSafe, Query, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -342,11 +342,9 @@ object Aggs extends QueryModule {
     * doubles; the final variance arithmetic and sqrt are then IEEE-exact
     * on both engines — the portable form of a float-unstable aggregate. */
   def varianceStats(s: SparkSession, d: String): DataFrame = {
-    val sx  = sum(col("o_totalprice").cast("decimal(18,4)"))
-      .cast("string").cast("double")
-    val sx2 = sum(col("o_totalprice").cast("decimal(12,4)")
-        * col("o_totalprice").cast("decimal(12,4)"))
-      .cast("string").cast("double")
+    val sx  = d2d(sum(col("o_totalprice").cast("decimal(18,4)")))
+    val sx2 = d2d(sum(col("o_totalprice").cast("decimal(12,4)")
+        * col("o_totalprice").cast("decimal(12,4)")))
     val nn = count(lit(1))
     Tables.orders(s, d)
       .groupBy(col("o_orderstatus"))
@@ -368,14 +366,11 @@ object Aggs extends QueryModule {
     * One partial+final aggregate; nothing beyond the groupBy shuffles. */
   def corrCov(s: SparkSession, d: String): DataFrame = {
     val x = col("l_quantity"); val y = col("l_extendedprice")
-    val sx  = sum(x.cast("decimal(18,4)")).cast("string").cast("double")
-    val sy  = sum(y.cast("decimal(18,4)")).cast("string").cast("double")
-    val sxy = sum(x.cast("decimal(8,4)") * y.cast("decimal(12,4)"))
-      .cast("string").cast("double")
-    val sx2 = sum(x.cast("decimal(8,4)") * x.cast("decimal(8,4)"))
-      .cast("string").cast("double")
-    val sy2 = sum(y.cast("decimal(12,4)") * y.cast("decimal(12,4)"))
-      .cast("string").cast("double")
+    val sx  = d2d(sum(x.cast("decimal(18,4)")))
+    val sy  = d2d(sum(y.cast("decimal(18,4)")))
+    val sxy = d2d(sum(x.cast("decimal(8,4)") * y.cast("decimal(12,4)")))
+    val sx2 = d2d(sum(x.cast("decimal(8,4)") * x.cast("decimal(8,4)")))
+    val sy2 = d2d(sum(y.cast("decimal(12,4)") * y.cast("decimal(12,4)")))
     Tables.lineitem(s, d)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"), sx.as("sum_x"), sy.as("sum_y"),
@@ -398,14 +393,11 @@ object Aggs extends QueryModule {
     * IEEE (+,−,×,÷) on bit-agreed doubles; one partial+final aggregate. */
   def regression(s: SparkSession, d: String): DataFrame = {
     val x = col("l_quantity"); val y = col("l_extendedprice")
-    val sx  = sum(x.cast("decimal(18,4)")).cast("string").cast("double")
-    val sy  = sum(y.cast("decimal(18,4)")).cast("string").cast("double")
-    val sxy = sum(x.cast("decimal(8,4)") * y.cast("decimal(12,4)"))
-      .cast("string").cast("double")
-    val sx2 = sum(x.cast("decimal(8,4)") * x.cast("decimal(8,4)"))
-      .cast("string").cast("double")
-    val sy2 = sum(y.cast("decimal(12,4)") * y.cast("decimal(12,4)"))
-      .cast("string").cast("double")
+    val sx  = d2d(sum(x.cast("decimal(18,4)")))
+    val sy  = d2d(sum(y.cast("decimal(18,4)")))
+    val sxy = d2d(sum(x.cast("decimal(8,4)") * y.cast("decimal(12,4)")))
+    val sx2 = d2d(sum(x.cast("decimal(8,4)") * x.cast("decimal(8,4)")))
+    val sy2 = d2d(sum(y.cast("decimal(12,4)") * y.cast("decimal(12,4)")))
     val n = col("n").cast("double")
     val vx = col("sum_x2") - col("sum_x") * col("sum_x") / n
     val vy = col("sum_y2") - col("sum_y") * col("sum_y") / n
@@ -480,7 +472,7 @@ object Aggs extends QueryModule {
       .filter(col("cum") * 2 >= col("tot"))
       .groupBy(col("l_returnflag"))
       .agg(min(col("l_extendedprice")).as("wmedian"),
-        max(col("tot")).cast("string").cast("double").as("total_weight"))
+        d2d(max(col("tot"))).as("total_weight"))
       .orderBy(col("l_returnflag"))
   }
 
@@ -537,14 +529,13 @@ object Aggs extends QueryModule {
     * 100-TB plan is the same two-stage hash agg. */
   def skewKurtosis(s: SparkSession, d: String): DataFrame = {
     def dq = col("l_quantity").cast("decimal(8,2)")
-    def d2dbl(c: org.apache.spark.sql.Column) = c.cast("string").cast("double")
     val agg = Tables.lineitem(s, d)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).cast("double").as("n"),
-        d2dbl(sum(dq)).as("s1"),
-        d2dbl(sum(dq * dq)).as("s2"),
-        d2dbl(sum(dq * dq * dq)).as("s3"),
-        d2dbl(sum(dq * dq * dq * dq)).as("s4"))
+        d2d(sum(dq)).as("s1"),
+        d2d(sum(dq * dq)).as("s2"),
+        d2d(sum(dq * dq * dq)).as("s3"),
+        d2d(sum(dq * dq * dq * dq)).as("s4"))
     val n = col("n"); val mean = col("s1") / n
     val m = agg.select(col("l_returnflag"), n, mean.as("mean"),
       ((col("s2") / n) - (mean * mean)).as("m2"),
@@ -704,13 +695,11 @@ object Aggs extends QueryModule {
         floor(col("l_extendedprice") * 100.0 + 0.5).cast("long").as("y"))
     val g = li.groupBy(col("grp"))
       .agg(count(lit(1)).as("n_g"),
-        sum(col("y").cast("decimal(20,0)")).cast("decimal(38,0)")
-          .cast("string").cast("double").as("sy"))
+        d2d(sum(col("y").cast("decimal(20,0)")).cast("decimal(38,0)")).as("sy"))
     val tot = li.agg(count(lit(1)).as("n"),
-      sum(col("y").cast("decimal(20,0)")).cast("decimal(38,0)")
-        .cast("string").cast("double").as("sy"),
-      sum(col("y").cast("decimal(18,0)") * col("y").cast("decimal(18,0)"))
-        .cast("decimal(38,0)").cast("string").cast("double").as("syy"))
+      d2d(sum(col("y").cast("decimal(20,0)")).cast("decimal(38,0)")).as("sy"),
+      d2d(sum(col("y").cast("decimal(18,0)") * col("y").cast("decimal(18,0)"))
+        .cast("decimal(38,0)")).as("syy"))
     val sumT = g
       .select((col("sy") * col("sy") / col("n_g").cast("double")).as("t_g"))
       .agg(count(lit(1)).as("k"),
@@ -773,8 +762,8 @@ object Aggs extends QueryModule {
       .agg(sum(col("c")).as("rev"))
     rev.groupBy(col("s_nationkey"))
       .agg(count(lit(1)).as("n_suppliers"), sum(col("rev")).as("tot_cents"),
-        sum(col("rev").cast("decimal(19,0)") * col("rev"))
-          .cast("decimal(38,0)").cast("string").cast("double").as("sq"))
+        d2d(sum(col("rev").cast("decimal(19,0)") * col("rev"))
+          .cast("decimal(38,0)")).as("sq"))
       .select(col("s_nationkey"), col("n_suppliers"), col("tot_cents"),
         (col("sq") / (col("tot_cents").cast("double") *
           col("tot_cents").cast("double"))).as("hhi"))
@@ -1033,9 +1022,8 @@ object Aggs extends QueryModule {
       .groupBy(col("grp")).agg(sum(col("v").cast("decimal(18,4)")).as("psum"))
     ns.join(full, Seq("grp"), "left").join(part, Seq("grp"), "left")
       .select(col("grp"), col("n"), (col("k2") - col("k1")).as("n_kept"),
-        ((coalesce(col("fsum"), lit(0).cast("decimal(28,4)")) +
-          coalesce(col("psum"), lit(0).cast("decimal(28,4)")))
-          .cast("string").cast("double") /
+        (d2d((coalesce(col("fsum"), lit(0).cast("decimal(28,4)")) +
+          coalesce(col("psum"), lit(0).cast("decimal(28,4)")))) /
           (col("k2") - col("k1")).cast("double")).as("trimmed_mean"))
       .orderBy(col("grp"))
   }
@@ -1090,11 +1078,9 @@ object Aggs extends QueryModule {
         col("base") + coalesce(sum(col("cnt")).over(wIn), lit(0L)))
       .groupBy(col("seg"))
       .agg(sum(col("cnt")).as("n"),
-        sum(col("v").cast("decimal(12,4)") * col("cnt"))
-          .cast("string").cast("double").as("s0"),
-        sum(col("v").cast("decimal(12,4)") *
-          (col("cnt") * (lit(2L) * col("cb") + col("cnt") + 1L)))
-          .cast("string").cast("double").as("twos1"))
+        d2d(sum(col("v").cast("decimal(12,4)") * col("cnt"))).as("s0"),
+        d2d(sum(col("v").cast("decimal(12,4)") *
+          (col("cnt") * (lit(2L) * col("cb") + col("cnt") + 1L)))).as("twos1"))
       .select(col("seg"), col("n"),
         (col("s0") / col("n").cast("double")).as("mean_balance"),
         (col("twos1") / (col("n").cast("double") * col("s0")) -
@@ -1180,53 +1166,8 @@ object Aggs extends QueryModule {
       .orderBy(col("n_replicas"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_bootstrap_ci"  -> (bootstrapCi _),
-    "agg_mutual_info"   -> (mutualInfo _),
-    "agg_gini_wealth"   -> (giniWealth _),
-    "agg_hist2d"        -> (hist2d _),
-    "agg_trimmed_mean"  -> (trimmedMean _),
-    "agg_quantiles_2pass" -> (quantiles2Pass _),
-    "agg_mann_whitney"  -> (mannWhitney _),
-    "agg_ks_test"       -> (ksTest _),
-    "agg_median_2pass"  -> (median2Pass _),
-    "agg_bitmap_distinct" -> (bitmapDistinct _),
-    "agg_chi_square"    -> (chiSquare _),
-    "agg_anova_f"       -> (anovaF _),
-    "agg_tukey_outliers" -> (tukeyOutliers _),
-    "agg_hhi"           -> (hhi _),
-    "agg_mode"          -> (mode _),
-    "agg_skew_kurtosis" -> (skewKurtosis _),
-    "agg_equidepth"     -> (equidepthHistogram _),
-    "agg_equidepth_sketch" -> (equidepthSketch _),
-    "agg_regression"    -> (regression _),
-    "agg_weighted_median" -> (weightedMedian _),
-    "agg_booleans"      -> (booleanAggs _),
-    "agg_corr_cov"      -> (corrCov _),
-    "agg_argmax_udaf"   -> (argMaxOrder _),
-    "agg_topk_heap"     -> (topKHeap _),
-    "agg_percentile_disc" -> (percentileDisc _),
-    "agg_pivot"         -> (pivotStatusPriority _),
-    "agg_unpivot"       -> (unpivotPartMetrics _),
-    "agg_variance"      -> (varianceStats _),
-    "agg_stats"         -> (stats _),
-    "agg_rollup"        -> (rollupStatus _),
-    "agg_cube"          -> (cubeFlags _),
-    "agg_grouping_sets" -> (groupingSets _),
-    "agg_filtered"      -> (filteredAgg _),
-    "agg_collect"       -> (collectSorted _),
-    "agg_quantiles"     -> (quantiles _),
-    "agg_histogram"     -> (histogram _),
-    "agg_approx_distinct" -> (approxDistinct _),
-    "agg_hll_union"       -> (hllUnion _),
-    "agg_approx_quantiles" -> (approxQuantiles _),
-    "agg_heavy_hitters" -> (heavyHitters _),
-    "agg_cms_tokens"    -> (cmsTokens _),
-    "agg_winsorize"     -> (winsorize _),
-  )
-
-  override def oracleSql: Map[String, String] = Map(
-    "agg_bootstrap_ci" ->
+  override def catalog: Seq[Query] = Seq(
+    Query("agg_bootstrap_ci", bootstrapCi, Some(
       """WITH o AS (SELECT o_orderkey,
         |    CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
         |  FROM orders),
@@ -1260,8 +1201,8 @@ object Aggs extends QueryModule {
         |pt AS (SELECT CAST(SUM(cents) AS DOUBLE) /
         |    (CAST(COUNT(*) AS DOUBLE) * 100.0) AS mean FROM o)
         |SELECT mean, l[2] AS ci_lo, l[31] AS ci_hi, n_replicas
-        |FROM ms CROSS JOIN pt ORDER BY n_replicas""".stripMargin,
-    "agg_mutual_info" ->
+        |FROM ms CROSS JOIN pt ORDER BY n_replicas""".stripMargin)),
+    Query("agg_mutual_info", mutualInfo, Some(
       """WITH cells AS (
         |  SELECT event_type, CAST(dayofweek(ts) + 1 AS INT) AS dow,
         |    CAST(COUNT(*) AS BIGINT) AS o
@@ -1283,9 +1224,9 @@ object Aggs extends QueryModule {
         |  FROM terms)
         |SELECT event_type, dow, o AS observed, contrib, mi_nats
         |FROM terms CROSS JOIN mi
-        |ORDER BY event_type, dow""".stripMargin,
+        |ORDER BY event_type, dow""".stripMargin)),
     // INDEPENDENT: row-level rank() + peer counts vs the grid algebra.
-    "agg_gini_wealth" ->
+    Query("agg_gini_wealth", giniWealth, Some(
       """WITH s AS (
         |  SELECT c_mktsegment AS seg, c_acctbal AS v FROM customer
         |  WHERE c_acctbal > 0),
@@ -1302,18 +1243,18 @@ object Aggs extends QueryModule {
         |SELECT seg, n, s0 / CAST(n AS DOUBLE) AS mean_balance,
         |  twos1 / (CAST(n AS DOUBLE) * s0) -
         |    CAST(n + 1 AS DOUBLE) / CAST(n AS DOUBLE) AS gini
-        |FROM a ORDER BY seg""".stripMargin,
-    "agg_hist2d" ->
+        |FROM a ORDER BY seg""".stripMargin)),
+    Query("agg_hist2d", hist2d, Some(
       s"""SELECT CAST(floor(l_extendedprice / 20000.0) AS BIGINT)
          |    AS price_band,
          |  CAST(floor(l_quantity / 10.0) AS BIGINT) AS qty_band,
          |  CAST(COUNT(*) AS BIGINT) AS n,
          |  ${sqlDsum("CAST(l_extendedprice AS DECIMAL(18,4))")} AS revenue
          |FROM lineitem GROUP BY 1, 2
-         |ORDER BY price_band, qty_band""".stripMargin,
+         |ORDER BY price_band, qty_band""".stripMargin)),
     // INDEPENDENT: full per-group sort, keep ranks in (k1, k2], exact
     // decimal sum routed via VARCHAR (OracleSafe d2d convention).
-    "agg_trimmed_mean" ->
+    Query("agg_trimmed_mean", trimmedMean, Some(
       """WITH r AS (
         |  SELECT o_orderpriority AS grp, o_totalprice AS v,
         |    row_number() OVER (PARTITION BY o_orderpriority
@@ -1328,8 +1269,8 @@ object Aggs extends QueryModule {
         |    CAST(k2 - k1 AS DOUBLE) AS trimmed_mean
         |FROM r JOIN k USING (grp)
         |WHERE rn > k1 AND rn <= k2
-        |GROUP BY k.grp, k.n, k1, k2 ORDER BY k.grp""".stripMargin,
-    "agg_quantiles_2pass" ->
+        |GROUP BY k.grp, k.n, k1, k2 ORDER BY k.grp""".stripMargin)),
+    Query("agg_quantiles_2pass", quantiles2Pass, Some(
       """WITH r AS (
         |  SELECT o_orderpriority AS grp, o_totalprice AS v,
         |    row_number() OVER (PARTITION BY o_orderpriority
@@ -1341,10 +1282,10 @@ object Aggs extends QueryModule {
         |SELECT ks.grp, CAST(p AS INT) AS p, CAST(ks.n AS BIGINT) AS n,
         |  CAST(k AS BIGINT) AS k, r.v AS value
         |FROM ks JOIN r ON r.grp = ks.grp AND r.rn = ks.k
-        |ORDER BY ks.grp, p""".stripMargin,
+        |ORDER BY ks.grp, p""".stripMargin)),
     // INDEPENDENT derivation: ROW-LEVEL rank() + peer-count windows vs
     // the Spark side's distinct-value algebra.
-    "agg_mann_whitney" ->
+    Query("agg_mann_whitney", mannWhitney, Some(
       """WITH s AS (
         |  SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 2 END
         |    AS g, o_totalprice AS v
@@ -1369,8 +1310,8 @@ object Aggs extends QueryModule {
         |    (CAST(n1 + n2 + 1 AS DOUBLE) -
         |     CAST(tie3 AS DOUBLE) /
         |       CAST((n1 + n2) * (n1 + n2 - 1) AS DOUBLE))) AS z
-        |FROM a CROSS JOIN t ORDER BY n1""".stripMargin,
-    "agg_ks_test" ->
+        |FROM a CROSS JOIN t ORDER BY n1""".stripMargin)),
+    Query("agg_ks_test", ksTest, Some(
       """WITH s AS (
         |  SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 2 END
         |    AS g, o_totalprice AS v
@@ -1394,10 +1335,10 @@ object Aggs extends QueryModule {
         |SELECT n1, n2, d_stat,
         |  sqrt(CAST(n1 * n2 AS DOUBLE) / CAST(n1 + n2 AS DOUBLE)) * d_stat
         |    AS scaled_d
-        |FROM d ORDER BY n1""".stripMargin,
+        |FROM d ORDER BY n1""".stripMargin)),
     // INDEPENDENT derivation: full per-group sort + row_number order
     // statistics — equality proves the bucket-localization arithmetic.
-    "agg_median_2pass" ->
+    Query("agg_median_2pass", median2Pass, Some(
       """WITH r AS (
         |  SELECT o_orderpriority AS grp, o_totalprice AS v,
         |    row_number() OVER (PARTITION BY o_orderpriority
@@ -1409,19 +1350,19 @@ object Aggs extends QueryModule {
         |  MIN(CASE WHEN rn = (n + 2) // 2 THEN v END) AS hi_mid,
         |  (MIN(CASE WHEN rn = (n + 1) // 2 THEN v END) +
         |   MIN(CASE WHEN rn = (n + 2) // 2 THEN v END)) / 2.0 AS median
-        |FROM r GROUP BY grp, n ORDER BY grp""".stripMargin,
+        |FROM r GROUP BY grp, n ORDER BY grp""".stripMargin)),
     // Both bitmap and built-in columns pin to the same COUNT(DISTINCT):
     // equality proves the bitmap aggregate exact.
-    "agg_bitmap_distinct" ->
+    Query("agg_bitmap_distinct", bitmapDistinct, Some(
       """SELECT o_orderpriority,
         |  COUNT(DISTINCT o_custkey) AS n_customers_bitmap,
         |  COUNT(DISTINCT o_custkey) AS n_customers_exact,
         |  MAX(o_custkey) AS max_key,
         |  CAST(COUNT(*) AS BIGINT) AS n_orders
         |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin)),
     // Spark dayofweek() is 1=Sunday..7; DuckDB dayofweek() is 0=Sunday..6.
-    "agg_chi_square" ->
+    Query("agg_chi_square", chiSquare, Some(
       """WITH cells AS (
         |  SELECT event_type, CAST(dayofweek(ts) + 1 AS INT) AS dow,
         |    CAST(COUNT(*) AS BIGINT) AS observed
@@ -1448,8 +1389,8 @@ object Aggs extends QueryModule {
         |SELECT event_type, dow, observed, expected, contrib, chi2,
         |  CAST((n_types - 1) * (n_dows - 1) AS BIGINT) AS dof
         |FROM t2 CROSS JOIN chi
-        |ORDER BY event_type, dow""".stripMargin,
-    "agg_anova_f" ->
+        |ORDER BY event_type, dow""".stripMargin)),
+    Query("agg_anova_f", anovaF, Some(
       """WITH li AS MATERIALIZED (
         |  SELECT l_returnflag AS grp,
         |    CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS y
@@ -1483,8 +1424,8 @@ object Aggs extends QueryModule {
         |  (ssb / CAST(k - 1 AS DOUBLE)) /
         |    (ssw / CAST(n - k AS DOUBLE)) AS f_stat,
         |  ssb / (ssb + ssw) AS eta_sq
-        |FROM f""".stripMargin,
-    "agg_hhi" ->
+        |FROM f""".stripMargin)),
+    Query("agg_hhi", hhi, Some(
       """WITH rev AS MATERIALIZED (
         |  SELECT s.s_nationkey, l.l_suppkey,
         |    CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100.0 + 0.5) AS BIGINT))
@@ -1497,8 +1438,8 @@ object Aggs extends QueryModule {
         |    AS DECIMAL(38,0)) AS VARCHAR) AS DOUBLE) /
         |  (CAST(CAST(SUM(rev) AS BIGINT) AS DOUBLE) *
         |   CAST(CAST(SUM(rev) AS BIGINT) AS DOUBLE)) AS hhi
-        |FROM rev GROUP BY 1 ORDER BY 1""".stripMargin,
-    "agg_tukey_outliers" ->
+        |FROM rev GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("agg_tukey_outliers", tukeyOutliers, Some(
       """WITH li AS MATERIALIZED (
         |  SELECT l_suppkey AS sk,
         |    CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS y
@@ -1518,16 +1459,16 @@ object Aggs extends QueryModule {
         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
         |FROM li JOIN qs ON qs.sk = li.sk
         |GROUP BY li.sk, qs.n, qs.q1_c, qs.q3_c
-        |ORDER BY n_outliers DESC, li.sk ASC LIMIT 20""".stripMargin,
-    "agg_mode" ->
+        |ORDER BY n_outliers DESC, li.sk ASC LIMIT 20""".stripMargin)),
+    Query("agg_mode", mode, Some(
       """WITH c AS (SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
         |  FROM orders GROUP BY 1, 2),
         |r AS (SELECT *, row_number() OVER (PARTITION BY o_orderstatus
         |  ORDER BY n DESC, o_orderpriority) AS rn FROM c)
         |SELECT o_orderstatus, o_orderpriority AS mode_priority,
         |  CAST(n AS BIGINT) AS mode_n
-        |FROM r WHERE rn = 1 ORDER BY o_orderstatus""".stripMargin,
-    "agg_skew_kurtosis" ->
+        |FROM r WHERE rn = 1 ORDER BY o_orderstatus""".stripMargin)),
+    Query("agg_skew_kurtosis", skewKurtosis, Some(
       """WITH s AS (SELECT l_returnflag,
         |  CAST(COUNT(*) AS DOUBLE) AS n,
         |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(8,2))) AS VARCHAR) AS DOUBLE) AS s1,
@@ -1544,12 +1485,12 @@ object Aggs extends QueryModule {
         |SELECT l_returnflag, CAST(n AS BIGINT) AS n, mean,
         |  (m3/(m2*sqrt(m2))) AS skewness,
         |  ((m4/(m2*m2)) - 3.0) AS excess_kurtosis
-        |FROM m ORDER BY l_returnflag""".stripMargin,
+        |FROM m ORDER BY l_returnflag""".stripMargin)),
     // INDEPENDENT: one full-sort row_number locates the boundary order
     // statistics directly; the interpolation is the same explicit IEEE
     // expression as the Spark side (quantile_cont itself is NOT used, so
     // the gate checks the 2-pass localization against first principles).
-    "agg_equidepth" ->
+    Query("agg_equidepth", equidepthHistogram, Some(
       """WITH nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM lineitem),
         |t AS (SELECT l_extendedprice AS p,
         |  row_number() OVER (ORDER BY l_extendedprice) AS rn FROM lineitem),
@@ -1573,8 +1514,11 @@ object Aggs extends QueryModule {
         |  FROM lineitem CROSS JOIN b)
         |SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n,
         |  MIN(p) AS lo, MAX(p) AS hi
-        |FROM a GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "agg_booleans" ->
+        |FROM a GROUP BY bucket ORDER BY bucket""".stripMargin)),
+    // Rows-only: KLL sketch boundaries are engine-specific; Round9Spec
+    // asserts the equal-frequency band.
+    Query("agg_equidepth_sketch", equidepthSketch, None),
+    Query("agg_booleans", booleanAggs, Some(
       """SELECT o_orderstatus,
         |  CAST(bool_and(o_totalprice > 1000) AS INT) AS all_over_1k,
         |  CAST(bool_or(o_totalprice > 400000) AS INT) AS any_over_400k,
@@ -1584,8 +1528,8 @@ object Aggs extends QueryModule {
         |  arg_min(o_orderkey, o_totalprice * 4294967296 + o_orderkey)
         |    AS key_of_min
         |FROM orders GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
-    "agg_weighted_median" ->
+        |ORDER BY o_orderstatus""".stripMargin)),
+    Query("agg_weighted_median", weightedMedian, Some(
       """WITH t AS (
         |  SELECT l_returnflag, l_extendedprice,
         |    SUM(CAST(l_quantity AS DECIMAL(18,4))) OVER (
@@ -1597,8 +1541,8 @@ object Aggs extends QueryModule {
         |SELECT l_returnflag,
         |  MIN(CASE WHEN cum * 2 >= tot THEN l_extendedprice END) AS wmedian,
         |  CAST(CAST(MAX(tot) AS VARCHAR) AS DOUBLE) AS total_weight
-        |FROM t GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "agg_regression" ->
+        |FROM t GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Query("agg_regression", regression, Some(
       """SELECT l_returnflag, n,
         |  (sum_xy - sum_x * sum_y / CAST(n AS DOUBLE))
         |    / (sum_x2 - sum_x * sum_x / CAST(n AS DOUBLE)) AS slope,
@@ -1625,8 +1569,8 @@ object Aggs extends QueryModule {
         |      * CAST(l_extendedprice AS DECIMAL(19,4))) AS VARCHAR)
         |      AS DOUBLE) AS sum_y2
         |  FROM lineitem GROUP BY l_returnflag) t
-        |ORDER BY l_returnflag""".stripMargin,
-    "agg_corr_cov" ->
+        |ORDER BY l_returnflag""".stripMargin)),
+    Query("agg_corr_cov", corrCov, Some(
       """SELECT l_returnflag, n,
         |  (sum_xy - sum_x * sum_y / n) / (n - 1) AS cov_samp,
         |  (sum_xy - sum_x * sum_y / n)
@@ -1648,8 +1592,8 @@ object Aggs extends QueryModule {
         |      * CAST(l_extendedprice AS DECIMAL(19,4))) AS VARCHAR)
         |      AS DOUBLE) AS sum_y2
         |  FROM lineitem GROUP BY l_returnflag) t
-        |ORDER BY l_returnflag""".stripMargin,
-    "agg_winsorize" ->
+        |ORDER BY l_returnflag""".stripMargin)),
+    Query("agg_winsorize", winsorize, Some(
       """WITH b AS (
         |  SELECT event_type, quantile_cont(value, 0.05) AS p05,
         |    quantile_cont(value, 0.95) AS p95
@@ -1661,24 +1605,24 @@ object Aggs extends QueryModule {
         |    THEN CAST(value AS DECIMAL(18,4)) END) AS VARCHAR) AS DOUBLE)
         |    AS sum_kept
         |FROM events e JOIN b USING (event_type)
-        |GROUP BY e.event_type ORDER BY event_type""".stripMargin,
-    "agg_unpivot" ->
+        |GROUP BY e.event_type ORDER BY event_type""".stripMargin)),
+    Query("agg_unpivot", unpivotPartMetrics, Some(
       """SELECT p_partkey, metric, value FROM (
         |  SELECT p_partkey, 'size' AS metric, CAST(p_size AS DOUBLE) AS value
         |  FROM part WHERE p_partkey <= 500
         |  UNION ALL
         |  SELECT p_partkey, 'retailprice', p_retailprice
         |  FROM part WHERE p_partkey <= 500) u
-        |ORDER BY p_partkey, metric""".stripMargin,
-    "agg_pivot" ->
+        |ORDER BY p_partkey, metric""".stripMargin)),
+    Query("agg_pivot", pivotStatusPriority, Some(
       """SELECT o_orderstatus,
         |  COUNT(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS p1,
         |  COUNT(*) FILTER (WHERE o_orderpriority = '2-HIGH') AS p2,
         |  COUNT(*) FILTER (WHERE o_orderpriority = '3-MEDIUM') AS p3,
         |  COUNT(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') AS p4,
         |  COUNT(*) FILTER (WHERE o_orderpriority = '5-LOW') AS p5
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "agg_variance" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
+    Query("agg_variance", varianceStats, Some(
       """SELECT o_orderstatus, n, sum_x / n AS mean,
         |  (sum_x2 - sum_x * sum_x / n) / (n - 1) AS variance,
         |  sqrt((sum_x2 - sum_x * sum_x / n) / (n - 1)) AS stddev
@@ -1688,8 +1632,8 @@ object Aggs extends QueryModule {
         |    CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(19,4))
         |      * CAST(o_totalprice AS DECIMAL(19,4))) AS VARCHAR) AS DOUBLE) AS sum_x2
         |  FROM orders GROUP BY o_orderstatus) t
-        |ORDER BY o_orderstatus""".stripMargin,
-    "agg_percentile_disc" ->
+        |ORDER BY o_orderstatus""".stripMargin)),
+    Query("agg_percentile_disc", percentileDisc, Some(
       """SELECT o_orderpriority,
         |  MIN(CASE WHEN cd >= 0.25 THEN o_totalprice END) AS p25_disc,
         |  MIN(CASE WHEN cd >= 0.5 THEN o_totalprice END) AS p50_disc,
@@ -1700,65 +1644,68 @@ object Aggs extends QueryModule {
         |    cume_dist() OVER (PARTITION BY o_orderpriority
         |      ORDER BY o_totalprice) AS cd
         |  FROM orders) t
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "agg_topk_heap" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
+    Query("agg_topk_heap", topKHeap, Some(
       """SELECT o_custkey, rk, o_orderkey, o_totalprice FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    row_number() OVER (PARTITION BY o_custkey
         |      ORDER BY o_totalprice DESC, o_orderkey) AS rk
         |  FROM orders) t
-        |WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin,
-    "agg_argmax_udaf" ->
+        |WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin)),
+    Query("agg_argmax_udaf", argMaxOrder, Some(
       """SELECT o_custkey, o_orderkey AS best_order FROM (
         |  SELECT o_custkey, o_orderkey, row_number() OVER (
         |    PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
         |  FROM orders) t
-        |WHERE rn = 1 ORDER BY o_custkey""".stripMargin,
-    "agg_stats" ->
+        |WHERE rn = 1 ORDER BY o_custkey""".stripMargin)),
+    Query("agg_stats", stats, Some(
       s"""SELECT o_orderpriority, COUNT(*) AS n,
          |  COUNT(DISTINCT o_custkey) AS n_customers,
          |  MIN(o_totalprice) AS min_price, MAX(o_totalprice) AS max_price,
          |  ${sqlDsum("CAST(o_totalprice AS DECIMAL(18,4))")} AS sum_price,
          |  ${sqlDsum("CAST(o_totalprice AS DECIMAL(18,4))")} / COUNT(o_totalprice) AS avg_price
-         |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "agg_rollup" ->
+         |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
+    Query("agg_rollup", rollupStatus, Some(
       s"""SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
          |  ${sqlDsum("CAST(o_totalprice AS DECIMAL(18,4))")} AS sum_price
          |FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-         |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "agg_cube" ->
+         |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin)),
+    Query("agg_cube", cubeFlags, Some(
       s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
          |  ${sqlDsum("CAST(l_quantity AS DECIMAL(18,4))")} AS sum_qty
          |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-         |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "agg_grouping_sets" ->
+         |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin)),
+    Query("agg_grouping_sets", groupingSets, Some(
       """SELECT o_orderstatus, o_orderpriority,
         |  GROUPING(o_orderstatus) AS g_status,
         |  GROUPING(o_orderpriority) AS g_priority, COUNT(*) AS n
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "agg_filtered" ->
+        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin)),
+    Query("agg_filtered", filteredAgg, Some(
       s"""SELECT l_returnflag,
          |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) FILTER (WHERE l_discount > 0.05) AS VARCHAR) AS DOUBLE) AS qty_high_disc,
          |  COUNT(*) FILTER (WHERE l_discount > 0.05) AS n_high_disc,
          |  COUNT(*) AS n_all
-         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "agg_collect" ->
+         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Query("agg_collect", collectSorted, Some(
       """SELECT o_orderstatus,
         |  string_agg(DISTINCT o_orderpriority, ',' ORDER BY o_orderpriority) AS priorities
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "agg_quantiles" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
+    Query("agg_quantiles", quantiles, Some(
       """SELECT o_orderstatus,
         |  quantile_cont(o_totalprice, 0.5) AS p50,
         |  quantile_cont(o_totalprice, 0.9) AS p90,
         |  quantile_cont(o_totalprice, 0.99) AS p99
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "agg_histogram" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
+    Query("agg_histogram", histogram, Some(
       """SELECT CAST(FLOOR(value / 20.0) AS BIGINT) AS bucket, COUNT(*) AS n
-        |FROM events GROUP BY 1 ORDER BY bucket""".stripMargin,
-    // agg_approx_distinct: intentionally no oracle (engine-specific sketch)
-    // agg_equidepth_sketch: intentionally no oracle (KLL sketch boundaries
-    // are engine-specific); Round9Spec asserts the equal-frequency band.
+        |FROM events GROUP BY 1 ORDER BY bucket""".stripMargin)),
+    // Rows-only: sketch estimates are engine-specific.
+    Query("agg_approx_distinct", approxDistinct, None),
+    Query("agg_hll_union", hllUnion, None),
+    Query("agg_approx_quantiles", approxQuantiles, None),
+    Query("agg_heavy_hitters", heavyHitters, None),
+    Query("agg_cms_tokens", cmsTokens, None),
   )
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -629,33 +629,11 @@ object Corpus extends QueryModule {
       .orderBy(col("metric"), col("scope"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_dataset_card" -> (datasetCard _),
-    "corpus_apportion" -> (apportion _),
-    "corpus_chunk_overlap" -> (chunkOverlap _),
-    "corpus_temperature_mix" -> (temperatureMix _),
-    "corpus_dsir"         -> (dsirScore _),
-    "pipeline_corpus"     -> (corpusBuild _),
-    "corpus_split"        -> (hashSplit _),
-    "corpus_weighted_sample" -> (weightedSample _),
-    "corpus_pack"         -> (packSequences _),
-    "corpus_length_batches" -> (lengthBatches _),
-    "corpus_epoch_repeat" -> (epochRepeat _),
-    "corpus_shard_manifest" -> (shardManifest _),
-    "corpus_source_quota" -> (sourceQuota _),
-    "corpus_global_ids"   -> (globalIds _),
-    "corpus_interleave"   -> (interleave _),
-    "corpus_token_budget" -> (tokenBudget _),
-    "text_repetition"     -> (repetition _),
-    "text_decontaminate"  -> (decontaminate _),
-    "text_boilerplate"    -> (boilerplate _),
-  )
-
   private val sqlToks =
     "list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '')"
 
-  override def oracleSql: Map[String, String] = Map(
-    "corpus_dataset_card" ->
+  override def catalog: Seq[Query] = Seq(
+    Query("corpus_dataset_card", datasetCard, Some(
       s"""SELECT metric, scope, value FROM (
          |  SELECT 'n_docs' AS metric, lang AS scope,
          |    CAST(COUNT(*) AS DOUBLE) AS value
@@ -678,8 +656,8 @@ object Corpus extends QueryModule {
          |  UNION ALL
          |  SELECT 'n_sources', 'all', CAST(COUNT(DISTINCT source) AS DOUBLE)
          |  FROM documents) t
-         |ORDER BY metric, scope""".stripMargin,
-    "corpus_apportion" ->
+         |ORDER BY metric, scope""".stripMargin)),
+    Query("corpus_apportion", apportion, Some(
       s"""WITH t AS (
          |  SELECT source, CAST(SUM(len($sqlToks)) AS BIGINT) AS toks
          |  FROM documents GROUP BY source),
@@ -697,8 +675,8 @@ object Corpus extends QueryModule {
          |  CAST(CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT) AS extra,
          |  CAST(base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT)
          |    AS quota
-         |FROM r ORDER BY source""".stripMargin,
-    "corpus_chunk_overlap" ->
+         |FROM r ORDER BY source""".stripMargin)),
+    Query("corpus_chunk_overlap", chunkOverlap, Some(
       s"""WITH t AS (
          |  SELECT doc_id, $sqlToks AS ws, len($sqlToks) AS n FROM documents),
          |c AS (
@@ -715,8 +693,8 @@ object Corpus extends QueryModule {
          |FROM (SELECT doc_id, ws, n,
          |    unnest(generate_series(0, n_chunks - 1)) AS chunk_idx
          |  FROM c) x
-         |ORDER BY doc_id, chunk_idx""".stripMargin,
-    "corpus_temperature_mix" ->
+         |ORDER BY doc_id, chunk_idx""".stripMargin)),
+    Query("corpus_temperature_mix", temperatureMix, Some(
       """WITH n AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_s
         |  FROM documents GROUP BY lang),
         |tw AS (SELECT list_reduce(list_prepend(0.0, list(
@@ -732,8 +710,8 @@ object Corpus extends QueryModule {
         |  FROM documents)
         |SELECT r.doc_id, r.lang, rn
         |FROM r JOIN tgt USING (lang) WHERE rn <= target_n
-        |ORDER BY lang, rn""".stripMargin,
-    "corpus_dsir" ->
+        |ORDER BY lang, rn""".stripMargin)),
+    Query("corpus_dsir", dsirScore, Some(
       s"""WITH toks AS (
          |  SELECT doc_id,
          |    CAST(('0x' || substring(md5(tok), 1, 8)) AS BIGINT) % 16 AS bucket
@@ -750,8 +728,8 @@ object Corpus extends QueryModule {
          |  FROM db JOIN b USING (bucket) CROSS JOIN tot
          |  GROUP BY db.doc_id)
          |SELECT doc_id, score FROM scored
-         |ORDER BY score DESC, doc_id LIMIT 50""".stripMargin,
-    "pipeline_corpus" ->
+         |ORDER BY score DESC, doc_id LIMIT 50""".stripMargin)),
+    Query("pipeline_corpus", corpusBuild, Some(
       s"""WITH toks AS (
          |  SELECT doc_id, $sqlToks AS t FROM documents),
          |sh AS (
@@ -781,8 +759,8 @@ object Corpus extends QueryModule {
          |SELECT split, lang, COUNT(*) AS n_docs,
          |  CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
          |  MIN(doc_id) AS first_doc
-         |FROM split GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "corpus_weighted_sample" ->
+         |FROM split GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("corpus_weighted_sample", weightedSample, Some(
       """WITH k AS (
         |  SELECT doc_id, lang, n_chars,
         |    CAST(FLOOR(1.0e9 * LN((CAST(CAST(('0x' ||
@@ -791,8 +769,8 @@ object Corpus extends QueryModule {
         |      CAST(n_chars AS DOUBLE)) AS BIGINT) AS key_nano
         |  FROM documents WHERE n_chars > 0)
         |SELECT doc_id, lang, n_chars, key_nano
-        |FROM k ORDER BY key_nano DESC, doc_id LIMIT 50""".stripMargin,
-    "corpus_split" ->
+        |FROM k ORDER BY key_nano DESC, doc_id LIMIT 50""".stripMargin)),
+    Query("corpus_split", hashSplit, Some(
       """WITH b AS (
         |  SELECT doc_id, lang, n_chars,
         |    CAST(('0x' || substring(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))
@@ -802,8 +780,8 @@ object Corpus extends QueryModule {
         |            WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
         |  lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS total_chars,
         |  MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "text_repetition" ->
+        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("text_repetition", repetition, Some(
       s"""WITH toks AS (
          |  SELECT doc_id, $sqlToks AS t FROM documents),
          |uni AS (
@@ -825,8 +803,8 @@ object Corpus extends QueryModule {
          |    AS top_bigram_frac,
          |  CAST(n_distinct AS DOUBLE) / n_tokens AS distinct_ratio
          |FROM us LEFT JOIN bs ON us.doc_id = bs.doc_id
-         |ORDER BY us.doc_id""".stripMargin,
-    "text_decontaminate" ->
+         |ORDER BY us.doc_id""".stripMargin)),
+    Query("text_decontaminate", decontaminate, Some(
       s"""WITH toks AS (
          |  SELECT doc_id, $sqlToks AS t FROM documents),
          |sh AS (
@@ -837,8 +815,8 @@ object Corpus extends QueryModule {
          |corp AS (SELECT DISTINCT doc_id, sh FROM sh WHERE doc_id % 53 <> 0)
          |SELECT doc_id, COUNT(*) AS n_overlap
          |FROM corp JOIN bench USING (sh)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "corpus_source_quota" ->
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    Query("corpus_source_quota", sourceQuota, Some(
       """WITH r AS (
         |  SELECT doc_id, source,
         |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY
@@ -847,12 +825,12 @@ object Corpus extends QueryModule {
         |      doc_id) AS rk
         |  FROM documents)
         |SELECT doc_id, source, rk FROM r WHERE rk <= 15
-        |ORDER BY source, rk""".stripMargin,
-    "corpus_global_ids" ->
+        |ORDER BY source, rk""".stripMargin)),
+    Query("corpus_global_ids", globalIds, Some(
       """SELECT doc_id, lang,
         |  ROW_NUMBER() OVER (ORDER BY lang, doc_id) - 1 AS gid
-        |FROM documents ORDER BY gid""".stripMargin,
-    "corpus_interleave" ->
+        |FROM documents ORDER BY gid""".stripMargin)),
+    Query("corpus_interleave", interleave, Some(
       """WITH r AS (
         |  SELECT doc_id, source,
         |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY
@@ -862,8 +840,8 @@ object Corpus extends QueryModule {
         |  FROM documents)
         |SELECT doc_id, source, rk,
         |  ROW_NUMBER() OVER (ORDER BY rk, source, doc_id) - 1 AS pos
-        |FROM r ORDER BY pos""".stripMargin,
-    "text_boilerplate" ->
+        |FROM r ORDER BY pos""".stripMargin)),
+    Query("text_boilerplate", boilerplate, Some(
       s"""WITH toks AS (SELECT doc_id, $sqlToks AS t FROM documents),
          |sh0 AS (SELECT doc_id,
          |    unnest([t[i] || ' ' || t[i+1] for i in range(1, len(t))]) AS sh
@@ -879,8 +857,8 @@ object Corpus extends QueryModule {
          |  CAST(CAST(COALESCE(n_boiler, 0) AS DOUBLE) / n_sh <= 0.20 AS INT)
          |    AS keep
          |FROM per LEFT JOIN nb ON per.doc_id = nb.doc_id
-         |ORDER BY per.doc_id""".stripMargin,
-    "corpus_token_budget" ->
+         |ORDER BY per.doc_id""".stripMargin)),
+    Query("corpus_token_budget", tokenBudget, Some(
       s"""WITH t AS (
          |  SELECT doc_id, lang, len($sqlToks) AS n_tokens,
          |    CAST(('0x' || substring(md5('budget:' || CAST(doc_id AS VARCHAR)), 1, 8))
@@ -895,16 +873,16 @@ object Corpus extends QueryModule {
          |SELECT lang, COUNT(*) AS n_docs,
          |  CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
          |  MAX(cum) AS budget_used
-         |FROM c WHERE cum <= 2000 GROUP BY lang ORDER BY lang""".stripMargin,
-    "corpus_shard_manifest" ->
+         |FROM c WHERE cum <= 2000 GROUP BY lang ORDER BY lang""".stripMargin)),
+    Query("corpus_shard_manifest", shardManifest, Some(
       s"""SELECT doc_id // 64 AS shard_id, COUNT(*) AS n_docs,
          |  CAST(SUM(len($sqlToks)) AS BIGINT) AS total_tokens,
          |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc,
          |  CAST(SUM(CAST(('0x' || substring(md5(text), 1, 8)) AS BIGINT))
          |    AS BIGINT) AS content_checksum
          |FROM documents GROUP BY doc_id // 64
-         |ORDER BY shard_id""".stripMargin,
-    "corpus_epoch_repeat" ->
+         |ORDER BY shard_id""".stripMargin)),
+    Query("corpus_epoch_repeat", epochRepeat, Some(
       """WITH r AS (
         |  SELECT doc_id, lang,
         |    CASE lang WHEN 'en' THEN 1.0 WHEN 'zh' THEN 2.5
@@ -919,8 +897,8 @@ object Corpus extends QueryModule {
         |  FROM r)
         |SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n) AS BIGINT) AS n_copies,
         |  CAST(SUM(n) AS DOUBLE) / COUNT(*) AS realized_epochs
-        |FROM n GROUP BY lang ORDER BY lang""".stripMargin,
-    "corpus_length_batches" ->
+        |FROM n GROUP BY lang ORDER BY lang""".stripMargin)),
+    Query("corpus_length_batches", lengthBatches, Some(
       s"""SELECT lang, batch_id, COUNT(*) AS n_docs,
          |  MIN(n_tokens) AS min_tokens, MAX(n_tokens) AS max_tokens,
          |  CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens,
@@ -931,8 +909,8 @@ object Corpus extends QueryModule {
          |       ORDER BY n_tokens, doc_id) - 1) // 8 AS batch_id
          |  FROM (SELECT doc_id, lang, len($sqlToks) AS n_tokens
          |        FROM documents) u) t
-         |GROUP BY lang, batch_id ORDER BY lang, batch_id""".stripMargin,
-    "corpus_pack" ->
+         |GROUP BY lang, batch_id ORDER BY lang, batch_id""".stripMargin)),
+    Query("corpus_pack", packSequences, Some(
       s"""WITH t AS (
          |  SELECT doc_id, lang, len($sqlToks) AS n_tokens FROM documents),
          |c AS (
@@ -945,6 +923,6 @@ object Corpus extends QueryModule {
          |  CAST(SUM(n_tokens) AS BIGINT) AS seq_tokens,
          |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
          |FROM c GROUP BY lang, cum_before // 512
-         |ORDER BY lang, seq_id""".stripMargin,
+         |ORDER BY lang, seq_id""".stripMargin)),
   )
 }

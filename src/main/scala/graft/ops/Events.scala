@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{OracleSafe, QueryModule, Tables}
+import graft.{OracleSafe, Query, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -472,14 +472,13 @@ object Events extends QueryModule {
     * side is |types| rows and broadcasts — the fact side is never
     * shuffled, so the second pass stays map-only at any scale. */
   def anomaly(s: SparkSession, d: String): DataFrame = {
-    val sx = sum(col("value").cast("decimal(18,4)")).cast("string").cast("double")
+    val sx = d2d(sum(col("value").cast("decimal(18,4)")))
     // decimal(18,4) matches the oracle's DECIMAL(19,4) headroom: a value
     // ≥ 1e8 would overflow a (12,4) cast to NULL on the Spark side only
     // (non-ANSI), silently skewing sigma; the (37,8) product still fits
     // precision 38.
-    val sx2 = sum(col("value").cast("decimal(18,4)")
-        * col("value").cast("decimal(18,4)"))
-      .cast("string").cast("double")
+    val sx2 = d2d(sum(col("value").cast("decimal(18,4)")
+        * col("value").cast("decimal(18,4)")))
     val stats = Tables.events(s, d)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sx.as("sum_x"), sx2.as("sum_x2"))
@@ -586,8 +585,7 @@ object Events extends QueryModule {
         unix_micros(col("ts")).as("us"), col("value"))
       .select(col("event_id"), col("us"),
         count(lit(1)).over(w).as("n_frame"),
-        (sum(col("value").cast("decimal(18,4)")).over(w)
-          .cast("string").cast("double") /
+        (d2d(sum(col("value").cast("decimal(18,4)")).over(w)) /
           count(lit(1)).over(w)).as("ma"))
       .orderBy(col("event_id"))
   }
@@ -1110,49 +1108,8 @@ object Events extends QueryModule {
       .orderBy(col("day"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev_sprt" -> (sprt _),
-    "ev_cusum_drift" -> (cusumDrift _),
-    "ev_ewma_grid" -> (ewmaGrid _),
-    "ev_seasonality" -> (seasonality _),
-    "ev_cohort_ltv" -> (cohortLtv _),
-    "ev_sequence_negation" -> (sequenceNegation _),
-    "ev_velocity_flags" -> (velocityFlags _),
-    "ev_growth_accounting" -> (growthAccounting _),
-    "ev_alert_crossings" -> (alertCrossings _),
-    "ev_time_to_convert" -> (timeToConvert _),
-    "ev_interarrival" -> (interArrival _),
-    "ev_pareto_share" -> (paretoShare _),
-    "ev_forecast_eval" -> (forecastEval _),
-    "ev_attribution_multi" -> (attributionMulti _),
-    "ev_rolling_actives" -> (rollingActives _),
-    "ev_sequence_match" -> (sequenceMatch _),
-    "ev_type_entropy" -> (typeEntropy _),
-    "ev_churn" -> (churn _),
-    "ev_markov_transitions" -> (markovTransitions _),
-    "ev_funnel_timebound" -> (funnelTimebound _),
-    "ev_attribution" -> (attribution _),
-    "ev_streaks" -> (streaks _),
-    "ev_interpolate" -> (interpolate _),
-    "ev_ab_test" -> (abTest _),
-    "ev_cap_per_entity" -> (capPerEntity _),
-    "ev_ewma"      -> (ewma _),
-    "ev_anomaly"   -> (anomaly _),
-    "ev_session_paths" -> (sessionPaths _),
-    "ev_path_funnel"   -> (pathFunnel _),
-    "ev_moving_avg"    -> (movingAvg _),
-    "ev_gapfill"   -> (gapfill _),
-    "ev_retention" -> (retention _),
-    "ev_tumbling"  -> (tumbling _),
-    "ev_sliding"   -> (sliding _),
-    "ev_sessions"  -> (sessions _),
-    "ev_sessions_dynamic" -> (sessionsDynamic _),
-    "ev_dedup"     -> (dedupFirstPerKey _),
-    "ev_daily_funnel" -> (dailyFunnel _),
-  )
-
-  override def oracleSql: Map[String, String] = Map(
-    "ev_sprt" ->
+  override def catalog: Seq[Query] = Seq(
+    Query("ev_sprt", sprt, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
         |    CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -1181,10 +1138,10 @@ object Events extends QueryModule {
         |      CAST(0 AS BIGINT)) = 0
         |    THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END
         |    AS first_decision
-        |FROM v ORDER BY day""".stripMargin,
+        |FROM v ORDER BY day""".stripMargin)),
     // The sequential recurrence unrolls as a recursive CTE stepping the
     // per-type hour rank; MATERIALIZED per the multi-reference CTE rule.
-    "ev_cusum_drift" ->
+    Query("ev_cusum_drift", cusumDrift, Some(
       """WITH RECURSIVE counts AS MATERIALIZED (
         |  SELECT event_type,
         |    epoch_us(date_trunc('hour', ts)) // 3600000000 AS h,
@@ -1219,8 +1176,8 @@ object Events extends QueryModule {
         |  rec.cmax AS cusum_max, rec.hmax AS h_at_max
         |FROM rec JOIN ref ON rec.event_type = ref.event_type
         |  AND rec.r = ref.n_hours
-        |ORDER BY ref.event_type""".stripMargin,
-    "ev_ewma_grid" ->
+        |ORDER BY ref.event_type""".stripMargin)),
+    Query("ev_ewma_grid", ewmaGrid, Some(
       """WITH counts AS (
         |  SELECT event_type,
         |    epoch_us(date_trunc('hour', ts)) // 3600000000 AS h,
@@ -1238,8 +1195,8 @@ object Events extends QueryModule {
         |FROM fan CROSS JOIN hmax
         |WHERE t <= hmax
         |GROUP BY event_type, t, hmax
-        |ORDER BY event_type, t""".stripMargin,
-    "ev_interarrival" ->
+        |ORDER BY event_type, t""".stripMargin)),
+    Query("ev_interarrival", interArrival, Some(
       """WITH g AS (
         |  SELECT event_type,
         |    (us - lag(us) OVER (PARTITION BY user_id, event_type
@@ -1266,8 +1223,8 @@ object Events extends QueryModule {
         |  CAST(p50_gap_s AS BIGINT) AS p50_gap_s,
         |  CAST(p90_gap_s AS BIGINT) AS p90_gap_s
         |FROM ns JOIN p50 USING (event_type) JOIN p90 USING (event_type)
-        |ORDER BY event_type""".stripMargin,
-    "ev_time_to_convert" ->
+        |ORDER BY event_type""".stripMargin)),
+    Query("ev_time_to_convert", timeToConvert, Some(
       """WITH t AS (
         |  SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
         |f AS (
@@ -1289,8 +1246,8 @@ object Events extends QueryModule {
         |  CAST(SUM(n_conversions) OVER (ORDER BY delay_hours
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) /
         |    CAST(n_signups AS DOUBLE) AS cum_rate
-        |FROM h CROSS JOIN tot ORDER BY delay_hours""".stripMargin,
-    "ev_alert_crossings" ->
+        |FROM h CROSS JOIN tot ORDER BY delay_hours""".stripMargin)),
+    Query("ev_alert_crossings", alertCrossings, Some(
       """WITH daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day,
         |    CAST(COUNT(*) AS BIGINT) AS n
@@ -1309,10 +1266,10 @@ object Events extends QueryModule {
         |  CAST(SUM(CASE WHEN prev_n IS NOT NULL AND n > avg_n
         |    AND prev_n <= avg_n THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_crossings
-        |FROM m GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM m GROUP BY event_type ORDER BY event_type""".stripMargin)),
     // Independent arithmetic: the oracle classifies with CASE over the
     // same pair table rather than join flags.
-    "ev_growth_accounting" ->
+    Query("ev_growth_accounting", growthAccounting, Some(
       """WITH p AS (
         |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |f AS (SELECT user_id, MIN(day) AS first_day FROM p GROUP BY 1),
@@ -1342,8 +1299,8 @@ object Events extends QueryModule {
         |  COALESCE(n_resurrected, 0) AS n_resurrected,
         |  COALESCE(n_churned, 0) AS n_churned
         |FROM t FULL OUTER JOIN c ON t.day = c.day
-        |ORDER BY day""".stripMargin,
-    "ev_pareto_share" ->
+        |ORDER BY day""".stripMargin)),
+    Query("ev_pareto_share", paretoShare, Some(
       """WITH uc AS (
         |  SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n
         |  FROM events GROUP BY 1),
@@ -1365,8 +1322,8 @@ object Events extends QueryModule {
         |  CAST(SUM(n_events) OVER (ORDER BY decile
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) /
         |    CAST(t_events AS DOUBLE) AS cum_share
-        |FROM g ORDER BY decile""".stripMargin,
-    "ev_sequence_negation" ->
+        |FROM g ORDER BY decile""".stripMargin)),
+    Query("ev_sequence_negation", sequenceNegation, Some(
       """WITH t AS (
         |  SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
         |m AS (
@@ -1383,8 +1340,8 @@ object Events extends QueryModule {
         |    (last_error IS NULL OR last_error < last_signup)
         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_clean
         |FROM m WHERE event_type = 'purchase'
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "ev_velocity_flags" ->
+        |GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    Query("ev_velocity_flags", velocityFlags, Some(
       """WITH t AS (
         |  SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
         |m AS (
@@ -1398,8 +1355,8 @@ object Events extends QueryModule {
         |  CAST(MAX(n_1h) AS BIGINT) AS max_burst
         |FROM m WHERE event_type = 'purchase'
         |GROUP BY user_id HAVING n_flagged > 0
-        |ORDER BY user_id""".stripMargin,
-    "ev_cohort_ltv" ->
+        |ORDER BY user_id""".stripMargin)),
+    Query("ev_cohort_ltv", cohortLtv, Some(
       """WITH e AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day, event_type, value
         |  FROM events),
@@ -1421,9 +1378,9 @@ object Events extends QueryModule {
         |  CAST(SUM(rev_cents) OVER (PARTITION BY cohort_day ORDER BY age)
         |    AS DOUBLE) / CAST(cohort_n AS DOUBLE) AS ltv_cents_per_user
         |FROM tri JOIN sz USING (cohort_day)
-        |ORDER BY cohort_day, age""".stripMargin,
+        |ORDER BY cohort_day, age""".stripMargin)),
     // Spark dayofweek() is 1=Sunday..7; DuckDB dayofweek() is 0=Sunday..6.
-    "ev_seasonality" ->
+    Query("ev_seasonality", seasonality, Some(
       """WITH byd AS (
         |  SELECT CAST(dayofweek(CAST(ts AS DATE)) + 1 AS INT) AS dow,
         |    CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -1435,8 +1392,8 @@ object Events extends QueryModule {
         |  CAST(n_events AS DOUBLE) / CAST(n_days AS DOUBLE) AS events_per_day,
         |  CAST(n_events * t_days AS DOUBLE) /
         |    CAST(t_events * n_days AS DOUBLE) AS seasonal_index
-        |FROM byd CROSS JOIN tot ORDER BY dow""".stripMargin,
-    "ev_forecast_eval" ->
+        |FROM byd CROSS JOIN tot ORDER BY dow""".stripMargin)),
+    Query("ev_forecast_eval", forecastEval, Some(
       """WITH daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day,
         |    CAST(COUNT(*) AS BIGINT) AS n
@@ -1461,8 +1418,8 @@ object Events extends QueryModule {
         |  CAST(sae AS DOUBLE) / CAST(n_days AS DOUBLE) AS mae,
         |  CAST(se AS DOUBLE) / CAST(n_days AS DOUBLE) AS bias
         |FROM (SELECT * FROM m7 UNION ALL SELECT * FROM m1)
-        |ORDER BY event_type, model""".stripMargin,
-    "ev_attribution_multi" ->
+        |ORDER BY event_type, model""".stripMargin)),
+    Query("ev_attribution_multi", attributionMulti, Some(
       """WITH t AS (
         |  SELECT user_id, event_type, event_id, epoch_us(ts) AS us,
         |    CASE WHEN event_type = 'purchase' THEN
@@ -1490,8 +1447,8 @@ object Events extends QueryModule {
         |  CAST(SUM(1000000 // nt) AS BIGINT) AS linear_credit_micro,
         |  CAST(SUM(1000000 // (1 << CAST(age_days AS INT))) AS BIGINT)
         |    AS decay_credit_micro
-        |FROM c GROUP BY 1 ORDER BY channel""".stripMargin,
-    "ev_rolling_actives" ->
+        |FROM c GROUP BY 1 ORDER BY channel""".stripMargin)),
+    Query("ev_rolling_actives", rollingActives, Some(
       """WITH pairs AS (
         |  SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
         |days AS (SELECT DISTINCT day AS d FROM pairs)
@@ -1508,7 +1465,7 @@ object Events extends QueryModule {
         |      THEN user_id END) AS DOUBLE)
         |    / CAST(COUNT(DISTINCT user_id) AS DOUBLE) AS wau_mau
         |FROM days JOIN pairs ON date_diff('day', day, d) BETWEEN 0 AND 27
-        |GROUP BY d ORDER BY day""".stripMargin,
+        |GROUP BY d ORDER BY day""".stripMargin)),
     // INDEPENDENT formulation (no fold): in the state machine the anchor
     // is always the last view seen, so stage>=2 <=> some click lands
     // within 2h of its last preceding view, and stage 3 <=> such a click
@@ -1517,7 +1474,7 @@ object Events extends QueryModule {
     // fixture (verified at all sfs), so window order on us is total.
     // DuckDB 1.0's list_reduce over grouped struct lists was observed to
     // misfold one group in ~1500 — avoided deliberately.
-    "ev_sequence_match" ->
+    Query("ev_sequence_match", sequenceMatch, Some(
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts) AS us, event_type FROM events),
         |u AS (SELECT DISTINCT user_id FROM e),
@@ -1544,8 +1501,8 @@ object Events extends QueryModule {
         |         ELSE 0 END AS stage
         |  FROM u)
         |SELECT stage, COUNT(*) AS n_users
-        |FROM st GROUP BY stage ORDER BY stage""".stripMargin,
-    "ev_type_entropy" ->
+        |FROM st GROUP BY stage ORDER BY stage""".stripMargin)),
+    Query("ev_type_entropy", typeEntropy, Some(
       """WITH p AS (
         |  SELECT CAST(ts AS DATE) AS day,
         |    CAST(COUNT(*) AS DOUBLE) AS n,
@@ -1578,8 +1535,8 @@ object Events extends QueryModule {
         |    + (n_purchase / n) * (n_purchase / n)
         |    + (n_signup / n) * (n_signup / n)
         |    + (n_view / n) * (n_view / n)), 6) AS gini
-        |FROM p ORDER BY day""".stripMargin,
-    "ev_churn" ->
+        |FROM p ORDER BY day""".stripMargin)),
+    Query("ev_churn", churn, Some(
       """WITH per AS (
         |  SELECT user_id, min(epoch_us(ts)) AS first_us,
         |    max(epoch_us(ts)) AS last_us
@@ -1592,8 +1549,8 @@ object Events extends QueryModule {
         |  CAST(SUM(CASE WHEN end_us - last_us > CAST(604800 AS BIGINT) * 1000000
         |    THEN 1 ELSE 0 END) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
         |    AS churn_rate
-        |FROM per, e GROUP BY cohort_day ORDER BY cohort_day""".stripMargin,
-    "ev_markov_transitions" ->
+        |FROM per, e GROUP BY cohort_day ORDER BY cohort_day""".stripMargin)),
+    Query("ev_markov_transitions", markovTransitions, Some(
       """WITH e AS (
         |  SELECT user_id, event_type,
         |    lead(event_type) OVER (PARTITION BY user_id
@@ -1604,8 +1561,8 @@ object Events extends QueryModule {
         |    CAST(SUM(COUNT(*)) OVER (PARTITION BY event_type) AS DOUBLE)
         |    AS prob
         |FROM e WHERE nxt IS NOT NULL
-        |GROUP BY cur, nxt ORDER BY cur, nxt""".stripMargin,
-    "ev_funnel_timebound" ->
+        |GROUP BY cur, nxt ORDER BY cur, nxt""".stripMargin)),
+    Query("ev_funnel_timebound", funnelTimebound, Some(
       """WITH fv AS (
         |  SELECT user_id, min(ts) AS fv FROM events
         |  WHERE event_type = 'view' GROUP BY user_id),
@@ -1619,8 +1576,8 @@ object Events extends QueryModule {
         |SELECT day, COUNT(*) AS n_entered,
         |  CAST(SUM(conv) AS BIGINT) AS n_converted,
         |  CAST(SUM(conv) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS conv_rate
-        |FROM c GROUP BY day ORDER BY day""".stripMargin,
-    "ev_interpolate" ->
+        |FROM c GROUP BY day ORDER BY day""".stripMargin)),
+    Query("ev_interpolate", interpolate, Some(
       """WITH ev AS (
         |  SELECT epoch_us(date_trunc('hour', ts)) // 3600000000 AS h, value
         |  FROM events WHERE event_type = 'purchase'),
@@ -1651,8 +1608,8 @@ object Events extends QueryModule {
         |         THEN pv + (nv - pv)
         |           * (CAST(h - ph AS DOUBLE) / CAST(nh - ph AS DOUBLE))
         |  END AS v_interp
-        |FROM b ORDER BY h""".stripMargin,
-    "ev_attribution" ->
+        |FROM b ORDER BY h""".stripMargin)),
+    Query("ev_attribution", attribution, Some(
       """SELECT channel, COUNT(*) AS n_purchases,
         |  CAST(SUM(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS revenue_cents
@@ -1672,8 +1629,8 @@ object Events extends QueryModule {
         |    FROM (SELECT user_id, event_type, value, epoch_us(ts) AS us
         |          FROM events) e) t
         |  WHERE event_type = 'purchase') p
-        |GROUP BY channel ORDER BY channel""".stripMargin,
-    "ev_streaks" ->
+        |GROUP BY channel ORDER BY channel""".stripMargin)),
+    Query("ev_streaks", streaks, Some(
       """WITH days AS (
         |  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day_no
         |  FROM events),
@@ -1692,8 +1649,8 @@ object Events extends QueryModule {
         |      ORDER BY streak_days DESC, start_day DESC) AS rk
         |  FROM st)
         |SELECT user_id, streak_days, start_day FROM best WHERE rk = 1
-        |ORDER BY streak_days DESC, user_id LIMIT 25""".stripMargin,
-    "ev_ab_test" ->
+        |ORDER BY streak_days DESC, user_id LIMIT 25""".stripMargin)),
+    Query("ev_ab_test", abTest, Some(
       """WITH conv AS (
         |  SELECT DISTINCT event_type, user_id FROM events WHERE value > 150),
         |goals AS (SELECT event_type,
@@ -1720,8 +1677,8 @@ object Events extends QueryModule {
         |      * ((1.0 / CAST(n_a AS DOUBLE)) + (1.0 / CAST(n_b AS DOUBLE))))
         |    AS z_score
         |FROM goals CROSS JOIN pop
-        |ORDER BY event_type""".stripMargin,
-    "ev_cap_per_entity" ->
+        |ORDER BY event_type""".stripMargin)),
+    Query("ev_cap_per_entity", capPerEntity, Some(
       """WITH r AS (SELECT user_id, event_id,
         |    CAST(epoch_us(ts) AS BIGINT) // 86400000000 AS day_id,
         |    row_number() OVER (PARTITION BY user_id,
@@ -1731,8 +1688,8 @@ object Events extends QueryModule {
         |SELECT user_id, day_id, CAST(COUNT(*) AS BIGINT) AS n_events,
         |  CAST(SUM(CASE WHEN rn > 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped
         |FROM r GROUP BY 1, 2 HAVING COUNT(*) > 3
-        |ORDER BY 1, 2""".stripMargin,
-    "ev_ewma" ->
+        |ORDER BY 1, 2""".stripMargin)),
+    Query("ev_ewma", ewma, Some(
       """SELECT user_id, event_id,
         |  (((((((COALESCE(lag(value,0) OVER w, 0.0) * 1.0)
         |   + (COALESCE(lag(value,1) OVER w, 0.0) * 0.5))
@@ -1744,8 +1701,8 @@ object Events extends QueryModule {
         |   + (COALESCE(lag(value,7) OVER w, 0.0) * 0.0078125) AS ewsum
         |FROM events WHERE user_id % 97 = 0
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "ev_path_funnel" ->
+        |ORDER BY user_id, event_id""".stripMargin)),
+    Query("ev_path_funnel", pathFunnel, Some(
       """WITH gaps AS (
         |  SELECT user_id, ts, event_id, event_type,
         |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER
@@ -1771,8 +1728,8 @@ object Events extends QueryModule {
         |  COUNT(DISTINCT user_id) AS n_users,
         |  CAST(regexp_matches(path, 'view.*purchase') AS INT) AS converted
         |FROM paths GROUP BY path
-        |ORDER BY converted DESC, n_sessions DESC, path LIMIT 25""".stripMargin,
-    "ev_moving_avg" ->
+        |ORDER BY converted DESC, n_sessions DESC, path LIMIT 25""".stripMargin)),
+    Query("ev_moving_avg", movingAvg, Some(
       """SELECT event_id, us, n_frame, ma FROM (
         |  SELECT event_id, epoch_us(ts) AS us,
         |    COUNT(*) OVER w AS n_frame,
@@ -1781,8 +1738,8 @@ object Events extends QueryModule {
         |  FROM events
         |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
         |    ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)) t
-        |ORDER BY event_id""".stripMargin,
-    "ev_session_paths" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("ev_session_paths", sessionPaths, Some(
       """WITH gaps AS (
         |  SELECT user_id, ts, event_id, event_type,
         |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER
@@ -1803,8 +1760,8 @@ object Events extends QueryModule {
         |  COUNT(*) AS n_events,
         |  string_agg(event_type, '>' ORDER BY epoch_us(ts), event_id) AS path
         |FROM sessions GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-    "ev_anomaly" ->
+        |ORDER BY user_id, session_id""".stripMargin)),
+    Query("ev_anomaly", anomaly, Some(
       """WITH st AS (
         |  SELECT event_type, COUNT(*) AS n,
         |    CAST(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE) AS sum_x,
@@ -1819,8 +1776,8 @@ object Events extends QueryModule {
         |  (value - mu) / sigma AS z
         |FROM events JOIN m USING (event_type)
         |WHERE abs((value - mu) / sigma) > 2.5
-        |ORDER BY event_id""".stripMargin,
-    "ev_gapfill" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("ev_gapfill", gapfill, Some(
       """WITH ev AS (SELECT event_type, datetrunc('hour', ts) AS h, value FROM events),
         |hourly AS (SELECT event_type, h, COUNT(*) AS n,
         |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE) AS v
@@ -1834,27 +1791,27 @@ object Events extends QueryModule {
         |  COALESCE(last_value(v IGNORE NULLS) OVER (PARTITION BY g.event_type ORDER BY g.h
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0.0) AS v_ffill
         |FROM grid g LEFT JOIN hourly USING (event_type, h)
-        |ORDER BY event_type, hour""".stripMargin,
-    "ev_retention" ->
+        |ORDER BY event_type, hour""".stripMargin)),
+    Query("ev_retention", retention, Some(
       """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
         |f AS (SELECT user_id, MIN(day) AS cohort_day FROM e GROUP BY user_id)
         |SELECT f.cohort_day,
         |  datediff('day', f.cohort_day, e.day) AS day_offset,
         |  COUNT(DISTINCT e.user_id) AS n_users
         |FROM e JOIN f USING (user_id)
-        |GROUP BY 1, 2 ORDER BY cohort_day, day_offset""".stripMargin,
-    "ev_tumbling" ->
+        |GROUP BY 1, 2 ORDER BY cohort_day, day_offset""".stripMargin)),
+    Query("ev_tumbling", tumbling, Some(
       s"""SELECT epoch_us(datetrunc('hour', ts)) AS window_start_us, event_type,
          |  COUNT(*) AS n, ${sqlDsum("CAST(value AS DECIMAL(18,4))")} AS sum_value
-         |FROM events GROUP BY 1, 2 ORDER BY window_start_us, event_type""".stripMargin,
-    "ev_sliding" ->
+         |FROM events GROUP BY 1, 2 ORDER BY window_start_us, event_type""".stripMargin)),
+    Query("ev_sliding", sliding, Some(
       """SELECT ((epoch_us(ts) // 900000000) * 900000000 - k * 900000000) AS window_start_us,
         |  COUNT(*) AS n
         |FROM events CROSS JOIN (VALUES (CAST(0 AS BIGINT)), (1), (2), (3)) AS offs(k)
         |WHERE epoch_us(ts) < ((epoch_us(ts) // 900000000) * 900000000
         |    - k * 900000000 + 3600000000)
-        |GROUP BY 1 ORDER BY window_start_us""".stripMargin,
-    "ev_sessions_dynamic" ->
+        |GROUP BY 1 ORDER BY window_start_us""".stripMargin)),
+    Query("ev_sessions_dynamic", sessionsDynamic, Some(
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS us,
         |    CASE WHEN event_type IN ('click', 'view')
@@ -1879,8 +1836,8 @@ object Events extends QueryModule {
         |  CAST(MAX(us + gap) AS BIGINT) AS session_end_us,
         |  COUNT(*) AS n_events
         |FROM sess GROUP BY user_id, sid
-        |ORDER BY user_id, first_us""".stripMargin,
-    "ev_sessions" ->
+        |ORDER BY user_id, first_us""".stripMargin)),
+    Query("ev_sessions", sessions, Some(
       """WITH gaps AS (
         |  SELECT user_id, ts,
         |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER
@@ -1896,20 +1853,20 @@ object Events extends QueryModule {
         |SELECT user_id, epoch_us(MIN(ts)) AS first_us, epoch_us(MAX(ts)) AS last_us,
         |  COUNT(*) AS n_events
         |FROM sessions GROUP BY user_id, session_id
-        |ORDER BY user_id, first_us""".stripMargin,
-    "ev_dedup" ->
+        |ORDER BY user_id, first_us""".stripMargin)),
+    Query("ev_dedup", dedupFirstPerKey, Some(
       """SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us FROM (
         |  SELECT user_id, event_type, event_id, ts,
         |    row_number() OVER (PARTITION BY user_id, event_type
         |      ORDER BY ts, event_id) AS rn
         |  FROM events) t
-        |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin,
-    "ev_daily_funnel" ->
+        |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin)),
+    Query("ev_daily_funnel", dailyFunnel, Some(
       """SELECT CAST(ts AS DATE) AS day, COUNT(*) AS n_events,
         |  COUNT(*) FILTER (WHERE event_type = 'purchase') AS n_purchases,
         |  COUNT(*) FILTER (WHERE event_type = 'view') AS n_views,
         |  CAST(COUNT(*) FILTER (WHERE event_type = 'purchase') AS DOUBLE)
         |    / COUNT(*) AS purchase_rate
-        |FROM events GROUP BY 1 ORDER BY day""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY day""".stripMargin)),
   )
 }

@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
+import graft.OracleSafe.d2d
 
 /** Experimentation analytics beyond the running A/B readouts
   * ([[Events.sprt]], ev_ab_test): difference-in-differences, CUPED
@@ -131,8 +132,8 @@ object Experiment extends QueryModule {
         floor(col("value") * 100.0 + 0.5).cast("long").as("c"))
       .groupBy(col("arm"))
       .agg(count(lit(1)).as("n"), sum(col("c")).as("sc"),
-        sum(col("c").cast("decimal(18,0)") * col("c").cast("decimal(18,0)"))
-          .cast("decimal(38,0)").cast("string").cast("double").as("scc"))
+        d2d(sum(col("c").cast("decimal(18,0)") * col("c").cast("decimal(18,0)"))
+          .cast("decimal(38,0)")).as("scc"))
     def arm(a: Int, c: String) =
       first(when(col("arm") === a.toLong, col(c)), ignoreNulls = true)
     val wide = m.agg(
@@ -159,15 +160,8 @@ object Experiment extends QueryModule {
       ((m1 - m0 + lit(1.96) * se) / lit(100.0)).as("ci_hi"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev_did" -> (did _),
-    "ev_effect_size" -> (effectSize _),
-    "ev_cuped" -> (cuped _),
-    "ev_uplift_bucket" -> (upliftBucket _),
-  )
-
-  override def oracleSql: Map[String, String] = Map(
-    "ev_effect_size" ->
+  override def catalog: Seq[Query] = Seq(
+    Query("ev_effect_size", effectSize, Some(
       """WITH m AS MATERIALIZED (
         |  SELECT user_id % 2 AS arm, CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT))
@@ -204,8 +198,8 @@ object Experiment extends QueryModule {
         |    v1 / CAST(n1 AS DOUBLE))) / 100.0 AS ci_lo,
         |  (m1 - m0 + 1.96 * SQRT(v0 / CAST(n0 AS DOUBLE) +
         |    v1 / CAST(n1 AS DOUBLE))) / 100.0 AS ci_hi
-        |FROM c""".stripMargin,
-    "ev_did" ->
+        |FROM c""".stripMargin)),
+    Query("ev_did", did, Some(
       s"""WITH cells AS MATERIALIZED (
         |  SELECT user_id % 2 AS arm,
         |    CASE WHEN ts < $splitTs THEN 'pre' ELSE 'post' END AS period,
@@ -225,8 +219,8 @@ object Experiment extends QueryModule {
         |  FROM r)
         |SELECT arm, period, n_events, n_conv, rate, did
         |FROM r CROSS JOIN est
-        |ORDER BY arm, period""".stripMargin,
-    "ev_cuped" ->
+        |ORDER BY arm, period""".stripMargin)),
+    Query("ev_cuped", cuped, Some(
       s"""WITH pu AS MATERIALIZED (
         |  SELECT user_id,
         |    CAST(COUNT(*) FILTER (ts < $splitTs) AS BIGINT) AS x,
@@ -257,8 +251,8 @@ object Experiment extends QueryModule {
         |    CAST(n * n AS DOUBLE)) /
         |   (CAST(n * syy - sy * sy AS DOUBLE) /
         |    CAST(n * n AS DOUBLE)) AS var_reduction
-        |FROM m""".stripMargin,
-    "ev_uplift_bucket" ->
+        |FROM m""".stripMargin)),
+    Query("ev_uplift_bucket", upliftBucket, Some(
       s"""WITH pu AS MATERIALIZED (
         |  SELECT user_id,
         |    CAST(COUNT(*) FILTER (ts < $splitTs) AS BIGINT) AS x,
@@ -286,6 +280,6 @@ object Experiment extends QueryModule {
         |    AS uplift
         |FROM wide
         |WHERE n_control IS NOT NULL AND n_treated IS NOT NULL
-        |ORDER BY bucket""".stripMargin,
+        |ORDER BY bucket""".stripMargin)),
   )
 }

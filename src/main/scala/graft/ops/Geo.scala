@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -383,17 +383,6 @@ object Geo extends QueryModule {
       .orderBy(col("user_id"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "geo_trajectories" -> (trajectories _),
-    "geo_density_clusters" -> (densityClusters _),
-    "geo_grid_join" -> (gridRadiusJoin _),
-    "geo_knn" -> (knn _),
-    "geo_density_grid" -> (densityGrid _),
-    "geo_geohash_cells" -> (geohashTopCells _),
-    "geo_haversine" -> (haversineCapitals _),
-    "geo_point_in_polygon" -> (pointInPolygon _),
-  )
-
   private val custSql =
     """SELECT c_custkey, c_nationkey,
       |    (c_custkey * 48271) % 1000000 AS x,
@@ -415,10 +404,10 @@ object Geo extends QueryModule {
       s"substr('$GhAlpha', CAST(((code >> ${25 - 5 * j}) & 31) AS INT) + 1, 1)"
     }.mkString(" || ")
 
-  override def oracleSql: Map[String, String] = Map(
+  override def catalog: Seq[Query] = Seq(
     // The same lag/row_number algebra relationally — every statistic is
     // exact BIGINT, so the hash gate is float-free.
-    "geo_trajectories" ->
+    Query("geo_trajectories", trajectories, Some(
       """WITH e AS (
         |  SELECT user_id, ts, event_id,
         |    (event_id * 48271) % 1000000 AS px,
@@ -449,11 +438,11 @@ object Geo extends QueryModule {
         |  CAST(CASE WHEN path_l1 = 0 THEN 100
         |    ELSE (abs(lx - fx) + abs(ly - fy)) * 100 // path_l1 END
         |    AS BIGINT) AS straightness_pct
-        |FROM a WHERE n_points >= 2 ORDER BY user_id""".stripMargin,
+        |FROM a WHERE n_points >= 2 ORDER BY user_id""".stripMargin)),
     // Components by recursive-CTE transitive closure over the symmetric
     // self-looped core adjacency — min reachable id equals the Spark
     // side's min-label fixpoint.
-    "geo_density_clusters" ->
+    Query("geo_density_clusters", densityClusters, Some(
       s"""WITH c AS ($custSql),
          |g AS (SELECT x // 125000 AS gx, y // 125000 AS gy,
          |    CAST(COUNT(*) AS BIGINT) AS n
@@ -475,9 +464,9 @@ object Geo extends QueryModule {
          |  MIN(core.gx) AS gx_min, MAX(core.gx) AS gx_max,
          |  MIN(core.gy) AS gy_min, MAX(core.gy) AS gy_max
          |FROM core JOIN lab ON core.id = lab.id
-         |GROUP BY lab.cluster_id ORDER BY cluster_id""".stripMargin,
+         |GROUP BY lab.cluster_id ORDER BY cluster_id""".stripMargin)),
     // The raw quadratic predicate — proves grid blocking lost no pair.
-    "geo_grid_join" ->
+    Query("geo_grid_join", gridRadiusJoin, Some(
       s"""WITH c AS ($custSql), s AS ($supSql),
          |p AS (SELECT c_nationkey,
          |    (x - sx) * (x - sx) + (y - sy) * (y - sy) AS d2
@@ -486,8 +475,8 @@ object Geo extends QueryModule {
          |  CAST(SUM(d2) AS BIGINT) AS sum_d2,
          |  CAST(MIN(d2) AS BIGINT) AS min_d2
          |FROM p WHERE d2 <= $R2
-         |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-    "geo_knn" ->
+         |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin)),
+    Query("geo_knn", knn, Some(
       s"""WITH c AS ($custSql), s AS ($supSql),
          |p AS (SELECT s_suppkey, c_custkey,
          |    (x - sx) * (x - sx) + (y - sy) * (y - sy) AS d2,
@@ -496,26 +485,26 @@ object Geo extends QueryModule {
          |      AS rank
          |  FROM c, s)
          |SELECT s_suppkey, CAST(rank AS INT) AS rank, c_custkey, d2
-         |FROM p WHERE rank <= 3 ORDER BY s_suppkey, rank""".stripMargin,
-    "geo_density_grid" ->
+         |FROM p WHERE rank <= 3 ORDER BY s_suppkey, rank""".stripMargin)),
+    Query("geo_density_grid", densityGrid, Some(
       s"""WITH c AS ($custSql)
          |SELECT x // 100000 AS gx, y // 100000 AS gy,
          |  CAST(COUNT(*) AS BIGINT) AS n_points,
          |  CAST(COUNT(DISTINCT c_nationkey) AS BIGINT) AS n_nations,
          |  CAST(SUM(x) // COUNT(*) AS BIGINT) AS cx,
          |  CAST(SUM(y) // COUNT(*) AS BIGINT) AS cy
-         |FROM c GROUP BY gx, gy ORDER BY gx, gy""".stripMargin,
-    "geo_geohash_cells" ->
+         |FROM c GROUP BY gx, gy ORDER BY gx, gy""".stripMargin)),
+    Query("geo_geohash_cells", geohashTopCells, Some(
       s"""WITH c AS ($custSql),
          |g AS (SELECT $ghCodeDuck AS code FROM c),
          |h AS (SELECT $ghCharsDuck AS geohash FROM g)
          |SELECT geohash, CAST(COUNT(*) AS BIGINT) AS n_points
          |FROM h GROUP BY geohash
-         |ORDER BY n_points DESC, geohash LIMIT 20""".stripMargin,
+         |ORDER BY n_points DESC, geohash LIMIT 20""".stripMargin)),
     // Relational ray cast: per-(point, edge) crossing rows summed per pair —
     // a hash match proves the Spark-side higher-order fold computes the
     // same parity, and the shoelace area the same 2A.
-    "geo_point_in_polygon" ->
+    Query("geo_point_in_polygon", pointInPolygon, Some(
       s"""WITH c AS ($custSql),
          |p AS (SELECT CAST(n_nationkey AS BIGINT) AS pid,
          |    (CAST(n_nationkey AS BIGINT) * 93001 + 137) % 800000 + 100000 AS pcx,
@@ -555,8 +544,8 @@ object Geo extends QueryModule {
          |  CAST(SUM(i.c_custkey) AS BIGINT) AS sum_key,
          |  CAST(a.area2 AS BIGINT) AS area2
          |FROM i JOIN a ON i.pid = a.pid
-         |GROUP BY i.pid, a.area2 ORDER BY i.pid""".stripMargin,
-    "geo_haversine" ->
+         |GROUP BY i.pid, a.area2 ORDER BY i.pid""".stripMargin)),
+    Query("geo_haversine", haversineCapitals, Some(
       """WITH n AS (SELECT n_nationkey, n_name,
         |    CAST(n_nationkey * 7.0 AS DOUBLE) - 84.0 AS lat,
         |    CAST(n_nationkey * 14.0 AS DOUBLE) - 168.0 AS lon FROM nation),
@@ -568,6 +557,6 @@ object Geo extends QueryModule {
         |SELECT n1, n2,
         |  round(CAST(2.0 * 6371.0 AS DOUBLE) * asin(sqrt(
         |    slat * slat + cc * (slon * slon))), 6) AS dist_km
-        |FROM p ORDER BY n1, n2""".stripMargin,
+        |FROM p ORDER BY n1, n2""".stripMargin)),
   )
 }

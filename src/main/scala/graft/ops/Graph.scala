@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
+import graft.OracleSafe.d2d
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -414,7 +415,6 @@ object Graph extends QueryModule {
     val jk = sym
       .join(deg.select(col("id").as("u"), col("dg").as("j")), Seq("u"))
       .join(deg.select(col("id").as("v"), col("dg").as("k")), Seq("v"))
-    def d2d(c: Column): Column = c.cast("string").cast("double")
     val mo = jk.agg(count(lit(1)).as("s2m"),
       sum(col("j")).as("sj"),
       sum(col("j").cast("decimal(19,0)") * col("j")).cast("decimal(38,0)")
@@ -431,19 +431,6 @@ object Graph extends QueryModule {
           d2d((col("sj").cast("decimal(19,0)") * col("sj"))
             .cast("decimal(38,0)")))).as("assortativity"))
   }
-
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_kcore" -> (kcorePeel _),
-    "graph_label_prop" -> (labelProp _),
-    "graph_modularity" -> (modularity _),
-    "graph_clustering_coeff" -> (clusteringCoeff _),
-    "graph_assortativity" -> (assortativity _),
-    "graph_shortest_path" -> (shortestPaths _),
-    "graph_link_prediction" -> (linkPrediction _),
-    "graph_triangles" -> (triangles _),
-    "graph_pagerank" -> (pagerank _),
-    "graph_bfs" -> (bfsLevels _),
-  )
 
   private def prIter(prev: String): String =
     s"""SELECT v.id, ((0.15/25.0) + (0.85 * COALESCE(s.contrib, 0.0))) AS r
@@ -519,14 +506,14 @@ object Graph extends QueryModule {
        |$rounds""".stripMargin
   }
 
-  override def oracleSql: Map[String, String] = Map(
-    "graph_label_prop" ->
+  override def catalog: Seq[Query] = Seq(
+    Query("graph_label_prop", labelProp, Some(
       s"""WITH $lpaCtes
          |SELECT lbl, CAST(COUNT(*) AS BIGINT) AS n_members,
          |  MIN(id) AS min_id, MAX(id) AS max_id
          |FROM l4 GROUP BY 1
-         |ORDER BY n_members DESC, lbl ASC LIMIT 100""".stripMargin,
-    "graph_modularity" ->
+         |ORDER BY n_members DESC, lbl ASC LIMIT 100""".stripMargin)),
+    Query("graph_modularity", modularity, Some(
       s"""WITH $lpaCtes,
          |e_in AS MATERIALIZED (
          |  SELECT lu.lbl, CAST(COUNT(*) AS BIGINT) AS e_in
@@ -551,8 +538,8 @@ object Graph extends QueryModule {
          |  CAST(4 * m * m AS DOUBLE) AS q FROM sums CROSS JOIN mm)
          |SELECT c.lbl, c.n_members, c.e_in, c.d_c, q.q
          |FROM cells c CROSS JOIN qq q
-         |ORDER BY c.n_members DESC, c.lbl ASC LIMIT 20""".stripMargin,
-    "graph_kcore" ->
+         |ORDER BY c.n_members DESC, c.lbl ASC LIMIT 20""".stripMargin)),
+    Query("graph_kcore", kcorePeel, Some(
       s"""WITH op AS MATERIALIZED (
          |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
          |e0 AS MATERIALIZED (SELECT a.p AS u, b.p AS v
@@ -562,9 +549,9 @@ object Graph extends QueryModule {
          |${kcoreRound("e1", 2)},
          |${kcoreRound("e2", 3)}
          |SELECT * FROM s1 UNION ALL SELECT * FROM s2 UNION ALL
-         |SELECT * FROM s3 ORDER BY round""".stripMargin,
-    "graph_shortest_path" -> shortestPathSql,
-    "graph_link_prediction" ->
+         |SELECT * FROM s3 ORDER BY round""".stripMargin)),
+    Query("graph_shortest_path", shortestPaths, Some(shortestPathSql)),
+    Query("graph_link_prediction", linkPrediction, Some(
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
         |  FROM lineitem),
         |e0 AS (SELECT a.p AS u, b.p AS v
@@ -583,8 +570,8 @@ object Graph extends QueryModule {
         |    CAST(da.dg + dc.dg - n_common AS DOUBLE) AS jaccard
         |FROM cand JOIN deg da ON da.id = cand.a
         |JOIN deg dc ON dc.id = cand.c
-        |ORDER BY jaccard DESC, a, c LIMIT 20""".stripMargin,
-    "graph_clustering_coeff" ->
+        |ORDER BY jaccard DESC, a, c LIMIT 20""".stripMargin)),
+    Query("graph_clustering_coeff", clusteringCoeff, Some(
       """WITH op AS MATERIALIZED (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |e0 AS MATERIALIZED (SELECT a.p AS u, b.p AS v
@@ -606,8 +593,8 @@ object Graph extends QueryModule {
         |  CASE WHEN wg.n_wedges <> 0 THEN
         |    CAST(3 * tri.n_triangles AS DOUBLE) /
         |    CAST(wg.n_wedges AS DOUBLE) END AS clustering_coeff
-        |FROM wg CROSS JOIN tri""".stripMargin,
-    "graph_assortativity" ->
+        |FROM wg CROSS JOIN tri""".stripMargin)),
+    Query("graph_assortativity", assortativity, Some(
       """WITH op AS MATERIALIZED (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |e0 AS MATERIALIZED (SELECT a.p AS u, b.p AS v
@@ -632,8 +619,8 @@ object Graph extends QueryModule {
         |  (CAST(CAST(CAST(s2m * sjj AS DECIMAL(38,0)) AS VARCHAR) AS DOUBLE) -
         |   CAST(CAST(CAST(CAST(sj AS DECIMAL(19,0)) * sj AS DECIMAL(38,0))
         |     AS VARCHAR) AS DOUBLE)) AS assortativity
-        |FROM mo""".stripMargin,
-    "graph_triangles" ->
+        |FROM mo""".stripMargin)),
+    Query("graph_triangles", triangles, Some(
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |e0 AS (SELECT a.p AS u, b.p AS v
         |  FROM op a JOIN op b ON a.o = b.o AND a.p < b.p
@@ -647,8 +634,8 @@ object Graph extends QueryModule {
         |        FROM e e1 JOIN e e2 ON e1.t = e2.s
         |        JOIN e e3 ON e3.s = e1.s AND e3.t = e2.t)
         |SELECT CAST((SELECT COUNT(*) FROM e0) AS BIGINT) AS n_edges,
-        |       CAST((SELECT COUNT(*) FROM tri) AS BIGINT) AS n_triangles""".stripMargin,
-    "graph_bfs" ->
+        |       CAST((SELECT COUNT(*) FROM tri) AS BIGINT) AS n_triangles""".stripMargin)),
+    Query("graph_bfs", bfsLevels, Some(
       """WITH RECURSIVE e AS (
         |  SELECT DISTINCT c.c_nationkey AS src, s.s_nationkey AS dst
         |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -660,8 +647,8 @@ object Graph extends QueryModule {
         |  UNION
         |  SELECT e.dst AS id, r.lvl + 1 AS lvl
         |  FROM r JOIN e ON e.src = r.id WHERE r.lvl < 4)
-        |SELECT id, MIN(lvl) AS level FROM r GROUP BY id ORDER BY id""".stripMargin,
-    "graph_pagerank" ->
+        |SELECT id, MIN(lvl) AS level FROM r GROUP BY id ORDER BY id""".stripMargin)),
+    Query("graph_pagerank", pagerank, Some(
       s"""WITH e AS (SELECT DISTINCT c.c_nationkey AS src, s.s_nationkey AS dst
          |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
          |  JOIN customer c ON o.o_custkey = c.c_custkey
@@ -673,6 +660,6 @@ object Graph extends QueryModule {
          |r1 AS (${prIter("r0")}),
          |r2 AS (${prIter("r1")}),
          |r3 AS (${prIter("r2")})
-         |SELECT id, r FROM r3 ORDER BY id""".stripMargin,
+         |SELECT id, r FROM r3 ORDER BY id""".stripMargin)),
   )
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{OracleSafe, QueryModule, Tables}
+import graft.{OracleSafe, Query, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -477,30 +477,6 @@ object Joins extends QueryModule {
       .orderBy(col("c_nationkey"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "join_bloom_reduce" -> (bloomReduceJoin _),
-    "join_salted" -> (saltedJoin _),
-    "join_inverted_index" -> (invertedIndexJoin _),
-    "join_fuzzy" -> (fuzzyJoin _),
-    "join_interval_overlap" -> (intervalOverlap _),
-    "join_asof_fwd"        -> (asofForwardJoin _),
-    "join_asof_nearest"    -> (asofNearestJoin _),
-    "join_null_safe"       -> (nullSafeJoin _),
-    "join_fuzzy_name"      -> (fuzzyNameJoin _),
-    "join_asof_native"     -> (asofJoinNative _),
-    "join_salted_skew"     -> (saltedSkewJoin _),
-    "join_broadcast_chain" -> (broadcastDimChain _),
-    "join_left_counts"     -> (leftJoinOrderCounts _),
-    "join_right_counts"    -> (rightJoinOrderCounts _),
-    "join_semi"            -> (semiJoin _),
-    "join_anti"            -> (antiJoin _),
-    "join_full_outer"      -> (fullOuterJoin _),
-    "join_range_bands"     -> (rangeBandJoin _),
-    "join_range_bucketed"  -> (rangeBucketedJoin _),
-    "join_cross_regions"   -> (crossJoinRegions _),
-    "join_asof"            -> (asofJoin _),
-  )
-
   private val asofOracle =
     """SELECT p.event_id, p.user_id,
       |  (SELECT epoch_us(MAX(v.ts)) FROM events v
@@ -509,27 +485,27 @@ object Joins extends QueryModule {
       |FROM events p WHERE p.event_type = 'purchase'
       |ORDER BY p.event_id""".stripMargin
 
-  override def oracleSql: Map[String, String] = Map(
+  override def catalog: Seq[Query] = Seq(
     // Deliberately INDEPENDENT of the blocking: brute-force all-pairs
     // levenshtein. A hash-exact match proves the deletion-neighborhood
     // candidates are lossless at k=1.
     // The oracle is the PLAIN filtered join — equality proves the Bloom
     // reduction lossless (false positives die in the exact verify join).
-    "join_bloom_reduce" ->
+    Query("join_bloom_reduce", bloomReduceJoin, Some(
       """SELECT c_nationkey, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT))
         |    AS BIGINT) AS cents
         |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
+        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin)),
     // The oracle joins UNSALTED — equality proves the salt rewrite lossless.
-    "join_salted" ->
+    Query("join_salted", saltedJoin, Some(
       """SELECT c_mktsegment, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT))
         |    AS BIGINT) AS cents
         |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "join_inverted_index" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+    Query("join_inverted_index", invertedIndexJoin, Some(
       """WITH postings AS (
         |  SELECT p_partkey, unnest(string_split(p_name, ' ')) AS term
         |  FROM part),
@@ -546,8 +522,8 @@ object Joins extends QueryModule {
         |    row_number() OVER (PARTITION BY qid
         |      ORDER BY n_matched DESC, p_partkey) AS rank
         |  FROM m) t
-        |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    "join_fuzzy" ->
+        |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin)),
+    Query("join_fuzzy", fuzzyJoin, Some(
       """WITH n AS (
         |  SELECT p_name AS name, COUNT(*) AS n_parts FROM part
         |  GROUP BY p_name)
@@ -556,8 +532,8 @@ object Joins extends QueryModule {
         |  CAST(levenshtein(a.name, b.name) AS INT) AS dist
         |FROM n a JOIN n b ON a.name < b.name
         |WHERE levenshtein(a.name, b.name) <= 1
-        |ORDER BY name_a, name_b""".stripMargin,
-    "join_interval_overlap" ->
+        |ORDER BY name_a, name_b""".stripMargin)),
+    Query("join_interval_overlap", intervalOverlap, Some(
       """WITH iv AS (SELECT user_id,
         |    CAST(epoch_us(ts) AS BIGINT) // 86400000000 AS day_id,
         |    MIN(CAST(epoch_us(ts) AS BIGINT)) AS st,
@@ -566,8 +542,8 @@ object Joins extends QueryModule {
         |SELECT a.day_id, CAST(COUNT(*) AS BIGINT) AS n_pairs
         |FROM iv a JOIN iv b ON a.day_id = b.day_id AND a.user_id < b.user_id
         |  AND a.st <= b.en AND b.st <= a.en
-        |GROUP BY a.day_id ORDER BY a.day_id""".stripMargin,
-    "join_asof_fwd" ->
+        |GROUP BY a.day_id ORDER BY a.day_id""".stripMargin)),
+    Query("join_asof_fwd", asofForwardJoin, Some(
       """SELECT event_id, us, next_purchase_us,
         |  next_purchase_us - us AS waited_us FROM (
         |  SELECT event_id, event_type, epoch_us(ts) AS us,
@@ -576,8 +552,8 @@ object Joins extends QueryModule {
         |        RANGE BETWEEN CURRENT ROW AND 86400000000 FOLLOWING)
         |      AS next_purchase_us
         |  FROM events) t
-        |WHERE event_type = 'click' ORDER BY event_id""".stripMargin,
-    "join_null_safe" ->
+        |WHERE event_type = 'click' ORDER BY event_id""".stripMargin)),
+    Query("join_null_safe", nullSafeJoin, Some(
       """WITH a AS (
         |  SELECT nullif(o_custkey % 97, 0) AS k, COUNT(*) AS n_orders
         |  FROM orders GROUP BY 1),
@@ -587,8 +563,8 @@ object Joins extends QueryModule {
         |SELECT a.k AS k, n_orders, n_customers,
         |  n_orders * n_customers AS n_pairs
         |FROM a JOIN b ON a.k IS NOT DISTINCT FROM b.k
-        |ORDER BY k NULLS FIRST""".stripMargin,
-    "join_asof_nearest" ->
+        |ORDER BY k NULLS FIRST""".stripMargin)),
+    Query("join_asof_nearest", asofNearestJoin, Some(
       """SELECT event_id, us, prev_p, next_p,
         |  CASE WHEN prev_p IS NULL THEN next_p
         |       WHEN next_p IS NULL THEN prev_p
@@ -608,8 +584,8 @@ object Joins extends QueryModule {
         |        RANGE BETWEEN CURRENT ROW AND 86400000000 FOLLOWING) AS next_p
         |  FROM (SELECT event_id, event_type, user_id, epoch_us(ts) AS us
         |        FROM events) e) t
-        |WHERE event_type = 'click' ORDER BY event_id""".stripMargin,
-    "join_fuzzy_name" ->
+        |WHERE event_type = 'click' ORDER BY event_id""".stripMargin)),
+    Query("join_fuzzy_name", fuzzyNameJoin, Some(
       """WITH p AS (
         |  SELECT p_partkey, p_name, p_size,
         |    split_part(p_name, ' ', 1) AS blk
@@ -621,17 +597,17 @@ object Joins extends QueryModule {
         |  ON a.blk = b.blk AND a.p_size = b.p_size
         | AND a.p_partkey < b.p_partkey
         |WHERE levenshtein(a.p_name, b.p_name) <= 6
-        |ORDER BY a_key, b_key""".stripMargin,
-    "join_asof_native" -> asofOracle,
-    "join_salted_skew" ->
+        |ORDER BY a_key, b_key""".stripMargin)),
+    Query("join_asof_native", asofJoinNative, Some(asofOracle)),
+    Query("join_salted_skew", saltedSkewJoin, Some(
       """SELECT event_type, COUNT(*) AS n,
         |  CAST(CAST(SUM(CAST(weight AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE) AS total_weight
         |FROM events
         |JOIN (VALUES ('click', 1.0), ('view', 0.5), ('purchase', 10.0),
         |             ('signup', 5.0), ('error', 0.0)) AS w(w_type, weight)
         |  ON event_type = w_type
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "join_broadcast_chain" ->
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Query("join_broadcast_chain", broadcastDimChain, Some(
       s"""SELECT r_name, n_name,
          |  ${sqlDsum("CAST(l_extendedprice AS DECIMAL(12,4)) * CAST(1.0 - l_discount AS DECIMAL(8,4))")} AS revenue,
          |  COUNT(*) AS n_items
@@ -639,27 +615,27 @@ object Joins extends QueryModule {
          |JOIN supplier ON l_suppkey = s_suppkey
          |JOIN nation ON s_nationkey = n_nationkey
          |JOIN region ON n_regionkey = r_regionkey
-         |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-    "join_left_counts" ->
+         |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin)),
+    Query("join_left_counts", leftJoinOrderCounts, Some(
       s"""SELECT c_custkey, COUNT(o_orderkey) AS n_orders,
          |  COALESCE(${sqlDsum("CAST(o_totalprice AS DECIMAL(18,4))")}, 0.0) AS total_spent
          |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-         |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-    "join_right_counts" ->
+         |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin)),
+    Query("join_right_counts", rightJoinOrderCounts, Some(
       s"""SELECT c_custkey, COUNT(o_orderkey) AS n_orders,
          |  COALESCE(${sqlDsum("CAST(o_totalprice AS DECIMAL(18,4))")}, 0.0) AS total_spent
          |FROM orders RIGHT JOIN customer ON o_custkey = c_custkey
-         |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-    "join_semi" ->
+         |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin)),
+    Query("join_semi", semiJoin, Some(
       """SELECT c_custkey, c_mktsegment FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
         |  AND o_orderdate >= TIMESTAMP '2001-01-01 00:00:00')
-        |ORDER BY c_custkey""".stripMargin,
-    "join_anti" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    Query("join_anti", antiJoin, Some(
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM events WHERE user_id = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "join_full_outer" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    Query("join_full_outer", fullOuterJoin, Some(
       """SELECT COALESCE(nk1, nk2) AS nationkey,
         |  COALESCE(n_suppliers, 0) AS n_suppliers,
         |  COALESCE(n_customers, 0) AS n_customers
@@ -667,8 +643,8 @@ object Joins extends QueryModule {
         |      FROM supplier GROUP BY s_nationkey) s
         |FULL OUTER JOIN (SELECT c_nationkey AS nk2, COUNT(*) AS n_customers
         |      FROM customer GROUP BY c_nationkey) c ON nk1 = nk2
-        |ORDER BY nationkey""".stripMargin,
-    "join_range_bands" ->
+        |ORDER BY nationkey""".stripMargin)),
+    Query("join_range_bands", rangeBandJoin, Some(
       s"""SELECT band, COUNT(*) AS n_parts,
          |  ${sqlDsum("CAST(p_retailprice AS DECIMAL(18,4))")} AS sum_price
          |FROM part
@@ -676,8 +652,8 @@ object Joins extends QueryModule {
          |             ('B3', 940.0, 960.0), ('B4', 960.0, 980.0),
          |             ('B5', 980.0, 1e18)) AS bands(band, lo, hi)
          |  ON p_retailprice >= lo AND p_retailprice < hi
-         |GROUP BY band ORDER BY band""".stripMargin,
-    "join_range_bucketed" ->
+         |GROUP BY band ORDER BY band""".stripMargin)),
+    Query("join_range_bucketed", rangeBucketedJoin, Some(
       s"""SELECT band, COUNT(*) AS n_parts,
          |  ${sqlDsum("CAST(p_retailprice AS DECIMAL(18,4))")} AS sum_price
          |FROM part
@@ -685,17 +661,17 @@ object Joins extends QueryModule {
          |             ('B3', 940.0, 960.0), ('B4', 960.0, 980.0),
          |             ('B5', 980.0, 2000.0)) AS bands(band, lo, hi)
          |  ON p_retailprice >= lo AND p_retailprice < hi
-         |GROUP BY band ORDER BY band""".stripMargin,
-    "join_cross_regions" ->
+         |GROUP BY band ORDER BY band""".stripMargin)),
+    Query("join_cross_regions", crossJoinRegions, Some(
       """SELECT r1.r_name AS a, r2.r_name AS b
         |FROM region r1 CROSS JOIN region r2
-        |WHERE r1.r_name < r2.r_name ORDER BY a, b""".stripMargin,
-    "join_asof" ->
+        |WHERE r1.r_name < r2.r_name ORDER BY a, b""".stripMargin)),
+    Query("join_asof", asofJoin, Some(
       """SELECT p.event_id, p.user_id,
         |  (SELECT epoch_us(MAX(v.ts)) FROM events v
         |   WHERE v.user_id = p.user_id AND v.event_type = 'view'
         |     AND v.ts <= p.ts) AS last_view_us
         |FROM events p WHERE p.event_type = 'purchase'
-        |ORDER BY p.event_id""".stripMargin,
+        |ORDER BY p.event_id""".stripMargin)),
   )
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Scratch, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -570,36 +570,16 @@ object LlmDedup extends QueryModule {
 
   /** State root for [[bloomStateRuns]]: the SANITIZED dataset path keys
     * the directory (two datasets can no longer hashCode-collide into the
-    * same state), and a per-JVM random token isolates concurrent
-    * processes sharing one tmpdir (two simultaneous runs over the same
-    * dataset each get their own run-scoped root instead of racing
-    * overwrite-vs-lazy-read on shared files). NOTE: the token makes the
-    * state RUN-SCOPED, not cross-process — the query simulates both runs
-    * inside one JVM; a production cross-process pipeline would key the
-    * root by dataset + run epoch instead. A JVM shutdown hook deletes
-    * this process's roots so repeated runs never accumulate tmp litter.
-    * Exposed package-private so the equivalence spec can audit THIS
-    * run's rolled-forward artifacts. */
-  private[graft] val bloomStateToken: String =
-    java.util.UUID.randomUUID.toString.take(8)
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-    f.delete(): Unit
-  }
-  private lazy val bloomStateCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-      Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.getName.startsWith("graft_bloom_state_") &&
-          f.getName.endsWith(s"_$bloomStateToken"))
-        .foreach(deleteRec)
-    }))
-  private[graft] def bloomStateDir(d: String): String = {
-    bloomStateCleanupHook
-    val safe = d.replaceAll("[^A-Za-z0-9._-]", "_")
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_bloom_state_${safe}_$bloomStateToken").getAbsolutePath
-  }
+    * same state), under this JVM's [[Scratch.root]] (two simultaneous
+    * runs over the same dataset each get their own run-scoped root instead
+    * of racing overwrite-vs-lazy-read on shared files). NOTE: that makes
+    * the state RUN-SCOPED, not cross-process — the query simulates both
+    * runs inside one JVM; a production cross-process pipeline would key
+    * the root by dataset + run epoch instead. Stable per dataset within a
+    * JVM and exposed package-private so the equivalence spec can audit
+    * THIS run's rolled-forward artifacts. */
+  private[graft] def bloomStateDir(d: String): String =
+    s"${Scratch.root}/bloom_state_${d.replaceAll("[^A-Za-z0-9._-]", "_")}"
 
   /** CROSS-RUN incremental dedup — the two-run twin of the in-plan
     * [[bloomIncremental]], completing the incremental story: run 1 (the
@@ -799,25 +779,6 @@ object LlmDedup extends QueryModule {
       .limit(100)
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dd_er_score" -> (erScore _),
-    "dd_dup_stats"         -> (dupStats _),
-    "dd_chunk_dedup"       -> (chunkDedup _),
-    "dd_bloom_incremental" -> (bloomIncremental _),
-    "dd_bloom_state" -> (bloomStateRuns _),
-    "dd_dup_groups"     -> (dupGroups _),
-    "dd_lsh_recall"     -> (lshRecall _),
-    "dd_clusters"       -> (clusterComponents _),
-    "dd_lsh_clusters"   -> (lshClusters _),
-    "dd_exact"          -> (exact _),
-    "dd_keep_best"      -> (keepBest _),
-    "dd_minhash_sig"    -> (minhashSignatures _),
-    "dd_minhash_pairs"  -> (minhashCandidatePairs _),
-    "dd_simhash"        -> (simhash _),
-    "dd_ngram_jaccard"  -> (ngramJaccardPairs _),
-    "dd_threshold_sweep" -> (thresholdSweep _),
-  )
-
   private val sqlToks =
     "list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '')"
   private def sqlShingles(t: String): String =
@@ -826,8 +787,8 @@ object LlmDedup extends QueryModule {
   private def sqlHash32(e: String, seed: Int): String =
     s"CAST(('0x' || substring(md5('$seed:' || $e), 1, 8)) AS BIGINT)"
 
-  override def oracleSql: Map[String, String] = Map(
-    "dd_er_score" ->
+  override def catalog: Seq[Query] = Seq(
+    Query("dd_er_score", erScore, Some(
       """WITH p AS MATERIALIZED (
         |  SELECT p_partkey, p_name, p_brand, p_type, p_size,
         |    split_part(p_name, ' ', 1) AS blk
@@ -848,8 +809,8 @@ object LlmDedup extends QueryModule {
         |    WHEN score_milli >= 500 THEN 'possible'
         |    ELSE 'non_match' END AS verdict
         |FROM pairs
-        |ORDER BY score_milli DESC, a_key ASC, b_key ASC LIMIT 100""".stripMargin,
-    "dd_dup_stats" ->
+        |ORDER BY score_milli DESC, a_key ASC, b_key ASC LIMIT 100""".stripMargin)),
+    Query("dd_dup_stats", dupStats, Some(
       """WITH docs AS (
         |  SELECT doc_id, source, md5(text) AS h FROM documents),
         |firsts AS (SELECT h, MIN(doc_id) AS keep_id FROM docs GROUP BY h)
@@ -861,8 +822,8 @@ object LlmDedup extends QueryModule {
         |    / CAST(COUNT(*) AS DOUBLE) AS dup_rate
         |FROM docs d JOIN firsts f ON d.h = f.h
         |GROUP BY d.source
-        |ORDER BY d.source""".stripMargin,
-    "dd_chunk_dedup" ->
+        |ORDER BY d.source""".stripMargin)),
+    Query("dd_chunk_dedup", chunkDedup, Some(
       s"""WITH toksT AS (SELECT doc_id, $sqlToks AS t FROM documents),
          |ch AS (SELECT doc_id, i AS chunk_idx,
          |    md5(array_to_string(t[(16*(i-1)+1):(16*i)], ' ')) AS h,
@@ -873,11 +834,11 @@ object LlmDedup extends QueryModule {
          |  CAST(SUM(CASE WHEN occ <> owner THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_dup_chunks
          |FROM ch JOIN own USING (h)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
     // dd_bloom_state shares dd_bloom_incremental's oracle verbatim: the
     // oracle is a from-scratch recompute, so a hash-exact pass proves the
     // through-disk state path is equivalent to full recomputation.
-    "dd_bloom_state" ->
+    Query("dd_bloom_state", bloomStateRuns, Some(
       """WITH pe AS (SELECT DISTINCT
         |    CAST(('0x' || substring(md5(text), 1 + 8*j, 8)) AS BIGINT) % 4096 AS p
         |  FROM documents CROSS JOIN (SELECT unnest([0,1,2,3]) AS j)
@@ -897,8 +858,8 @@ object LlmDedup extends QueryModule {
         |  CASE WHEN maybe_seen = 1 AND EXISTS (SELECT 1 FROM documents e
         |    WHERE e.doc_id % 5 <> 0 AND md5(e.text) = md5(mb.text))
         |    THEN 1 ELSE 0 END AS is_dup
-        |FROM mb ORDER BY doc_id""".stripMargin,
-    "dd_bloom_incremental" ->
+        |FROM mb ORDER BY doc_id""".stripMargin)),
+    Query("dd_bloom_incremental", bloomIncremental, Some(
       """WITH pe AS (SELECT DISTINCT
         |    CAST(('0x' || substring(md5(text), 1 + 8*j, 8)) AS BIGINT) % 4096 AS p
         |  FROM documents CROSS JOIN (SELECT unnest([0,1,2,3]) AS j)
@@ -918,8 +879,8 @@ object LlmDedup extends QueryModule {
         |  CASE WHEN maybe_seen = 1 AND EXISTS (SELECT 1 FROM documents e
         |    WHERE e.doc_id % 5 <> 0 AND md5(e.text) = md5(mb.text))
         |    THEN 1 ELSE 0 END AS is_dup
-        |FROM mb ORDER BY doc_id""".stripMargin,
-    "dd_lsh_recall" -> {
+        |FROM mb ORDER BY doc_id""".stripMargin)),
+    Query("dd_lsh_recall", lshRecall, Some {
       val mh = (0 until 16).map { i =>
         s"list_min(list_transform(sh, x -> ${sqlHash32("x", i)})) AS mh$i"
       }.mkString(",\n  ")
@@ -960,8 +921,8 @@ object LlmDedup extends QueryModule {
          |    THEN CAST((SELECT COUNT(*) FROM caught) AS DOUBLE)
          |       / (SELECT COUNT(*) FROM tp) END AS recall
          |ORDER BY n_true""".stripMargin
-    },
-    "dd_clusters" -> {
+    }),
+    Query("dd_clusters", clusterComponents, Some {
       val bg = s"list_distinct(list_transform(generate_series(1, len($sqlToks) - 1), " +
         s"i -> ($sqlToks)[i] || '_' || ($sqlToks)[i+1]))"
       s"""WITH RECURSIVE d AS (
@@ -981,8 +942,8 @@ object LlmDedup extends QueryModule {
          |  SELECT s.a_id, r.lbl FROM sym s JOIN reach r ON s.b_id = r.node)
          |SELECT node AS doc_id, MIN(lbl) AS cluster_id
          |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
-    },
-    "dd_dup_groups" -> {
+    }),
+    Query("dd_dup_groups", dupGroups, Some {
       val tg = s"list_distinct(list_transform(generate_series(1, len($sqlToks) - 2), " +
         s"i -> ($sqlToks)[i] || '_' || ($sqlToks)[i+1] || '_' || ($sqlToks)[i+2]))"
       s"""WITH RECURSIVE d AS (
@@ -1008,8 +969,8 @@ object LlmDedup extends QueryModule {
          |    AS members
          |FROM labels GROUP BY cluster_id
          |ORDER BY keep_doc_id""".stripMargin
-    },
-    "dd_lsh_clusters" -> {
+    }),
+    Query("dd_lsh_clusters", lshClusters, Some {
       // Exact trigram-Jaccard ≥ 0.5 edges via an inverted-index join
       // (unnest trigram → join on trigram → shared count per pair): the
       // same edge set as an all-pairs scan — every J > 0 pair shares a
@@ -1036,8 +997,8 @@ object LlmDedup extends QueryModule {
          |  SELECT s.a_id, r.lbl FROM sym s JOIN reach r ON s.b_id = r.node)
          |SELECT node AS doc_id, MIN(lbl) AS cluster_id
          |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
-    },
-    "dd_keep_best" ->
+    }),
+    Query("dd_keep_best", keepBest, Some(
       s"""WITH t AS (
          |  SELECT doc_id, md5(text) AS content_md5, len($sqlToks) AS n_tokens
          |  FROM documents),
@@ -1051,12 +1012,12 @@ object LlmDedup extends QueryModule {
          |  MIN(CASE WHEN rn = 1 THEN n_tokens END) AS keep_tokens,
          |  MIN(doc_id) AS min_id_policy_doc
          |FROM r GROUP BY content_md5
-         |ORDER BY content_md5""".stripMargin,
-    "dd_exact" ->
+         |ORDER BY content_md5""".stripMargin)),
+    Query("dd_exact", exact, Some(
       """SELECT md5(text) AS content_md5, MIN(doc_id) AS keep_doc_id,
         |  COUNT(*) AS n_copies
-        |FROM documents GROUP BY md5(text) ORDER BY keep_doc_id""".stripMargin,
-    "dd_minhash_sig" -> {
+        |FROM documents GROUP BY md5(text) ORDER BY keep_doc_id""".stripMargin)),
+    Query("dd_minhash_sig", minhashSignatures, Some {
       val mh = (0 until 16).map { i =>
         s"list_min(list_transform(sh, x -> ${sqlHash32("x", i)})) AS mh$i"
       }.mkString(",\n  ")
@@ -1073,8 +1034,10 @@ object LlmDedup extends QueryModule {
          |  FROM (SELECT doc_id, ${sqlShingles(sqlToks)} AS sh FROM documents
          |        WHERE len($sqlToks) >= 3) s) m
          |ORDER BY doc_id""".stripMargin
-    },
-    "dd_simhash" ->
+    }),
+    // Rows-only: xxhash64 scale path (see Scaladoc).
+    Query("dd_minhash_pairs", minhashCandidatePairs, None),
+    Query("dd_simhash", simhash, Some(
       s"""SELECT doc_id,
          |  list_reduce(list_transform(generate_series(0, 31), b ->
          |    CASE WHEN list_reduce(list_transform(hs, h ->
@@ -1085,8 +1048,8 @@ object LlmDedup extends QueryModule {
          |FROM (SELECT doc_id,
          |    list_transform(list_distinct($sqlToks), t -> ${sqlHash32("t", 99)}) AS hs
          |  FROM documents) t
-         |ORDER BY doc_id""".stripMargin,
-    "dd_ngram_jaccard" -> {
+         |ORDER BY doc_id""".stripMargin)),
+    Query("dd_ngram_jaccard", ngramJaccardPairs, Some {
       val bg = s"list_distinct(list_transform(generate_series(1, len($sqlToks) - 1), " +
         s"i -> ($sqlToks)[i] || '_' || ($sqlToks)[i+1]))"
       s"""SELECT lang, source, a_id, b_id, jaccard FROM (
@@ -1100,8 +1063,8 @@ object LlmDedup extends QueryModule {
          |    ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id) p
          |WHERE jaccard > 0
          |ORDER BY jaccard DESC, a_id, b_id LIMIT 200""".stripMargin
-    },
-    "dd_threshold_sweep" -> {
+    }),
+    Query("dd_threshold_sweep", thresholdSweep, Some {
       val bg = s"list_distinct(list_transform(generate_series(1, len($sqlToks) - 1), " +
         s"i -> ($sqlToks)[i] || '_' || ($sqlToks)[i+1]))"
       s"""WITH pairs AS (
@@ -1125,7 +1088,6 @@ object LlmDedup extends QueryModule {
          |  FROM (SELECT t, unnest([a_id, b_id]) AS m FROM e) GROUP BY t)
          |SELECT t, n_pairs, n_docs FROM np JOIN nd USING (t)
          |ORDER BY t""".stripMargin
-    },
-    // dd_minhash_pairs: rows-only (xxhash64 scale path; see Scaladoc)
+    }),
   )
 }

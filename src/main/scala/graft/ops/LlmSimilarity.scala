@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -953,33 +953,6 @@ object LlmSimilarity extends QueryModule {
       .orderBy(col("q_id"), col("rank"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_matryoshka_topk" -> (matryoshkaTopK _),
-    "sim_mmr_rerank" -> (mmrRerank _),
-    "sim_knn_graph" -> (knnGraph _),
-    "sim_knn_descent" -> (knnDescent _),
-    "sim_ivf_pq_topk" -> (ivfPqTopK _),
-    "sim_sparse_topk" -> (sparseTopK _),
-    "sim_knn_recall" -> (knnRecall _),
-    "sim_range_search" -> (rangeSearch _),
-    "vec_quantize_int8" -> (quantizeInt8 _),
-    "vec_pca_power"   -> (pcaPower _),
-    "sim_pq_topk"     -> (pqTopK _),
-    "dd_embed_neardup_ann" -> (embeddingNearDupAnn _),
-    "sim_ivf_topk"    -> (ivfTopK _),
-    "dd_embed_neardup" -> (embeddingNearDup _),
-    "dd_semdedup"     -> (semDedup _),
-    "sim_cosine_topk" -> (cosineTopK _),
-    "sim_top_pairs"   -> (topPairs _),
-    "sim_lsh_buckets" -> (lshBuckets _),
-    "sim_ann_recall"  -> (annRecall _),
-    "vec_centroids"   -> (centroids _),
-    "vec_kmeans"      -> (kmeans _),
-    "vec_norms"       -> (norms _),
-    "vec_standardize" -> (standardize _),
-    "sim_centroid_eval" -> (centroidEval _),
-  )
-
   /** DuckDB twin of `dotd(a, b)` (same sequential fold). */
   private def sqlDot(a: String, b: String): String =
     s"list_reduce(list_transform(generate_series(1, len($a)), " +
@@ -1066,8 +1039,8 @@ object LlmSimilarity extends QueryModule {
        |    list((av * av) ORDER BY pos)), (a,b) -> a + b)) AS nv FROM av$k)"""
       .stripMargin
 
-  override def oracleSql: Map[String, String] = Map(
-    "vec_pca_power" ->
+  override def catalog: Seq[Query] = Seq(
+    Query("vec_pca_power", pcaPower, Some(
       s"""WITH X AS (SELECT vec_id,
          |    list_transform(embedding, y -> CAST(y AS DOUBLE)) AS x
          |  FROM embeddings),
@@ -1078,8 +1051,8 @@ object LlmSimilarity extends QueryModule {
          |  FROM av1 CROSS JOIN nm1),
          |${pcaIter("v1", 2)}
          |SELECT CAST(pos AS INT) AS pos, (av / nv) AS loading, nv AS lambda
-         |FROM av2 CROSS JOIN nm2 ORDER BY pos""".stripMargin,
-    "sim_pq_topk" ->
+         |FROM av2 CROSS JOIN nm2 ORDER BY pos""".stripMargin)),
+    Query("sim_pq_topk", pqTopK, Some(
       """WITH sub AS (
         |  SELECT vec_id, j, embedding[j*16+1 : j*16+16] AS sub
         |  FROM embeddings CROSS JOIN range(0, 4) r(j)),
@@ -1115,8 +1088,8 @@ object LlmSimilarity extends QueryModule {
         |    row_number() OVER (PARTITION BY q_id
         |      ORDER BY score DESC, c_id) AS rank
         |  FROM scores) t
-        |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin,
-    "dd_embed_neardup_ann" ->
+        |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin)),
+    Query("dd_embed_neardup_ann", embeddingNearDupAnn, Some(
       s"""WITH sig AS (
          |  SELECT vec_id, embedding,
          |    sqrt(${sqlDot("embedding", "embedding")}) AS nrm,
@@ -1130,8 +1103,8 @@ object LlmSimilarity extends QueryModule {
          |  SELECT a.vec_id AS keep_id, b.vec_id AS dup_id,
          |    ${sqlDot("a.embedding", "b.embedding")} / (a.nrm * b.nrm) AS score
          |  FROM sig a JOIN sig b ON a.bucket1 = b.bucket1 AND a.vec_id < b.vec_id) u
-         |ORDER BY score DESC, keep_id, dup_id LIMIT 10""".stripMargin,
-    "sim_ann_recall" ->
+         |ORDER BY score DESC, keep_id, dup_id LIMIT 10""".stripMargin)),
+    Query("sim_ann_recall", annRecall, Some(
       s"""WITH $sqlEvalSample,
          |sig AS (
          |  SELECT vec_id, embedding,
@@ -1153,8 +1126,8 @@ object LlmSimilarity extends QueryModule {
          |    / COUNT(*) AS recall_1t,
          |  CAST(SUM(CASE WHEN a_b0 = b_b0 OR a_b1 = b_b1 THEN 1 ELSE 0 END)
          |    AS DOUBLE) / COUNT(*) AS recall_2t
-         |FROM truth ORDER BY n_true""".stripMargin,
-    "dd_semdedup" ->
+         |FROM truth ORDER BY n_true""".stripMargin)),
+    Query("dd_semdedup", semDedup, Some(
       s"""WITH cent AS (SELECT vec_id AS cid, embedding FROM embeddings WHERE vec_id < 8),
          |assign AS (
          |  SELECT vec_id, embedding, nrm, cell FROM (
@@ -1173,16 +1146,16 @@ object LlmSimilarity extends QueryModule {
          |SELECT a.vec_id, a.cell,
          |  CASE WHEN d.vec_id IS NULL THEN 0 ELSE 1 END AS is_dup
          |FROM assign a LEFT JOIN dups d ON a.vec_id = d.vec_id
-         |ORDER BY a.vec_id""".stripMargin,
-    "dd_embed_neardup" ->
+         |ORDER BY a.vec_id""".stripMargin)),
+    Query("dd_embed_neardup", embeddingNearDup, Some(
       s"""WITH $sqlEvalSample
          |SELECT a_id AS keep_id, b_id AS dup_id, score FROM (
          |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
          |    ${sqlCos("a.embedding", "b.embedding")} AS score
          |  FROM ev a JOIN ev b ON a.vec_id < b.vec_id
          |  ORDER BY score DESC, a_id, b_id LIMIT 10) t
-         |ORDER BY score DESC, keep_id, dup_id""".stripMargin,
-    "sim_ivf_topk" -> {
+         |ORDER BY score DESC, keep_id, dup_id""".stripMargin)),
+    Query("sim_ivf_topk", ivfTopK, Some {
       val dotQC = sqlDot("q.embedding", "c.embedding")
       s"""WITH cent AS (SELECT vec_id AS cid, embedding FROM embeddings WHERE vec_id < 8),
          |assign AS (
@@ -1213,8 +1186,8 @@ object LlmSimilarity extends QueryModule {
          |  FROM probes p JOIN assign a ON p.cell = a.cell
          |  WHERE p.q_id <> a.c_id) t
          |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
-    },
-    "sim_matryoshka_topk" -> {
+    }),
+    Query("sim_matryoshka_topk", matryoshkaTopK, Some {
       val preDot = "list_reduce(list_transform(generate_series(1, 16), " +
         "i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)), " +
         "(acc, x) -> acc + x)"
@@ -1231,8 +1204,9 @@ object LlmSimilarity extends QueryModule {
          |    WHERE q.vec_id % 211 = 0) s
          |  WHERE pre_rank <= 20) t
          |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
-    },
-    "sim_cosine_topk" ->
+    }),
+    Query("sim_mmr_rerank", mmrRerank, None),
+    Query("sim_cosine_topk", cosineTopK, Some(
       s"""SELECT q_id, rank, c_id, score FROM (
          |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
          |    ${sqlCos("q.embedding", "c.embedding")} AS score,
@@ -1240,18 +1214,18 @@ object LlmSimilarity extends QueryModule {
          |      ORDER BY ${sqlCos("q.embedding", "c.embedding")} DESC, c.vec_id) AS rank
          |  FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
          |  WHERE q.vec_id < 5) t
-         |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
-    "sim_top_pairs" ->
+         |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin)),
+    Query("sim_top_pairs", topPairs, Some(
       s"""WITH $sqlEvalSample
          |SELECT a.vec_id AS a_id, b.vec_id AS b_id,
          |  ${sqlCos("a.embedding", "b.embedding")} AS score
          |FROM ev a JOIN ev b ON a.vec_id < b.vec_id
-         |ORDER BY score DESC, a_id, b_id LIMIT 20""".stripMargin,
-    "sim_lsh_buckets" ->
+         |ORDER BY score DESC, a_id, b_id LIMIT 20""".stripMargin)),
+    Query("sim_lsh_buckets", lshBuckets, Some(
       s"""SELECT bucket, COUNT(*) AS n FROM (
          |  SELECT vec_id, $sqlBucket AS bucket FROM embeddings) t
-         |GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "vec_kmeans" -> {
+         |GROUP BY bucket ORDER BY bucket""".stripMargin)),
+    Query("vec_kmeans", kmeans, Some {
       // per-iteration building blocks of the Lloyd loop, mirrored from the
       // Spark side: IEEE L2-squared fold in dim order, argmin tie-broken
       // on cid, and the two-level chunked-fold centroid mean
@@ -1294,8 +1268,8 @@ object LlmSimilarity extends QueryModule {
          |${dists("d3", "c2")},
          |${argmin("a3", "d3")}
          |SELECT vec_id, cid, dist FROM a3 ORDER BY vec_id""".stripMargin
-    },
-    "vec_centroids" ->
+    }),
+    Query("vec_centroids", centroids, Some(
       """WITH lvl1 AS (
         |  SELECT label, k, vec_id // 256 AS chunk,
         |    list_reduce(list_prepend(0.0, list_sort(
@@ -1308,8 +1282,8 @@ object LlmSimilarity extends QueryModule {
         |  list_reduce(list_prepend(0.0, list(csum ORDER BY chunk)),
         |    (a, x) -> a + x) / CAST(SUM(cn) AS BIGINT) AS mean,
         |  CAST(SUM(cn) AS BIGINT) AS n_vecs
-        |FROM lvl1 GROUP BY label, k ORDER BY label, pos""".stripMargin,
-    "sim_centroid_eval" ->
+        |FROM lvl1 GROUP BY label, k ORDER BY label, pos""".stripMargin)),
+    Query("sim_centroid_eval", centroidEval, Some(
       """WITH lvl1 AS (
         |  SELECT label, k, vec_id // 256 AS chunk,
         |    list_reduce(list_prepend(0.0, list_sort(
@@ -1346,8 +1320,8 @@ object LlmSimilarity extends QueryModule {
         |  CAST(COALESCE(SUM(CASE WHEN label = pred THEN n END), 0)
         |    AS DOUBLE) / CAST(SUM(n) AS DOUBLE) AS accuracy FROM cmx)
         |SELECT label, pred, n, accuracy FROM cmx CROSS JOIN acc
-        |ORDER BY label, pred""".stripMargin,
-    "vec_standardize" ->
+        |ORDER BY label, pred""".stripMargin)),
+    Query("vec_standardize", standardize, Some(
       """WITH lvl1 AS (
         |  SELECT k, vec_id // 256 AS chunk,
         |    list_reduce(list_prepend(0.0, list_sort(
@@ -1374,13 +1348,13 @@ object LlmSimilarity extends QueryModule {
         |    sqrt(msq - mean * mean) AS z
         |FROM embeddings e CROSS JOIN range(1, 65) r(k) JOIN st USING (k)
         |WHERE e.vec_id % 211 = 0
-        |ORDER BY vec_id, pos""".stripMargin,
-    "vec_norms" ->
+        |ORDER BY vec_id, pos""".stripMargin)),
+    Query("vec_norms", norms, Some(
       s"""SELECT vec_id, label,
          |  sqrt(${sqlDot("embedding", "embedding")}) AS l2_norm,
          |  len(embedding) AS dim
-         |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "sim_sparse_topk" ->
+         |FROM embeddings ORDER BY vec_id""".stripMargin)),
+    Query("sim_sparse_topk", sparseTopK, Some(
       """WITH x AS (
         |  SELECT vec_id, i AS dim, CAST(embedding[i] AS DOUBLE) AS v
         |  FROM embeddings
@@ -1402,8 +1376,8 @@ object LlmSimilarity extends QueryModule {
         |    row_number() OVER (PARTITION BY q_id
         |      ORDER BY score DESC, c_id) AS rank
         |  FROM m) t
-        |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin,
-    "sim_ivf_pq_topk" -> {
+        |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin)),
+    Query("sim_ivf_pq_topk", ivfPqTopK, Some {
       def dot64(a: String, b: String): String =
         s"list_reduce(list_transform(generate_series(1, 64), " +
           s"i -> ($a)[i] * ($b)[i]), (acc, x) -> acc + x)"
@@ -1469,12 +1443,12 @@ object LlmSimilarity extends QueryModule {
          |      ORDER BY qc_dot + rsum DESC, c_id) AS rank
          |  FROM adc) t
          |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
-    },
-    "sim_knn_descent" ->
+    }),
+    Query("sim_knn_descent", knnDescent, Some(
       s"""WITH $sqlKnnCtes
          |SELECT u AS vec_id, rank, w AS nb_id, score FROM dsc
-         |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin,
-    "sim_knn_recall" ->
+         |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin)),
+    Query("sim_knn_recall", knnRecall, Some(
       s"""WITH $sqlKnnCtes,
          |smp AS MATERIALIZED (
          |  SELECT vec_id FROM embeddings WHERE vec_id % 7 = 0
@@ -1503,8 +1477,8 @@ object LlmSimilarity extends QueryModule {
          |  CAST(SUM(hd) AS BIGINT) AS hit_desc,
          |  CAST(SUM(hb) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS recall_base,
          |  CAST(SUM(hd) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS recall_desc
-         |FROM hits ORDER BY n_truth""".stripMargin,
-    "sim_knn_graph" ->
+         |FROM hits ORDER BY n_truth""".stripMargin)),
+    Query("sim_knn_graph", knnGraph, Some(
       s"""WITH sig AS (
          |  SELECT vec_id, embedding,
          |    sqrt(${sqlDot("embedding", "embedding")}) AS nrm,
@@ -1525,15 +1499,15 @@ object LlmSimilarity extends QueryModule {
          |    row_number() OVER (PARTITION BY vec_id
          |      ORDER BY score DESC, nb_id) AS rank
          |  FROM cand) t
-         |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin,
-    "sim_range_search" ->
+         |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin)),
+    Query("sim_range_search", rangeSearch, Some(
       s"""SELECT q.vec_id AS q_id, c.vec_id AS c_id,
          |  ${sqlCos("q.embedding", "c.embedding")} AS score
          |FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
          |WHERE q.vec_id < 3
          |  AND ${sqlCos("q.embedding", "c.embedding")} >= 0.1
-         |ORDER BY q_id, c_id""".stripMargin,
-    "vec_quantize_int8" ->
+         |ORDER BY q_id, c_id""".stripMargin)),
+    Query("vec_quantize_int8", quantizeInt8, Some(
       """WITH s AS (
         |  SELECT vec_id, label, embedding,
         |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))))
@@ -1543,6 +1517,6 @@ object LlmSimilarity extends QueryModule {
         |  array_to_string(list_transform(embedding,
         |    x -> CAST(CAST(floor(CAST(x AS DOUBLE) * 127.0 / scale + 0.5)
         |      AS INT) AS VARCHAR)), '|') AS codes
-        |FROM s WHERE scale > 0 ORDER BY vec_id""".stripMargin,
+        |FROM s WHERE scale > 0 ORDER BY vec_id""".stripMargin)),
   )
 }

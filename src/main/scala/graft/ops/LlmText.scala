@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
+import graft.OracleSafe.d2d
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -369,7 +370,7 @@ object LlmText extends QueryModule {
       .groupBy(col("doc_id"))
       .agg(sum(col("dc")).as("n_bigrams"),
         round(
-          sum(col("term").cast("decimal(38,18)")).cast("string").cast("double")
+          d2d(sum(col("term").cast("decimal(38,18)")))
             / sum(col("dc")).cast("double"),
           6).as("avg_logp"))
       .orderBy(col("doc_id"))
@@ -418,8 +419,8 @@ object LlmText extends QueryModule {
       val err = pred.select(col("doc_id"), (col("pred") - col("y")).as("err"))
       val grad = x.join(err, "doc_id").crossJoin(n)
         .groupBy(col("bucket"))
-        .agg(sum((lit(2.0) * col("err") * col("x") / col("n"))
-          .cast("decimal(32,18)")).cast("string").cast("double").as("g"))
+        .agg(d2d(sum((lit(2.0) * col("err") * col("x") / col("n"))
+          .cast("decimal(32,18)"))).as("g"))
       w = w.join(grad, Seq("bucket"), "left")
         .select(col("bucket"),
           (col("wgt") - lit(lr) * coalesce(col("g"), lit(0.0))).as("wgt"))
@@ -898,35 +899,6 @@ object LlmText extends QueryModule {
       .orderBy(col("bucket"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_vocab_growth" -> (vocabGrowth _),
-    "text_phrase_search" -> (phraseSearch _),
-    "text_langid_eval" -> (langIdEval _),
-    "sim_hybrid_rrf" -> (hybridRrf _),
-    "text_code_filter" -> (codeFilter _),
-    "text_bm25" -> (bm25 _),
-    "text_bm25_multi" -> (bm25Multi _),
-    "text_readability" -> (readability _),
-    "text_bpe_encode" -> (bpeEncode _),
-    "text_classifier_train" -> (classifierTrain _),
-    "text_bpe_pairs" -> (bpePairs _),
-    "text_bpe_merges" -> (bpeMerges _),
-    "text_lm_score" -> (lmScore _),
-    "text_char_entropy" -> (charEntropy _),
-    "text_quality_classifier" -> (qualityClassifier _),
-    "pipeline_prep"    -> (prepPipeline _),
-    "text_normalize"   -> (normalize _),
-    "text_winnow_fp"   -> (winnowFingerprint _),
-    "text_tfidf"       -> (tfidf _),
-    "text_lang_id"     -> (langId _),
-    "text_quality"     -> (quality _),
-    "text_token_counts" -> (tokenCounts _),
-    "text_word_freq"   -> (wordFreq _),
-    "text_pmi_collocations" -> (pmiCollocations _),
-    "text_compress_ratio" -> (compressRatio _),
-    "text_fingerprint" -> (fingerprint _),
-  )
-
   private val sqlToks = "list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '')"
   private def sqlHits(words: Seq[String]): String =
     s"len(list_filter($sqlToks, t -> list_contains([${words.map(w => s"'$w'").mkString(",")}], t)))"
@@ -937,8 +909,8 @@ object LlmText extends QueryModule {
       case (acc, (l, r)) => s"replace($acc, '<$l><$r>', '<$l$r>')"
     }
 
-  override def oracleSql: Map[String, String] = Map(
-    "text_vocab_growth" ->
+  override def catalog: Seq[Query] = Seq(
+    Query("text_vocab_growth", vocabGrowth, Some(
       s"""WITH postings AS (
          |  SELECT doc_id, unnest($sqlToks) AS term FROM documents),
          |tb AS (SELECT doc_id // 50 AS bucket,
@@ -962,10 +934,10 @@ object LlmText extends QueryModule {
          |FROM g
          |WINDOW w AS (ORDER BY bucket
          |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |ORDER BY bucket""".stripMargin,
+         |ORDER BY bucket""".stripMargin)),
     // Independent derivation: direct windowed list scan instead of the
     // positional-postings self-join.
-    "text_phrase_search" ->
+    Query("text_phrase_search", phraseSearch, Some(
       s"""WITH t AS (
          |  SELECT doc_id,
          |    list_filter(generate_series(1, len($sqlToks) - 1),
@@ -974,10 +946,10 @@ object LlmText extends QueryModule {
          |  FROM documents)
          |SELECT doc_id, CAST(len(hits) AS BIGINT) AS n_matches,
          |  CAST(hits[1] - 1 AS BIGINT) AS first_pos
-         |FROM t WHERE len(hits) > 0 ORDER BY doc_id""".stripMargin,
+         |FROM t WHERE len(hits) > 0 ORDER BY doc_id""".stripMargin)),
     // RRF terms CAST to DOUBLE explicitly — DuckDB's bare 1.0 literal is
     // DECIMAL and decimal division would diverge from Spark's double.
-    "sim_hybrid_rrf" ->
+    Query("sim_hybrid_rrf", hybridRrf, Some(
       s"""WITH dd AS (
          |  SELECT doc_id, CAST(len($sqlToks) AS BIGINT) AS dl,
          |    $sqlToks AS toks
@@ -1030,8 +1002,8 @@ object LlmText extends QueryModule {
          |    AS rk,
          |  id, CAST(lex_rank AS BIGINT) AS lex_rank,
          |  CAST(dense_rank AS BIGINT) AS dense_rank, rrf
-         |FROM f QUALIFY rk <= 10 ORDER BY rk""".stripMargin,
-    "text_code_filter" ->
+         |FROM f QUALIFY rk <= 10 ORDER BY rk""".stripMargin)),
+    Query("text_code_filter", codeFilter, Some(
       """WITH c AS (
         |  SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
         |    CAST(len(regexp_extract_all(text, '[{}();=<>]')) AS BIGINT)
@@ -1045,8 +1017,8 @@ object LlmText extends QueryModule {
         |  CAST(n_digits AS DOUBLE) / CAST(n_chars AS DOUBLE) AS digit_ratio,
         |  CAST(CASE WHEN n_symbols * 100 >= n_chars * 3 THEN 1 ELSE 0 END
         |    AS INT) AS is_code
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "text_bm25" ->
+        |FROM c ORDER BY doc_id""".stripMargin)),
+    Query("text_bm25", bm25, Some(
       s"""WITH dd AS (
          |  SELECT doc_id, CAST(len($sqlToks) AS BIGINT) AS dl,
          |    $sqlToks AS toks
@@ -1077,8 +1049,8 @@ object LlmText extends QueryModule {
          |SELECT CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS INT)
          |    AS rk,
          |  doc_id, n_terms_matched, bm25
-         |FROM pd QUALIFY rk <= 10 ORDER BY rk""".stripMargin,
-    "text_bm25_multi" ->
+         |FROM pd QUALIFY rk <= 10 ORDER BY rk""".stripMargin)),
+    Query("text_bm25_multi", bm25Multi, Some(
       s"""WITH dd AS (
          |  SELECT doc_id, CAST(len($sqlToks) AS BIGINT) AS dl,
          |    $sqlToks AS toks
@@ -1145,8 +1117,8 @@ object LlmText extends QueryModule {
          |    ORDER BY bm25 DESC, doc_id) AS INT) AS rk,
          |  doc_id, n_terms_matched, bm25
          |FROM q WHERE n_terms_matched > 0
-         |QUALIFY rk <= 10 ORDER BY q_id, rk""".stripMargin,
-    "text_readability" ->
+         |QUALIFY rk <= 10 ORDER BY q_id, rk""".stripMargin)),
+    Query("text_readability", readability, Some(
       """WITH c AS (
         |  SELECT doc_id,
         |    greatest(CAST(1 AS BIGINT), CAST(len(list_filter(
@@ -1167,8 +1139,8 @@ object LlmText extends QueryModule {
         |    (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE)) -
         |    84.6 * (CAST(n_vowel_groups AS DOUBLE) / CAST(n_words AS DOUBLE))
         |    AS reading_ease
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "text_bpe_encode" ->
+        |FROM c ORDER BY doc_id""".stripMargin)),
+    Query("text_bpe_encode", bpeEncode, Some(
       s"""WITH t AS (
          |  SELECT doc_id, lang, $sqlToks AS ws FROM documents),
          |e AS (
@@ -1186,10 +1158,9 @@ object LlmText extends QueryModule {
          |  round(CAST(n_chars AS DOUBLE) / CAST(list_sum(list_transform(encs,
          |    e -> length(e) - length(replace(e, '<', '')))) AS DOUBLE), 6)
          |    AS chars_per_symbol
-         |FROM e ORDER BY doc_id""".stripMargin,
-    // text_classifier_train: rows-only (iterative GD; see Scaladoc)
-    // text_bpe_merges: rows-only (multi-round merge recursion; see Scaladoc)
-    "text_bpe_pairs" ->
+         |FROM e ORDER BY doc_id""".stripMargin)),
+    Query("text_classifier_train", classifierTrain, None), // iterative GD
+    Query("text_bpe_pairs", bpePairs, Some(
       s"""WITH vocab AS (
          |  SELECT w, COUNT(*) AS freq FROM (
          |    SELECT unnest($sqlToks) AS w FROM documents) t
@@ -1198,8 +1169,9 @@ object LlmText extends QueryModule {
          |  SELECT freq, unnest(list_transform(generate_series(1, length(w) - 1),
          |    i -> substr(w, i, 2))) AS pair FROM vocab)
          |SELECT pair, CAST(SUM(freq) AS BIGINT) AS cnt
-         |FROM pairs GROUP BY pair ORDER BY cnt DESC, pair LIMIT 30""".stripMargin,
-    "text_lm_score" ->
+         |FROM pairs GROUP BY pair ORDER BY cnt DESC, pair LIMIT 30""".stripMargin)),
+    Query("text_bpe_merges", bpeMerges, None), // merge recursion
+    Query("text_lm_score", lmScore, Some(
       """WITH norm AS (
         |  SELECT doc_id,
         |    regexp_replace(regexp_replace(lower(text), '[^a-z ]', '', 'g'),
@@ -1224,8 +1196,8 @@ object LlmText extends QueryModule {
         |    / CAST(SUM(d.dc) AS DOUBLE), 6) AS avg_logp
         |FROM docbg d JOIN lm l ON d.bg = l.bg
         |GROUP BY d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    "text_char_entropy" ->
+        |ORDER BY d.doc_id""".stripMargin)),
+    Query("text_char_entropy", charEntropy, Some(
       """WITH counts AS (
         |  SELECT doc_id, ch, CAST(COUNT(*) AS BIGINT) AS c
         |  FROM (SELECT doc_id,
@@ -1246,8 +1218,8 @@ object LlmText extends QueryModule {
         |    (a, x) -> a + x), 6) AS entropy_nats
         |FROM counts c JOIN tot t ON c.doc_id = t.doc_id
         |GROUP BY c.doc_id, t.n_letters, t.n_distinct_letters
-        |ORDER BY c.doc_id""".stripMargin,
-    "text_quality_classifier" ->
+        |ORDER BY c.doc_id""".stripMargin)),
+    Query("text_quality_classifier", qualityClassifier, Some(
       s"""WITH toks AS (SELECT doc_id,
          |    CAST(('0x' || substring(md5(tok), 1, 8)) AS BIGINT) % 16 AS bucket
          |  FROM (SELECT doc_id, unnest($sqlToks) AS tok FROM documents) t),
@@ -1261,8 +1233,8 @@ object LlmText extends QueryModule {
          |  FROM db GROUP BY db.doc_id)
          |SELECT sc.doc_id, (raw / CAST(n AS DOUBLE)) AS score
          |FROM sc JOIN nt USING (doc_id)
-         |ORDER BY score DESC, doc_id LIMIT 50""".stripMargin,
-    "pipeline_prep" ->
+         |ORDER BY score DESC, doc_id LIMIT 50""".stripMargin)),
+    Query("pipeline_prep", prepPipeline, Some(
       s"""WITH kept AS (
          |  SELECT doc_id, lang, source, text, len($sqlToks) AS n_tokens
          |  FROM documents
@@ -1274,8 +1246,8 @@ object LlmText extends QueryModule {
          |  CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
          |  MIN(k.doc_id) AS first_doc
          |FROM kept k JOIN reps r ON k.doc_id = r.doc_id
-         |GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-    "text_tfidf" ->
+         |GROUP BY lang, source ORDER BY lang, source""".stripMargin)),
+    Query("text_tfidf", tfidf, Some(
       s"""WITH terms AS (
          |  SELECT doc_id, token, COUNT(*) AS tf FROM (
          |    SELECT doc_id, unnest($sqlToks) AS token FROM documents) u
@@ -1289,8 +1261,8 @@ object LlmText extends QueryModule {
          |    row_number() OVER (PARTITION BY t.doc_id
          |      ORDER BY t.tf * (n.n_docs / d.df) DESC, t.token) AS rk
          |  FROM terms t JOIN dfreq d ON t.token = d.token CROSS JOIN n) x
-         |WHERE rk <= 5 ORDER BY doc_id, rk""".stripMargin,
-    "text_normalize" ->
+         |WHERE rk <= 5 ORDER BY doc_id, rk""".stripMargin)),
+    Query("text_normalize", normalize, Some(
       """WITH t AS (
         |  SELECT doc_id,
         |    '  **' || upper(substring(text, 1, 16)) || '**' || chr(9) ||
@@ -1301,9 +1273,9 @@ object LlmText extends QueryModule {
         |    '\s+', ' ', 'g')) AS norm_text,
         |  length(trim(regexp_replace(regexp_replace(lower(raw), '[^a-z0-9\s]', ' ', 'g'),
         |    '\s+', ' ', 'g'))) AS n_chars_norm
-        |FROM t ORDER BY doc_id""".stripMargin,
-    // text_winnow_fp: rows-only (rolling-hash winnowing; see Scaladoc)
-    "text_langid_eval" ->
+        |FROM t ORDER BY doc_id""".stripMargin)),
+    Query("text_winnow_fp", winnowFingerprint, None), // rolling hash
+    Query("text_langid_eval", langIdEval, Some(
       s"""WITH p AS (
          |  SELECT lang,
          |    CASE
@@ -1321,8 +1293,8 @@ object LlmText extends QueryModule {
          |  CAST(COALESCE(SUM(CASE WHEN lang = predicted THEN n END), 0)
          |    AS DOUBLE) / CAST(SUM(n) AS DOUBLE) AS accuracy FROM cm)
          |SELECT lang, predicted, n, accuracy FROM cm CROSS JOIN acc
-         |ORDER BY lang, predicted""".stripMargin,
-    "text_lang_id" ->
+         |ORDER BY lang, predicted""".stripMargin)),
+    Query("text_lang_id", langId, Some(
       s"""SELECT doc_id, lang,
          |  ${sqlHits(stopwords("en"))} AS s_en, ${sqlHits(stopwords("es"))} AS s_es,
          |  ${sqlHits(stopwords("fr"))} AS s_fr, ${sqlHits(stopwords("de"))} AS s_de,
@@ -1334,8 +1306,8 @@ object LlmText extends QueryModule {
          |     AND ${sqlHits(stopwords("es"))} >= ${sqlHits(stopwords("de"))} THEN 'es'
          |    WHEN ${sqlHits(stopwords("fr"))} >= ${sqlHits(stopwords("de"))} THEN 'fr'
          |    ELSE 'de' END AS predicted
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_quality" ->
+         |FROM documents ORDER BY doc_id""".stripMargin)),
+    Query("text_quality", quality, Some(
       s"""SELECT doc_id, length(text) AS n_chars, len($sqlToks) AS n_tokens,
          |  CAST(length(text) AS DOUBLE) / len($sqlToks) AS chars_per_token,
          |  CAST(len(list_filter($sqlToks, w -> length(w) >= 6)) AS DOUBLE)
@@ -1345,13 +1317,13 @@ object LlmText extends QueryModule {
          |  CAST(${sqlHits(stopwords("en"))} AS DOUBLE) / len($sqlToks) AS stopword_ratio,
          |  CAST(len($sqlToks) >= 5 AND CAST(length(text) AS DOUBLE) / len($sqlToks) < 12
          |    AS INT) AS keep
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_token_counts" ->
+         |FROM documents ORDER BY doc_id""".stripMargin)),
+    Query("text_token_counts", tokenCounts, Some(
       s"""SELECT doc_id, len($sqlToks) AS n_ws_tokens,
          |  len(list_distinct($sqlToks)) AS n_distinct_tokens,
          |  len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS n_bpe_pieces
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_pmi_collocations" ->
+         |FROM documents ORDER BY doc_id""".stripMargin)),
+    Query("text_pmi_collocations", pmiCollocations, Some(
       s"""WITH docs AS MATERIALIZED (SELECT $sqlToks AS toks FROM documents),
          |bg AS MATERIALIZED (
          |  SELECT UNNEST(toks[1:len(toks)-1]) AS a,
@@ -1374,15 +1346,16 @@ object LlmText extends QueryModule {
          |JOIN uni ua ON ua.w = p.a
          |JOIN uni ub ON ub.w = p.b
          |CROSS JOIN tot t CROSS JOIN mt
-         |ORDER BY lift DESC, p.a ASC, p.b ASC LIMIT 30""".stripMargin,
-    "text_word_freq" ->
+         |ORDER BY lift DESC, p.a ASC, p.b ASC LIMIT 30""".stripMargin)),
+    Query("text_compress_ratio", compressRatio, None), // zlib bytes
+    Query("text_word_freq", wordFreq, Some(
       s"""SELECT token, COUNT(*) AS n FROM (
          |  SELECT unnest($sqlToks) AS token FROM documents) t
-         |GROUP BY token ORDER BY n DESC, token LIMIT 50""".stripMargin,
-    "text_fingerprint" ->
+         |GROUP BY token ORDER BY n DESC, token LIMIT 50""".stripMargin)),
+    Query("text_fingerprint", fingerprint, Some(
       s"""SELECT doc_id,
          |  md5(array_to_string(list_sort(list_distinct($sqlToks)), ' ')) AS fp_md5,
          |  CAST(('0x' || substring(md5(array_to_string(list_sort(list_distinct($sqlToks)), ' ')), 1, 8)) AS BIGINT) AS fp32
-         |FROM documents ORDER BY doc_id""".stripMargin,
+         |FROM documents ORDER BY doc_id""".stripMargin)),
   )
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
+import graft.OracleSafe.d2d
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -337,10 +338,9 @@ object Ml extends QueryModule {
       .crossJoin(broadcast(nDf))
       .select(col("feature"), col("w").as("w_milli"), col("cnt"),
         col("sx"),
-        ((col("sum_abs_present") +
+        (d2d((col("sum_abs_present") +
           ((col("n") - col("cnt")) * abs(col("w") * col("sx")))
-            .cast("decimal(38,0)")).cast("decimal(38,0)")
-          .cast("string").cast("double") /
+            .cast("decimal(38,0)")).cast("decimal(38,0)")) /
           (col("n").cast("double") * col("n").cast("double") * lit(1000.0)))
           .as("mean_abs_phi"))
       .orderBy(col("mean_abs_phi").desc, col("feature").asc)
@@ -828,36 +828,13 @@ object Ml extends QueryModule {
       .orderBy(col("o_orderkey"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ml_ridge_2d" -> (ridge2d _),
-    "ml_training_set" -> (trainingSet _),
-    "ml_ks_score" -> (ksScore _),
-    "ml_shap_linear" -> (shapLinear _),
-    "ml_ridge_sweep" -> (ridgeSweep _),
-    "ml_logreg_score" -> (logregScore _),
-    "ml_tree_score" -> (treeScore _),
-    "ml_gbdt_margin" -> (gbdtMargin _),
-    "ml_auc_exact" -> (aucExact _),
-    "ml_confusion" -> (confusionSweep _),
-    "ml_calibration" -> (calibrationBins _),
-    "ml_kfold" -> (kfoldAssign _),
-    "ml_target_encode" -> (targetEncode _),
-    "ml_woe_iv" -> (woeIv _),
-    "ml_feature_hash" -> (featureHash _),
-    "ml_ndcg" -> (ndcgAtK _),
-    "ml_precision_at_k" -> (precisionAtK _),
-    "ml_conformal" -> (conformal _),
-    "ml_pr_auc" -> (prAuc _),
-    "ml_lift_gains" -> (liftGains _),
-  )
-
   private val eventsRelSql =
     """ev AS (SELECT user_id, event_id, value,
       |  CASE WHEN event_type = 'purchase' THEN CAST(1 AS BIGINT)
       |       ELSE CAST(0 AS BIGINT) END AS rel FROM events)""".stripMargin
 
-  override def oracleSql: Map[String, String] = Map(
-    "ml_training_set" ->
+  override def catalog: Seq[Query] = Seq(
+    Query("ml_training_set", trainingSet, Some(
       """WITH o AS MATERIALIZED (
         |  SELECT o_orderkey, o_custkey, o_orderdate,
         |    CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
@@ -879,8 +856,8 @@ object Ml extends QueryModule {
         |    CAST(o_orderdate AS DATE)), -1) AS BIGINT) AS days_since_prev,
         |  CAST(('0x' || substring(md5('ts:' || CAST(o_orderkey AS VARCHAR)),
         |    1, 8)) AS BIGINT) % 10 AS fold
-        |FROM o ORDER BY o_orderkey""".stripMargin,
-    "ml_shap_linear" ->
+        |FROM o ORDER BY o_orderkey""".stripMargin)),
+    Query("ml_shap_linear", shapLinear, Some(
       s"""WITH base AS ($baseSql),
          |$weightsSqlCte,
          |$featureRowsSql,
@@ -903,8 +880,8 @@ object Ml extends QueryModule {
          |    (CAST(nn.n AS DOUBLE) * CAST(nn.n AS DOUBLE) * 1000.0)
          |    AS mean_abs_phi
          |FROM perf p JOIN pres pr ON pr.feature = p.feature CROSS JOIN nn
-         |ORDER BY mean_abs_phi DESC, p.feature ASC""".stripMargin,
-    "ml_ridge_sweep" ->
+         |ORDER BY mean_abs_phi DESC, p.feature ASC""".stripMargin)),
+    Query("ml_ridge_sweep", ridgeSweep, Some(
       """WITH pu AS MATERIALIZED (
         |  SELECT user_id,
         |    CAST(COUNT(*) FILTER (event_type = 'view') AS BIGINT) AS u,
@@ -947,8 +924,8 @@ object Ml extends QueryModule {
         |  SQRT((cyy - 2.0 * b1 * cuy - 2.0 * b2 * cvy +
         |    b1 * b1 * cuu + 2.0 * b1 * b2 * cuv + b2 * b2 * cvv) /
         |    (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))) AS rmse
-        |FROM b ORDER BY lambda""".stripMargin,
-    "ml_ks_score" ->
+        |FROM b ORDER BY lambda""".stripMargin)),
+    Query("ml_ks_score", ksScore, Some(
       s"""WITH base AS ($baseSql),
          |vc AS MATERIALIZED (
          |  SELECT CAST(FLOOR(o_totalprice) AS BIGINT) AS score,
@@ -966,8 +943,8 @@ object Ml extends QueryModule {
          |  CAST(ABS(cp * n_neg - (ct - cp) * n_pos) AS DOUBLE) /
          |    CAST(n_pos * n_neg AS DOUBLE) AS ks
          |FROM cum CROSS JOIN tot
-         |ORDER BY ks_num DESC, score ASC LIMIT 1""".stripMargin,
-    "ml_ridge_2d" ->
+         |ORDER BY ks_num DESC, score ASC LIMIT 1""".stripMargin)),
+    Query("ml_ridge_2d", ridge2d, Some(
       """WITH pu AS MATERIALIZED (
         |  SELECT user_id,
         |    CAST(COUNT(*) FILTER (event_type = 'view') AS BIGINT) AS u,
@@ -1008,8 +985,8 @@ object Ml extends QueryModule {
         |  SQRT((cyy - 2.0 * b1 * cuy - 2.0 * b2 * cvy +
         |    b1 * b1 * cuu + 2.0 * b1 * b2 * cuv + b2 * b2 * cvv) /
         |    (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))) AS rmse
-        |FROM b""".stripMargin,
-    "ml_pr_auc" ->
+        |FROM b""".stripMargin)),
+    Query("ml_pr_auc", prAuc, Some(
       s"""WITH base AS ($baseSql),
          |scored AS (SELECT CAST(FLOOR(o_totalprice) AS BIGINT) AS score, y
          |  FROM base),
@@ -1035,8 +1012,8 @@ object Ml extends QueryModule {
          |      (CAST(cumTp AS DOUBLE) / CAST(cumN AS DOUBLE))) AS BIGINT)
          |    ELSE CAST(0 AS BIGINT) END) AS DOUBLE) /
          |    (1.0e9 * CAST(SUM(c1) AS DOUBLE)) AS avg_precision
-         |FROM cum ORDER BY n_pos""".stripMargin,
-    "ml_lift_gains" ->
+         |FROM cum ORDER BY n_pos""".stripMargin)),
+    Query("ml_lift_gains", liftGains, Some(
       s"""WITH $marginsSql,
          |vc AS (SELECT margin_milli, CAST(COUNT(*) AS BIGINT) AS c,
          |    CAST(SUM(y) AS BIGINT) AS c1
@@ -1064,8 +1041,8 @@ object Ml extends QueryModule {
          |    CAST(pos_tot AS DOUBLE) AS gain,
          |  CAST(n_pos * n_tot AS DOUBLE) / CAST(n * pos_tot AS DOUBLE)
          |    AS lift
-         |FROM g CROSS JOIN tot ORDER BY decile""".stripMargin,
-    "ml_conformal" ->
+         |FROM g CROSS JOIN tot ORDER BY decile""".stripMargin)),
+    Query("ml_conformal", conformal, Some(
       s"""WITH base AS ($baseSql),
          |pts AS (SELECT o_orderkey, c_mktsegment AS seg,
          |    CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents,
@@ -1099,15 +1076,15 @@ object Ml extends QueryModule {
          |FROM res CROSS JOIN q
          |WHERE split = 1
          |GROUP BY q.n_cal, q.k, q.q_hat
-         |ORDER BY q.n_cal""".stripMargin,
-    "ml_logreg_score" ->
+         |ORDER BY q.n_cal""".stripMargin)),
+    Query("ml_logreg_score", logregScore, Some(
       s"""WITH $marginsSql
          |SELECT o_orderkey, y, margin_milli,
          |  ROUND(1.0 / (1.0 + EXP(-CAST(margin_milli AS DOUBLE) / 1000.0)), 6)
          |    AS prob
          |FROM margins
-         |ORDER BY margin_milli DESC, o_orderkey LIMIT 20""".stripMargin,
-    "ml_tree_score" ->
+         |ORDER BY margin_milli DESC, o_orderkey LIMIT 20""".stripMargin)),
+    Query("ml_tree_score", treeScore, Some(
       s"""WITH base AS ($baseSql),
          |$treeNodesSqlCte,
          |s0 AS (SELECT base.*, 0 AS node FROM base),
@@ -1123,8 +1100,8 @@ object Ml extends QueryModule {
          |SELECT node AS leaf, CAST(COUNT(*) AS BIGINT) AS n,
          |  CAST(SUM(y) AS BIGINT) AS n_pos,
          |  CAST(SUM(y) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS pos_rate
-         |FROM s3 GROUP BY node ORDER BY leaf""".stripMargin,
-    "ml_gbdt_margin" ->
+         |FROM s3 GROUP BY node ORDER BY leaf""".stripMargin)),
+    Query("ml_gbdt_margin", gbdtMargin, Some(
       s"""WITH base AS ($baseSql),
          |$gbdtNodesSqlCte,
          |s0 AS (SELECT base.*, t.tree, 0 AS node
@@ -1140,8 +1117,8 @@ object Ml extends QueryModule {
          |  GROUP BY o_orderkey, y)
          |SELECT margin, CAST(COUNT(*) AS BIGINT) AS n,
          |  CAST(SUM(y) AS BIGINT) AS n_pos
-         |FROM rowm GROUP BY margin ORDER BY margin""".stripMargin,
-    "ml_auc_exact" ->
+         |FROM rowm GROUP BY margin ORDER BY margin""".stripMargin)),
+    Query("ml_auc_exact", aucExact, Some(
       s"""WITH base AS ($baseSql),
          |scored AS (SELECT CAST(FLOOR(o_totalprice) AS BIGINT) AS score, y
          |  FROM base),
@@ -1163,8 +1140,8 @@ object Ml extends QueryModule {
          |  CAST(2 * n_pos * n_neg AS BIGINT) AS auc_den,
          |  CAST(r1_2 - n_pos * (n_pos + 1) AS DOUBLE) /
          |    CAST(2 * n_pos * n_neg AS DOUBLE) AS auc
-         |FROM agg ORDER BY n_pos""".stripMargin,
-    "ml_confusion" ->
+         |FROM agg ORDER BY n_pos""".stripMargin)),
+    Query("ml_confusion", confusionSweep, Some(
       s"""WITH $marginsSql,
          |sweep AS (SELECT m.*, t.threshold,
          |    CASE WHEN m.margin_milli >= t.threshold THEN 1 ELSE 0 END AS pred
@@ -1181,8 +1158,8 @@ object Ml extends QueryModule {
          |  CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) AS precision,
          |  CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) AS recall,
          |  CAST(2 * tp AS DOUBLE) / CAST(2 * tp + fp + fn AS DOUBLE) AS f1
-         |FROM cm ORDER BY threshold""".stripMargin,
-    "ml_calibration" ->
+         |FROM cm ORDER BY threshold""".stripMargin)),
+    Query("ml_calibration", calibrationBins, Some(
       s"""WITH $marginsSql,
          |b AS (SELECT CAST(FLOOR(CAST(margin_milli AS DOUBLE) / 250.0)
          |    AS BIGINT) AS bin, margin_milli, y FROM margins)
@@ -1191,8 +1168,8 @@ object Ml extends QueryModule {
          |  CAST(SUM(y) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS pos_rate,
          |  CAST(SUM(margin_milli) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
          |    AS mean_margin
-         |FROM b GROUP BY bin ORDER BY bin""".stripMargin,
-    "ml_kfold" ->
+         |FROM b GROUP BY bin ORDER BY bin""".stripMargin)),
+    Query("ml_kfold", kfoldAssign, Some(
       s"""WITH base AS ($baseSql),
          |f AS (SELECT y,
          |    CAST(('0x' || substring(md5('fold:' || CAST(o_orderkey AS VARCHAR)),
@@ -1201,8 +1178,8 @@ object Ml extends QueryModule {
          |SELECT fold, CAST(COUNT(*) AS BIGINT) AS n,
          |  CAST(SUM(y) AS BIGINT) AS n_pos,
          |  CAST(SUM(y) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS pos_rate
-         |FROM f GROUP BY fold ORDER BY fold""".stripMargin,
-    "ml_target_encode" ->
+         |FROM f GROUP BY fold ORDER BY fold""".stripMargin)),
+    Query("ml_target_encode", targetEncode, Some(
       s"""WITH base AS ($baseSql),
          |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_tot,
          |    CAST(SUM(y) AS BIGINT) AS pos_tot FROM base),
@@ -1214,8 +1191,8 @@ object Ml extends QueryModule {
          |  (CAST(sum_y AS DOUBLE) +
          |     20.0 * (CAST(pos_tot AS DOUBLE) / CAST(n_tot AS DOUBLE))) /
          |    (CAST(n AS DOUBLE) + 20.0) AS enc
-         |FROM seg CROSS JOIN tot ORDER BY segment""".stripMargin,
-    "ml_woe_iv" ->
+         |FROM seg CROSS JOIN tot ORDER BY segment""".stripMargin)),
+    Query("ml_woe_iv", woeIv, Some(
       s"""WITH base AS ($baseSql),
          |tot AS (SELECT CAST(SUM(y) AS BIGINT) AS pos_tot,
          |    CAST(SUM(1 - y) AS BIGINT) AS neg_tot FROM base),
@@ -1231,8 +1208,8 @@ object Ml extends QueryModule {
          |  ROUND(LN((CAST(n_pos AS DOUBLE) / CAST(pos_tot AS DOUBLE)) /
          |     (CAST(n_neg AS DOUBLE) / CAST(neg_tot AS DOUBLE))), 6), 6)
          |    AS iv_term
-         |FROM bins CROSS JOIN tot ORDER BY bin""".stripMargin,
-    "ml_feature_hash" ->
+         |FROM bins CROSS JOIN tot ORDER BY bin""".stripMargin)),
+    Query("ml_feature_hash", featureHash, Some(
       s"""WITH base AS ($baseSql),
          |f AS (
          |  SELECT 'prio=' || o_orderpriority AS f FROM base
@@ -1248,8 +1225,8 @@ object Ml extends QueryModule {
          |  FROM f)
          |SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n,
          |  CAST(SUM(sign) AS BIGINT) AS net
-         |FROM h GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "ml_ndcg" ->
+         |FROM h GROUP BY bucket ORDER BY bucket""".stripMargin)),
+    Query("ml_ndcg", ndcgAtK, Some(
       s"""WITH $eventsRelSql,
          |rk AS (SELECT user_id, rel,
          |    ROW_NUMBER() OVER (PARTITION BY user_id
@@ -1269,8 +1246,8 @@ object Ml extends QueryModule {
          |      CAST(SUM(CASE WHEN ri <= 10 THEN rel * ${gainAtSql("ri")}
          |        ELSE 0 END) AS DOUBLE)
          |    ELSE 0.0 END AS ndcg
-         |FROM rk GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "ml_precision_at_k" ->
+         |FROM rk GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    Query("ml_precision_at_k", precisionAtK, Some(
       s"""WITH $eventsRelSql,
          |rk AS (SELECT user_id, rel,
          |    ROW_NUMBER() OVER (PARTITION BY user_id
@@ -1281,6 +1258,6 @@ object Ml extends QueryModule {
          |  CAST(COUNT(*) AS BIGINT) AS n_events,
          |  CAST(SUM(CASE WHEN r <= 5 THEN rel ELSE 0 END) AS DOUBLE) / 5.0
          |    AS prec_5
-         |FROM rk GROUP BY user_id ORDER BY user_id""".stripMargin,
+         |FROM rk GROUP BY user_id ORDER BY user_id""".stripMargin)),
   )
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1542,28 +1542,12 @@ object Multimodal extends QueryModule {
       .orderBy(col("doc_id"), col("channel"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_jpeg_pixels" -> (jpegPixelStats _),
-    "mm_gif_pixels"  -> (gifPixelStats _),
-    "mm_phash_recall" -> (phashRecall _),
-    "mm_sniff_route" -> (sniffRoute _),
-    "mm_phash_neardup" -> (phashNearDup _),
-    "mm_audio_meta"  -> (audioMeta _),
-    "mm_binary_meta" -> (binaryMeta _),
-    "mm_features"    -> (features _),
-    "mm_pixel_stats" -> (pixelStats _),
-    "mm_png_pixels"  -> (pngPixelStats _),
-    "mm_frame_sample" -> (frameSample _),
-    "mm_resize"      -> (resize _),
-    "mm_image_dims"  -> (imageDims _),
-  )
-
-  override def oracleSql: Map[String, String] = Map(
+  override def catalog: Seq[Query] = Seq(
     // Closed-form from the jpegAssets synthesis: the even-rounded block
     // value survives the quantized DCT roundtrip exactly, so the decoded
     // pixel grid is block value v(k) replicated over each 8x8 block,
     // blocks row-major k = (y//8)*(w//8) + x//8.
-    "mm_jpeg_pixels" ->
+    Query("mm_jpeg_pixels", jpegPixelStats, Some(
       """WITH p AS (
         |  SELECT doc_id, text,
         |    CAST((doc_id % 2 + 1) * 8 AS INT) AS w,
@@ -1590,8 +1574,8 @@ object Multimodal extends QueryModule {
         |  CAST(SUM(o - (o % 2)) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
         |    AS mean_v
         |FROM v GROUP BY doc_id
-        |ORDER BY doc_id, channel""".stripMargin,
-    "mm_phash_recall" ->
+        |ORDER BY doc_id, channel""".stripMargin)),
+    Query("mm_phash_recall", phashRecall, Some(
       """WITH s AS (
         |  SELECT doc_id, lang, source,
         |    list_reduce(list_transform(generate_series(1, 63), i ->
@@ -1623,10 +1607,10 @@ object Multimodal extends QueryModule {
         |    AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS recall
         |FROM brute LEFT JOIN cand
         |  ON brute.a_id = cand.a_id AND brute.b_id = cand.b_id
-        |GROUP BY hamming ORDER BY hamming""".stripMargin,
+        |GROUP BY hamming ORDER BY hamming""".stripMargin)),
     // CLOSED-FORM from the synthesis rules — proves the magic-byte
     // detector maps every payload to its true container format.
-    "mm_sniff_route" ->
+    Query("mm_sniff_route", sniffRoute, Some(
       """SELECT origin, sniffed, n FROM (
         |  SELECT 'image_table' AS origin,
         |    CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END AS sniffed,
@@ -1638,10 +1622,10 @@ object Multimodal extends QueryModule {
         |  UNION ALL
         |  SELECT 'raw_table', 'unknown', CAST(COUNT(*) AS BIGINT)
         |  FROM documents)
-        |ORDER BY origin, sniffed""".stripMargin,
+        |ORDER BY origin, sniffed""".stripMargin)),
     // Deliberately BRUTE-FORCE within blocks (no banding): equality
     // proves the 4-band candidate generation lossless at Hamming <= 3.
-    "mm_phash_neardup" ->
+    Query("mm_phash_neardup", phashNearDup, Some(
       """WITH s AS (
         |  SELECT doc_id, lang, source,
         |    list_reduce(list_transform(generate_series(1, 63), i ->
@@ -1656,10 +1640,10 @@ object Multimodal extends QueryModule {
         |FROM s a JOIN s b ON a.lang = b.lang AND a.source = b.source
         |  AND a.doc_id < b.doc_id
         |WHERE bit_count(xor(a.sig, b.sig)) <= 3
-        |ORDER BY a.lang, a.source, a_id, b_id""".stripMargin,
+        |ORDER BY a.lang, a.source, a_id, b_id""".stripMargin)),
     // Closed-form expected values from the synthesis formulas — the Spark
     // side derives them only from the bytes (LE fmt fields + chunk walk).
-    "mm_audio_meta" ->
+    Query("mm_audio_meta", audioMeta, Some(
       """WITH p AS (
         |  SELECT doc_id,
         |    CAST(doc_id % 2 + 1 AS BIGINT) AS channels,
@@ -1673,8 +1657,8 @@ object Multimodal extends QueryModule {
         |  1 AS byte_rate_ok, data_off, data_len, 1 AS len_ok,
         |  (data_len * 1000) // ((sample_rate * channels * bits_per_sample) // 8)
         |    AS duration_ms
-        |FROM p ORDER BY doc_id""".stripMargin,
-    "mm_image_dims" ->
+        |FROM p ORDER BY doc_id""".stripMargin)),
+    Query("mm_image_dims", imageDims, Some(
       """WITH base AS (
         |  SELECT doc_id,
         |    CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END AS format,
@@ -1710,8 +1694,8 @@ object Multimodal extends QueryModule {
         |      AS BIGINT) END AS INT) AS height,
         |  CAST(CASE WHEN format = 'png' THEN 16 ELSE sof_off + 7 END
         |    AS BIGINT) AS dims_off
-        |FROM hdr ORDER BY doc_id""".stripMargin,
-    "mm_binary_meta" ->
+        |FROM hdr ORDER BY doc_id""".stripMargin)),
+    Query("mm_binary_meta", binaryMeta, Some(
       """SELECT doc_id,
         |  length(text) AS n_bytes,
         |  md5(text) AS payload_md5,
@@ -1722,13 +1706,13 @@ object Multimodal extends QueryModule {
         |       ELSE 'video/mp4' END AS media_type,
         |  CAST((doc_id % 4) * 160 + 320 AS INT) AS width,
         |  CAST((doc_id % 3) * 120 + 240 AS INT) AS height
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
     // The decoder's samples re-derived character-arithmetically from the
     // source text (the data chunk's bytes), using only the SYNTHESIS
     // formulas for channel count / rate / depth — the container the Spark
     // decoder must actually walk is never parsed here, so equality proves
     // the real chunk walk + LE fmt decode + frame de-interleave.
-    "mm_features" ->
+    Query("mm_features", features, Some(
       """WITH p AS (
         |  SELECT doc_id, text,
         |    CAST(doc_id % 2 + 1 AS INT) AS ch,
@@ -1756,7 +1740,7 @@ object Multimodal extends QueryModule {
         |  sqrt(CAST(list_sum(list_transform(v, x -> x * x)) AS DOUBLE) /
         |    CAST(n_frames AS DOUBLE)) AS rms,
         |  CAST(list_max(list_transform(v, x -> abs(x))) AS BIGINT) AS peak
-        |FROM s ORDER BY doc_id, channel""".stripMargin,
+        |FROM s ORDER BY doc_id, channel""".stripMargin)),
     // The decoder's pixels re-derived character-arithmetically from the
     // source text (logical row-major order, space-padded to w·h·3) using
     // only the synthesis formulas for the dimensions — the BMP container
@@ -1766,7 +1750,7 @@ object Multimodal extends QueryModule {
     // Same first-principles text derivation as mm_pixel_stats, single
     // channel: the hash proves the LZW dictionary round trip, the
     // palette mapping, and the position order.
-    "mm_gif_pixels" ->
+    Query("mm_gif_pixels", gifPixelStats, Some(
       """WITH p AS (
         |  SELECT doc_id, text,
         |    CAST(doc_id % 4 + 6 AS INT) AS w,
@@ -1788,8 +1772,8 @@ object Multimodal extends QueryModule {
         |  CAST(MIN(val) AS BIGINT) AS min_v,
         |  CAST(MAX(val) AS BIGINT) AS max_v,
         |  CAST(SUM(val) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS mean_v
-        |FROM v GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "mm_pixel_stats" ->
+        |FROM v GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    Query("mm_pixel_stats", pixelStats, Some(
       """WITH p AS (
         |  SELECT doc_id, text,
         |    CAST(doc_id % 3 + 4 AS INT) AS w,
@@ -1814,12 +1798,12 @@ object Multimodal extends QueryModule {
         |  CAST(MAX(val) AS BIGINT) AS max_v,
         |  CAST(SUM(val) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS mean_v
         |FROM v GROUP BY doc_id, channel
-        |ORDER BY doc_id, channel""".stripMargin,
+        |ORDER BY doc_id, channel""".stripMargin)),
     // Identical oracle to mm_pixel_stats: BMP and PNG carry the SAME
     // logical pixels (row-major text mapping, same dims formulas) behind
     // different containers — one first-principles recomputation proves
     // both decoders, including the PNG side's inflate + unfilter.
-    "mm_png_pixels" ->
+    Query("mm_png_pixels", pngPixelStats, Some(
       """WITH p AS (
         |  SELECT doc_id, text,
         |    CAST(doc_id % 3 + 4 AS INT) AS w,
@@ -1844,8 +1828,8 @@ object Multimodal extends QueryModule {
         |  CAST(MAX(val) AS BIGINT) AS max_v,
         |  CAST(SUM(val) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS mean_v
         |FROM v GROUP BY doc_id, channel
-        |ORDER BY doc_id, channel""".stripMargin,
-    "mm_resize" -> {
+        |ORDER BY doc_id, channel""".stripMargin)),
+    Query("mm_resize", resize, Some {
       val picks = (0 until 16)
         .map(i => s"substring(text, $i * stride + 1, 1)").mkString(" || ")
       s"""WITH t AS (
@@ -1856,8 +1840,8 @@ object Multimodal extends QueryModule {
          |  CAST(length($picks) AS BIGINT) AS thumb_bytes,
          |  md5($picks) AS thumb_md5
          |FROM t ORDER BY doc_id""".stripMargin
-    },
-    "mm_frame_sample" ->
+    }),
+    Query("mm_frame_sample", frameSample, Some(
       """SELECT doc_id, frame_idx,
         |  CAST(frame_idx * 128 AS BIGINT) AS "offset",
         |  md5(substring(text, CAST(frame_idx * 128 + 1 AS INT), 32)) AS frame_md5,
@@ -1867,6 +1851,6 @@ object Multimodal extends QueryModule {
         |  SELECT doc_id, text, unnest(generate_series(0,
         |    CAST(floor((length(text) - 1) / 128.0) AS BIGINT))) AS frame_idx
         |  FROM documents) f
-        |ORDER BY doc_id, frame_idx""".stripMargin,
+        |ORDER BY doc_id, frame_idx""".stripMargin)),
   )
 }

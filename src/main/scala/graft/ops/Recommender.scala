@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
 
 /** Item-item collaborative-filtering recommender family — the classic
   * co-occurrence model (Amazon-style "customers who bought X also bought
@@ -246,13 +246,6 @@ object Recommender extends QueryModule {
           (col("n_users") * lit(1000000L)).cast("double")).as("mrr"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "rec_item_cooccur" -> (itemCooccur _),
-    "rec_user_topn" -> (userTopN _),
-    "rec_eval_mrr" -> (evalMrr _),
-    "rec_coverage" -> (coverage _),
-  )
-
   private val pairsSql =
     """items AS MATERIALIZED (
       |  SELECT DISTINCT l_orderkey AS ok, l_partkey // 10 AS item
@@ -283,12 +276,12 @@ object Recommender extends QueryModule {
       |      ORDER BY sim_micro DESC, nbr ASC) AS rk FROM sym)
       |  WHERE rk <= 10)""".stripMargin
 
-  override def oracleSql: Map[String, String] = Map(
-    "rec_item_cooccur" ->
+  override def catalog: Seq[Query] = Seq(
+    Query("rec_item_cooccur", itemCooccur, Some(
       s"""WITH $pairsSql
         |SELECT i, j, c, n_i, n_j, sim_micro FROM sims
-        |ORDER BY sim_micro DESC, i ASC, j ASC LIMIT 100""".stripMargin,
-    "rec_user_topn" ->
+        |ORDER BY sim_micro DESC, i ASC, j ASC LIMIT 100""".stripMargin)),
+    Query("rec_user_topn", userTopN, Some(
       s"""WITH $pairsSql,
         |$modelSql,
         |owned AS MATERIALIZED (
@@ -306,8 +299,8 @@ object Recommender extends QueryModule {
         |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY u
         |    ORDER BY score_micro DESC, cand ASC) AS BIGINT) AS rank
         |  FROM scored)
-        |WHERE rank <= 3 ORDER BY u ASC, rank ASC""".stripMargin,
-    "rec_coverage" ->
+        |WHERE rank <= 3 ORDER BY u ASC, rank ASC""".stripMargin)),
+    Query("rec_coverage", coverage, Some(
       s"""WITH $pairsSql,
         |$modelSql,
         |pop AS MATERIALIZED (
@@ -342,8 +335,8 @@ object Recommender extends QueryModule {
         |    AS avg_pop_rec,
         |  CAST(c.pop_cat AS DOUBLE) / CAST(c.n_catalog AS DOUBLE)
         |    AS avg_pop_cat
-        |FROM agg a CROSS JOIN cat c""".stripMargin,
-    "rec_eval_mrr" ->
+        |FROM agg a CROSS JOIN cat c""".stripMargin)),
+    Query("rec_eval_mrr", evalMrr, Some(
       """WITH tagged AS MATERIALIZED (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
         |    ORDER BY o_orderkey DESC) = 1 AS is_test FROM orders),
@@ -416,6 +409,6 @@ object Recommender extends QueryModule {
         |  CAST(SUM(hit) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS hit_rate,
         |  CAST(SUM(rr_micro) AS DOUBLE) /
         |    CAST(COUNT(*) * 1000000 AS DOUBLE) AS mrr
-        |FROM per_user""".stripMargin,
+        |FROM per_user""".stripMargin)),
   )
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Recursive CTE (`WITH RECURSIVE` → Catalyst `UnionLoop`) and
@@ -84,16 +84,10 @@ object Recursive extends QueryModule {
         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_recursive_series" -> (recursiveSeries _),
-    "sql_recursive_chain"  -> (recursiveChain _),
-    "agg_listagg"          -> (listAgg _),
-  )
-
-  override def oracleSql: Map[String, String] = Map(
+  override def catalog: Seq[Query] = Seq(
     // DuckDB DATE + INTERVAL yields TIMESTAMP — cast back to DATE inside the
     // recursive step so the spine column stays DATE on both engines.
-    "sql_recursive_series" ->
+    Query("sql_recursive_series", recursiveSeries, Some(
       """WITH RECURSIVE spine(day) AS (
         |  SELECT DATE '1995-01-01'
         |  UNION ALL
@@ -111,8 +105,8 @@ object Recursive extends QueryModule {
         |SELECT spine.day AS day, COALESCE(daily.n, 0) AS n_orders,
         |  COALESCE(daily.cents, 0) AS total_cents
         |FROM spine LEFT JOIN daily ON daily.od = spine.day
-        |ORDER BY day""".stripMargin,
-    "sql_recursive_chain" ->
+        |ORDER BY day""".stripMargin)),
+    Query("sql_recursive_chain", recursiveChain, Some(
       """WITH RECURSIVE chain(c_custkey, node, depth) AS (
         |  SELECT c_custkey, c_custkey, 0 FROM customer
         |  UNION ALL
@@ -120,12 +114,12 @@ object Recursive extends QueryModule {
         |)
         |SELECT c_custkey, MAX(depth) AS depth_to_root,
         |  CAST(SUM(node) AS BIGINT) AS path_sum
-        |FROM chain GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-    "agg_listagg" ->
+        |FROM chain GROUP BY c_custkey ORDER BY c_custkey""".stripMargin)),
+    Query("agg_listagg", listAgg, Some(
       """SELECT c_mktsegment,
         |  string_agg(c_name, ',' ORDER BY c_name) AS names,
         |  COUNT(*) AS n
         |FROM customer WHERE c_custkey % 100 = 0
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
   )
 }

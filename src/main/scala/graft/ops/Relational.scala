@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{OracleSafe, QueryModule, Tables}
+import graft.{OracleSafe, Query, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -148,12 +148,11 @@ object Relational extends QueryModule {
     * so the plan is scan → partial/final agg → 4-row explode. */
   def profile(s: SparkSession, d: String): DataFrame = {
     val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-    def sx(c: String) = sum(col(c).cast("decimal(18,4)"))
-      .cast("string").cast("double")
+    def sx(c: String) = d2d(sum(col(c).cast("decimal(18,4)")))
     // (18,4) not (12,4): a non-ANSI cast overflow (value ≥ 1e8) would
     // NULL only the Spark-side moment and break cross-engine parity
-    def sx2(c: String) = sum(col(c).cast("decimal(18,4)")
-      * col(c).cast("decimal(18,4)")).cast("string").cast("double")
+    def sx2(c: String) = d2d(sum(col(c).cast("decimal(18,4)")
+      * col(c).cast("decimal(18,4)")))
     val aggs = cols.flatMap(c => Seq(
       count(col(c)).as(s"n_$c"), sx(c).as(s"sx_$c"), sx2(c).as(s"sx2_$c"),
       min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
@@ -271,7 +270,7 @@ object Relational extends QueryModule {
       .unionByName(partial(ev.filter(col("ts").cast("date") >= cutoff)))
       .groupBy(col("user_id"))
       .agg(sum(col("n")).as("n"),
-        sum(col("sv")).cast("string").cast("double").as("sum_value"))
+        d2d(sum(col("sv"))).as("sum_value"))
       .orderBy(col("user_id"))
   }
 
@@ -837,31 +836,6 @@ object Relational extends QueryModule {
       .limit(20)
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "rel_basket_rules" -> (basketRules _),
-    "rel_skyline" -> (skyline _),
-    "rel_incr_agg_retract" -> (incrAggRetract _),
-    "rel_ri_audit"       -> (riAudit _),
-    "rel_benford"        -> (benford _),
-    "rel_psi_drift"      -> (psiDrift _),
-    "rel_rfm"            -> (rfm _),
-    "rel_cdc_history"    -> (cdcHistory _),
-    "rel_cdc_apply"      -> (cdcApply _),
-    "q1_pricing_summary" -> (pricingSummary _),
-    "rel_diff"           -> (snapshotDiff _),
-    "join_pit"           -> (pointInTimeJoin _),
-    "q3_top_revenue"     -> (topRevenueOrders _),
-    "rel_scd2_merge"     -> (scd2Upsert _),
-    "rel_profile"        -> (profile _),
-    "rel_quality_report" -> (qualityReport _),
-    "rel_checksums"      -> (tableChecksums _),
-    "rel_skew_report"    -> (skewReport _),
-    "rel_incr_agg"       -> (incrementalAgg _),
-    "rel_incr_join"      -> (incrementalJoin _),
-    "rel_fk_discovery"   -> (fkDiscovery _),
-    "rel_mom_growth"     -> (momGrowth _),
-  )
-
   private def profileSqlFor(c: String): String =
     s"""SELECT '$c' AS col_name, n_rows, n_non_null, min_val, max_val,
        |  sx / n_non_null AS mean,
@@ -880,8 +854,8 @@ object Relational extends QueryModule {
        |    AS BIGINT)) AS BIGINT) AS checksum
        |FROM $table""".stripMargin
 
-  override def oracleSql: Map[String, String] = Map(
-    "rel_basket_rules" ->
+  override def catalog: Seq[Query] = Seq(
+    Query("rel_basket_rules", basketRules, Some(
       """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
         |  FROM lineitem),
         |n AS (SELECT CAST(COUNT(DISTINCT o) AS BIGINT) AS n_orders FROM op),
@@ -900,10 +874,10 @@ object Relational extends QueryModule {
         |FROM rules JOIN ic ia ON ia.p = rules.ante
         |JOIN ic ic2 ON ic2.p = rules.cons
         |CROSS JOIN n
-        |ORDER BY lift DESC, ante, cons LIMIT 20""".stripMargin,
+        |ORDER BY lift DESC, ante, cons LIMIT 20""".stripMargin)),
     // Direct suffix-max formulation over the x grid (the bucket split is a
     // Spark-side plan optimization the algebra is invariant to).
-    "rel_skyline" ->
+    Query("rel_skyline", skyline, Some(
       """WITH pts AS (
         |  SELECT CAST(FLOOR(o_totalprice) AS BIGINT) AS x,
         |    CAST(FLOOR(c_acctbal * 100.0) AS BIGINT) AS y
@@ -918,18 +892,18 @@ object Relational extends QueryModule {
         |      CAST(-9223372036854775807 AS BIGINT) - 1) AS m
         |  FROM xm)
         |SELECT x, ymx AS y, n FROM mk WHERE ymx > m
-        |ORDER BY x""".stripMargin,
+        |ORDER BY x""".stripMargin)),
     // From-scratch recompute over the final membership predicate —
     // equality proves base (+) signed-delta merge == full recompute.
-    "rel_incr_agg_retract" ->
+    Query("rel_incr_agg_retract", incrAggRetract, Some(
       """SELECT o_orderpriority AS grp, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT))
         |    AS BIGINT) AS cents
         |FROM orders
         |WHERE (o_orderkey % 10 < 8 AND o_orderkey % 7 <> 0)
         |   OR o_orderkey % 10 >= 8
-        |GROUP BY 1 HAVING COUNT(*) > 0 ORDER BY grp""".stripMargin,
-    "rel_ri_audit" -> {
+        |GROUP BY 1 HAVING COUNT(*) > 0 ORDER BY grp""".stripMargin)),
+    Query("rel_ri_audit", riAudit, Some {
       def edge(name: String, childT: String, key: String,
           parentT: String, pkey: String): String =
         s"""SELECT '$name' AS fk,
@@ -955,8 +929,8 @@ object Relational extends QueryModule {
          |  CAST(CASE WHEN n_orphans = 0 THEN 1 ELSE 0 END AS INT) AS ok
          |FROM (${edges.mkString(" UNION ALL ")})
          |ORDER BY fk""".stripMargin
-    },
-    "rel_benford" ->
+    }),
+    Query("rel_benford", benford, Some(
       """WITH digits AS (
         |  SELECT CAST(substr(CAST(CAST(floor(o_totalprice) AS BIGINT)
         |    AS VARCHAR), 1, 1) AS INT) AS digit,
@@ -980,8 +954,8 @@ object Relational extends QueryModule {
         |  list(chi_term ORDER BY chi_term)), (a, x) -> a + x) AS chi2
         |  FROM t2)
         |SELECT digit, n, share, expected, dev, chi_term, chi2
-        |FROM t2 CROSS JOIN chi ORDER BY digit""".stripMargin,
-    "rel_psi_drift" ->
+        |FROM t2 CROSS JOIN chi ORDER BY digit""".stripMargin)),
+    Query("rel_psi_drift", psiDrift, Some(
       """WITH ev AS (
         |  SELECT event_type,
         |    CASE WHEN CAST(date_part('day', ts) AS INT) <= 15 THEN 1
@@ -1010,11 +984,11 @@ object Relational extends QueryModule {
         |  FROM t2 GROUP BY event_type)
         |SELECT t2.event_type, band, n1, n2, p1, p2, contrib, psi
         |FROM t2 JOIN psi USING (event_type)
-        |ORDER BY event_type, band""".stripMargin,
+        |ORDER BY event_type, band""".stripMargin)),
     // INDEPENDENT boundary derivation: full-sort row_number at rank
     // k = ceil(0.2*i*n) per dimension (the Spark side locates the same
     // discrete order statistics via the bucketed cum >= k grid).
-    "rel_rfm" ->
+    Query("rel_rfm", rfm, Some(
       """WITH c AS (
         |  SELECT o_custkey, max(o_orderdate) AS lastd,
         |    CAST(COUNT(*) AS BIGINT) AS f,
@@ -1060,8 +1034,8 @@ object Relational extends QueryModule {
         |SELECT r_score, f_score, m_score, COUNT(*) AS n_customers,
         |  CAST(SUM(m) AS BIGINT) AS cents
         |FROM scored GROUP BY r_score, f_score, m_score
-        |ORDER BY r_score, f_score, m_score""".stripMargin,
-    "rel_cdc_history" ->
+        |ORDER BY r_score, f_score, m_score""".stripMargin)),
+    Query("rel_cdc_history", cdcHistory, Some(
       """WITH log AS (
         |  SELECT o_orderkey, CAST(1 AS BIGINT) AS seq, 'I' AS op,
         |    o_totalprice AS price FROM orders
@@ -1079,8 +1053,8 @@ object Relational extends QueryModule {
         |SELECT o_orderkey, seq AS valid_from_seq, price, valid_to_seq,
         |  CASE WHEN valid_to_seq IS NULL THEN 1 ELSE 0 END AS is_current
         |FROM v WHERE op <> 'D'
-        |ORDER BY o_orderkey, valid_from_seq""".stripMargin,
-    "rel_cdc_apply" ->
+        |ORDER BY o_orderkey, valid_from_seq""".stripMargin)),
+    Query("rel_cdc_apply", cdcApply, Some(
       """WITH log AS (
         |  SELECT o_orderkey, 1 AS seq, 'I' AS op, o_totalprice AS price
         |  FROM orders
@@ -1095,14 +1069,14 @@ object Relational extends QueryModule {
         |    ROW_NUMBER() OVER (PARTITION BY o_orderkey ORDER BY seq DESC) AS rn
         |  FROM log) t
         |WHERE rn = 1 AND op <> 'D'
-        |ORDER BY o_orderkey""".stripMargin,
-    "q1_pricing_summary" -> pricingSummarySql,
-    "q3_top_revenue"     -> topRevenueOrdersSql,
-    "rel_scd2_merge"     -> scd2UpsertSql,
-    "rel_profile" ->
+        |ORDER BY o_orderkey""".stripMargin)),
+    Query("q1_pricing_summary", pricingSummary, Some(pricingSummarySql)),
+    Query("q3_top_revenue", topRevenueOrders, Some(topRevenueOrdersSql)),
+    Query("rel_scd2_merge", scd2Upsert, Some(scd2UpsertSql)),
+    Query("rel_profile", profile, Some(
       (Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax")
-        .map(profileSqlFor).mkString("", "\nUNION ALL\n", "\nORDER BY col_name")),
-    "rel_quality_report" ->
+        .map(profileSqlFor).mkString("", "\nUNION ALL\n", "\nORDER BY col_name")))),
+    Query("rel_quality_report", qualityReport, Some(
       """SELECT * FROM (
         |SELECT 'lineitem.quantity_in_1_50' AS rule, COUNT(*) AS n_checked,
         |  COUNT(*) FILTER (WHERE l_quantity < 1 OR l_quantity > 50) AS n_violations,
@@ -1140,8 +1114,8 @@ object Relational extends QueryModule {
         |   WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders)),
         |  CAST((SELECT COUNT(*) FROM lineitem
         |   WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders)) = 0 AS INT)
-        |) t ORDER BY rule""".stripMargin,
-    "join_pit" ->
+        |) t ORDER BY rule""".stripMargin)),
+    Query("join_pit", pointInTimeJoin, Some(
       """WITH dim AS (
         |  SELECT c_custkey, c_mktsegment, c_acctbal,
         |    DATE '2024-01-01' AS valid_from, DATE '2200-01-01' AS valid_to,
@@ -1173,8 +1147,8 @@ object Relational extends QueryModule {
         |  ON f.user_id = s.c_custkey
         | AND CAST(f.day AS DATE) >= s.valid_from
         | AND CAST(f.day AS DATE) < s.valid_to
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "rel_diff" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+    Query("rel_diff", snapshotDiff, Some(
       """WITH o AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
         |  FROM orders),
         |a AS (SELECT * FROM o WHERE o_orderkey % 13 <> 0),
@@ -1202,13 +1176,13 @@ object Relational extends QueryModule {
         |      CASE WHEN a.o_totalprice <> b.o_totalprice
         |        THEN 'o_totalprice' END) AS changed_cols
         |  FROM a FULL OUTER JOIN b ON a.o_orderkey = b.o_orderkey) t
-        |WHERE status <> 'same' ORDER BY o_orderkey""".stripMargin,
-    "rel_skew_report" ->
+        |WHERE status <> 'same' ORDER BY o_orderkey""".stripMargin)),
+    Query("rel_skew_report", skewReport, Some(
       """SELECT user_id, COUNT(*) AS n,
         |  CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM events) AS share
         |FROM events GROUP BY user_id
-        |ORDER BY n DESC, user_id LIMIT 10""".stripMargin,
-    "rel_mom_growth" ->
+        |ORDER BY n DESC, user_id LIMIT 10""".stripMargin)),
+    Query("rel_mom_growth", momGrowth, Some(
       """WITH m AS (
         |  SELECT strftime(o_orderdate, '%Y-%m') AS month,
         |    COUNT(*) AS n_orders,
@@ -1220,8 +1194,8 @@ object Relational extends QueryModule {
         |  (CAST(cents AS DOUBLE)
         |    / CAST(lag(cents, 1) OVER (ORDER BY month) AS DOUBLE)) - 1.0
         |    AS mom_growth
-        |FROM m ORDER BY month""".stripMargin,
-    "rel_fk_discovery" ->
+        |FROM m ORDER BY month""".stripMargin)),
+    Query("rel_fk_discovery", fkDiscovery, Some(
       (Seq(
         ("l_orderkey->o_orderkey", "l_orderkey", "lineitem", "o_orderkey", "orders"),
         ("l_partkey->p_partkey", "l_partkey", "lineitem", "p_partkey", "part"),
@@ -1237,19 +1211,19 @@ object Relational extends QueryModule {
              |    CAST(SUM(CASE WHEN v NOT IN (SELECT $pc FROM $pt)
              |      THEN 1 ELSE 0 END) AS BIGINT) AS n_missing
              |  FROM (SELECT DISTINCT $cc AS v FROM $ct) c) t""".stripMargin }
-        .mkString("", "\nUNION ALL\n", "\nORDER BY candidate")),
-    "rel_incr_join" ->
+        .mkString("", "\nUNION ALL\n", "\nORDER BY candidate")))),
+    Query("rel_incr_join", incrementalJoin, Some(
       """SELECT c_mktsegment, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT))
         |    AS BIGINT) AS cents
         |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "rel_incr_agg" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+    Query("rel_incr_agg", incrementalAgg, Some(
       """SELECT user_id, COUNT(*) AS n,
         |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE)
         |    AS sum_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "rel_checksums" ->
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    Query("rel_checksums", tableChecksums, Some(
       (checksumSqlFor("region",
         "CAST(r_regionkey AS VARCHAR), r_name") + "\nUNION ALL\n" +
        checksumSqlFor("nation",
@@ -1258,6 +1232,6 @@ object Relational extends QueryModule {
        checksumSqlFor("supplier",
         "CAST(s_suppkey AS VARCHAR), s_name, CAST(s_nationkey AS VARCHAR), " +
           "CAST(CAST(s_acctbal AS DECIMAL(12,2)) AS VARCHAR)") +
-       "\nORDER BY table_name"),
+       "\nORDER BY table_name"))),
   )
 }

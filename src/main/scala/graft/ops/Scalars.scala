@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -474,43 +474,16 @@ object Scalars extends QueryModule {
         |ORDER BY ALL""".stripMargin)
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_group_by_all" -> (sqlGroupByAll _),
-    "sql_time_range_window" -> (sqlTimeRangeWindow _),
-    "sql_named_window" -> (sqlNamedWindow _),
-    "sql_unpivot" -> (sqlUnpivot _),
-    "sql_pivot" -> (sqlPivot _),
-    "scalar_collation" -> (collationFuncs _),
-    "scalar_url"     -> (urlFuncs _),
-    "sql_q21_shape"  -> (sqlQ21Shape _),
-    "sql_q11_shape"  -> (sqlQ11Shape _),
-    "scalar_regex"   -> (regexFuncs _),
-    "sql_q18_shape"  -> (sqlQ18Shape _),
-    "sql_exists_shape" -> (sqlExistsShape _),
-    "scalar_bitwise" -> (bitwiseFuncs _),
-    "scalar_maps"   -> (mapFuncs _),
-    "scalar_try"    -> (tryBattery _),
-    "scalar_variant" -> (variantBattery _),
-    "sql_lateral_topn" -> (sqlLateralTopN _),
-    "sql_q5_shape"  -> (sqlQ5Shape _),
-    "sql_corr_subquery" -> (sqlCorrelatedSubquery _),
-    "scalar_strings" -> (stringFuncs _),
-    "scalar_dates"   -> (dateFuncs _),
-    "scalar_math"    -> (mathFuncs _),
-    "scalar_arrays"  -> (arrayFuncs _),
-    "scalar_json"    -> (jsonFuncs _),
-  )
-
-  override def oracleSql: Map[String, String] = Map(
+  override def catalog: Seq[Query] = Seq(
     // Explicit key/order lists — equality proves Spark's ALL inference.
-    "sql_group_by_all" ->
+    Query("sql_group_by_all", sqlGroupByAll, Some(
       """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
         |  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS VARCHAR)
         |    AS DOUBLE) AS total
         |FROM orders
         |GROUP BY o_orderstatus, o_orderpriority
-        |ORDER BY o_orderstatus, o_orderpriority, n, total""".stripMargin,
-    "sql_time_range_window" ->
+        |ORDER BY o_orderstatus, o_orderpriority, n, total""".stripMargin)),
+    Query("sql_time_range_window", sqlTimeRangeWindow, Some(
       """SELECT user_id, event_id, epoch_us(ts) AS us,
         |  COUNT(*) OVER w AS n_1h,
         |  CAST(SUM(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) OVER w
@@ -518,8 +491,8 @@ object Scalars extends QueryModule {
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts
         |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, us, event_id""".stripMargin,
-    "sql_named_window" ->
+        |ORDER BY user_id, us, event_id""".stripMargin)),
+    Query("sql_named_window", sqlNamedWindow, Some(
       """SELECT o_orderpriority, o_orderkey, CAST(rk AS INT) AS rk,
         |  first_key, second_key, last_key FROM (
         |  SELECT o_orderpriority, o_orderkey,
@@ -535,14 +508,14 @@ object Scalars extends QueryModule {
         |           ORDER BY o_totalprice DESC, o_orderkey
         |           ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
         |) t WHERE rk <= 3
-        |ORDER BY o_orderpriority, rk""".stripMargin,
-    "sql_unpivot" ->
+        |ORDER BY o_orderpriority, rk""".stripMargin)),
+    Query("sql_unpivot", sqlUnpivot, Some(
       """SELECT p_partkey, 'size' AS metric, CAST(p_size AS DOUBLE) AS val
         |FROM part
         |UNION ALL
         |SELECT p_partkey, 'price' AS metric, p_retailprice AS val FROM part
-        |ORDER BY p_partkey, metric""".stripMargin,
-    "sql_pivot" ->
+        |ORDER BY p_partkey, metric""".stripMargin)),
+    Query("sql_pivot", sqlPivot, Some(
       """SELECT o_orderpriority,
         |  NULLIF(CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END)
         |    AS BIGINT), 0) AS st_o,
@@ -551,8 +524,8 @@ object Scalars extends QueryModule {
         |  NULLIF(CAST(SUM(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END)
         |    AS BIGINT), 0) AS st_p
         |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "scalar_collation" ->
+        |ORDER BY o_orderpriority""".stripMargin)),
+    Query("scalar_collation", collationFuncs, Some(
       """WITH t AS (
         |  SELECT c_custkey,
         |    CASE WHEN c_custkey % 2 = 0
@@ -562,8 +535,8 @@ object Scalars extends QueryModule {
         |SELECT lower(seg) AS segment, COUNT(*) AS n,
         |  CAST(SUM(CASE WHEN lower(seg) = 'automobile' THEN 1 ELSE 0 END)
         |    AS BIGINT) AS n_auto_ci
-        |FROM t GROUP BY lower(seg) ORDER BY segment""".stripMargin,
-    "scalar_url" ->
+        |FROM t GROUP BY lower(seg) ORDER BY segment""".stripMargin)),
+    Query("scalar_url", urlFuncs, Some(
       """SELECT p_partkey,
         |  'https://shop.example.com/p/' || replace(p_brand, '#', '_')
         |    || '?q=' || CAST(p_partkey AS VARCHAR)
@@ -575,8 +548,8 @@ object Scalars extends QueryModule {
         |    || '&s=' || CAST(p_size AS VARCHAR) AS query,
         |  CAST(p_partkey AS VARCHAR) AS q_param,
         |  'top' AS fragment
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "sql_q21_shape" ->
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+    Query("sql_q21_shape", sqlQ21Shape, Some(
       """SELECT s.s_name, CAST(COUNT(*) AS BIGINT) AS numwait
         |FROM supplier s
         |JOIN lineitem l1 ON l1.l_suppkey = s.s_suppkey
@@ -589,8 +562,8 @@ object Scalars extends QueryModule {
         |    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
         |      AND l3.l_shipdate > o.o_orderdate + INTERVAL '60' DAY)
         |GROUP BY s.s_name
-        |ORDER BY numwait DESC, s.s_name LIMIT 25""".stripMargin,
-    "sql_q11_shape" ->
+        |ORDER BY numwait DESC, s.s_name LIMIT 25""".stripMargin)),
+    Query("sql_q11_shape", sqlQ11Shape, Some(
       """WITH c AS (SELECT l_partkey,
         |    CAST(floor((l_extendedprice * 100.0) + 0.5) AS BIGINT) AS cents
         |  FROM lineitem),
@@ -601,8 +574,8 @@ object Scalars extends QueryModule {
         |FROM c CROSS JOIN tot
         |GROUP BY l_partkey, t
         |HAVING (CAST(SUM(cents) AS BIGINT) * 1000) > t
-        |ORDER BY part_value DESC, l_partkey""".stripMargin,
-    "sql_q18_shape" ->
+        |ORDER BY part_value DESC, l_partkey""".stripMargin)),
+    Query("sql_q18_shape", sqlQ18Shape, Some(
       """SELECT c.c_custkey, o.o_orderkey, t.sum_qty
         |FROM (SELECT l_orderkey,
         |        CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS VARCHAR)
@@ -611,14 +584,14 @@ object Scalars extends QueryModule {
         |      HAVING SUM(CAST(l_quantity AS DECIMAL(18,4))) > 250) t
         |JOIN orders o ON o.o_orderkey = t.l_orderkey
         |JOIN customer c ON c.c_custkey = o.o_custkey
-        |ORDER BY o.o_orderkey""".stripMargin,
-    "sql_exists_shape" ->
+        |ORDER BY o.o_orderkey""".stripMargin)),
+    Query("sql_exists_shape", sqlExistsShape, Some(
       """SELECT c_mktsegment, COUNT(*) AS n
         |FROM customer c
         |WHERE NOT EXISTS (SELECT 1 FROM orders o
         |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "scalar_regex" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+    Query("scalar_regex", regexFuncs, Some(
       """SELECT p_partkey,
         |  regexp_extract(p_name, '^([a-z]+)', 1) AS first_word,
         |  array_to_string(regexp_extract_all(p_name, '[a-z]+', 0), '|')
@@ -626,8 +599,8 @@ object Scalars extends QueryModule {
         |  len(regexp_extract_all(p_name, '[a-z]+', 0)) AS n_words,
         |  regexp_replace(p_name, '[aeiou]', '', 'g') AS no_vowels,
         |  CAST(regexp_matches(p_name, '[0-9]') AS INT) AS has_digit
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "scalar_bitwise" ->
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+    Query("scalar_bitwise", bitwiseFuncs, Some(
       """SELECT p_partkey,
         |  p_partkey & 255 AS k_and,
         |  p_partkey | 1024 AS k_or,
@@ -635,22 +608,22 @@ object Scalars extends QueryModule {
         |  (p_partkey & 15) << 3 AS k_shl,
         |  p_partkey >> 2 AS k_shr,
         |  bit_count(p_partkey) AS k_bits
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "scalar_try" ->
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+    Query("scalar_try", tryBattery, Some(
       """SELECT o_orderkey,
         |  o_totalprice / NULLIF(CAST(o_custkey % 3 AS DOUBLE), 0.0) AS div_or_null,
         |  CAST([1, 2, 3][5] AS BIGINT) AS oob_elem,
         |  TRY_CAST(o_orderpriority AS INT) AS bad_int,
         |  TRY_CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS prio_num
-        |FROM orders WHERE o_orderkey <= 2000 ORDER BY o_orderkey""".stripMargin,
-    "scalar_variant" ->
+        |FROM orders WHERE o_orderkey <= 2000 ORDER BY o_orderkey""".stripMargin)),
+    Query("scalar_variant", variantBattery, Some(
       """SELECT event_id,
         |  CAST(json_extract(props, '$.k') AS BIGINT) AS k_long,
         |  CAST(json_extract(props, '$.k') AS DOUBLE) AS k_double,
         |  json_extract_string(props, '$.k') AS k_str,
         |  CAST(json_extract(props, '$.missing') AS BIGINT) AS k_missing
-        |FROM events ORDER BY event_id""".stripMargin,
-    "sql_lateral_topn" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    Query("sql_lateral_topn", sqlLateralTopN, Some(
       """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
         |FROM customer c,
         |LATERAL (
@@ -658,8 +631,8 @@ object Scalars extends QueryModule {
         |  WHERE o_custkey = c.c_custkey
         |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) o
         |WHERE c.c_custkey <= 300
-        |ORDER BY c.c_custkey, o.o_totalprice DESC, o.o_orderkey""".stripMargin,
-    "scalar_maps" ->
+        |ORDER BY c.c_custkey, o.o_totalprice DESC, o.o_orderkey""".stripMargin)),
+    Query("scalar_maps", mapFuncs, Some(
       """SELECT p_partkey,
         |  p_brand AS first_entry_value,
         |  2 AS m_size,
@@ -667,16 +640,16 @@ object Scalars extends QueryModule {
         |  'brand,type' AS keys_joined,
         |  upper(p_type) AS type_upper,
         |  1 AS has_brand
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "sql_corr_subquery" ->
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+    Query("sql_corr_subquery", sqlCorrelatedSubquery, Some(
       """SELECT o_orderkey, o_custkey
         |FROM orders o
         |WHERE o_totalprice > 2 * (
         |  SELECT CAST(CAST(SUM(CAST(o2.o_totalprice AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE)
         |       / COUNT(*)
         |  FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
-    "sql_q5_shape" ->
+        |ORDER BY o_orderkey""".stripMargin)),
+    Query("sql_q5_shape", sqlQ5Shape, Some(
       """SELECT n_name,
         |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,4))
         |    * CAST(1.0 - l_discount AS DECIMAL(8,4))) AS VARCHAR) AS DOUBLE) AS revenue,
@@ -691,8 +664,8 @@ object Scalars extends QueryModule {
         |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
         |GROUP BY n_name
-        |ORDER BY n_name""".stripMargin,
-    "scalar_strings" ->
+        |ORDER BY n_name""".stripMargin)),
+    Query("scalar_strings", stringFuncs, Some(
       """SELECT p_partkey,
         |  lower(p_name) AS lower_name, upper(p_brand) AS upper_brand,
         |  length(p_name) AS name_len, substring(p_name, 1, 5) AS name_head,
@@ -703,8 +676,8 @@ object Scalars extends QueryModule {
         |  trim('  pad  ') AS trimmed, lpad(p_brand, 12, '0') AS padded,
         |  CAST(starts_with(p_name, 'small') AS INT) AS is_small,
         |  CAST(contains(p_name, 'bolt') AS INT) AS has_bolt
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "scalar_dates" ->
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+    Query("scalar_dates", dateFuncs, Some(
       """SELECT o_orderkey,
         |  year(o_orderdate) AS yr, month(o_orderdate) AS mo,
         |  dayofmonth(o_orderdate) AS dom,
@@ -716,8 +689,8 @@ object Scalars extends QueryModule {
         |  CAST(o_orderdate AS DATE) + 90 AS due_date,
         |  last_day(CAST(o_orderdate AS DATE)) AS month_end,
         |  strftime(o_orderdate, '%Y-%m-%d') AS iso_day
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "scalar_math" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
+    Query("scalar_math", mathFuncs, Some(
       """SELECT p_partkey,
         |  abs(p_size - 25) AS abs_off,
         |  CAST(ceil(p_retailprice) AS BIGINT) AS ceil_price,
@@ -729,8 +702,8 @@ object Scalars extends QueryModule {
         |  least(p_size, 40) AS at_most_40,
         |  p_partkey % 7 AS key_mod7,
         |  CAST(sign(p_size - 25) AS INT) AS size_sign
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "scalar_arrays" ->
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+    Query("scalar_arrays", arrayFuncs, Some(
       """SELECT p_partkey, p_size,
         |  len(generate_series(1, p_size)) AS seq_len,
         |  CAST(list_sum(list_transform(generate_series(1, p_size), x -> x * x)) AS BIGINT) AS sum_squares,
@@ -740,13 +713,13 @@ object Scalars extends QueryModule {
         |  CAST(list_sum(generate_series(1, p_size)[1:least(3, p_size)]) AS BIGINT) AS sum_first3,
         |  array_to_string(list_transform(generate_series(1, least(p_size, 4)),
         |    x -> CAST(x AS VARCHAR)), '-') AS joined
-        |FROM part WHERE p_size <= 10 ORDER BY p_partkey""".stripMargin,
-    "scalar_json" ->
+        |FROM part WHERE p_size <= 10 ORDER BY p_partkey""".stripMargin)),
+    Query("scalar_json", jsonFuncs, Some(
       """SELECT event_id,
         |  CAST(json_extract(props, '$.k') AS BIGINT) AS k_num,
         |  CAST(json_extract(props, '$.k') AS BIGINT) AS k_struct,
         |  to_json(struct_pack(t := event_type, u := user_id)) AS packed,
         |  CAST(json_extract(props, '$.k') AS BIGINT) AS k_tuple
-        |FROM events ORDER BY event_id""".stripMargin,
+        |FROM events ORDER BY event_id""".stripMargin)),
   )
 }

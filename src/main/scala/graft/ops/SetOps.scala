@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -144,28 +144,13 @@ object SetOps extends QueryModule {
       .orderBy(col("p_brand"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "set_neyman_alloc" -> (neymanAlloc _),
-    "set_intersect"     -> (intersectYears _),
-    "set_except"        -> (exceptYears _),
-    "set_intersect_all" -> (intersectAllYears _),
-    "set_except_all"    -> (exceptAllYears _),
-    "set_union_by_name" -> (unionNationKeys _),
-    "sort_limit"        -> (sortLimit _),
-    "distinct_flags"    -> (distinctFlags _),
-    "filter_battery"    -> (predicateBattery _),
-    "sort_within_partitions" -> (partitionLocalSort _),
-    "set_tablesample"   -> (tableSample _),
-    "set_stratified_sample" -> (stratifiedSample _),
-  )
-
   private val y96 =
     "SELECT o_custkey FROM orders WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00' AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'"
   private val y97 =
     "SELECT o_custkey FROM orders WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00' AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'"
 
-  override def oracleSql: Map[String, String] = Map(
-    "set_neyman_alloc" ->
+  override def catalog: Seq[Query] = Seq(
+    Query("set_neyman_alloc", neymanAlloc, Some(
       """WITH p AS MATERIALIZED (
         |  SELECT p_brand,
         |    CAST(FLOOR(p_retailprice * 100.0 + 0.5) AS BIGINT) AS y
@@ -183,42 +168,44 @@ object SetOps extends QueryModule {
         |  (a, x) -> a + x) AS denom FROM g2)
         |SELECT p_brand, n_h, var_h, nsh,
         |  CAST(FLOOR(1000.0 * nsh / denom) AS BIGINT) AS alloc
-        |FROM g2 CROSS JOIN dn ORDER BY p_brand""".stripMargin,
-    // set_tablesample / set_stratified_sample: rows-only (seeded sampling
-    // is engine-specific by design; properties pinned in specs)
-    "set_intersect" ->
-      s"SELECT o_custkey FROM ($y96 INTERSECT $y97) ORDER BY o_custkey",
-    "set_except" ->
-      s"SELECT o_custkey FROM ($y96 EXCEPT $y97) ORDER BY o_custkey",
-    "set_intersect_all" ->
+        |FROM g2 CROSS JOIN dn ORDER BY p_brand""".stripMargin)),
+    Query("set_intersect", intersectYears, Some(
+      s"SELECT o_custkey FROM ($y96 INTERSECT $y97) ORDER BY o_custkey")),
+    Query("set_except", exceptYears, Some(
+      s"SELECT o_custkey FROM ($y96 EXCEPT $y97) ORDER BY o_custkey")),
+    Query("set_intersect_all", intersectAllYears, Some(
       s"""SELECT o_custkey, COUNT(*) AS multiplicity
          |FROM ($y96 INTERSECT ALL $y97)
-         |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    "set_except_all" ->
+         |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin)),
+    Query("set_except_all", exceptAllYears, Some(
       s"""SELECT o_custkey, COUNT(*) AS multiplicity
          |FROM ($y96 EXCEPT ALL $y97)
-         |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    "set_union_by_name" ->
+         |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin)),
+    Query("set_union_by_name", unionNationKeys, Some(
       """SELECT nationkey, side FROM (
         |  SELECT s_nationkey AS nationkey, 'supplier' AS side FROM supplier
         |  UNION
         |  SELECT c_nationkey AS nationkey, 'customer' AS side FROM customer)
-        |ORDER BY nationkey, side""".stripMargin,
-    "sort_limit" ->
+        |ORDER BY nationkey, side""".stripMargin)),
+    Query("sort_limit", sortLimit, Some(
       """SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
         |ORDER BY o_orderstatus ASC, o_totalprice DESC, o_orderkey
-        |LIMIT 100""".stripMargin,
-    "distinct_flags" ->
+        |LIMIT 100""".stripMargin)),
+    Query("distinct_flags", distinctFlags, Some(
       """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "sort_within_partitions" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders""".stripMargin,
-    "filter_battery" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    Query("sort_within_partitions", partitionLocalSort, Some(
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders""".stripMargin)),
+    // Rows-only: seeded sampling is engine-specific by design; properties
+    // pinned in specs.
+    Query("set_tablesample", tableSample, None),
+    Query("set_stratified_sample", stratifiedSample, None),
+    Query("filter_battery", predicateBattery, Some(
       """SELECT p_partkey, p_name, p_size, p_retailprice FROM part
         |WHERE p_size IN (5, 10, 15, 20)
         |  AND p_retailprice BETWEEN 901.0 AND 1e9
         |  AND p_name LIKE '%o%'
         |  AND p_brand IS NOT DISTINCT FROM p_brand
-        |ORDER BY p_partkey""".stripMargin,
+        |ORDER BY p_partkey""".stripMargin)),
   )
 }

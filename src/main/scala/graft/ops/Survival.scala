@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -186,23 +186,17 @@ object Survival extends QueryModule {
       .orderBy(col("events"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "surv_km" -> (km _),
-    "surv_km_arms" -> (kmArms _),
-    "surv_logrank" -> (logrank _),
-  )
-
-  override def oracleSql: Map[String, String] = Map(
-    "surv_km" ->
+  override def catalog: Seq[Query] = Seq(
+    Query("surv_km", km, Some(
       s"""WITH $durationsSql,
          |${kmSql("", "")}
-         |ORDER BY t""".stripMargin,
-    "surv_km_arms" ->
+         |ORDER BY t""".stripMargin)),
+    Query("surv_km_arms", kmArms, Some(
       s"""WITH $durationsSql,
          |darm AS (SELECT *, user_id % 3 AS arm FROM durs),
          |${kmSql("arm, ", "PARTITION BY arm ").replace("FROM durs", "FROM darm")}
-         |ORDER BY arm, t""".stripMargin,
-    "surv_logrank" ->
+         |ORDER BY arm, t""".stripMargin)),
+    Query("surv_logrank", logrank, Some(
       s"""WITH $durationsSql,
          |darm AS (SELECT *, user_id % 3 AS arm FROM durs WHERE user_id % 3 < 2),
          |grid AS (
@@ -237,6 +231,6 @@ object Survival extends QueryModule {
          |  (CAST(SUM(o_mu) AS DOUBLE) / 1000000.0) *
          |    (CAST(SUM(o_mu) AS DOUBLE) / 1000000.0) /
          |    (CAST(SUM(v_mu) AS DOUBLE) / 1000000.0) AS chi2
-         |FROM terms ORDER BY events""".stripMargin,
+         |FROM terms ORDER BY events""".stripMargin)),
   )
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
+import graft.OracleSafe.d2d
 
 /** Time-series analytics over the event stream: autocorrelation (the
   * seasonality detector), additive trend/seasonal/remainder decomposition
@@ -48,8 +49,8 @@ object TimeSeries extends QueryModule {
     // 2^63 while DuckDB promotes to HUGEINT), then → string → double for
     // the correctly-rounded identical readout on both engines.
     def dsum(a: Column, b: Column): Column =
-      sum(a.cast("decimal(19,0)") * b.cast("decimal(19,0)"))
-        .cast("decimal(38,0)").cast("string").cast("double")
+      d2d(sum(a.cast("decimal(19,0)") * b.cast("decimal(19,0)"))
+        .cast("decimal(38,0)"))
     val den = ys.agg(dsum(col("y"), col("y")).as("den"))
     val lags = s.range(0, 25).select(col("id").as("k"))
     ys.crossJoin(broadcast(lags))
@@ -386,16 +387,6 @@ object TimeSeries extends QueryModule {
       .orderBy(col("channel"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ts_acf" -> (acf _),
-    "ev_attribution_markov" -> (attributionMarkov _),
-    "ts_periodogram" -> (periodogram _),
-    "ev_markov_stationary" -> (markovStationary _),
-    "ts_stl_daily" -> (stlDaily _),
-    "ts_stl_anomaly" -> (stlAnomaly _),
-    "ts_bandit_replay" -> (banditReplay _),
-  )
-
   /** Shared STL oracle prefix: the full decomposition table as one CTE
     * chain (re-read by the anomaly twin). */
   private lazy val stlCtes: String =
@@ -430,8 +421,76 @@ object TimeSeries extends QueryModule {
       |      AS rem_micro
       |  FROM trended t JOIN seas s USING (phase))""".stripMargin
 
-  override def oracleSql: Map[String, String] = Map(
-    "ev_attribution_markov" -> {
+  /** Oracle of `ts_stl_daily`, also gating its streaming twin
+    * `ev_stream_stl_daily`. */
+  private[graft] val stlDailySql: String =
+    s"""WITH $stlCtes
+      |SELECT d, x, trend_micro, phase, seas_micro, rem_micro
+      |FROM stl ORDER BY d""".stripMargin
+
+  /** Oracle of `ts_bandit_replay`, also gating its streaming twin
+    * `ev_stream_bandit`. */
+  private[graft] val banditReplaySql: String = {
+    val gt01 = "(rec.s1 * rec.n0 > rec.s0 * rec.n1)"
+    val arm =
+      s"""(CASE WHEN rn.t <= 3 THEN rn.t - 1
+         |  WHEN rn.t % 5 = 0 THEN (rn.t // 5) % 3
+         |  ELSE CASE WHEN rec.s2 *
+         |      (CASE WHEN $gt01 THEN rec.n1 ELSE rec.n0 END) >
+         |      (CASE WHEN $gt01 THEN rec.s1 ELSE rec.s0 END) * rec.n2
+         |    THEN 2
+         |    ELSE CASE WHEN $gt01 THEN 1 ELSE 0 END END
+         |END)""".stripMargin
+    s"""WITH RECURSIVE daily AS MATERIALIZED (
+      |  SELECT epoch_us(date_trunc('day', ts)) // 86400000000 AS d,
+      |    CAST(COUNT(*) FILTER (user_id % 3 = 0) AS BIGINT) AS n0,
+      |    CAST(COUNT(*) FILTER (user_id % 3 = 0
+      |      AND event_type = 'purchase') AS BIGINT) AS s0,
+      |    CAST(COUNT(*) FILTER (user_id % 3 = 1) AS BIGINT) AS n1,
+      |    CAST(COUNT(*) FILTER (user_id % 3 = 1
+      |      AND event_type = 'purchase') AS BIGINT) AS s1,
+      |    CAST(COUNT(*) FILTER (user_id % 3 = 2) AS BIGINT) AS n2,
+      |    CAST(COUNT(*) FILTER (user_id % 3 = 2
+      |      AND event_type = 'purchase') AS BIGINT) AS s2
+      |  FROM events GROUP BY 1),
+      |rn AS MATERIALIZED (
+      |  SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS t
+      |  FROM daily),
+      |rec AS (
+      |  SELECT CAST(0 AS BIGINT) AS t, CAST(0 AS BIGINT) AS d,
+      |    CAST(-1 AS BIGINT) AS arm,
+      |    CAST(0 AS BIGINT) AS obs_s, CAST(0 AS BIGINT) AS obs_n,
+      |    CAST(0 AS BIGINT) AS s0, CAST(0 AS BIGINT) AS n0,
+      |    CAST(0 AS BIGINT) AS s1, CAST(0 AS BIGINT) AS n1,
+      |    CAST(0 AS BIGINT) AS s2, CAST(0 AS BIGINT) AS n2
+      |  UNION ALL
+      |  SELECT z.t, z.d, CAST(z.arm AS BIGINT),
+      |    CASE z.arm WHEN 0 THEN z.e_s0 WHEN 1 THEN z.e_s1
+      |      ELSE z.e_s2 END,
+      |    CASE z.arm WHEN 0 THEN z.e_n0 WHEN 1 THEN z.e_n1
+      |      ELSE z.e_n2 END,
+      |    z.s0 + CASE WHEN z.arm = 0 THEN z.e_s0 ELSE 0 END,
+      |    z.n0 + CASE WHEN z.arm = 0 THEN z.e_n0 ELSE 0 END,
+      |    z.s1 + CASE WHEN z.arm = 1 THEN z.e_s1 ELSE 0 END,
+      |    z.n1 + CASE WHEN z.arm = 1 THEN z.e_n1 ELSE 0 END,
+      |    z.s2 + CASE WHEN z.arm = 2 THEN z.e_s2 ELSE 0 END,
+      |    z.n2 + CASE WHEN z.arm = 2 THEN z.e_n2 ELSE 0 END
+      |  FROM (
+      |    SELECT rn.t, rn.d, rn.n0 AS e_n0, rn.s0 AS e_s0,
+      |      rn.n1 AS e_n1, rn.s1 AS e_s1, rn.n2 AS e_n2, rn.s2 AS e_s2,
+      |      rec.s0, rec.n0, rec.s1, rec.n1, rec.s2, rec.n2,
+      |      $arm AS arm
+      |    FROM rec JOIN rn ON rn.t = rec.t + 1) z)
+      |SELECT t, d, arm, obs_s, obs_n,
+      |  CAST(SUM(obs_s) OVER (PARTITION BY arm ORDER BY t) AS BIGINT)
+      |    AS cum_s,
+      |  CAST(SUM(obs_n) OVER (PARTITION BY arm ORDER BY t) AS BIGINT)
+      |    AS cum_n
+      |FROM rec WHERE t >= 1 ORDER BY t""".stripMargin
+  }
+
+  override def catalog: Seq[Query] = Seq(
+    Query("ev_attribution_markov", attributionMarkov, Some {
       val term =
         """CAST(v.c AS DOUBLE) / CAST(v.r AS DOUBLE) *
           |      CASE WHEN v.nxt = 'conv' THEN CAST(1 AS DOUBLE)
@@ -506,8 +565,8 @@ object TimeSeries extends QueryModule {
         |SELECT channel, p_conv, p_full, removal_effect,
         |  removal_effect / sum_re AS attribution
         |FROM eff CROSS JOIN tot ORDER BY channel""".stripMargin
-    },
-    "ev_markov_stationary" -> {
+    }),
+    Query("ev_markov_stationary", markovStationary, Some {
       val rounds = (1 to 8).map { t =>
         s"""v$t AS MATERIALIZED (
            |  SELECT m.nxt AS state, CAST(SUM((v.v * m.c) // m.r) AS BIGINT)
@@ -537,8 +596,8 @@ object TimeSeries extends QueryModule {
         |SELECT state, v AS v_nano,
         |  CAST(v AS DOUBLE) / CAST(tot AS DOUBLE) AS pi
         |FROM v8 CROSS JOIN tot ORDER BY state""".stripMargin
-    },
-    "ts_periodogram" -> {
+    }),
+    Query("ts_periodogram", periodogram, Some {
       val rows = dftBasis
         .map { case (f, p, c, sn) => s"($f, $p, $c, $sn)" }
         .mkString(",\n|    ")
@@ -558,8 +617,8 @@ object TimeSeries extends QueryModule {
         |    AS magnitude
         |FROM counts c JOIN basis b ON b.p = c.h % 24
         |GROUP BY b.f ORDER BY f""".stripMargin
-    },
-    "ts_acf" ->
+    }),
+    Query("ts_acf", acf, Some(
       """WITH counts AS MATERIALIZED (
         |  SELECT epoch_us(date_trunc('hour', ts)) // 3600000000 AS h,
         |    CAST(COUNT(*) AS BIGINT) AS x
@@ -585,12 +644,9 @@ object TimeSeries extends QueryModule {
         |  JOIN ys b ON b.h = a.h + l.k
         |  GROUP BY 1)
         |SELECT k, n_pairs, num / den AS acf
-        |FROM num CROSS JOIN den ORDER BY k""".stripMargin,
-    "ts_stl_daily" ->
-      s"""WITH $stlCtes
-        |SELECT d, x, trend_micro, phase, seas_micro, rem_micro
-        |FROM stl ORDER BY d""".stripMargin,
-    "ts_stl_anomaly" ->
+        |FROM num CROSS JOIN den ORDER BY k""".stripMargin)),
+    Query("ts_stl_daily", stlDaily, Some(stlDailySql)),
+    Query("ts_stl_anomaly", stlAnomaly, Some(
       s"""WITH $stlCtes,
         |mo AS (
         |  SELECT CAST(COUNT(*) AS BIGINT) AS m,
@@ -605,64 +661,7 @@ object TimeSeries extends QueryModule {
         |    4 * (mo.m * mo.q -
         |      CAST(mo.sr AS DECIMAL(19,0)) * CAST(mo.sr AS DECIMAL(19,0)))
         |    THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS is_anomaly
-        |FROM stl s CROSS JOIN mo ORDER BY s.d""".stripMargin,
-    "ts_bandit_replay" -> {
-      val gt01 = "(rec.s1 * rec.n0 > rec.s0 * rec.n1)"
-      val arm =
-        s"""(CASE WHEN rn.t <= 3 THEN rn.t - 1
-           |  WHEN rn.t % 5 = 0 THEN (rn.t // 5) % 3
-           |  ELSE CASE WHEN rec.s2 *
-           |      (CASE WHEN $gt01 THEN rec.n1 ELSE rec.n0 END) >
-           |      (CASE WHEN $gt01 THEN rec.s1 ELSE rec.s0 END) * rec.n2
-           |    THEN 2
-           |    ELSE CASE WHEN $gt01 THEN 1 ELSE 0 END END
-           |END)""".stripMargin
-      s"""WITH RECURSIVE daily AS MATERIALIZED (
-        |  SELECT epoch_us(date_trunc('day', ts)) // 86400000000 AS d,
-        |    CAST(COUNT(*) FILTER (user_id % 3 = 0) AS BIGINT) AS n0,
-        |    CAST(COUNT(*) FILTER (user_id % 3 = 0
-        |      AND event_type = 'purchase') AS BIGINT) AS s0,
-        |    CAST(COUNT(*) FILTER (user_id % 3 = 1) AS BIGINT) AS n1,
-        |    CAST(COUNT(*) FILTER (user_id % 3 = 1
-        |      AND event_type = 'purchase') AS BIGINT) AS s1,
-        |    CAST(COUNT(*) FILTER (user_id % 3 = 2) AS BIGINT) AS n2,
-        |    CAST(COUNT(*) FILTER (user_id % 3 = 2
-        |      AND event_type = 'purchase') AS BIGINT) AS s2
-        |  FROM events GROUP BY 1),
-        |rn AS MATERIALIZED (
-        |  SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS t
-        |  FROM daily),
-        |rec AS (
-        |  SELECT CAST(0 AS BIGINT) AS t, CAST(0 AS BIGINT) AS d,
-        |    CAST(-1 AS BIGINT) AS arm,
-        |    CAST(0 AS BIGINT) AS obs_s, CAST(0 AS BIGINT) AS obs_n,
-        |    CAST(0 AS BIGINT) AS s0, CAST(0 AS BIGINT) AS n0,
-        |    CAST(0 AS BIGINT) AS s1, CAST(0 AS BIGINT) AS n1,
-        |    CAST(0 AS BIGINT) AS s2, CAST(0 AS BIGINT) AS n2
-        |  UNION ALL
-        |  SELECT z.t, z.d, CAST(z.arm AS BIGINT),
-        |    CASE z.arm WHEN 0 THEN z.e_s0 WHEN 1 THEN z.e_s1
-        |      ELSE z.e_s2 END,
-        |    CASE z.arm WHEN 0 THEN z.e_n0 WHEN 1 THEN z.e_n1
-        |      ELSE z.e_n2 END,
-        |    z.s0 + CASE WHEN z.arm = 0 THEN z.e_s0 ELSE 0 END,
-        |    z.n0 + CASE WHEN z.arm = 0 THEN z.e_n0 ELSE 0 END,
-        |    z.s1 + CASE WHEN z.arm = 1 THEN z.e_s1 ELSE 0 END,
-        |    z.n1 + CASE WHEN z.arm = 1 THEN z.e_n1 ELSE 0 END,
-        |    z.s2 + CASE WHEN z.arm = 2 THEN z.e_s2 ELSE 0 END,
-        |    z.n2 + CASE WHEN z.arm = 2 THEN z.e_n2 ELSE 0 END
-        |  FROM (
-        |    SELECT rn.t, rn.d, rn.n0 AS e_n0, rn.s0 AS e_s0,
-        |      rn.n1 AS e_n1, rn.s1 AS e_s1, rn.n2 AS e_n2, rn.s2 AS e_s2,
-        |      rec.s0, rec.n0, rec.s1, rec.n1, rec.s2, rec.n2,
-        |      $arm AS arm
-        |    FROM rec JOIN rn ON rn.t = rec.t + 1) z)
-        |SELECT t, d, arm, obs_s, obs_n,
-        |  CAST(SUM(obs_s) OVER (PARTITION BY arm ORDER BY t) AS BIGINT)
-        |    AS cum_s,
-        |  CAST(SUM(obs_n) OVER (PARTITION BY arm ORDER BY t) AS BIGINT)
-        |    AS cum_n
-        |FROM rec WHERE t >= 1 ORDER BY t""".stripMargin
-    },
+        |FROM stl s CROSS JOIN mo ORDER BY s.d""".stripMargin)),
+    Query("ts_bandit_replay", banditReplay, Some(banditReplaySql)),
   )
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Classic OLAP query shapes (TPC-H Q4/Q7/Q8/Q10/Q14/Q17/Q19/Q22 adapted to
@@ -221,7 +221,7 @@ object TpchShapes extends QueryModule {
     * table, never a per-row subquery. */
   def q2(s: SparkSession, d: String): DataFrame = {
     views(s, d, "part", "supplier", "lineitem", "nation", "region")
-    s.sql(tpchSql("sql_q2_shape"))
+    s.sql(q2Sql)
   }
 
   /** Q6 shape — forecasting revenue change: pure scan-filter-aggregate, no
@@ -232,7 +232,7 @@ object TpchShapes extends QueryModule {
     * does almost all the work). */
   def q6(s: SparkSession, d: String): DataFrame = {
     views(s, d, "lineitem")
-    s.sql(tpchSql("sql_q6_shape"))
+    s.sql(q6Sql)
   }
 
   /** Q9 shape — product-type profit by nation × year. No `partsupp`
@@ -243,7 +243,7 @@ object TpchShapes extends QueryModule {
     * all-integer so SUM is add-order-free. */
   def q9(s: SparkSession, d: String): DataFrame = {
     views(s, d, "lineitem", "supplier", "part", "orders", "nation")
-    s.sql(tpchSql("sql_q9_shape"))
+    s.sql(q9Sql)
   }
 
   /** Q12 shape — shipping-mode priority counts. The fixture has no
@@ -254,7 +254,7 @@ object TpchShapes extends QueryModule {
     * rows. */
   def q12(s: SparkSession, d: String): DataFrame = {
     views(s, d, "orders", "lineitem")
-    s.sql(tpchSql("sql_q12_shape"))
+    s.sql(q12Sql)
   }
 
   /** Q13 shape — customer order-count distribution: LEFT OUTER join with
@@ -263,7 +263,7 @@ object TpchShapes extends QueryModule {
     * aggregate over the first. Two shuffles: o_custkey, then c_count. */
   def q13(s: SparkSession, d: String): DataFrame = {
     views(s, d, "customer", "orders")
-    s.sql(tpchSql("sql_q13_shape"))
+    s.sql(q13Sql)
   }
 
   /** Q15 shape — top supplier by quarterly revenue: the revenue CTE is an
@@ -273,7 +273,7 @@ object TpchShapes extends QueryModule {
     * LIMIT-by-float nondeterminism. */
   def q15(s: SparkSession, d: String): DataFrame = {
     views(s, d, "supplier", "lineitem")
-    s.sql(tpchSql("sql_q15_shape"))
+    s.sql(q15Sql)
   }
 
   /** Q16 shape — supplier-count by part attribute with a NOT IN exclusion
@@ -284,7 +284,7 @@ object TpchShapes extends QueryModule {
     * expand — all linear in the pair table. */
   def q16(s: SparkSession, d: String): DataFrame = {
     views(s, d, "part", "supplier", "lineitem")
-    s.sql(tpchSql("sql_q16_shape"))
+    s.sql(q16Sql)
   }
 
   /** Q20 shape — dominant-supplier selection: IN over a grouped subquery
@@ -297,125 +297,128 @@ object TpchShapes extends QueryModule {
     * doubles, so both sums and the 0.12× threshold are bit-exact. */
   def q20(s: SparkSession, d: String): DataFrame = {
     views(s, d, "supplier", "nation", "lineitem", "part")
-    s.sql(tpchSql("sql_q20_shape"))
+    s.sql(q20Sql)
   }
 
   /** The SQL for the round-7b shapes is engine-shared: every string below
     * is valid and value-identical in BOTH Spark SQL and DuckDB (integer
     * cents everywhere, no STRING/VARCHAR casts, shared function subset), so
     * the oracle twin IS the query text. */
-  private def tpchSql(name: String): String = sharedSql(name)
+  private val q2Sql =
+    """WITH cost AS (
+      |  SELECT l_partkey, l_suppkey,
+      |    MIN(CAST(floor(l_extendedprice / l_quantity * 100.0 + 0.5)
+      |      AS BIGINT)) AS unit_cents
+      |  FROM lineitem GROUP BY l_partkey, l_suppkey),
+      |eu AS (
+      |  SELECT t.l_partkey, t.l_suppkey, t.unit_cents, s.s_name, n.n_name
+      |  FROM cost t
+      |  JOIN supplier s ON s.s_suppkey = t.l_suppkey
+      |  JOIN nation n ON n.n_nationkey = s.s_nationkey
+      |  JOIN region r ON r.r_regionkey = n.n_regionkey
+      |  WHERE r.r_name = 'EUROPE')
+      |SELECT p.p_partkey, p.p_name, e.s_name, e.n_name, e.unit_cents
+      |FROM part p
+      |JOIN eu e ON e.l_partkey = p.p_partkey
+      |WHERE p.p_size BETWEEN 1 AND 10
+      |  AND e.unit_cents = (SELECT MIN(e2.unit_cents) FROM eu e2
+      |    WHERE e2.l_partkey = p.p_partkey)
+      |ORDER BY e.unit_cents, p.p_partkey, e.s_name
+      |LIMIT 100""".stripMargin
 
-  private val sharedSql: Map[String, String] = Map(
-    "sql_q2_shape" ->
-      """WITH cost AS (
-        |  SELECT l_partkey, l_suppkey,
-        |    MIN(CAST(floor(l_extendedprice / l_quantity * 100.0 + 0.5)
-        |      AS BIGINT)) AS unit_cents
-        |  FROM lineitem GROUP BY l_partkey, l_suppkey),
-        |eu AS (
-        |  SELECT t.l_partkey, t.l_suppkey, t.unit_cents, s.s_name, n.n_name
-        |  FROM cost t
-        |  JOIN supplier s ON s.s_suppkey = t.l_suppkey
-        |  JOIN nation n ON n.n_nationkey = s.s_nationkey
-        |  JOIN region r ON r.r_regionkey = n.n_regionkey
-        |  WHERE r.r_name = 'EUROPE')
-        |SELECT p.p_partkey, p.p_name, e.s_name, e.n_name, e.unit_cents
-        |FROM part p
-        |JOIN eu e ON e.l_partkey = p.p_partkey
-        |WHERE p.p_size BETWEEN 1 AND 10
-        |  AND e.unit_cents = (SELECT MIN(e2.unit_cents) FROM eu e2
-        |    WHERE e2.l_partkey = p.p_partkey)
-        |ORDER BY e.unit_cents, p.p_partkey, e.s_name
-        |LIMIT 100""".stripMargin,
-    "sql_q6_shape" ->
-      """SELECT
-        |  CAST(SUM(CAST(floor(l_extendedprice * l_discount * 100.0 + 0.5)
-        |    AS BIGINT)) AS BIGINT) AS revenue_cents,
-        |  COUNT(*) AS n_lines
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_discount BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-    "sql_q9_shape" ->
-      """SELECT nation, o_year,
-        |  CAST(SUM(amount_cents) AS BIGINT) AS profit_cents,
-        |  COUNT(*) AS n_lines
-        |FROM (
-        |  SELECT n.n_name AS nation, year(o.o_orderdate) AS o_year,
-        |    CAST(floor(l.l_extendedprice * (1.0 - l.l_discount) * 100.0 + 0.5)
-        |      AS BIGINT)
-        |      - CAST(floor(p.p_retailprice * 10.0 + 0.5) AS BIGINT)
-        |        * CAST(l.l_quantity AS BIGINT) AS amount_cents
-        |  FROM lineitem l
-        |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-        |  JOIN part p ON p.p_partkey = l.l_partkey
-        |  JOIN orders o ON o.o_orderkey = l.l_orderkey
-        |  JOIN nation n ON n.n_nationkey = s.s_nationkey
-        |  WHERE p.p_name LIKE '%gear%') t
-        |GROUP BY nation, o_year
-        |ORDER BY nation, o_year DESC""".stripMargin,
-    "sql_q12_shape" ->
-      """SELECT l.l_linestatus,
-        |  CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        |WHERE l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l.l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l.l_shipdate > o.o_orderdate
-        |GROUP BY l.l_linestatus
-        |ORDER BY l.l_linestatus""".stripMargin,
-    "sql_q13_shape" ->
-      """SELECT c_count, COUNT(*) AS custdist
-        |FROM (
-        |  SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-        |  FROM customer c
-        |  LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-        |    AND o.o_orderpriority <> '5-LOW'
-        |  GROUP BY c.c_custkey) t
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "sql_q15_shape" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |    CAST(SUM(CAST(floor(l_extendedprice * (1.0 - l_discount) * 100.0
-        |      + 0.5) AS BIGINT)) AS BIGINT) AS total_cents
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
-        |  GROUP BY l_suppkey)
-        |SELECT s.s_suppkey, s.s_name, r.total_cents
-        |FROM supplier s JOIN rev r ON r.l_suppkey = s.s_suppkey
-        |WHERE r.total_cents = (SELECT MAX(total_cents) FROM rev)
-        |ORDER BY s.s_suppkey""".stripMargin,
-    "sql_q16_shape" ->
-      """SELECT p.p_brand, p.p_type, p.p_size,
-        |  COUNT(DISTINCT ps.l_suppkey) AS supplier_cnt
-        |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
-        |JOIN part p ON p.p_partkey = ps.l_partkey
-        |WHERE p.p_brand <> 'Brand#1'
-        |  AND p.p_size IN (1, 5, 11, 15, 23, 28, 37, 42)
-        |  AND ps.l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-        |    WHERE s_acctbal < 0.0)
-        |GROUP BY p.p_brand, p.p_type, p.p_size
-        |ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size""".stripMargin,
-    "sql_q20_shape" ->
-      """SELECT s.s_suppkey, s.s_name, n.n_name
-        |FROM supplier s
-        |JOIN nation n ON n.n_nationkey = s.s_nationkey
-        |WHERE s.s_suppkey IN (
-        |  SELECT l.l_suppkey
-        |  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-        |  WHERE p.p_name LIKE 'small%'
-        |  GROUP BY l.l_suppkey, l.l_partkey
-        |  HAVING SUM(l.l_quantity) > 0.12 * (
-        |    SELECT SUM(l2.l_quantity) FROM lineitem l2
-        |    WHERE l2.l_partkey = l.l_partkey))
-        |ORDER BY s.s_suppkey""".stripMargin,
-  )
+  private val q6Sql =
+    """SELECT
+      |  CAST(SUM(CAST(floor(l_extendedprice * l_discount * 100.0 + 0.5)
+      |    AS BIGINT)) AS BIGINT) AS revenue_cents,
+      |  COUNT(*) AS n_lines
+      |FROM lineitem
+      |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+      |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
+      |  AND l_discount BETWEEN 0.05 AND 0.07
+      |  AND l_quantity < 24""".stripMargin
+
+  private val q9Sql =
+    """SELECT nation, o_year,
+      |  CAST(SUM(amount_cents) AS BIGINT) AS profit_cents,
+      |  COUNT(*) AS n_lines
+      |FROM (
+      |  SELECT n.n_name AS nation, year(o.o_orderdate) AS o_year,
+      |    CAST(floor(l.l_extendedprice * (1.0 - l.l_discount) * 100.0 + 0.5)
+      |      AS BIGINT)
+      |      - CAST(floor(p.p_retailprice * 10.0 + 0.5) AS BIGINT)
+      |        * CAST(l.l_quantity AS BIGINT) AS amount_cents
+      |  FROM lineitem l
+      |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
+      |  JOIN part p ON p.p_partkey = l.l_partkey
+      |  JOIN orders o ON o.o_orderkey = l.l_orderkey
+      |  JOIN nation n ON n.n_nationkey = s.s_nationkey
+      |  WHERE p.p_name LIKE '%gear%') t
+      |GROUP BY nation, o_year
+      |ORDER BY nation, o_year DESC""".stripMargin
+
+  private val q12Sql =
+    """SELECT l.l_linestatus,
+      |  CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
+      |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+      |  CAST(SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+      |    THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+      |FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+      |WHERE l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+      |  AND l.l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
+      |  AND l.l_shipdate > o.o_orderdate
+      |GROUP BY l.l_linestatus
+      |ORDER BY l.l_linestatus""".stripMargin
+
+  private val q13Sql =
+    """SELECT c_count, COUNT(*) AS custdist
+      |FROM (
+      |  SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
+      |  FROM customer c
+      |  LEFT JOIN orders o ON o.o_custkey = c.c_custkey
+      |    AND o.o_orderpriority <> '5-LOW'
+      |  GROUP BY c.c_custkey) t
+      |GROUP BY c_count
+      |ORDER BY custdist DESC, c_count DESC""".stripMargin
+
+  private val q15Sql =
+    """WITH rev AS (
+      |  SELECT l_suppkey,
+      |    CAST(SUM(CAST(floor(l_extendedprice * (1.0 - l_discount) * 100.0
+      |      + 0.5) AS BIGINT)) AS BIGINT) AS total_cents
+      |  FROM lineitem
+      |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+      |    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
+      |  GROUP BY l_suppkey)
+      |SELECT s.s_suppkey, s.s_name, r.total_cents
+      |FROM supplier s JOIN rev r ON r.l_suppkey = s.s_suppkey
+      |WHERE r.total_cents = (SELECT MAX(total_cents) FROM rev)
+      |ORDER BY s.s_suppkey""".stripMargin
+
+  private val q16Sql =
+    """SELECT p.p_brand, p.p_type, p.p_size,
+      |  COUNT(DISTINCT ps.l_suppkey) AS supplier_cnt
+      |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
+      |JOIN part p ON p.p_partkey = ps.l_partkey
+      |WHERE p.p_brand <> 'Brand#1'
+      |  AND p.p_size IN (1, 5, 11, 15, 23, 28, 37, 42)
+      |  AND ps.l_suppkey NOT IN (SELECT s_suppkey FROM supplier
+      |    WHERE s_acctbal < 0.0)
+      |GROUP BY p.p_brand, p.p_type, p.p_size
+      |ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size""".stripMargin
+
+  private val q20Sql =
+    """SELECT s.s_suppkey, s.s_name, n.n_name
+      |FROM supplier s
+      |JOIN nation n ON n.n_nationkey = s.s_nationkey
+      |WHERE s.s_suppkey IN (
+      |  SELECT l.l_suppkey
+      |  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+      |  WHERE p.p_name LIKE 'small%'
+      |  GROUP BY l.l_suppkey, l.l_partkey
+      |  HAVING SUM(l.l_quantity) > 0.12 * (
+      |    SELECT SUM(l2.l_quantity) FROM lineitem l2
+      |    WHERE l2.l_partkey = l.l_partkey))
+      |ORDER BY s.s_suppkey""".stripMargin
 
   /** EXISTS used as a VALUE (not a filter): segment × has-big-order
     * counts. Catalyst plans the non-filtering EXISTS as an ExistenceJoin —
@@ -438,28 +441,16 @@ object TpchShapes extends QueryModule {
         |ORDER BY c_mktsegment, has_big_order""".stripMargin)
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_exists_flag" -> (existsFlag _),
-    "sql_q2_shape"  -> (q2 _),
-    "sql_q6_shape"  -> (q6 _),
-    "sql_q9_shape"  -> (q9 _),
-    "sql_q12_shape" -> (q12 _),
-    "sql_q13_shape" -> (q13 _),
-    "sql_q15_shape" -> (q15 _),
-    "sql_q16_shape" -> (q16 _),
-    "sql_q20_shape" -> (q20 _),
-    "sql_q4_shape"  -> (q4 _),
-    "sql_q7_shape"  -> (q7 _),
-    "sql_q8_shape"  -> (q8 _),
-    "sql_q10_shape" -> (q10 _),
-    "sql_q14_shape" -> (q14 _),
-    "sql_q17_shape" -> (q17 _),
-    "sql_q19_shape" -> (q19 _),
-    "sql_q22_shape" -> (q22 _),
-  )
-
-  override def oracleSql: Map[String, String] = sharedSql ++ Map(
-    "sql_exists_flag" ->
+  override def catalog: Seq[Query] = Seq(
+    Query("sql_q2_shape", q2, Some(q2Sql)),
+    Query("sql_q6_shape", q6, Some(q6Sql)),
+    Query("sql_q9_shape", q9, Some(q9Sql)),
+    Query("sql_q12_shape", q12, Some(q12Sql)),
+    Query("sql_q13_shape", q13, Some(q13Sql)),
+    Query("sql_q15_shape", q15, Some(q15Sql)),
+    Query("sql_q16_shape", q16, Some(q16Sql)),
+    Query("sql_q20_shape", q20, Some(q20Sql)),
+    Query("sql_exists_flag", existsFlag, Some(
       """SELECT c_mktsegment,
         |  CASE WHEN EXISTS (SELECT 1 FROM orders o
         |    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
@@ -470,8 +461,8 @@ object TpchShapes extends QueryModule {
         |  CASE WHEN EXISTS (SELECT 1 FROM orders o
         |    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
         |    THEN 1 ELSE 0 END
-        |ORDER BY c_mktsegment, has_big_order""".stripMargin,
-    "sql_q4_shape" ->
+        |ORDER BY c_mktsegment, has_big_order""".stripMargin)),
+    Query("sql_q4_shape", q4, Some(
       """SELECT o_orderpriority, COUNT(*) AS order_count
         |FROM orders o
         |WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -480,8 +471,8 @@ object TpchShapes extends QueryModule {
         |    WHERE l.l_orderkey = o.o_orderkey
         |      AND l.l_shipdate > o.o_orderdate + INTERVAL '30' DAY)
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "sql_q7_shape" ->
+        |ORDER BY o_orderpriority""".stripMargin)),
+    Query("sql_q7_shape", q7, Some(
       """SELECT supp_nation, cust_nation, l_year,
         |  CAST(CAST(SUM(vol) AS VARCHAR) AS DOUBLE) AS revenue,
         |  COUNT(*) AS n_lines
@@ -499,8 +490,8 @@ object TpchShapes extends QueryModule {
         |  WHERE (n1.n_name = 'NATION_20' AND n2.n_name = 'NATION_11')
         |     OR (n1.n_name = 'NATION_11' AND n2.n_name = 'NATION_20')) t
         |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-    "sql_q8_shape" ->
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin)),
+    Query("sql_q8_shape", q8, Some(
       """SELECT o_year,
         |  CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN cents ELSE 0 END)
         |    AS BIGINT) AS nation_cents,
@@ -521,8 +512,8 @@ object TpchShapes extends QueryModule {
         |  JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
         |  WHERE r.r_name = 'ASIA') t
         |GROUP BY o_year
-        |ORDER BY o_year""".stripMargin,
-    "sql_q10_shape" ->
+        |ORDER BY o_year""".stripMargin)),
+    Query("sql_q10_shape", q10, Some(
       """SELECT c.c_custkey, c.c_name, n.n_name,
         |  CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,4))
         |    * CAST(1.0 - l.l_discount AS DECIMAL(8,4))) AS VARCHAR) AS DOUBLE)
@@ -537,8 +528,8 @@ object TpchShapes extends QueryModule {
         |GROUP BY c.c_custkey, c.c_name, n.n_name
         |ORDER BY SUM(CAST(l.l_extendedprice AS DECIMAL(12,4))
         |    * CAST(1.0 - l.l_discount AS DECIMAL(8,4))) DESC, c.c_custkey
-        |LIMIT 20""".stripMargin,
-    "sql_q14_shape" ->
+        |LIMIT 20""".stripMargin)),
+    Query("sql_q14_shape", q14, Some(
       """SELECT
         |  CAST(SUM(CASE WHEN p_type = 'PROMO' THEN cents ELSE 0 END)
         |    AS BIGINT) AS promo_cents,
@@ -553,8 +544,8 @@ object TpchShapes extends QueryModule {
         |  FROM lineitem l
         |  JOIN part p ON p.p_partkey = l.l_partkey
         |  WHERE l.l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
-        |    AND l.l_shipdate <  TIMESTAMP '1996-04-01 00:00:00') t""".stripMargin,
-    "sql_q17_shape" ->
+        |    AND l.l_shipdate <  TIMESTAMP '1996-04-01 00:00:00') t""".stripMargin)),
+    Query("sql_q17_shape", q17, Some(
       """SELECT p.p_brand,
         |  CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,4))) AS VARCHAR)
         |    AS DOUBLE) / 7.0 AS avg_yearly,
@@ -566,8 +557,8 @@ object TpchShapes extends QueryModule {
         |    SELECT 0.2 * (CAST(SUM(l2.l_quantity) AS DOUBLE) / COUNT(*))
         |    FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)
         |GROUP BY p.p_brand
-        |ORDER BY p.p_brand""".stripMargin,
-    "sql_q19_shape" ->
+        |ORDER BY p.p_brand""".stripMargin)),
+    Query("sql_q19_shape", q19, Some(
       """SELECT
         |  CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,4))
         |    * CAST(1.0 - l.l_discount AS DECIMAL(8,4))) AS VARCHAR) AS DOUBLE)
@@ -580,8 +571,8 @@ object TpchShapes extends QueryModule {
         |   OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 1 AND 10
         |        AND l.l_quantity BETWEEN 10 AND 20)
         |   OR (p.p_brand = 'Brand#4' AND p.p_size BETWEEN 1 AND 15
-        |        AND l.l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "sql_q22_shape" ->
+        |        AND l.l_quantity BETWEEN 20 AND 30)""".stripMargin)),
+    Query("sql_q22_shape", q22, Some(
       """WITH c AS (
         |  SELECT c_custkey, c_custkey % 7 AS cntrycode,
         |    CAST(floor(c_acctbal * 100.0 + 0.5) AS BIGINT) AS cents
@@ -595,6 +586,6 @@ object TpchShapes extends QueryModule {
         |  AND NOT EXISTS (SELECT 1 FROM orders o
         |    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
         |GROUP BY cntrycode
-        |ORDER BY cntrycode""".stripMargin,
+        |ORDER BY cntrycode""".stripMargin)),
   )
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
+import graft.OracleSafe.d2d
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,8 +34,7 @@ object Windows extends QueryModule {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.orders(s, d)
       .withColumn("running_total",
-        sum(col("o_totalprice").cast("decimal(18,4)")).over(w)
-          .cast("string").cast("double"))
+        d2d(sum(col("o_totalprice").cast("decimal(18,4)")).over(w)))
       .select(col("o_custkey"), col("o_orderkey"),
         col("o_orderdate").cast("date").as("orderdate"), col("running_total"))
       .orderBy(col("o_custkey"), col("orderdate"), col("o_orderkey"))
@@ -217,21 +217,8 @@ object Windows extends QueryModule {
       .orderBy(col("day"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_rsi" -> (rsi _),
-    "win_drawdown" -> (drawdown _),
-    "win_rolling_slope" -> (rollingSlope _),
-    "win_rolling_median" -> (rollingMedian _),
-    "win_topk_per_group" -> (topKPerGroup _),
-    "win_running_sum"    -> (runningSum _),
-    "win_lag_lead"       -> (lagLead _),
-    "win_ranks"          -> (ranks _),
-    "win_range_frame"    -> (rangeFrame _),
-    "win_first_last"     -> (firstLast _),
-  )
-
-  override def oracleSql: Map[String, String] = Map(
-    "win_rsi" ->
+  override def catalog: Seq[Query] = Seq(
+    Query("win_rsi", rsi, Some(
       """WITH daily AS MATERIALIZED (
         |  SELECT CAST(o_orderdate AS DATE) AS day,
         |    CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
@@ -260,8 +247,8 @@ object Windows extends QueryModule {
         |  CASE WHEN sum_gain + sum_loss > 0 THEN
         |    100.0 * CAST(sum_gain AS DOUBLE) /
         |    CAST(sum_gain + sum_loss AS DOUBLE) END AS rsi
-        |FROM fr WHERE cnt14 = 14 ORDER BY day""".stripMargin,
-    "win_drawdown" ->
+        |FROM fr WHERE cnt14 = 14 ORDER BY day""".stripMargin)),
+    Query("win_drawdown", drawdown, Some(
       """WITH daily AS (
         |  SELECT c_mktsegment AS seg, CAST(o_orderdate AS DATE) AS day,
         |    CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT))
@@ -285,8 +272,8 @@ object Windows extends QueryModule {
         |  CAST(MAX(runmax - cum) AS BIGINT) AS max_dd_scaled,
         |  CAST(MAX(runmax - cum) AS DOUBLE) / CAST(MAX(nd) AS DOUBLE)
         |    AS max_dd_cents_mean_days
-        |FROM r GROUP BY seg ORDER BY seg""".stripMargin,
-    "win_rolling_slope" ->
+        |FROM r GROUP BY seg ORDER BY seg""".stripMargin)),
+    Query("win_rolling_slope", rollingSlope, Some(
       """WITH daily AS (
         |  SELECT event_type, epoch_us(ts) // 86400000000 AS x,
         |    CAST(COUNT(*) AS BIGINT) AS y
@@ -302,51 +289,51 @@ object Windows extends QueryModule {
         |SELECT event_type, CAST(x AS BIGINT) AS day_no, y AS n,
         |  CAST(cnt * sxy - sx * sy AS DOUBLE) /
         |    CAST(cnt * sxx - sx * sx AS DOUBLE) AS slope_7d
-        |FROM m WHERE cnt = 7 ORDER BY event_type, day_no""".stripMargin,
-    "win_rolling_median" ->
+        |FROM m WHERE cnt = 7 ORDER BY event_type, day_no""".stripMargin)),
+    Query("win_rolling_median", rollingMedian, Some(
       """SELECT user_id, event_id,
         |  quantile_cont(value, 0.5) OVER (PARTITION BY user_id
         |    ORDER BY ts, event_id ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS med7
         |FROM events WHERE user_id % 97 = 0
-        |ORDER BY user_id, event_id""".stripMargin,
-    "win_topk_per_group" ->
+        |ORDER BY user_id, event_id""".stripMargin)),
+    Query("win_topk_per_group", topKPerGroup, Some(
       """SELECT o_custkey, rk, o_orderkey, o_totalprice FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    row_number() OVER (PARTITION BY o_custkey
         |      ORDER BY o_totalprice DESC, o_orderkey) AS rk
         |  FROM orders) t
-        |WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin,
-    "win_running_sum" ->
+        |WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin)),
+    Query("win_running_sum", runningSum, Some(
       """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS orderdate,
         |  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER (
         |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS VARCHAR) AS DOUBLE)
         |    AS running_total
-        |FROM orders ORDER BY o_custkey, orderdate, o_orderkey""".stripMargin,
-    "win_lag_lead" ->
+        |FROM orders ORDER BY o_custkey, orderdate, o_orderkey""".stripMargin)),
+    Query("win_lag_lead", lagLead, Some(
       """SELECT event_id, user_id,
         |  epoch_us(ts) - lag(epoch_us(ts), 1) OVER w AS gap_us,
         |  lead(event_type, 1) OVER w AS next_type
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        |ORDER BY event_id""".stripMargin,
-    "win_ranks" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("win_ranks", ranks, Some(
       """SELECT p_brand, p_partkey, p_size,
         |  rank() OVER (PARTITION BY p_brand ORDER BY p_size, p_partkey) AS rk,
         |  dense_rank() OVER (PARTITION BY p_brand ORDER BY p_size, p_partkey) AS drk,
         |  ntile(4) OVER (PARTITION BY p_brand ORDER BY p_retailprice, p_partkey) AS quartile,
         |  percent_rank() OVER (PARTITION BY p_brand ORDER BY p_size, p_partkey) AS pct_rk,
         |  cume_dist() OVER (PARTITION BY p_brand ORDER BY p_size, p_partkey) AS cume
-        |FROM part ORDER BY p_brand, p_partkey""".stripMargin,
-    "win_range_frame" ->
+        |FROM part ORDER BY p_brand, p_partkey""".stripMargin)),
+    Query("win_range_frame", rangeFrame, Some(
       """SELECT o_custkey, o_orderkey, day_no, COUNT(*) OVER (
         |    PARTITION BY o_custkey ORDER BY day_no
         |    RANGE BETWEEN 30 PRECEDING AND CURRENT ROW) AS n_last_30d
         |FROM (SELECT o_custkey, o_orderkey,
         |        datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS day_no
         |      FROM orders) t
-        |ORDER BY o_custkey, day_no, o_orderkey""".stripMargin,
-    "win_first_last" ->
+        |ORDER BY o_custkey, day_no, o_orderkey""".stripMargin)),
+    Query("win_first_last", firstLast, Some(
       """SELECT o_custkey, o_orderkey,
         |  CAST(first_value(o_orderdate) OVER w AS DATE) AS first_date,
         |  CAST(last_value(o_orderdate) OVER w AS DATE) AS last_date,
@@ -355,6 +342,6 @@ object Windows extends QueryModule {
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
+        |ORDER BY o_custkey, o_orderkey""".stripMargin)),
   )
 }

@@ -1,6 +1,7 @@
 package graft.pii
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
+import graft.OracleSafe.d2d
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -341,7 +342,7 @@ object PiiQueries extends QueryModule {
       .withColumn("cv", clipped)
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n"),
-        sum(col("cv").cast("decimal(18,4)")).cast("string").cast("double")
+        d2d(sum(col("cv").cast("decimal(18,4)")))
           .as("true_sum"))
       .withColumn("u", u)
       .withColumn("noise",
@@ -355,27 +356,8 @@ object PiiQueries extends QueryModule {
       .orderBy(col("c_mktsegment"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pii_dp_mean" -> (dpMean _),
-    "pii_scan_report" -> (scanReport _),
-    "pii_xtable_consistency" -> (xtableConsistency _),
-    "pii_dp_counts" -> (dpCounts _),
-    "pii_generalize" -> (generalizeK _),
-    "pii_k_anonymity" -> (kAnonymity _),
-    "pii_t_closeness" -> (tCloseness _),
-    "pii_fpe_tokenize" -> (fpeTokenize _),
-    "pii_text_scrub"  -> (textScrub _),
-    "pii_drop"        -> (dropColumns _),
-    "pii_hash"        -> (hashPseudonym _),
-    "pii_partial_mask" -> (partialMask _),
-    "pii_null_const"  -> (nullifyAndConstant _),
-    "pii_conditional" -> (conditionalRedact _),
-    "pii_nested"      -> (nestedRedact _),
-    "pii_sweep"       -> (sweepPipeline _),
-  )
-
-  override def oracleSql: Map[String, String] = Map(
-    "pii_dp_mean" ->
+  override def catalog: Seq[Query] = Seq(
+    Query("pii_dp_mean", dpMean, Some(
       """WITH g AS (
         |  SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(CAST(SUM(CAST(greatest(0.0, least(5000.0, c_acctbal))
@@ -389,8 +371,8 @@ object PiiQueries extends QueryModule {
         |SELECT c_mktsegment, n, true_sum / CAST(n AS DOUBLE) AS true_mean,
         |  noise,
         |  round((true_sum + noise) / CAST(n AS DOUBLE), 6) AS released_mean
-        |FROM t ORDER BY c_mktsegment""".stripMargin,
-    "pii_scan_report" ->
+        |FROM t ORDER BY c_mktsegment""".stripMargin)),
+    Query("pii_scan_report", scanReport, Some(
       """WITH t AS (
         |  SELECT c_name, c_mktsegment,
         |    'Reach ' || c_name || ' at ' || lower(c_mktsegment) || '.user' ||
@@ -420,16 +402,16 @@ object PiiQueries extends QueryModule {
         |  CAST(n_hits AS DOUBLE) / CAST(n_rows AS DOUBLE) AS hit_rate,
         |  CAST(CASE WHEN n_hits * 10 >= n_rows THEN 1 ELSE 0 END AS INT)
         |    AS flagged
-        |FROM agg ORDER BY col_name, pii_class""".stripMargin,
+        |FROM agg ORDER BY col_name, pii_class""".stripMargin)),
     // Deliberately joins on the CLEAR keys: equality with the Spark side's
     // token join proves cross-table pseudonym consistency.
-    "pii_xtable_consistency" ->
+    Query("pii_xtable_consistency", xtableConsistency, Some(
       """SELECT c.c_mktsegment,
         |  COUNT(DISTINCT c.c_custkey) AS n_customers,
         |  CAST(COUNT(o.o_custkey) AS BIGINT) AS n_orders
         |FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-        |GROUP BY c.c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "pii_dp_counts" ->
+        |GROUP BY c.c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+    Query("pii_dp_counts", dpCounts, Some(
       """WITH t AS (
         |  SELECT c_mktsegment, COUNT(*) AS true_n,
         |    (CAST(CAST(('0x' || substring(md5('dp:' || c_mktsegment), 1, 8))
@@ -441,8 +423,8 @@ object PiiQueries extends QueryModule {
         |  round(true_n
         |    + round(-sign(u - 0.5) * 1.0 * ln(1.0 - 2.0 * abs(u - 0.5)), 6),
         |    6) AS released_n
-        |FROM t ORDER BY c_mktsegment""".stripMargin,
-    "pii_generalize" ->
+        |FROM t ORDER BY c_mktsegment""".stripMargin)),
+    Query("pii_generalize", generalizeK, Some(
       """WITH cust AS (
         |  SELECT c_custkey, c_mktsegment, n_name, r_name,
         |    CAST(floor(c_acctbal / 1000.0) AS BIGINT) AS band1,
@@ -469,16 +451,16 @@ object PiiQueries extends QueryModule {
         |FROM j2 WHERE sz2 >= 10
         |UNION ALL
         |SELECT c_custkey, 3, '*', '*', '*' FROM j2 WHERE sz2 < 10
-        |ORDER BY c_custkey""".stripMargin,
-    "pii_k_anonymity" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    Query("pii_k_anonymity", kAnonymity, Some(
       """SELECT c_nationkey, c_mktsegment, CAST(COUNT(*) AS BIGINT) AS group_n,
         |  CAST(COUNT(DISTINCT CAST(floor(c_acctbal/1000.0) AS BIGINT)) AS BIGINT)
         |    AS n_sensitive,
         |  CASE WHEN COUNT(*) >= 10 THEN 1 ELSE 0 END AS meets_k,
         |  CASE WHEN COUNT(DISTINCT CAST(floor(c_acctbal/1000.0) AS BIGINT)) >= 3
         |    THEN 1 ELSE 0 END AS meets_l
-        |FROM customer GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "pii_t_closeness" ->
+        |FROM customer GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("pii_t_closeness", tCloseness, Some(
       """WITH cust AS MATERIALIZED (
         |  SELECT c_nationkey, c_mktsegment,
         |    CAST(FLOOR(c_acctbal / 1000.0) AS BIGINT) AS band
@@ -507,8 +489,8 @@ object PiiQueries extends QueryModule {
         |  CAST(tvd_num AS DOUBLE) / CAST(2 * n_g * n AS DOUBLE) AS tvd,
         |  CASE WHEN 5 * tvd_num <= 2 * n_g * n
         |    THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS meets_t
-        |FROM num ORDER BY 1, 2""".stripMargin,
-    "pii_fpe_tokenize" ->
+        |FROM num ORDER BY 1, 2""".stripMargin)),
+    Query("pii_fpe_tokenize", fpeTokenize, Some(
       """SELECT c_custkey,
         |  array_to_string([CASE WHEN substring(c_name, i, 1) BETWEEN '0' AND '9'
         |    THEN CAST(CAST(('0x' || substring(md5('fpe1:' || c_name || ':' ||
@@ -516,8 +498,8 @@ object PiiQueries extends QueryModule {
         |      AS BIGINT) % 10 AS VARCHAR)
         |    ELSE substring(c_name, i, 1) END
         |    for i in range(1, length(c_name)+1)], '') AS token
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "pii_text_scrub" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
+    Query("pii_text_scrub", textScrub, Some(
       """WITH t AS (
         |  SELECT c_custkey,
         |    'Reach ' || c_name || ' at ' || lower(c_mktsegment) || '.user' ||
@@ -535,34 +517,34 @@ object PiiQueries extends QueryModule {
         |      regexp_replace(note, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
         |      '\+\d[\d-]{6,}\d', '[PHONE]', 'g'),
         |    '(\d{1,3}\.\d{1,3}\.\d{1,3})\.\d{1,3}', '\1.x', 'g') AS note_scrubbed
-        |FROM t ORDER BY c_custkey""".stripMargin,
-    "pii_drop" ->
+        |FROM t ORDER BY c_custkey""".stripMargin)),
+    Query("pii_drop", dropColumns, Some(
       """SELECT c_custkey, c_nationkey, c_acctbal, c_mktsegment
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "pii_hash" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
+    Query("pii_hash", hashPseudonym, Some(
       """SELECT c_custkey, sha256(c_name || chr(31) || 'pepper42') AS name_pseudo
-         |FROM customer ORDER BY c_custkey""".stripMargin,
-    "pii_partial_mask" ->
+         |FROM customer ORDER BY c_custkey""".stripMargin)),
+    Query("pii_partial_mask", partialMask, Some(
       """SELECT c_custkey,
         |  repeat('*', greatest(length(c_name) - 4, 0)) || right(c_name, 4) AS name_masked
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "pii_null_const" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
+    Query("pii_null_const", nullifyAndConstant, Some(
       """SELECT c_custkey, CAST(NULL AS DOUBLE) AS c_acctbal,
         |  '[REDACTED]' AS c_mktsegment
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "pii_conditional" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
+    Query("pii_conditional", conditionalRedact, Some(
       """SELECT c_custkey,
         |  CASE WHEN c_acctbal < 0 THEN '[DELINQUENT]' ELSE c_name END AS name_checked
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "pii_nested" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
+    Query("pii_nested", nestedRedact, Some(
       """SELECT c_custkey, CAST(NULL AS DOUBLE) AS acctbal_redacted,
         |  sha256(c_mktsegment || chr(31) || 'pepper42') AS segment_pseudo,
         |  c_nationkey AS nationkey
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "pii_sweep" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
+    Query("pii_sweep", sweepPipeline, Some(
       """SELECT c_custkey, sha256(c_name || chr(31) || 'pepper42') AS c_name,
         |  c_nationkey,
         |  repeat('*', greatest(length(c_mktsegment) - 2, 0)) || right(c_mktsegment, 2) AS c_mktsegment
-        |FROM customer ORDER BY c_custkey""".stripMargin,
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
   )
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Scratch, Tables}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * Shared design rules (SURVEY.md §2.13 layout family):
   *  - base lakes that are only READ are sentinel-cached per sf (`tmp`);
   *    anything a query MUTATES (vacuum) or REWRITES (epoch dirs) lives in a
-  *    per-invocation `freshRun` dir so two live plans never race
+  *    per-invocation `Scratch.fresh` dir so two live plans never race
   *    overwrite-vs-lazy-read;
   *  - every physical claim (file counts, pruning) is measured from REAL
   *    files — `_metadata.file_path` or a `binaryFile` listing — never from
@@ -70,13 +70,13 @@ object Lakehouse extends QueryModule {
     * the lazy plan cannot accidentally observe the post-delete state), and
     * the surviving snapshot(1) is re-read through log replay AFTER the
     * vacuum, proving retention removed only dead files. The whole lake is
-    * per-invocation (`freshRun`) because this query mutates it, so it is
+    * per-invocation (`Scratch.fresh`) because this query mutates it, so it is
     * bounded to a fixed 32768-key maintenance unit — the granularity a
     * real system vacuums at (per table partition, never per table); the
     * bucket/modulus algebra is identical at any size. Oracle: every count
     * closed-form from that algebra. */
   def vacuum(s: SparkSession, d: String): DataFrame = {
-    val run = Sources.freshRun("vacuum")
+    val run = Scratch.fresh("vacuum")
     val base = s"$run/base"
     val e1 = s"$run/epoch=1"
     val logDir = s"$run/log"
@@ -188,7 +188,7 @@ object Lakehouse extends QueryModule {
           expr("o_orderkey div 256").as("fb"))
         .transform(df => Sources.writeParts(s, df, col("fb")))
         .write.mode("overwrite").partitionBy("fb").parquet(base)
-    val run = Sources.freshRun("cdf")
+    val run = Scratch.fresh("cdf")
     val e1 = s"$run/epoch=1"
     val logDir = s"$run/log"
     val baseDf = s.read.option("basePath", base).parquet(base)
@@ -414,7 +414,7 @@ object Lakehouse extends QueryModule {
     * quarantine groups is counted in each) and the lake kept exactly the
     * clean ones. */
   def checkConstraints(s: SparkSession, d: String): DataFrame = {
-    val dir = s"${Sources.freshRun("checks")}/lake"
+    val dir = s"${Scratch.fresh("checks")}/lake"
     val c = cents(col("o_totalprice"))
     val feed = Tables.orders(s, d).select(
       col("o_orderkey"),
@@ -473,7 +473,7 @@ object Lakehouse extends QueryModule {
           expr("o_orderkey div 256").as("fb"))
         .transform(df => Sources.writeParts(s, df, col("fb")))
         .write.mode("overwrite").partitionBy("fb").parquet(base)
-    val run = Sources.freshRun("dv")
+    val run = Scratch.fresh("dv")
     val baseDf = s.read.option("basePath", base).parquet(base)
       .select(col("o_orderkey"), col("o_orderstatus"), col("cents"),
         col("_metadata.file_path").as("path"),
@@ -526,7 +526,7 @@ object Lakehouse extends QueryModule {
       baseDf.groupBy(col("o_orderstatus"), col("fb"))
         .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("sum_cents"))
         .write.mode("overwrite").parquet(mv0Path)
-    val run = Sources.freshRun("mvi")
+    val run = Scratch.fresh("mvi")
     val e1 = s"$run/epoch=1"
     val o = Tables.orders(s, d).filter(col("o_orderkey") < 65536)
       .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
@@ -803,24 +803,10 @@ object Lakehouse extends QueryModule {
       .orderBy(col("probe"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "layout_bloom_skipping" -> (bloomSkipping _),
-    "layout_mv_incremental" -> (mvIncremental _),
-    "layout_history" -> (history _),
-    "layout_partition_evolution" -> (partitionEvolution _),
-    "layout_deletion_vectors" -> (deletionVectors _),
-    "layout_check_constraints" -> (checkConstraints _),
-    "layout_mv_rewrite" -> (mvRewrite _),
-    "layout_vacuum" -> (vacuum _),
-    "layout_cdf" -> (changeFeed _),
-    "layout_stats_skipping" -> (statsSkipping _),
-    "layout_zorder_exec" -> (zorderExec _),
-  )
-
-  override def oracleSql: Map[String, String] = Map(
+  override def catalog: Seq[Query] = Seq(
     // file ≡ the fb write bucket, so the per-file Bloom bitsets, the
     // candidate sets, and the verifying scans all rebuild relationally.
-    "layout_bloom_skipping" ->
+    Query("layout_bloom_skipping", bloomSkipping, Some(
       """WITH o AS (SELECT o_orderkey AS k, o_custkey AS ck,
         |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c
         |  FROM orders WHERE o_orderkey < 65536),
@@ -859,11 +845,11 @@ object Lakehouse extends QueryModule {
         |FROM pr CROSS JOIN tot
         |LEFT JOIN nc ON nc.probe = pr.probe
         |LEFT JOIN sc ON sc.probe = pr.probe
-        |ORDER BY pr.probe""".stripMargin,
+        |ORDER BY pr.probe""".stripMargin)),
     // Full recompute from the post-change table — a hash match proves the
     // delta-merge refresh (negative pre-image + positive post-image
     // partials) lands on exactly the state a rebuild would.
-    "layout_mv_incremental" ->
+    Query("layout_mv_incremental", mvIncremental, Some(
       """WITH o AS (
         |  SELECT o_orderkey AS k, o_orderstatus AS st,
         |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c
@@ -879,11 +865,11 @@ object Lakehouse extends QueryModule {
         |SELECT st AS o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_rows,
         |  CAST(SUM(c) AS BIGINT) AS cents, n_mv_groups
         |FROM post, g GROUP BY st, n_mv_groups
-        |ORDER BY o_orderstatus""".stripMargin,
+        |ORDER BY o_orderstatus""".stripMargin)),
     // The three-commit triangle closed-form from the delete modulus:
     // v0 = bucket ingest, v1 = CoW delete packing touched pairs,
     // v2 = 4:1 compaction of the packs (rows unchanged).
-    "layout_history" ->
+    Query("layout_history", history, Some(
       """WITH o AS (
         |  SELECT o_orderkey AS k,
         |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c
@@ -905,10 +891,10 @@ object Lakehouse extends QueryModule {
         |UNION ALL
         |SELECT 2, superpacks, packs, buckets - touched + superpacks, n1, c1
         |FROM b, tc, sur
-        |ORDER BY ver""".stripMargin,
+        |ORDER BY ver""".stripMargin)),
     // Per-population file counts from the same min/max interval algebra as
     // layout_stats_skipping; result rows from the raw predicate per spec.
-    "layout_partition_evolution" ->
+    Query("layout_partition_evolution", partitionEvolution, Some(
       """WITH o AS (
         |  SELECT o_orderkey AS k, o_orderstatus AS st,
         |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c
@@ -934,11 +920,11 @@ object Lakehouse extends QueryModule {
         |     AND st = 'F' AND k BETWEEN lo AND hi),
         |  (SELECT CAST(COALESCE(SUM(c), 0) AS BIGINT) FROM o, b WHERE k > bb
         |     AND st = 'F' AND k BETWEEN lo AND hi)
-        |ORDER BY spec""".stripMargin,
+        |ORDER BY spec""".stripMargin)),
     // Surviving rows from the predicate alone (positions are physical
     // coordinates the oracle never needs); rewritten files are zero by
     // construction of merge-on-read.
-    "layout_deletion_vectors" ->
+    Query("layout_deletion_vectors", deletionVectors, Some(
       """WITH o AS (
         |  SELECT o_orderkey AS k, o_orderstatus AS st,
         |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c
@@ -950,11 +936,11 @@ object Lakehouse extends QueryModule {
         |  CAST(SUM(c) AS BIGINT) AS cents, n_deleted, n_files_with_dv,
         |  CAST(0 AS BIGINT) AS n_files_rewritten
         |FROM o, dv WHERE k % 544 <> 0
-        |GROUP BY st, n_deleted, n_files_with_dv ORDER BY o_orderstatus""".stripMargin,
+        |GROUP BY st, n_deleted, n_files_with_dv ORDER BY o_orderstatus""".stripMargin)),
     // Quarantine groups and the surviving lake rebuilt closed-form from
     // the injection moduli (key 0 violates BOTH constraints and must be
     // counted in each group).
-    "layout_check_constraints" ->
+    Query("layout_check_constraints", checkConstraints, Some(
       """WITH o AS (
         |  SELECT o_orderkey AS k,
         |    CASE WHEN o_orderkey % 593 = 0
@@ -973,17 +959,17 @@ object Lakehouse extends QueryModule {
         |UNION ALL
         |SELECT 'valid', CAST(COUNT(*) AS BIGINT), CAST(SUM(c) AS BIGINT)
         |FROM o WHERE k % 431 <> 0 AND k % 593 <> 0
-        |ORDER BY category""".stripMargin,
+        |ORDER BY category""".stripMargin)),
     // The raw base-table aggregate: a hash match proves the MV-redirected
     // plan answers exactly like the corpus scan it replaced.
-    "layout_mv_rewrite" ->
+    Query("layout_mv_rewrite", mvRewrite, Some(
       """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
         |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
     // Closed-form bucket/pack/modulus algebra: before = base buckets +
     // pair-packs, vacuumed = touched buckets, after = before - vacuumed;
     // the surviving snapshot is the post-delete table.
-    "layout_vacuum" ->
+    Query("layout_vacuum", vacuum, Some(
       """WITH o AS (
         |  SELECT o_orderkey AS k,
         |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c
@@ -997,11 +983,11 @@ object Lakehouse extends QueryModule {
         |  CAST(SUM(c) AS BIGINT) AS cents FROM o WHERE k % 640 <> 0)
         |SELECT buckets + packs AS n_files_before, touched AS n_vacuumed,
         |  buckets - touched + packs AS n_files_after, n_rows, cents
-        |FROM m, p, v ORDER BY n_files_before""".stripMargin,
+        |FROM m, p, v ORDER BY n_files_before""".stripMargin)),
     // The feed rebuilt closed-form from the change rules; the 'copy' rows
     // are the CoW amplification (rows rewritten only because they share a
     // file with a change). Types absent in the data are absent here too.
-    "layout_cdf" ->
+    Query("layout_cdf", changeFeed, Some(
       """WITH o AS (
         |  SELECT o_orderkey AS k,
         |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c
@@ -1026,11 +1012,11 @@ object Lakehouse extends QueryModule {
         |SELECT ct AS change_type, CAST(COUNT(*) AS BIGINT) AS n_rows,
         |  CAST(SUM(COALESCE(pre, 0)) AS BIGINT) AS pre_cents,
         |  CAST(SUM(COALESCE(post, 0)) AS BIGINT) AS post_cents
-        |FROM feed GROUP BY ct ORDER BY change_type""".stripMargin,
+        |FROM feed GROUP BY ct ORDER BY change_type""".stripMargin)),
     // Candidate files = bucket groups whose min/max interval intersects
     // the band; result rows from the raw predicate — equality proves the
     // pruned scan is lossless.
-    "layout_stats_skipping" ->
+    Query("layout_stats_skipping", statsSkipping, Some(
       """WITH o AS (
         |  SELECT o_orderkey AS k,
         |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c,
@@ -1058,11 +1044,11 @@ object Lakehouse extends QueryModule {
         |     WHERE k BETWEEN klo AND khi),
         |  (SELECT CAST(COALESCE(SUM(c), 0) AS BIGINT) FROM o, b
         |     WHERE k BETWEEN klo AND khi)
-        |FROM tot ORDER BY pred""".stripMargin,
+        |FROM tot ORDER BY pred""".stripMargin)),
     // Per-layout file groups with min/max boxes; scanned = boxes
     // intersecting the band; results from the raw band predicate (equal
     // for both layouts — layout changes cost, never answers).
-    "layout_zorder_exec" ->
+    Query("layout_zorder_exec", zorderExec, Some(
       s"""WITH t AS (
          |  SELECT o_custkey % 1024 AS x,
          |    CAST(floor(o_totalprice) AS BIGINT) % 1024 AS y,
@@ -1102,6 +1088,6 @@ object Lakehouse extends QueryModule {
          |  (SELECT CAST(COUNT(*) AS BIGINT) FROM zb
          |     WHERE ymin <= 575 AND ymax >= 512),
          |  n_rows, cents FROM ry
-         |ORDER BY layout, pred""".stripMargin,
+         |ORDER BY layout, pred""".stripMargin)),
   )
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Scratch, Tables}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -23,26 +23,6 @@ object Sources extends QueryModule {
     val p = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_$tag$key")
     p.toString
   }
-
-  /** Per-INVOCATION output root for the maintenance rewrites. Base lakes
-    * are sentinel-cached (written once, read-only after), but epoch/log
-    * REWRITE outputs must be unique per invocation: two live DataFrames
-    * from two invocations would otherwise race overwrite-vs-lazy-read on
-    * the same files (Spark caches the file listing at plan time, so the
-    * second invocation's overwrite strands the first plan on deleted
-    * paths). A shutdown hook deletes this JVM's run dirs. */
-  private val runSeq = new java.util.concurrent.atomic.AtomicLong(0)
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-    f.delete(): Unit
-  }
-  private lazy val runRoot: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rewrite_").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(dir)))
-    dir.getAbsolutePath
-  }
-  private[sources] def freshRun(tag: String): String =
-    s"$runRoot/${tag}_${runSeq.incrementAndGet()}"
 
   /** Hash-repartition by the write-bucket columns at the session's shuffle
     * parallelism, for the maintenance writes. A bare `repartition(col)` is
@@ -338,7 +318,7 @@ object Sources extends QueryModule {
       .withColumn("bytes_before", coalesce(sum(col("bytes")).over(w), lit(0L)))
       .select(col("lang"), col("file_id"),
         expr(s"bytes_before div $target").as("group_id"))
-    val epochDir = s"${freshRun("compact")}/epoch=1"
+    val epochDir = s"${Scratch.fresh("compact")}/epoch=1"
     before.join(broadcast(plan), Seq("lang", "file_id"))
       .select(col("doc_id"), col("n_chars"), col("text"), col("lang"),
         col("group_id"))
@@ -430,7 +410,7 @@ object Sources extends QueryModule {
       .select(col("o_orderkey"), col("o_orderstatus"),
         coalesce(col("new_cents"), col("cents")).as("cents"), col("fb"))
       .unionByName(ins)
-    val epochDir = s"${freshRun("merge")}/epoch=2"
+    val epochDir = s"${Scratch.fresh("merge")}/epoch=2"
     applied.transform(df => writeParts(s, df, col("fb")))
       .write.mode("overwrite").partitionBy("fb").parquet(epochDir)
     val rewritten = s.read.option("basePath", epochDir).parquet(epochDir)
@@ -506,7 +486,7 @@ object Sources extends QueryModule {
       col("bal_cents"), lit("2024-06-01").as("valid_from"),
       lit("2200-01-01").as("valid_to"), lit(1).cast("int").as("is_current"),
       col("fb"))
-    val epochDir = s"${freshRun("scd2")}/epoch=2"
+    val epochDir = s"${Scratch.fresh("scd2")}/epoch=2"
     inAffected.unionByName(opened)
       .transform(df => writeParts(s, df, col("fb")))
       .write.mode("overwrite").partitionBy("fb").parquet(epochDir)
@@ -547,7 +527,7 @@ object Sources extends QueryModule {
   def timeTravel(s: SparkSession, d: String): DataFrame = {
     val root = tmp("tlog_lake_u64", d)
     val base = s"$root/base"
-    val run = freshRun("tlog")
+    val run = Scratch.fresh("tlog")
     val e1 = s"$run/epoch=1"
     val logDir = s"$run/log"
     if (!Files.exists(Paths.get(base, "_SUCCESS")))
@@ -671,46 +651,26 @@ object Sources extends QueryModule {
         max(col("id")).as("max_id"))
       .orderBy(col("grp"))
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "src_custom_v2" -> (customV2 _),
-    "src_json_corrupt" -> (jsonCorrupt _),
-    "layout_compaction" -> (compactionPlan _),
-    "layout_compaction_exec" -> (compactionExec _),
-    "layout_merge_exec" -> (mergeExec _),
-    "layout_scd2_exec" -> (scd2Exec _),
-    "layout_time_travel" -> (timeTravel _),
-    "src_schema_evolution" -> (schemaEvolution _),
-    "src_text_roundtrip" -> (textRoundTrip _),
-    "src_binary_files" -> (binaryFiles _),
-    "src_file_provenance" -> (fileProvenance _),
-    "layout_zorder"      -> (zorderKey _),
-    "src_xml_roundtrip"  -> (xmlRoundTrip _),
-    "src_orc_roundtrip"  -> (orcRoundTrip _),
-    "src_csv_roundtrip"  -> (csvRoundTrip _),
-    "src_json_roundtrip" -> (jsonRoundTrip _),
-    "sink_partitioned"   -> (partitionedWrite _),
-  )
-
   private val sqlZ: String = (0 until 10).map { i =>
     s"((((x >> $i) & 1) << ${2 * i}) + (((y >> $i) & 1) << ${2 * i + 1}))"
   }.mkString(" + ")
 
-  override def oracleSql: Map[String, String] = Map(
+  override def catalog: Seq[Query] = Seq(
     // The synthetic table is a pure function of the row index: DuckDB
     // regenerates [4096, 8191] and applies the residual arithmetic
     // predicate — the hash proves the connector's pushdown kept exactly
     // the boundary-inclusive range.
-    "src_custom_v2" ->
+    Query("src_custom_v2", customV2, Some(
       """WITH g AS (SELECT range AS id FROM range(4096, 8192)),
         |s AS (SELECT id, id % 97 AS grp,
         |    (id * 2654435761) % 1000003 AS v FROM g)
         |SELECT grp, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(v) AS BIGINT) AS sum_v, MAX(id) AS max_id
         |FROM s WHERE v % 3 = 0
-        |GROUP BY grp ORDER BY grp""".stripMargin,
+        |GROUP BY grp ORDER BY grp""".stripMargin)),
     // Closed-form from the corruption rule (key % 3 truncated): proves
     // corrupt rows are quarantined-not-dropped and valid rows survive.
-    "src_json_corrupt" ->
+    Query("src_json_corrupt", jsonCorrupt, Some(
       """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
         |  CAST(SUM(CASE WHEN n_nationkey % 3 = 0 THEN 1 ELSE 0 END)
         |    AS BIGINT) AS n_corrupt,
@@ -720,8 +680,8 @@ object Sources extends QueryModule {
         |    THEN n_nationkey END), 0) AS BIGINT) AS valid_key_sum,
         |  CAST(COUNT(DISTINCT CASE WHEN n_nationkey % 3 <> 0
         |    THEN n_name END) AS BIGINT) AS n_valid_names
-        |FROM nation""".stripMargin,
-    "layout_compaction" ->
+        |FROM nation""".stripMargin)),
+    Query("layout_compaction", compactionPlan, Some(
       """WITH files AS (
         |  SELECT lang, doc_id // 16 AS file_id,
         |    CAST(SUM(n_chars) AS BIGINT) AS bytes
@@ -737,13 +697,13 @@ object Sources extends QueryModule {
         |  CAST(SUM(bytes) AS BIGINT) AS bytes_total,
         |  MIN(file_id) AS first_file, MAX(file_id) AS last_file,
         |  CAST(CASE WHEN COUNT(*) > 1 THEN 1 ELSE 0 END AS INT) AS compacts
-        |FROM planned GROUP BY 1, 2 ORDER BY lang, group_id""".stripMargin,
+        |FROM planned GROUP BY 1, 2 ORDER BY lang, group_id""".stripMargin)),
     // Every column recomputed closed-form from documents with the same
     // packing algebra: file counts before = distinct 16-doc shards, after
     // = distinct merge groups; checksums are order-free md5-prefix sums
     // over (doc_id:text), so a match proves the executed rewrite moved
     // every row bit-exactly and hit the planned file layout.
-    "layout_compaction_exec" ->
+    Query("layout_compaction_exec", compactionExec, Some(
       """WITH f AS (
         |  SELECT lang, doc_id // 16 AS fid,
         |    CAST(SUM(n_chars) AS BIGINT) AS bytes,
@@ -765,12 +725,12 @@ object Sources extends QueryModule {
         |  CAST(COUNT(DISTINCT gid) AS BIGINT) AS n_files_after,
         |  CAST(SUM(nrows) AS BIGINT) AS rows_after,
         |  CAST(SUM(h) AS BIGINT) AS sum_h_after
-        |FROM g GROUP BY lang ORDER BY lang""".stripMargin,
+        |FROM g GROUP BY lang ORDER BY lang""".stripMargin)),
     // Both snapshots closed-form: v0 is the whole table over all base
     // buckets; v1 drops the %640 keys and repacks each touched bucket
     // PAIR into one file, so live files = untouched buckets + distinct
     // touched-bucket pairs.
-    "layout_time_travel" ->
+    Query("layout_time_travel", timeTravel, Some(
       """WITH o AS (
         |  SELECT o_orderkey AS k,
         |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c
@@ -792,12 +752,12 @@ object Sources extends QueryModule {
         |SELECT version, n_rows, cents, n_files FROM v0
         |UNION ALL
         |SELECT version, n_rows, cents, n_files FROM v1
-        |ORDER BY version""".stripMargin,
+        |ORDER BY version""".stripMargin)),
     // Post-merge SCD2 dimension recomputed closed-form: closed versions,
     // opened versions, pass-throughs, plus the same _metadata-mirrored
     // file counts (rewritten = touched buckets; every touched bucket
     // keeps rows here, since closing a version never deletes it).
-    "layout_scd2_exec" ->
+    Query("layout_scd2_exec", scd2Exec, Some(
       """WITH c AS (
         |  SELECT c_custkey AS k, c_mktsegment AS seg,
         |    CAST(floor(c_acctbal * 100.0 + 0.5) AS BIGINT) AS cents,
@@ -820,14 +780,14 @@ object Sources extends QueryModule {
         |  n_files_total, n_files_rewritten
         |FROM final, nt, nr
         |GROUP BY is_current, seg, n_files_total, n_files_rewritten
-        |ORDER BY is_current, c_mktsegment""".stripMargin,
+        |ORDER BY is_current, c_mktsegment""".stripMargin)),
     // Post-merge table recomputed closed-form with the same change rules
     // (delete beats update; inserts shift into fresh buckets). The file
     // counts mirror what the Spark side measures from _metadata paths:
     // total = distinct base buckets, rewritten = distinct touched buckets
     // that still hold at least one row after the merge (an all-deleted
     // bucket writes no file).
-    "layout_merge_exec" ->
+    Query("layout_merge_exec", mergeExec, Some(
       """WITH o AS (
         |  SELECT o_orderkey AS k, o_orderstatus AS st,
         |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS c
@@ -855,51 +815,51 @@ object Sources extends QueryModule {
         |  n_files_total, n_files_rewritten
         |FROM final, nt, nr
         |GROUP BY st, n_files_total, n_files_rewritten
-        |ORDER BY o_orderstatus""".stripMargin,
-    "src_schema_evolution" ->
+        |ORDER BY o_orderstatus""".stripMargin)),
+    Query("src_schema_evolution", schemaEvolution, Some(
       """SELECT CASE WHEN o_orderkey % 2 = 0 THEN 'LEGACY'
         |    ELSE o_orderpriority END AS priority,
         |  COUNT(*) AS n,
         |  CAST(SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT))
         |    AS BIGINT) AS cents
-        |FROM orders GROUP BY 1 ORDER BY priority""".stripMargin,
-    "src_text_roundtrip" ->
+        |FROM orders GROUP BY 1 ORDER BY priority""".stripMargin)),
+    Query("src_text_roundtrip", textRoundTrip, Some(
       """SELECT md5(text) AS line_md5, COUNT(*) AS n_lines
-        |FROM documents GROUP BY md5(text) ORDER BY line_md5""".stripMargin,
-    "src_binary_files" ->
+        |FROM documents GROUP BY md5(text) ORDER BY line_md5""".stripMargin)),
+    Query("src_binary_files", binaryFiles, Some(
       """SELECT r_regionkey, CAST(length(r_name) AS BIGINT) AS length,
         |  md5(r_name) AS content_md5
-        |FROM region ORDER BY r_regionkey""".stripMargin,
-    "src_file_provenance" ->
+        |FROM region ORDER BY r_regionkey""".stripMargin)),
+    Query("src_file_provenance", fileProvenance, Some(
       """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
         |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "layout_zorder" ->
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
+    Query("layout_zorder", zorderKey, Some(
       s"""WITH t AS (
          |  SELECT o_orderkey, o_custkey % 1024 AS x,
          |    CAST(floor(o_totalprice) AS BIGINT) % 1024 AS y
          |  FROM orders)
          |SELECT o_orderkey, x, y, $sqlZ AS zval
-         |FROM t ORDER BY o_orderkey""".stripMargin,
-    "src_xml_roundtrip" ->
+         |FROM t ORDER BY o_orderkey""".stripMargin)),
+    Query("src_xml_roundtrip", xmlRoundTrip, Some(
       """SELECT n_regionkey, COUNT(*) AS n_nations,
         |  MIN(n_name) AS first_name
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
-    "src_orc_roundtrip" ->
+        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin)),
+    Query("src_orc_roundtrip", orcRoundTrip, Some(
       """SELECT p_brand, COUNT(*) AS n,
         |  MIN(p_retailprice) AS min_price, MAX(p_retailprice) AS max_price
-        |FROM part GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "src_csv_roundtrip" ->
+        |FROM part GROUP BY p_brand ORDER BY p_brand""".stripMargin)),
+    Query("src_csv_roundtrip", csvRoundTrip, Some(
       """SELECT n_regionkey, COUNT(*) AS n_nations,
         |  string_agg(DISTINCT n_name, ',' ORDER BY n_name) AS names
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
-    "src_json_roundtrip" ->
+        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin)),
+    Query("src_json_roundtrip", jsonRoundTrip, Some(
       """SELECT s_nationkey, COUNT(*) AS n_suppliers,
         |  MIN(s_acctbal) AS min_bal, MAX(s_acctbal) AS max_bal
-        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
-    "sink_partitioned" ->
+        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin)),
+    Query("sink_partitioned", partitionedWrite, Some(
       """SELECT o_orderstatus, COUNT(*) AS n,
         |  COUNT(DISTINCT o_custkey) AS n_customers
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
   )
 }

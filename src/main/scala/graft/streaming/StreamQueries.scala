@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{OracleSafe, QueryModule, Tables}
+import graft.{OracleSafe, Query, QueryModule, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, Trigger, ValueState}
@@ -31,23 +31,11 @@ object StreamQueries extends QueryModule {
   private def sinkName(tag: String): String =
     s"graft_stream_${tag}_${seq.incrementAndGet()}"
 
-  /** Run-scoped scratch root for file sinks + checkpoints, deleted on JVM
-    * exit (same hygiene as LlmDedup.bloomStateDir). */
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-    f.delete(): Unit
-  }
-  private lazy val scratchRoot: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(dir)))
-    dir.getAbsolutePath
-  }
-
   /** Streaming source over the fixture's events table. `readStream` needs
     * an explicit schema, so probe the batch footer for `ts`'s physical
     * form (the fixture has shipped both `timestamp[ns]`-as-long and
-    * `timestamp[us]` NTZ — see [[Tables.events]]) and normalize to the
-    * session-zoned TimestampType either way. */
+    * `timestamp[us]` NTZ — see [[Tables.events]]) and normalize it with
+    * the batch loader's [[Tables.normalizeTs]]. */
   private[graft] def streamEvents(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsPhysical = s.read
@@ -57,14 +45,9 @@ object StreamQueries extends QueryModule {
       StructField("event_id", LongType), StructField("ts", tsPhysical),
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("value", DoubleType), StructField("props", StringType)))
-    val raw = s.readStream.schema(eventsSchema)
+    Tables.normalizeTs(s.readStream.schema(eventsSchema)
       .option("pathGlobFilter", "events.parquet")
-      .parquet(d)
-    tsPhysical match {
-      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
+      .parquet(d))
   }
 
   /** Drain a streaming DataFrame into a memory sink and return the sink
@@ -120,10 +103,8 @@ object StreamQueries extends QueryModule {
     *    because it is checkpoint-pinned — it cannot follow the cluster up
     *    or down anyway. Default 8 here (fixture state is KB-scale; 8 keeps
     *    the drain multi-core without paying 32 store commits per batch —
-    *    measured 22.9 s → see OPTIMIZATION_r14.md for the family numbers);
-    *    production sizing is live-state bytes / 128 MB via
-    *    `spark.graft.stream.statePartitions` (e.g. ~1 TB of join/session
-    *    state → 8192). Results are partition-count-invariant: every
+    *    measured 22.9 s → see OPTIMIZATION_r14.md for the family numbers).
+    *    Results are partition-count-invariant: every
     *    registered streaming query emits keyed aggregates / per-key state
     *    emissions that the oracle gates hash-exact.
     *
@@ -147,8 +128,7 @@ object StreamQueries extends QueryModule {
     val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val prevP = s.conf.get(pKey)
     val prevN = s.conf.getOption(nKey)
-    s.conf.set(pKey, s.conf.getOption("spark.graft.stream.statePartitions")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS")).getOrElse("8"))
+    s.conf.set(pKey, "8")
     s.conf.set(nKey, "false")
     try body
     finally {
@@ -200,7 +180,7 @@ object StreamQueries extends QueryModule {
     * top of at-least-once reprocessing. The result is read back from the
     * files, proving the full write path. */
   def streamIntervalJoin(s: SparkSession, d: String): DataFrame = {
-    val out = s"$scratchRoot/ssj_${seq.incrementAndGet()}"
+    val out = Scratch.fresh("ssj")
     val ckpt = s"$out-ckpt"
     // ONE streaming source, self-joined: both join sides filter the same
     // relation instance, so the engine tracks one file source and each
@@ -331,7 +311,7 @@ object StreamQueries extends QueryModule {
     * log-visible union of all epochs is EXACTLY the input — every batch
     * committed once, none lost, none duplicated. */
   def streamLogCommits(s: SparkSession, d: String): DataFrame = {
-    val run = s"$scratchRoot/slog_${seq.incrementAndGet()}"
+    val run = Scratch.fresh("slog")
     val dataDir = s"$run/data"
     val logDir = s"$run/log"
     val ckpt = s"$run/ckpt"
@@ -471,30 +451,15 @@ object StreamQueries extends QueryModule {
       drain(s, counts, OutputMode.Complete(), "stl"))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev_stream_bandit" -> (streamBandit _),
-    "ev_stream_stl_daily" -> (streamStl _),
-    "ev_stream_score" -> (streamScore _),
-    "ev_stream_static_join" -> (streamStaticJoin _),
-    "ev_stream_dedup" -> (streamDedup _),
-    "ev_stream_log_commits" -> (streamLogCommits _),
-    "ev_stream_tumbling" -> (streamTumbling _),
-    "ev_stream_sessions" -> (streamSessions _),
-    "ev_stream_interval_join" -> (streamIntervalJoin _),
-    "ev_stream_topk" -> (streamTopK _),
-    "ev_stream_markov" -> (streamMarkov _),
-  )
-
-  private def sqlDsum(inner: String): String =
-    s"CAST(CAST(SUM($inner) AS VARCHAR) AS DOUBLE)"
-
-  override def oracleSql: Map[String, String] = Map(
+  override def catalog: Seq[Query] = Seq(
     // Stream ≡ batch ≡ SQL: the drained streaming aggregate feeds the
     // same fold, so the batch query's recursive-CTE oracle gates both.
-    "ev_stream_bandit" -> graft.ops.TimeSeries.oracleSql("ts_bandit_replay"),
-    "ev_stream_stl_daily" -> graft.ops.TimeSeries.oracleSql("ts_stl_daily"),
+    Query("ev_stream_bandit", streamBandit,
+      Some(graft.ops.TimeSeries.banditReplaySql)),
+    Query("ev_stream_stl_daily", streamStl,
+      Some(graft.ops.TimeSeries.stlDailySql)),
     // The same scoring arithmetic relationally — every event once.
-    "ev_stream_score" ->
+    Query("ev_stream_score", streamScore, Some(
       """WITH scored AS (
         |  SELECT event_type,
         |    (CASE event_type WHEN 'click' THEN CAST(-200 AS BIGINT)
@@ -507,42 +472,42 @@ object StreamQueries extends QueryModule {
         |  CAST(SUM(margin_milli) AS BIGINT) AS sum_margin,
         |  CAST(SUM(CASE WHEN margin_milli >= 1000 THEN 1 ELSE 0 END)
         |    AS BIGINT) AS n_flagged
-        |FROM scored GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM scored GROUP BY event_type ORDER BY event_type""".stripMargin)),
     // The static-dim enrichment relationally: every event keyed into its
     // user's nation segment.
-    "ev_stream_static_join" ->
+    Query("ev_stream_static_join", streamStaticJoin, Some(
       """SELECT n_name,
         |  CAST(COUNT(*) AS BIGINT) AS n_events,
         |  CAST(SUM(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS cents
         |FROM events JOIN nation ON user_id % 25 = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
+        |GROUP BY n_name ORDER BY n_name""".stripMargin)),
     // The doubled stream must collapse back to the raw table: each event
     // exactly once.
-    "ev_stream_dedup" ->
+    Query("ev_stream_dedup", streamDedup, Some(
       """SELECT event_type,
         |  CAST(COUNT(*) AS BIGINT) AS n_events,
         |  CAST(COUNT(DISTINCT event_id) AS BIGINT) AS n_distinct,
         |  CAST(SUM(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS cents
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
     // The log-visible union of all committed epochs must be EXACTLY the
     // input stream — recomputed from the raw events table.
-    "ev_stream_log_commits" ->
+    Query("ev_stream_log_commits", streamLogCommits, Some(
       """SELECT event_type,
         |  CAST(COUNT(*) AS BIGINT) AS n_events,
         |  CAST(COUNT(DISTINCT event_id) AS BIGINT) AS n_distinct,
         |  CAST(SUM(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT)
         |    AS cents
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
     // Identical to the ev_tumbling oracle: streaming Complete-mode windows
     // must equal the batch hour-truncated aggregate.
-    "ev_stream_tumbling" ->
+    Query("ev_stream_tumbling", streamTumbling, Some(
       s"""SELECT epoch_us(datetrunc('hour', ts)) AS window_start_us, event_type,
-         |  COUNT(*) AS n, ${sqlDsum("CAST(value AS DECIMAL(18,4))")} AS sum_value
-         |FROM events GROUP BY 1, 2 ORDER BY window_start_us, event_type""".stripMargin,
+         |  COUNT(*) AS n, ${OracleSafe.sqlDsum("CAST(value AS DECIMAL(18,4))")} AS sum_value
+         |FROM events GROUP BY 1, 2 ORDER BY window_start_us, event_type""".stripMargin)),
     // Identical to the ev_sessions gaps-and-islands oracle.
-    "ev_stream_sessions" ->
+    Query("ev_stream_sessions", streamSessions, Some(
       """WITH gaps AS (
         |  SELECT user_id, ts,
         |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER
@@ -558,28 +523,28 @@ object StreamQueries extends QueryModule {
         |SELECT user_id, epoch_us(MIN(ts)) AS first_us, epoch_us(MAX(ts)) AS last_us,
         |  COUNT(*) AS n_events
         |FROM sessions GROUP BY user_id, session_id
-        |ORDER BY user_id, first_us""".stripMargin,
+        |ORDER BY user_id, first_us""".stripMargin)),
     // The stream-stream interval join relationally: clicks × views on the
     // same user with the view in the click's preceding 10 minutes.
-    "ev_stream_interval_join" ->
+    Query("ev_stream_interval_join", streamIntervalJoin, Some(
       """SELECT c.event_id AS c_id, v.event_id AS v_id
         |FROM events c JOIN events v
         |  ON c.user_id = v.user_id
         |  AND c.event_type = 'click' AND v.event_type = 'view'
         |  AND epoch_us(v.ts) >= epoch_us(c.ts) - CAST(600 AS BIGINT) * 1000000
         |  AND epoch_us(v.ts) <= epoch_us(c.ts)
-        |ORDER BY c_id, v_id""".stripMargin,
+        |ORDER BY c_id, v_id""".stripMargin)),
     // Final top-3 per user by (value DESC, event_id) — what the bounded
     // state must converge to regardless of batching.
-    "ev_stream_topk" ->
+    Query("ev_stream_topk", streamTopK, Some(
       """SELECT user_id, CAST(rk AS INT) AS rk, event_id, value FROM (
         |  SELECT user_id, event_id, value,
         |    row_number() OVER (PARTITION BY user_id
         |      ORDER BY value DESC, event_id) AS rk
         |  FROM events) t
-        |WHERE rk <= 3 ORDER BY user_id, rk""".stripMargin,
+        |WHERE rk <= 3 ORDER BY user_id, rk""".stripMargin)),
     // Exact transition counts from the batch lead() pairs.
-    "ev_stream_markov" ->
+    Query("ev_stream_markov", streamMarkov, Some(
       """WITH e AS (
         |  SELECT user_id, event_type,
         |    lead(event_type) OVER (PARTITION BY user_id
@@ -587,6 +552,6 @@ object StreamQueries extends QueryModule {
         |  FROM events)
         |SELECT event_type AS cur, nxt, COUNT(*) AS n
         |FROM e WHERE nxt IS NOT NULL
-        |GROUP BY cur, nxt ORDER BY cur, nxt""".stripMargin,
+        |GROUP BY cur, nxt ORDER BY cur, nxt""".stripMargin)),
   )
 }
