@@ -1,19 +1,55 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Fixture table loaders.
   *
   * Schema source of truth is the Parquet footer (self-describing); we never
-  * sample-infer. At 100 TB each `name.parquet` would be a directory of many
-  * files — `spark.read.parquet(dir)` handles both transparently, so nothing
-  * here changes at scale.
+  * sample-infer. Each load reads ONE footer on the driver
+  * ([[footerSchema]]) and hands the schema to `spark.read.schema(…)`, so
+  * opening a table starts no Spark job — `spark.read.parquet(path)` would
+  * read the same footer, but inside a one-task inference job that costs
+  * several times the open itself. The footer is chosen the way Spark's non-merging
+  * inference chooses it: a file path is its own footer; in a directory
+  * tree, `_common_metadata`, else `_metadata`, else the first data file in
+  * path order, skipping hidden (`_`/`.`) names. So a `name.parquet` that is
+  * a directory of many part files loads exactly as a single file does.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+  }
+
+  /** The schema `spark.read.parquet(path)` infers (without `mergeSchema`),
+    * read from one footer on the driver under the session's conf. */
+  def footerSchema(spark: SparkSession, path: String): StructType =
+    GraftParquet.schema(spark, footer(spark, path))
+
+  private def footer(spark: SparkSession, path: String): Footer = {
+    val conf = GraftParquet.hadoopConf(spark)
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def summary(n: String) = n == "_common_metadata" || n == "_metadata"
+    def hidden(n: String) = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filter(c => summary(c.getPath.getName) || !hidden(c.getPath.getName))
+        .flatMap(leaves)
+    val files = leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val file = named("_common_metadata").orElse(named("_metadata"))
+      .orElse(files.find(f => !summary(f.getPath.getName)))
+      .getOrElse(throw new java.io.FileNotFoundException(s"no Parquet data file under $path"))
+    GraftParquet.footer(conf, file)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -31,8 +67,24 @@ object Tables {
     * session-zoned TimestampType column; the NTZ→TZ cast is
     * value-preserving because the harness runs in UTC. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(table(s, d, "events"))
+    val path = s"$d/events.parquet"
+    normalizeTs(s.read.schema(eventsSchema(s, path)).parquet(path))
+  }
+
+  /** The footer schema of an events file. Only a `ts` stored as
+    * TIMESTAMP(NANOS) needs `spark.sql.legacy.parquet.nanosAsLong`, so
+    * only then is it set on the session (before the footer is converted);
+    * a µs file leaves the session's conf untouched. Shared with the
+    * streaming events source, whose `readStream` needs this schema. */
+  private[graft] def eventsSchema(s: SparkSession, path: String): StructType = {
+    val f = footer(s, path)
+    val cols = f.getParquetMetadata.getFileMetaData.getSchema
+    cols.getType(cols.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+      case t: TimestampLogicalTypeAnnotation if t.getUnit == TimeUnit.NANOS =>
+        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      case _ =>
+    }
+    GraftParquet.schema(s, f)
   }
 
   /** The `ts` branch of [[events]], shared with the streaming events

@@ -4,7 +4,6 @@ import graft.{OracleSafe, Query, QueryModule, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, Trigger, ValueState}
-import org.apache.spark.sql.types._
 
 /** REGISTERED Structured Streaming queries — §2.10 surfaced in the driver's
   * correctness roster, not just in StreamingSpec. Each query runs a REAL
@@ -32,23 +31,14 @@ object StreamQueries extends QueryModule {
     s"graft_stream_${tag}_${seq.incrementAndGet()}"
 
   /** Streaming source over the fixture's events table. `readStream` needs
-    * an explicit schema, so probe the batch footer for `ts`'s physical
-    * form (the fixture has shipped both `timestamp[ns]`-as-long and
-    * `timestamp[us]` NTZ — see [[Tables.events]]) and normalize it with
-    * the batch loader's [[Tables.normalizeTs]]. */
-  private[graft] def streamEvents(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsPhysical = s.read
-      .option("pathGlobFilter", "events.parquet").parquet(d)
-      .schema("ts").dataType
-    val eventsSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", tsPhysical),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    Tables.normalizeTs(s.readStream.schema(eventsSchema)
+    * an explicit schema: take the batch loader's footer schema
+    * ([[Tables.eventsSchema]] — the fixture has shipped both
+    * `timestamp[ns]`-as-long and `timestamp[us]` NTZ, see [[Tables.events]])
+    * and normalize `ts` with the batch loader's [[Tables.normalizeTs]]. */
+  private[graft] def streamEvents(s: SparkSession, d: String): DataFrame =
+    Tables.normalizeTs(s.readStream.schema(Tables.eventsSchema(s, s"$d/events.parquet"))
       .option("pathGlobFilter", "events.parquet")
       .parquet(d))
-  }
 
   /** Drain a streaming DataFrame into a memory sink and return the sink
     * table (Complete for aggregates, Update for stateful emissions).

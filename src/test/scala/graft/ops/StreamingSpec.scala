@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Tables, TestSpark}
+import graft.streaming.StreamQueries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -13,28 +14,7 @@ class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** Streaming source over the fixture dir. `readStream` needs an explicit
-    * schema, so probe the batch footer for `ts`'s physical form (the
-    * fixture has shipped both `timestamp[ns]`-as-long and `timestamp[us]`
-    * NTZ — see Tables.events) and normalize to TimestampType either way. */
-  private def streamEvents() = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsPhysical = spark.read
-      .option("pathGlobFilter", "events.parquet").parquet(TestSpark.sf)
-      .schema("ts").dataType
-    val eventsSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", tsPhysical),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    val raw = spark.readStream.schema(eventsSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(TestSpark.sf)
-    tsPhysical match {
-      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
-  }
+  private def streamEvents() = StreamQueries.streamEvents(spark, TestSpark.sf)
 
   test("streaming tumbling window agg matches batch twin") {
     val q = streamEvents()
