@@ -24,7 +24,7 @@ object Bench {
     // Untimed warm-up pass (round-10 verdict: the driver's cold total ran
     // ~25%/query above the builder's warm band, all of it attributable to
     // one-time costs, not plans). Three cold sources leave the timed
-    // region: (1) layout_* first-builds write their /tmp sentinel lakes —
+    // region: (1) layout_* first-builds write their cached /tmp lakes —
     // one-time fixture construction (~51 s of the r10 driver run);
     // (2) one readStream query loads the streaming engine + RocksDB
     // state-store classes shared by all ev_stream_*; (3) the heaviest

@@ -11,7 +11,7 @@ object Session {
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
 
   /** `local[cpus]` with one shuffle partition per core, UTC session time,
-    * no UI, and log level WARN. */
+    * no UI, and log level WARN — except WindowExec's, at ERROR. */
   def local(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -34,6 +34,12 @@ object Session {
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // WindowExec warns on every plan of an unpartitioned window; each such
+    // window in the catalog reads a bounded grid or a limit-cut input
+    // (PlanAuditSpec), so the warning is routine noise in every run log.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     spark
   }
 }

@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   * both-dimension pruning against a linear layout.
   *
   * Shared design rules (SURVEY.md §2.13 layout family):
-  *  - base lakes that are only READ are sentinel-cached per sf (`tmp`);
-  *    anything a query MUTATES (vacuum) or REWRITES (epoch dirs) lives in a
-  *    per-invocation `Scratch.fresh` dir so two live plans never race
+  *  - base lakes that are only READ are cached per sf (`Scratch.lake`:
+  *    built in a temp dir, published by atomic rename); anything a query
+  *    MUTATES (vacuum) or REWRITES (epoch dirs) lives in a per-invocation
+  *    `Scratch.fresh` dir so two live plans never race
   *    overwrite-vs-lazy-read;
   *  - every physical claim (file counts, pruning) is measured from REAL
   *    files — `_metadata.file_path` or a `binaryFile` listing — never from
@@ -89,15 +90,7 @@ object Lakehouse extends QueryModule {
     val baseDf = s.read.option("basePath", base).parquet(base)
       .select(col("o_orderkey"), col("cents"), col("fb").cast("long").as("fb"),
         col("_metadata.file_path").as("path"))
-    // NB round 15: overlapping the independent commit legs here (v0 log ∥
-    // e1 rewrite; v1 log ∥ before-listing) via a §2.6 thread pool was
-    // built and MEASURED SLOWER (4.08 → 4.63 s min-of-5 at sf0.1): once
-    // writeParts restored 32-task-wide writes there is no idle tail left
-    // to back-fill, and the two concurrently planned jobs contend on the
-    // driver. Reverted to sequential legs.
-    baseDf.select(col("path")).distinct()
-      .select(col("path"), lit("add").as("action"))
-      .write.mode("overwrite").parquet(s"$logDir/v=0")
+    TxnProtocol.commit(logDir, 0, baseDf)
     val touched = Tables.orders(s, d)
       .filter(col("o_orderkey") < 32768 && col("o_orderkey") % 640 === 0)
       .select(expr("o_orderkey div 256").as("fb")).distinct()
@@ -109,22 +102,15 @@ object Lakehouse extends QueryModule {
     val e1Df = s.read.option("basePath", e1).parquet(e1)
       .select(col("o_orderkey"), col("cents"),
         col("_metadata.file_path").as("path"))
-    affected.select(col("path")).distinct()
-      .select(col("path"), lit("remove").as("action"))
-      .unionByName(e1Df.select(col("path")).distinct()
-        .select(col("path"), lit("add").as("action")))
-      .write.mode("overwrite").parquet(s"$logDir/v=1")
+    TxnProtocol.commit(logDir, 1, e1Df, Some(affected))
     // Ground-truth listing BEFORE the delete, pinned to parquet.
     diskListing(s, base, e1).write.mode("overwrite").parquet(s"$audit/before")
-    val log = s.read.option("basePath", logDir).parquet(logDir)
-      .select(col("path"), col("action"), col("v").cast("int").as("v"))
+    val log = TxnProtocol.log(s, logDir)
+    val live = TxnProtocol.live(log, 1)
     // Doomed = removed at a committed version and not in the live set
-    // (adds anti removes) — the general rule; this log has no re-adds.
-    val liveSet = log.filter(col("action") === "add").select(col("path"))
-      .join(log.filter(col("action") === "remove").select(col("path")),
-        Seq("path"), "left_anti")
+    // — the general rule; this log has no re-adds.
     log.filter(col("action") === "remove").select(col("path")).distinct()
-      .join(liveSet, Seq("path"), "left_anti")
+      .join(live, Seq("path"), "left_anti")
       .write.mode("overwrite").parquet(s"$audit/doomed")
     s.read.parquet(s"$audit/doomed").foreach { r =>
       Files.deleteIfExists(Paths.get(new java.net.URI(r.getString(0)))); ()
@@ -136,9 +122,6 @@ object Lakehouse extends QueryModule {
     val nVac = s.read.parquet(s"$audit/doomed")
       .agg(count(lit(1)).as("n_vacuumed"))
     val nAfter = diskListing(s, base, e1).agg(count(lit(1)).as("n_files_after"))
-    val live = log.filter(col("action") === "add").select(col("path"))
-      .join(log.filter(col("action") === "remove").select(col("path")),
-        Seq("path"), "left_anti")
     // Explicit schema on the post-vacuum read: a lake whose every bucket
     // was touched would be an empty dir here, and an empty parquet read
     // without a schema cannot even resolve.
@@ -172,7 +155,7 @@ object Lakehouse extends QueryModule {
     * commit itself is a pruned CoW rewrite (delete key%1344, update
     * cents+7 on key%576, insert shifted keys on key%960 — inserts land in
     * fresh buckets past the base keyspace) into a per-invocation epoch
-    * dir; the base lake is read-only and sentinel-cached. At 100 TB the
+    * dir; the base lake is read-only and cached. At 100 TB the
     * feed costs exactly the changed-file bytes — the log prunes the scan
     * to removed∪added files; nothing untouched is ever read. Oracle:
     * change rows rebuilt closed-form from the moduli, grouped by type, so
@@ -180,14 +163,14 @@ object Lakehouse extends QueryModule {
     * 65536-key maintenance unit ([[vacuum]] precedent): feed cost scales
     * with the commit, never the table. */
   def changeFeed(s: SparkSession, d: String): DataFrame = {
-    val base = Sources.tmp("cdf_lake_u64", d)
-    if (!Files.exists(Paths.get(base, "_SUCCESS")))
+    val base = Scratch.lake("cdf_lake_u64", d) { out =>
       Tables.orders(s, d).filter(col("o_orderkey") < 65536)
         .select(col("o_orderkey"), col("o_orderstatus"),
           cents(col("o_totalprice")).as("cents"),
           expr("o_orderkey div 256").as("fb"))
         .transform(df => Sources.writeParts(s, df, col("fb")))
-        .write.mode("overwrite").partitionBy("fb").parquet(base)
+        .write.mode("overwrite").partitionBy("fb").parquet(out)
+    }
     val run = Scratch.fresh("cdf")
     val e1 = s"$run/epoch=1"
     val logDir = s"$run/log"
@@ -226,16 +209,9 @@ object Lakehouse extends QueryModule {
         col("_metadata.file_path").as("path"))
     // The commit: v0 adds the base; v1 removes replaced files, adds the
     // rewritten epoch. The feed below reads ONLY through this log.
-    baseDf.select(col("path")).distinct()
-      .select(col("path"), lit("add").as("action"))
-      .write.mode("overwrite").parquet(s"$logDir/v=0")
-    affected.select(col("path")).distinct()
-      .select(col("path"), lit("remove").as("action"))
-      .unionByName(e1Df.select(col("path")).distinct()
-        .select(col("path"), lit("add").as("action")))
-      .write.mode("overwrite").parquet(s"$logDir/v=1")
-    val log = s.read.option("basePath", logDir).parquet(logDir)
-      .select(col("path"), col("action"), col("v").cast("int").as("v"))
+    TxnProtocol.commit(logDir, 0, baseDf)
+    TxnProtocol.commit(logDir, 1, e1Df, Some(affected))
+    val log = TxnProtocol.log(s, logDir)
     val removedAtV1 = log.filter(col("v") === 1 && col("action") === "remove")
       .select(col("path"))
     val addedAtV1 = log.filter(col("v") === 1 && col("action") === "add")
@@ -272,13 +248,13 @@ object Lakehouse extends QueryModule {
     * come THROUGH the pruned scan; the oracle computes them from the raw
     * predicate, so a hash match proves skipping lost no qualifying row. */
   def statsSkipping(s: SparkSession, d: String): DataFrame = {
-    val base = Sources.tmp("stats_lake", d)
-    if (!Files.exists(Paths.get(base, "_SUCCESS")))
+    val base = Scratch.lake("stats_lake", d) { out =>
       Tables.orders(s, d)
         .select(col("o_orderkey"), cents(col("o_totalprice")).as("cents"),
           expr("o_orderkey div 256").as("fb"))
         .transform(df => Sources.writeParts(s, df, col("fb")))
-        .write.mode("overwrite").partitionBy("fb").parquet(base)
+        .write.mode("overwrite").partitionBy("fb").parquet(out)
+    }
     val data = s.read.option("basePath", base).parquet(base)
       .select(col("o_orderkey"), col("cents"),
         col("_metadata.file_path").as("path"))
@@ -329,21 +305,23 @@ object Lakehouse extends QueryModule {
     * pruned scans and must match the oracle's raw-predicate recompute at
     * equal values for both layouts — skipping loses nothing either way. */
   def zorderExec(s: SparkSession, d: String): DataFrame = {
-    val root = Sources.tmp("zx_lake", d)
-    val src = Tables.orders(s, d)
-      .select((col("o_custkey") % 1024).as("x"),
-        (floor(col("o_totalprice")).cast("long") % 1024).as("y"),
-        cents(col("o_totalprice")).as("cents"))
-      .withColumn("zval", morton(col("x"), col("y")))
     val layouts = Seq(
       "linear" -> "x div 64",
       "zorder" -> "zval div 65536")
-    layouts.map { case (name, fExpr) =>
-      val dir = s"$root/$name"
-      if (!Files.exists(Paths.get(dir, "_SUCCESS")))
+    val root = Scratch.lake("zx_lake", d) { out =>
+      val src = Tables.orders(s, d)
+        .select((col("o_custkey") % 1024).as("x"),
+          (floor(col("o_totalprice")).cast("long") % 1024).as("y"),
+          cents(col("o_totalprice")).as("cents"))
+        .withColumn("zval", morton(col("x"), col("y")))
+      layouts.foreach { case (name, fExpr) =>
         src.withColumn("f", expr(fExpr))
           .transform(df => Sources.writeParts(s, df, col("f")))
-          .write.mode("overwrite").partitionBy("f").parquet(dir)
+          .write.mode("overwrite").partitionBy("f").parquet(s"$out/$name")
+      }
+    }
+    layouts.map { case (name, _) =>
+      val dir = s"$root/$name"
       val data = s.read.option("basePath", dir).parquet(dir)
         .select(col("x"), col("y"), col("cents"),
           col("_metadata.file_path").as("path"))
@@ -382,12 +360,12 @@ object Lakehouse extends QueryModule {
     * answers, and Round11Spec proves it is visible in the plan (the scan
     * reads the summary, never the corpus). */
   def mvRewrite(s: SparkSession, d: String): DataFrame = {
-    val mvPath = Sources.tmp("mv_docs", d)
-    if (!Files.exists(Paths.get(mvPath, "_SUCCESS")))
+    val mvPath = Scratch.lake("mv_docs", d) { out =>
       Tables.documents(s, d)
         .groupBy(col("lang"), expr("doc_id div 256").as("db"))
         .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("sum_chars"))
-        .write.mode("overwrite").parquet(mvPath)
+        .write.mode("overwrite").parquet(out)
+    }
     val rule = new graft.plans.MvAggRewrite(s, d, mvPath)
     s.experimental.extraOptimizations = s.experimental.extraOptimizations
       .filterNot(_.isInstanceOf[graft.plans.MvAggRewrite]) :+ rule
@@ -465,14 +443,14 @@ object Lakehouse extends QueryModule {
     * watches to decide when merge-on-read debt should be compacted into
     * a [[Sources.mergeExec]]-style rewrite. */
   def deletionVectors(s: SparkSession, d: String): DataFrame = {
-    val base = Sources.tmp("dv_lake", d)
-    if (!Files.exists(Paths.get(base, "_SUCCESS")))
+    val base = Scratch.lake("dv_lake", d) { out =>
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderstatus"),
           cents(col("o_totalprice")).as("cents"),
           expr("o_orderkey div 256").as("fb"))
         .transform(df => Sources.writeParts(s, df, col("fb")))
-        .write.mode("overwrite").partitionBy("fb").parquet(base)
+        .write.mode("overwrite").partitionBy("fb").parquet(out)
+    }
     val run = Scratch.fresh("dv")
     val baseDf = s.read.option("basePath", base).parquet(base)
       .select(col("o_orderkey"), col("o_orderstatus"), col("cents"),
@@ -509,23 +487,23 @@ object Lakehouse extends QueryModule {
     * closed-form from the post-change table — a hash match proves
     * delta-merge ≡ full recompute. */
   def mvIncremental(s: SparkSession, d: String): DataFrame = {
-    val base = Sources.tmp("mvi_lake", d)
-    if (!Files.exists(Paths.get(base, "_SUCCESS")))
+    val base = Scratch.lake("mvi_lake", d) { out =>
       Tables.orders(s, d).filter(col("o_orderkey") < 65536)
         .select(col("o_orderkey"), col("o_orderstatus"),
           cents(col("o_totalprice")).as("cents"),
           expr("o_orderkey div 256").as("fb"))
         .transform(df => Sources.writeParts(s, df, col("fb")))
-        .write.mode("overwrite").partitionBy("fb").parquet(base)
+        .write.mode("overwrite").partitionBy("fb").parquet(out)
+    }
     val baseDf = s.read.option("basePath", base).parquet(base)
       .select(col("o_orderkey"), col("o_orderstatus"), col("cents"),
         col("fb").cast("long").as("fb"),
         col("_metadata.file_path").as("path"))
-    val mv0Path = Sources.tmp("mvi_mv", d)
-    if (!Files.exists(Paths.get(mv0Path, "_SUCCESS")))
+    val mv0Path = Scratch.lake("mvi_mv", d) { out =>
       baseDf.groupBy(col("o_orderstatus"), col("fb"))
         .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("sum_cents"))
-        .write.mode("overwrite").parquet(mv0Path)
+        .write.mode("overwrite").parquet(out)
+    }
     val run = Scratch.fresh("mvi")
     val e1 = s"$run/epoch=1"
     val o = Tables.orders(s, d).filter(col("o_orderkey") < 65536)
@@ -582,54 +560,45 @@ object Lakehouse extends QueryModule {
     * through log replay. Everything is file-level joins over the
     * listing-scale log — the data files are scanned ONCE (a single union
     * read joined against the per-version live set), never per version. The
-    * lake is read-only after its sentinel build (the log IS the state), so
-    * re-invocations are log-replay-cheap. Oracle: the whole triangle is
+    * lake and its log are read-only cached lakes (the log IS the state),
+    * so re-invocations are log-replay-cheap. Oracle: the whole triangle is
     * closed-form bucket algebra from the delete modulus. */
   def history(s: SparkSession, d: String): DataFrame = {
-    val root = Sources.tmp("hist_lake", d)
-    val base = s"$root/base"; val e1 = s"$root/e1"; val e2 = s"$root/e2"
-    val logDir = s"$root/log"
-    if (!Files.exists(Paths.get(s"$logDir/v=2", "_SUCCESS"))) {
+    val touched = Tables.orders(s, d)
+      .filter(col("o_orderkey") < 32768 && col("o_orderkey") % 576 === 0)
+      .select(expr("o_orderkey div 256").as("fb")).distinct()
+    def files(dir: String): DataFrame = s.read.option("basePath", dir).parquet(dir)
+      .withColumn("path", col("_metadata.file_path"))
+    def baseFiles(base: String): DataFrame =
+      files(base).withColumn("fb", col("fb").cast("long"))
+    val root = Scratch.lake("hist_lake", d) { out =>
       Tables.orders(s, d).filter(col("o_orderkey") < 32768)
         .select(col("o_orderkey"), cents(col("o_totalprice")).as("cents"),
           expr("o_orderkey div 256").as("fb"))
         .transform(df => Sources.writeParts(s, df, col("fb")))
-        .write.mode("overwrite").partitionBy("fb").parquet(base)
-      val baseDf = s.read.option("basePath", base).parquet(base)
-        .select(col("o_orderkey"), col("cents"), col("fb").cast("long").as("fb"),
-          col("_metadata.file_path").as("path"))
-      baseDf.select(col("path")).distinct()
-        .select(col("path"), lit("add").as("action"))
-        .write.mode("overwrite").parquet(s"$logDir/v=0")
-      val touched = Tables.orders(s, d)
-        .filter(col("o_orderkey") < 32768 && col("o_orderkey") % 576 === 0)
-        .select(expr("o_orderkey div 256").as("fb")).distinct()
-      val affected = baseDf.join(broadcast(touched), Seq("fb"))
-      affected.filter(col("o_orderkey") % 576 =!= 0)
+        .write.mode("overwrite").partitionBy("fb").parquet(s"$out/base")
+      baseFiles(s"$out/base").join(broadcast(touched), Seq("fb"))
+        .filter(col("o_orderkey") % 576 =!= 0)
         .select(col("o_orderkey"), col("cents"), expr("fb div 2").as("gb"))
         .transform(df => Sources.writeParts(s, df, col("gb")))
-        .write.mode("overwrite").partitionBy("gb").parquet(e1)
-      val e1Df = s.read.option("basePath", e1).parquet(e1)
-        .select(col("o_orderkey"), col("cents"), col("gb").cast("long").as("gb"),
-          col("_metadata.file_path").as("path"))
-      affected.select(col("path")).distinct()
-        .select(col("path"), lit("remove").as("action"))
-        .unionByName(e1Df.select(col("path")).distinct()
-          .select(col("path"), lit("add").as("action")))
-        .write.mode("overwrite").parquet(s"$logDir/v=1")
-      e1Df.select(col("o_orderkey"), col("cents"), expr("gb div 4").as("sb"))
+        .write.mode("overwrite").partitionBy("gb").parquet(s"$out/e1")
+      files(s"$out/e1")
+        .select(col("o_orderkey"), col("cents"), expr("gb div 4").as("sb"))
         .transform(df => Sources.writeParts(s, df, col("sb")))
-        .write.mode("overwrite").partitionBy("sb").parquet(e2)
-      val e2Df = s.read.option("basePath", e2).parquet(e2)
-        .select(col("_metadata.file_path").as("path"))
-      e1Df.select(col("path")).distinct()
-        .select(col("path"), lit("remove").as("action"))
-        .unionByName(e2Df.distinct()
-          .select(col("path"), lit("add").as("action")))
-        .write.mode("overwrite").parquet(s"$logDir/v=2")
+        .write.mode("overwrite").partitionBy("sb").parquet(s"$out/e2")
     }
-    val log = s.read.option("basePath", logDir).parquet(logDir)
-      .select(col("path"), col("action"), col("v").cast("int").as("v"))
+    val base = s"$root/base"; val e1 = s"$root/e1"; val e2 = s"$root/e2"
+    // The log records absolute file paths, so it is a second lake built
+    // over the PUBLISHED data dirs (paths inside a temp dir die with the
+    // rename that publishes it).
+    val logDir = Scratch.lake("hist_log", d) { out =>
+      val baseDf = baseFiles(base)
+      TxnProtocol.commit(out, 0, baseDf)
+      TxnProtocol.commit(out, 1, files(e1),
+        Some(baseDf.join(broadcast(touched), Seq("fb"))))
+      TxnProtocol.commit(out, 2, files(e2), Some(files(e1)))
+    }
+    val log = TxnProtocol.log(s, logDir)
     val versions = log.select(col("v").as("ver")).distinct()
     // File liveness per version: the log is listing-scale, so the tiny
     // triangle join (log rows visible at each version) broadcasts.
@@ -645,11 +614,9 @@ object Lakehouse extends QueryModule {
     val nLive = liveSet.groupBy(col("ver")).agg(count(lit(1)).as("n_live_files"))
     // ONE scan of all data files ever written, fanned out to the versions
     // each file is live in (≤ |versions| small multiplier).
-    val allData = Seq(base, e1, e2).map { dir =>
-      s.read.option("basePath", dir).parquet(dir)
-        .select(col("o_orderkey"), col("cents"),
-          col("_metadata.file_path").as("path"))
-    }.reduce(_ unionByName _)
+    val allData = Seq(base, e1, e2)
+      .map(files(_).select(col("o_orderkey"), col("cents"), col("path")))
+      .reduce(_ unionByName _)
     val snap = allData.join(broadcast(liveSet), Seq("path"))
       .groupBy(col("ver"))
       .agg(count(lit(1)).as("n_rows"), sum(col("cents")).cast("long").as("cents"))
@@ -672,30 +639,29 @@ object Lakehouse extends QueryModule {
     * file counts from the same min/max interval algebra as
     * [[statsSkipping]], result rows from the raw predicate per population. */
   def partitionEvolution(s: SparkSession, d: String): DataFrame = {
-    val root = Sources.tmp("pevo_lake", d)
-    val spec0 = s"$root/spec0"; val spec1 = s"$root/spec1"
     // Scale-free spec boundary (half the keyspace) and key band — derived
     // from the data, moved through broadcasts, never collected.
     val bounds = broadcast(Tables.orders(s, d)
       .agg(expr("max(o_orderkey) div 2").as("bb"))
       .select(col("bb"), expr("bb div 2").as("lo"),
         (col("bb") + expr("bb div 2")).as("hi")))
-    if (!Files.exists(Paths.get(spec1, "_SUCCESS"))) {
+    val root = Scratch.lake("pevo_lake", d) { out =>
       Tables.orders(s, d).crossJoin(bounds)
         .filter(col("o_orderkey") <= col("bb"))
         .select(col("o_orderkey"), col("o_orderstatus"),
           cents(col("o_totalprice")).as("cents"),
           expr("o_orderkey div 256").as("fb"))
         .transform(df => Sources.writeParts(s, df, col("fb")))
-        .write.mode("overwrite").partitionBy("fb").parquet(spec0)
+        .write.mode("overwrite").partitionBy("fb").parquet(s"$out/spec0")
       Tables.orders(s, d).crossJoin(bounds)
         .filter(col("o_orderkey") > col("bb"))
         .select(col("o_orderkey"), col("o_orderstatus"),
           cents(col("o_totalprice")).as("cents"))
         .withColumn("st", col("o_orderstatus"))
         .transform(df => Sources.writeParts(s, df, col("st")))
-        .write.mode("overwrite").partitionBy("st").parquet(spec1)
+        .write.mode("overwrite").partitionBy("st").parquet(s"$out/spec1")
     }
+    val spec0 = s"$root/spec0"; val spec1 = s"$root/spec1"
     val d0 = s.read.option("basePath", spec0).parquet(spec0)
       .select(col("o_orderkey"), col("o_orderstatus"), col("cents"),
         col("_metadata.file_path").as("path"))
@@ -752,14 +718,14 @@ object Lakehouse extends QueryModule {
     * file ≡ the fb write bucket, so DuckDB rebuilds the same bitsets
     * relationally — the hash proves both the pruning set and the scan. */
   def bloomSkipping(s: SparkSession, d: String): DataFrame = {
-    val base = Sources.tmp("bloom_lake", d)
-    if (!Files.exists(Paths.get(base, "_SUCCESS")))
+    val base = Scratch.lake("bloom_lake", d) { out =>
       Tables.orders(s, d).filter(col("o_orderkey") < 65536)
         .select(col("o_orderkey"), col("o_custkey"),
           cents(col("o_totalprice")).as("cents"),
           expr("o_orderkey div 256").as("fb"))
         .transform(df => Sources.writeParts(s, df, col("fb")))
-        .write.mode("overwrite").partitionBy("fb").parquet(base)
+        .write.mode("overwrite").partitionBy("fb").parquet(out)
+    }
     val baseDf = s.read.option("basePath", base).parquet(base)
       .select(col("o_custkey").as("ck"), col("cents"),
         col("_metadata.file_path").as("path"))

@@ -15,14 +15,9 @@ import org.apache.spark.sql.types._
   * Round-trip pattern: fixture parquet → write alt format to a temp dir →
   * read back with explicit schema → aggregate. The oracle runs the same
   * aggregate on the original parquet, so the gate proves the format
-  * round-trip is lossless. Temp dirs are content-keyed so re-runs reuse. */
+  * round-trip is lossless. The written copies are cached lakes
+  * ([[graft.Scratch.lake]]), one per fixture dir, so re-runs reuse them. */
 object Sources extends QueryModule {
-
-  private[sources] def tmp(tag: String, sfDir: String): String = {
-    val key = sfDir.replaceAll("[^a-zA-Z0-9.]", "_")
-    val p = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_$tag$key")
-    p.toString
-  }
 
   /** Hash-repartition by the write-bucket columns at the session's shuffle
     * parallelism, for the maintenance writes. A bare `repartition(col)` is
@@ -40,14 +35,6 @@ object Sources extends QueryModule {
       cols: org.apache.spark.sql.Column*): DataFrame =
     df.repartition(s.sessionState.conf.numShufflePartitions, cols: _*)
 
-  // NB round 15: a §2.6 thread-pool helper overlapping the independent
-  // commit legs of vacuum/cdf/timeTravel (v0 log ∥ epoch rewrite, v1 log ∥
-  // pre-delete listing) was built and MEASURED NET-SLOWER at sf0.1
-  // (vacuum 4.08→4.63 s, time_travel 1.84→2.12 s, cdf 3.76→3.37 s,
-  // min-of-5): with writeParts restoring 32-task-wide writes there is no
-  // idle tail to back-fill, and concurrently planned jobs contend on the
-  // driver. Removed; the sequential legs stand.
-
   private val nationSchema = StructType(Seq(
     StructField("n_nationkey", IntegerType), StructField("n_name", StringType),
     StructField("n_regionkey", IntegerType)))
@@ -58,10 +45,10 @@ object Sources extends QueryModule {
 
   /** parquet → CSV → read (explicit schema) → join + count. */
   def csvRoundTrip(s: SparkSession, d: String): DataFrame = {
-    val dir = tmp("csv_nation", d)
-    if (!Files.exists(Paths.get(dir, "_SUCCESS")))
+    val dir = Scratch.lake("csv_nation", d) { out =>
       Tables.nation(s, d).write.mode("overwrite")
-        .option("header", "true").csv(dir)
+        .option("header", "true").csv(out)
+    }
     s.read.schema(nationSchema).option("header", "true").csv(dir)
       .groupBy(col("n_regionkey"))
       .agg(count(lit(1)).as("n_nations"),
@@ -73,9 +60,9 @@ object Sources extends QueryModule {
     * survive the JSON round-trip bit-exactly (shortest-repr print + correct
     * parse on both write and read). */
   def jsonRoundTrip(s: SparkSession, d: String): DataFrame = {
-    val dir = tmp("json_supplier", d)
-    if (!Files.exists(Paths.get(dir, "_SUCCESS")))
-      Tables.supplier(s, d).write.mode("overwrite").json(dir)
+    val dir = Scratch.lake("json_supplier", d) { out =>
+      Tables.supplier(s, d).write.mode("overwrite").json(out)
+    }
     s.read.schema(supplierSchema).json(dir)
       .groupBy(col("s_nationkey"))
       .agg(count(lit(1)).as("n_suppliers"),
@@ -88,10 +75,10 @@ object Sources extends QueryModule {
     * counts; proves the hive-style layout round-trips values + partition
     * column. */
   def partitionedWrite(s: SparkSession, d: String): DataFrame = {
-    val dir = tmp("part_orders", d)
-    if (!Files.exists(Paths.get(dir, "_SUCCESS")))
+    val dir = Scratch.lake("part_orders", d) { out =>
       Tables.orders(s, d)
-        .write.mode("overwrite").partitionBy("o_orderstatus").parquet(dir)
+        .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
+    }
     s.read.parquet(dir)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"),
@@ -101,9 +88,9 @@ object Sources extends QueryModule {
 
   /** parquet → ORC → read → aggregate (ORC keeps types incl. doubles). */
   def orcRoundTrip(s: SparkSession, d: String): DataFrame = {
-    val dir = tmp("orc_part", d)
-    if (!Files.exists(Paths.get(dir, "_SUCCESS")))
-      Tables.part(s, d).write.mode("overwrite").orc(dir)
+    val dir = Scratch.lake("orc_part", d) { out =>
+      Tables.part(s, d).write.mode("overwrite").orc(out)
+    }
     s.read.orc(dir)
       .groupBy(col("p_brand"))
       .agg(count(lit(1)).as("n"),
@@ -116,10 +103,10 @@ object Sources extends QueryModule {
     * → aggregate. `rowTag` names the per-record element; numeric types
     * survive via explicit schema on read (never inference). */
   def xmlRoundTrip(s: SparkSession, d: String): DataFrame = {
-    val dir = tmp("xml_region", d)
-    if (!Files.exists(Paths.get(dir, "_SUCCESS")))
+    val dir = Scratch.lake("xml_region", d) { out =>
       Tables.nation(s, d).write.mode("overwrite")
-        .option("rowTag", "nation").xml(dir)
+        .option("rowTag", "nation").xml(out)
+    }
     s.read.schema(nationSchema).option("rowTag", "nation").xml(dir)
       .groupBy(col("n_regionkey"))
       .agg(count(lit(1)).as("n_nations"),
@@ -155,10 +142,10 @@ object Sources extends QueryModule {
     * round-trip + path-derived provenance are lossless. Metadata columns
     * are populated by the scan itself (no extra I/O at any scale). */
   def fileProvenance(s: SparkSession, d: String): DataFrame = {
-    val dir = tmp("prov_docs", d)
-    if (!Files.exists(Paths.get(dir, "_SUCCESS")))
+    val dir = Scratch.lake("prov_docs", d) { out =>
       Tables.documents(s, d).write.mode("overwrite")
-        .partitionBy("lang").parquet(dir)
+        .partitionBy("lang").parquet(out)
+    }
     s.read.parquet(dir)
       .select(col("n_chars"),
         regexp_extract(col("_metadata.file_path"), "lang=([^/]+)", 1).as("lang"))
@@ -177,16 +164,13 @@ object Sources extends QueryModule {
     * oracle recomputes length/md5 from the source table, proving the
     * file-level round-trip lossless. */
   def binaryFiles(s: SparkSession, d: String): DataFrame = {
-    val dir = tmp("binfiles", d)
-    if (!Files.exists(Paths.get(dir, "_DONE"))) {
-      Files.createDirectories(Paths.get(dir))
+    val dir = Scratch.lake("binfiles", d) { out =>
       Tables.region(s, d).select(col("r_regionkey"), col("r_name"))
         .foreach { r =>
-          Files.write(Paths.get(dir, s"region_${r.getInt(0)}.bin"),
+          Files.write(Paths.get(out, s"region_${r.getInt(0)}.bin"),
             r.getString(1).getBytes("UTF-8"))
           ()
         }
-      Files.write(Paths.get(dir, "_DONE"), Array.emptyByteArray)
     }
     s.read.format("binaryFile").option("pathGlobFilter", "*.bin").load(dir)
       .select(
@@ -204,10 +188,10 @@ object Sources extends QueryModule {
     * framing is lossless only for newline-free rows (true of the fixture;
     * rows with embedded newlines belong on the json or binaryFile path). */
   def textRoundTrip(s: SparkSession, d: String): DataFrame = {
-    val dir = tmp("text_docs", d)
-    if (!Files.exists(Paths.get(dir, "_SUCCESS")))
+    val dir = Scratch.lake("text_docs", d) { out =>
       Tables.documents(s, d).select(col("text"))
-        .write.mode("overwrite").text(dir)
+        .write.mode("overwrite").text(out)
+    }
     s.read.text(dir)
       .groupBy(md5(col("value")).as("line_md5"))
       .agg(count(lit(1)).as("n_lines"))
@@ -223,15 +207,14 @@ object Sources extends QueryModule {
     * them under 'LEGACY'. The oracle recomputes from the unsplit fixture,
     * proving the merged read loses nothing. */
   def schemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val dir = tmp("evolve_orders", d)
-    if (!Files.exists(Paths.get(dir, "b2", "_SUCCESS"))) {
+    val dir = Scratch.lake("evolve_orders", d) { out =>
       val o = Tables.orders(s, d)
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
-        .write.mode("overwrite").parquet(dir + "/b1")
+        .write.mode("overwrite").parquet(out + "/b1")
       o.filter(col("o_orderkey") % 2 === 1)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-        .write.mode("overwrite").parquet(dir + "/b2")
+        .write.mode("overwrite").parquet(out + "/b2")
     }
     s.read.option("mergeSchema", "true").parquet(dir + "/b1", dir + "/b2")
       .groupBy(coalesce(col("o_orderpriority"), lit("LEGACY")).as("priority"))
@@ -296,14 +279,13 @@ object Sources extends QueryModule {
     * not scale with the table. */
   def compactionExec(s: SparkSession, d: String): DataFrame = {
     val target = 4096L
-    val root = tmp("compact_lake_u2k", d)
-    val frag = s"$root/frag"
-    if (!Files.exists(Paths.get(frag, "_SUCCESS")))
+    val frag = Scratch.lake("compact_lake_u2k", d) { out =>
       Tables.documents(s, d).filter(col("doc_id") < 2048)
         .select(col("doc_id"), col("lang"), col("n_chars"), col("text"),
           expr("doc_id div 16").as("file_id"))
         .transform(df => writeParts(s, df, col("lang"), col("file_id")))
-        .write.mode("overwrite").partitionBy("lang", "file_id").parquet(frag)
+        .write.mode("overwrite").partitionBy("lang", "file_id").parquet(out)
+    }
     val contentH = conv(substring(md5(concat(col("doc_id").cast("string"),
       lit(":"), col("text"))), 1, 8), 16, 10).cast("long")
     val before = s.read.option("basePath", frag).parquet(frag)
@@ -364,15 +346,14 @@ object Sources extends QueryModule {
     * lake is the fixed 65536-key maintenance unit ([[vacuum]] precedent):
     * merge cost scales with the CHANGE SET, never the table. */
   def mergeExec(s: SparkSession, d: String): DataFrame = {
-    val root = tmp("merge_lake_u64", d)
-    val base = s"$root/base"
-    if (!Files.exists(Paths.get(base, "_SUCCESS")))
+    val base = Scratch.lake("merge_lake_u64", d) { out =>
       Tables.orders(s, d).filter(col("o_orderkey") < 65536)
         .select(col("o_orderkey"), col("o_orderstatus"),
           floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("cents"),
           expr("o_orderkey div 256").as("fb"))
         .transform(df => writeParts(s, df, col("fb")))
-        .write.mode("overwrite").partitionBy("fb").parquet(base)
+        .write.mode("overwrite").partitionBy("fb").parquet(out)
+    }
     val baseDf = s.read.option("basePath", base).parquet(base)
       .select(col("o_orderkey"), col("o_orderstatus"), col("cents"),
         col("fb").cast("long").as("fb"),
@@ -444,9 +425,7 @@ object Sources extends QueryModule {
     * oracle rebuilds the post-merge dimension and both file counts
     * closed-form from customer. */
   def scd2Exec(s: SparkSession, d: String): DataFrame = {
-    val root = tmp("scd2_lake_u8k", d)
-    val base = s"$root/base"
-    if (!Files.exists(Paths.get(base, "_SUCCESS")))
+    val base = Scratch.lake("scd2_lake_u8k", d) { out =>
       Tables.customer(s, d).filter(col("c_custkey") < 8192)
         .select(col("c_custkey"), col("c_mktsegment"),
           floor(col("c_acctbal") * 100.0 + 0.5).cast("long").as("bal_cents"),
@@ -455,7 +434,8 @@ object Sources extends QueryModule {
           lit(1).cast("int").as("is_current"),
           expr("c_custkey div 64").as("fb"))
         .transform(df => writeParts(s, df, col("fb")))
-        .write.mode("overwrite").partitionBy("fb").parquet(base)
+        .write.mode("overwrite").partitionBy("fb").parquet(out)
+    }
     val cols = Seq("c_custkey", "c_mktsegment", "bal_cents",
       "valid_from", "valid_to", "is_current")
     val baseDf = s.read.option("basePath", base).parquet(base)
@@ -525,26 +505,23 @@ object Sources extends QueryModule {
     * count = untouched buckets + paired packs), so the hash proves log
     * replay selects exactly the right files at each version. */
   def timeTravel(s: SparkSession, d: String): DataFrame = {
-    val root = tmp("tlog_lake_u64", d)
-    val base = s"$root/base"
-    val run = Scratch.fresh("tlog")
-    val e1 = s"$run/epoch=1"
-    val logDir = s"$run/log"
-    if (!Files.exists(Paths.get(base, "_SUCCESS")))
+    val base = Scratch.lake("tlog_lake_u64", d) { out =>
       Tables.orders(s, d).filter(col("o_orderkey") < 65536)
         .select(col("o_orderkey"), col("o_orderstatus"),
           floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("cents"),
           expr("o_orderkey div 512").as("fb"))
         .transform(df => writeParts(s, df, col("fb")))
-        .write.mode("overwrite").partitionBy("fb").parquet(base)
+        .write.mode("overwrite").partitionBy("fb").parquet(out)
+    }
+    val run = Scratch.fresh("tlog")
+    val e1 = s"$run/epoch=1"
+    val logDir = s"$run/log"
     val baseDf = s.read.option("basePath", base).parquet(base)
       .select(col("o_orderkey"), col("o_orderstatus"), col("cents"),
         col("fb").cast("long").as("fb"),
         col("_metadata.file_path").as("path"))
     // Commit 0: the base files become visible.
-    baseDf.select(col("path")).distinct()
-      .select(col("path"), lit("add").as("action"))
-      .write.mode("overwrite").parquet(s"$logDir/v=0")
+    TxnProtocol.commit(logDir, 0, baseDf)
     // Commit 1: delete key%640 rows; survivors of each touched bucket
     // PAIR pack into one file (delete + compact in one rewrite).
     val touched = Tables.orders(s, d)
@@ -559,31 +536,20 @@ object Sources extends QueryModule {
     val e1Df = s.read.option("basePath", e1).parquet(e1)
       .select(col("o_orderkey"), col("o_orderstatus"), col("cents"),
         col("_metadata.file_path").as("path"))
-    affected.select(col("path")).distinct()
-      .select(col("path"), lit("remove").as("action"))
-      .unionByName(e1Df.select(col("path")).distinct()
-        .select(col("path"), lit("add").as("action")))
-      .write.mode("overwrite").parquet(s"$logDir/v=1")
+    TxnProtocol.commit(logDir, 1, e1Df, Some(affected))
     // Snapshot reads: replay the log ≤ V with joins only.
-    val log = s.read.option("basePath", logDir).parquet(logDir)
-      .select(col("path"), col("action"), col("v").cast("int").as("v"))
+    val log = TxnProtocol.log(s, logDir)
     val allFiles = baseDf
       .select(col("o_orderkey"), col("o_orderstatus"), col("cents"), col("path"))
       .unionByName(e1Df)
-    def snapshot(ver: Int): DataFrame = {
-      val adds = log.filter(col("v") <= ver && col("action") === "add")
-        .select(col("path"))
-      val removes = log.filter(col("v") <= ver && col("action") === "remove")
-        .select(col("path"))
-      val live = adds.join(removes, Seq("path"), "left_anti")
-      allFiles.join(live, Seq("path"), "left_semi")
+    def snapshot(ver: Int): DataFrame =
+      allFiles.join(TxnProtocol.live(log, ver), Seq("path"), "left_semi")
         .groupBy()
         .agg(count(lit(1)).as("n_rows"),
           sum(col("cents")).cast("long").as("cents"),
           countDistinct(col("path")).as("n_files"))
         .select(lit(ver).as("version"), col("n_rows"), col("cents"),
           col("n_files"))
-    }
     snapshot(0).unionByName(snapshot(1)).orderBy(col("version"))
   }
 
@@ -598,19 +564,16 @@ object Sources extends QueryModule {
     * the gate proves corrupt rows are counted, not dropped, and valid
     * rows survive bit-exact. */
   def jsonCorrupt(s: SparkSession, d: String): DataFrame = {
-    val dir = tmp("json_corrupt", d)
-    if (!Files.exists(Paths.get(dir, "_DONE"))) {
-      Files.createDirectories(Paths.get(dir))
+    val dir = Scratch.lake("json_corrupt", d) { out =>
       Tables.nation(s, d).select(col("n_nationkey"), col("n_name"))
         .foreach { r =>
           val key = r.getInt(0)
           val body = s"""{"n_nationkey":$key,"n_name":"${r.getString(1)}""""
           val line = if (key % 3 == 0) body else body + "}"
-          Files.write(Paths.get(dir, s"nation_$key.json"),
+          Files.write(Paths.get(out, s"nation_$key.json"),
             line.getBytes("UTF-8"))
           ()
         }
-      Files.write(Paths.get(dir, "_DONE"), Array.emptyByteArray)
     }
     val schema = StructType(Seq(
       StructField("n_nationkey", IntegerType),

@@ -4,10 +4,14 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** OPTIMISTIC CONCURRENCY for the file-level transaction log the layout_*
-  * queries commit through ([[Sources.timeTravel]], [[Lakehouse.vacuum]],
-  * [[Lakehouse.changeFeed]]): multiple writers may prepare rewrites from
-  * the same snapshot; exactly one wins each log version, and losers must
+/** The file-level transaction log — the one owner of its format: commit
+  * `v` is `(path, action)` parquet rows under `v=<v>/`. The layout_*
+  * queries and [[graft.streaming.StreamQueries.streamLogCommits]] write
+  * and read their logs through [[commit]], [[log]] and [[live]]; each has
+  * one writer, so none of them [[claim]]s.
+  *
+  * OPTIMISTIC CONCURRENCY: multiple writers may prepare rewrites from the
+  * same snapshot; exactly one wins each log version, and losers must
   * re-read the log and either REBASE (their read-set is untouched by the
   * commits they lost to) or ABORT (a file they depend on was removed) —
   * the Delta/Iceberg commit loop.
@@ -64,14 +68,36 @@ object TxnProtocol {
       upTo: Int, myRemoves: DataFrame): Boolean = {
     if (upTo <= readVersion) false
     else {
-      val log = s.read.option("basePath", logDir).parquet(logDir)
-        .select(col("path"), col("action"), col("v").cast("int").as("v"))
-      val theirRemoves = log
+      val theirRemoves = log(s, logDir)
         .filter(col("v") > readVersion && col("v") <= upTo &&
           col("action") === "remove")
         .select(col("path"))
       !myRemoves.select(col("path")).join(theirRemoves, Seq("path"), "left_semi")
         .isEmpty
     }
+  }
+
+  /** Write commit `v` (overwrite: a retry replaces itself) from the
+    * distinct `path`s of `removes` then `adds`. */
+  def commit(logDir: String, v: Long, adds: DataFrame,
+      removes: Option[DataFrame] = None): Unit = {
+    val addRows = adds.select(col("path")).distinct()
+      .select(col("path"), lit("add").as("action"))
+    removes.fold(addRows)(_.select(col("path")).distinct()
+        .select(col("path"), lit("remove").as("action")).unionByName(addRows))
+      .write.mode("overwrite").parquet(s"$logDir/v=$v")
+  }
+
+  /** Every committed (path, action, v). Listing-scale. */
+  def log(s: SparkSession, logDir: String): DataFrame =
+    s.read.option("basePath", logDir).parquet(logDir)
+      .select(col("path"), col("action"), col("v").cast("int").as("v"))
+
+  /** Snapshot `upTo`: paths added at versions ≤ `upTo`, removed at none. */
+  def live(log: DataFrame, upTo: Int): DataFrame = {
+    val seen = log.filter(col("v") <= upTo)
+    seen.filter(col("action") === "add").select(col("path"))
+      .join(seen.filter(col("action") === "remove").select(col("path")),
+        Seq("path"), "left_anti")
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{OracleSafe, Query, QueryModule, Scratch, Tables}
+import graft.sources.TxnProtocol
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, Trigger, ValueState}
@@ -315,16 +316,14 @@ object StreamQueries extends QueryModule {
           val dir = s"$dataDir/epoch=$epoch"
           df.write.mode("overwrite").parquet(dir)
           // Commit point: log version = the file list of this epoch.
-          df.sparkSession.read.parquet(dir)
-            .select(col("_metadata.file_path").as("path")).distinct()
-            .select(col("path"), lit("add").as("action"))
-            .write.mode("overwrite").parquet(s"$logDir/v=$epoch")
+          TxnProtocol.commit(logDir, epoch, df.sparkSession.read.parquet(dir)
+            .select(col("_metadata.file_path").as("path")))
         }
         .start()
       q.awaitTermination()
     }
-    val log = s.read.option("basePath", logDir).parquet(logDir)
-      .select(col("path"))
+    val log = TxnProtocol.live(TxnProtocol.log(s, logDir),
+      TxnProtocol.latest(logDir))
     s.read.option("basePath", dataDir).parquet(dataDir)
       .select(col("event_id"), col("event_type"), col("cents"),
         col("_metadata.file_path").as("path"))

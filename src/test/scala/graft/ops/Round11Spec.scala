@@ -98,9 +98,7 @@ class Round11Spec extends AnyFunSuite {
     assert(rows.map(_.getLong(1)).sum == direct)
     // ...while the base lake on disk is physically intact: every bucket
     // file still present (deletes live only in the sidecar).
-    val lake = spark.read.parquet(
-      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")).toString
-        + "/graft_dv_lake" + TestSpark.sf.replaceAll("[^a-zA-Z0-9.]", "_"))
+    val lake = spark.read.parquet(graft.Scratch.lakeDir("dv_lake", TestSpark.sf))
     assert(lake.count() == orders.count(),
       "all rows, deleted ones included, remain in the base files")
   }
@@ -116,7 +114,8 @@ class Round11Spec extends AnyFunSuite {
       }.flatten
     val df = SparkEntry.queries("layout_mv_rewrite")(spark, TestSpark.sf)
     val paths = scanPaths(df)
-    assert(paths.exists(_.contains("graft_mv_docs")),
+    val mvDir = graft.Scratch.lakeDir("mv_docs", TestSpark.sf)
+    assert(paths.exists(_.contains(mvDir)),
       s"rewritten plan must scan the MV, got: $paths")
     assert(!paths.exists(_.contains("documents.parquet")),
       "rewritten plan must not touch the base corpus")
@@ -131,7 +130,7 @@ class Round11Spec extends AnyFunSuite {
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
         .orderBy(col("lang"))
-      assert(!scanPaths(base).exists(_.contains("graft_mv_docs")))
+      assert(!scanPaths(base).exists(_.contains(mvDir)))
       assert(base.collect().map(r =>
         (r.getString(0), r.getLong(1), r.getLong(2))).toSeq == got.toSeq)
     } finally spark.experimental.extraOptimizations = saved

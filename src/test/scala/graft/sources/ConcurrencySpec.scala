@@ -1,18 +1,21 @@
 package graft.sources
 
-import graft.{Tables, TestSpark}
+import graft.{Scratch, SparkEntry, Tables, TestSpark}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.CountDownLatch
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Drives [[TxnProtocol]]'s optimistic commit loop with genuinely racing
   * writers on one lake: both prepare disjoint compactions from snapshot
   * v0, race for v1, the loser rebases; a third stale writer whose
   * write-set overlaps a committed removal must abort. This is the
   * commit-atomicity contract under CONTENTION — the single-writer path is
-  * oracle-gated by layout_time_travel / layout_vacuum / layout_cdf. */
+  * oracle-gated by layout_time_travel / layout_vacuum / layout_cdf. The
+  * second test races the cached-lake builds ([[Scratch.lake]]) of four
+  * queries from four threads on one session. */
 class ConcurrencySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -31,9 +34,7 @@ class ConcurrencySpec extends AnyFunSuite {
         col("_metadata.file_path").as("path"))
     // Commit 0 through the protocol.
     assert(TxnProtocol.claim(logDir, 0))
-    baseDf.select(col("path")).distinct()
-      .select(col("path"), lit("add").as("action"))
-      .write.mode("overwrite").parquet(s"$logDir/v=0")
+    TxnProtocol.commit(logDir, 0, baseDf)
     val expected = baseDf.agg(count(lit(1)), sum(col("cents")))
       .collect().head
     val (nRows, totCents) = (expected.getLong(0), expected.getLong(1))
@@ -48,11 +49,8 @@ class ConcurrencySpec extends AnyFunSuite {
         .repartition(1)
         .write.mode("overwrite").parquet(epoch)
       val adds = spark.read.parquet(epoch)
-        .select(input_file_name().as("path")).distinct()
-        .select(col("path"), lit("add").as("action"))
-      val removes = mine.select(col("path")).distinct()
-        .select(col("path"), lit("remove").as("action"))
-      Prepared(removes, adds, readV = 0)
+        .select(input_file_name().as("path"))
+      Prepared(mine.select(col("path")), adds, readV = 0)
     }
     val pa = prepare("a", Seq(0, 1))
     val pb = prepare("b", Seq(2, 3))
@@ -68,8 +66,7 @@ class ConcurrencySpec extends AnyFunSuite {
         if (TxnProtocol.claim(logDir, v)) {
           assert(!TxnProtocol.removeConflicts(spark, logDir, p.readV, v - 1,
             p.removes), s"$tag rewrites disjoint buckets; rebase is safe")
-          p.removes.unionByName(p.adds)
-            .write.mode("overwrite").parquet(s"$logDir/v=$v")
+          TxnProtocol.commit(logDir, v, p.adds, Some(p.removes))
           claimedAt.put(tag, v)
           done = true
         } // lost the claim: loop re-reads latest and rebases
@@ -89,20 +86,14 @@ class ConcurrencySpec extends AnyFunSuite {
       "exactly one writer wins each version")
 
     // Snapshot(2): both rewrites visible, nothing lost, files = 2 epochs.
-    val log = spark.read.option("basePath", logDir).parquet(logDir)
-      .select(col("path"), col("action"), col("v").cast("int").as("v"))
+    val log = TxnProtocol.log(spark, logDir)
     def snapshot(ver: Int): DataFrame = {
-      val adds = log.filter(col("v") <= ver && col("action") === "add")
-        .select(col("path"))
-      val removes = log.filter(col("v") <= ver && col("action") === "remove")
-        .select(col("path"))
-      val live = adds.join(removes, Seq("path"), "left_anti")
       val all = baseDf.select(col("c_custkey"), col("cents"), col("path"))
         .unionByName(Seq("a", "b").map { t =>
           spark.read.parquet(s"$root/epoch_$t")
             .withColumn("path", input_file_name())
         }.reduce(_ unionByName _))
-      all.join(live, Seq("path"), "left_semi")
+      all.join(TxnProtocol.live(log, ver), Seq("path"), "left_semi")
     }
     val s2 = snapshot(2).agg(count(lit(1)), sum(col("cents")),
       countDistinct(col("path"))).collect().head
@@ -126,5 +117,43 @@ class ConcurrencySpec extends AnyFunSuite {
     // Abort = roll back the empty claim; the log is unchanged for readers.
     Files.delete(Paths.get(logDir, s"v=$v3"))
     assert(TxnProtocol.latest(logDir) == 2)
+  }
+
+  test("four threads build the cached lakes of a fresh fixture dir: results equal a serial run") {
+    // layout_mv_rewrite is left out: it installs an optimizer rule on the
+    // shared session, which is not a per-query effect.
+    val names = Seq("layout_history", "src_binary_files", "sink_partitioned",
+      "layout_stats_skipping")
+    def run(sf: String, q: String): Seq[Row] =
+      SparkEntry.queries(q)(spark, sf).collect().toSeq
+    val serial = names.map(q => q -> run(TestSpark.sf, q)).toMap
+    // A copy of the fixtures is a new fixture dir, so every lake of these
+    // queries is built for the first time below.
+    val sf = Files.createTempDirectory("graft_sfcopy_")
+    Files.list(Paths.get(TestSpark.sf)).iterator().asScala
+      .foreach(f => Files.copy(f, sf.resolve(f.getFileName)))
+    val start = new CountDownLatch(4)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val got = new java.util.concurrent.ConcurrentHashMap[(Int, String), Seq[Row]]()
+    val threads = (0 until 4).map { t =>
+      new Thread(() =>
+        try {
+          start.countDown(); start.await()
+          names.foreach(q => got.put((t, q), run(sf.toString, q)))
+        } catch { case e: Throwable => failure.compareAndSet(null, e); () })
+    }
+    try {
+      threads.foreach(_.start()); threads.foreach(_.join(600000))
+      if (failure.get() != null) throw failure.get()
+      for (t <- 0 until 4; q <- names) {
+        val rows = got.get((t, q))
+        assert(rows != null, s"thread $t never finished $q")
+        assert(rows == serial(q), s"thread $t: $q differs from the serial run")
+      }
+    } finally {
+      val lakes = Seq("hist_lake", "hist_log", "binfiles", "part_orders", "stats_lake")
+      (sf.toString +: lakes.map(Scratch.lakeDir(_, sf.toString))).foreach(d =>
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+    }
   }
 }
