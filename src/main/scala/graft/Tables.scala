@@ -3,7 +3,9 @@ package graft
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
@@ -97,4 +99,30 @@ object Tables {
     }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
+
+  private val fixtures = Set("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Runs SQL `text` over the fixture tables of `d` without registering
+    * anything in the session: each single-part relation that names a
+    * fixture table (in the query, its subquery expressions and its CTE
+    * bodies) is bound in the parsed plan to that table's loader — `events`
+    * to [[events]], the rest to [[table]]. A caller's temp view of the same
+    * name is neither read nor replaced, so two calls on different fixture
+    * dirs can run at once in one session. Each table loads once per call;
+    * a second reference gets fresh attribute ids from the analyzer, as a
+    * view read twice does. A CTE must not be named like a fixture table. */
+  def sql(s: SparkSession, d: String, text: String): DataFrame = {
+    val loaded = scala.collection.mutable.Map.empty[String, LogicalPlan]
+    def load(n: String): LogicalPlan = loaded.getOrElseUpdate(n,
+      GraftBridge.analyzed(if (n == "events") events(s, d) else table(s, d, n)))
+    // transformUpWithSubqueries does not enter UnresolvedWith.cteRelations.
+    def bind(p: LogicalPlan): LogicalPlan = p.transformUpWithSubqueries {
+      case UnresolvedRelation(Seq(n), _, _) if fixtures(n) => SubqueryAlias(n, load(n))
+      case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
+        case (n, body, depth) => (n, bind(body).asInstanceOf[SubqueryAlias], depth)
+      })
+    }
+    GraftBridge.ofRows(s, bind(s.sessionState.sqlParser.parsePlan(text)))
+  }
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftBridge.{column, expr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -180,15 +180,16 @@ case class WinnowingFingerprint(child: Expression, k: Int, w: Int)
     copy(child = newChild)
 }
 
+/** Column-level API for the text kernels (SQL names: [[GraftFunctions.all]]). */
 object TextFunctions {
   /** Same as [[GraftFunctions.register]]: registers every graft function
-    * the session does not already resolve. */
+    * the session does not already resolve, for SQL text. */
   def register(spark: SparkSession): Unit = GraftFunctions.register(spark)
 
-  def shingles2(c: Column): Column = call_function("graft_shingles2", c)
-  def shingles3(c: Column): Column = call_function("graft_shingles3", c)
-  def minhash32(c: Column): Column = call_function("graft_minhash32", c)
-  def winnow(c: Column): Column = call_function("graft_winnow", c)
+  def shingles2(c: Column): Column = column(ShingleHashSet(expr(c), 2))
+  def shingles3(c: Column): Column = column(ShingleHashSet(expr(c), 3))
+  def minhash32(c: Column): Column = column(MinHashSignature(expr(c), 32))
+  def winnow(c: Column): Column = column(WinnowingFingerprint(expr(c), 8, 4))
   /** 16-band LSH row generator (UDTF) over a 32-hash MinHash signature. */
-  def minhashBands(c: Column): Column = call_function("graft_minhash_bands", c)
+  def minhashBands(c: Column): Column = column(MinHashBands(expr(c), 16))
 }

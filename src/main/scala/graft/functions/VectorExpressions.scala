@@ -1,13 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftBridge.{column, expr}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
 /** Codegen'd dot product over two `array<float>` columns, accumulating in
@@ -173,13 +173,15 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session-scoped registration + Column-level API for graft expressions. */
+/** Column-level API and SQL registration for graft expressions. */
 object GraftFunctions {
   private def fn(name: String, usage: String, builder: FunctionBuilder) =
     (FunctionIdentifier(name), new ExpressionInfo("graft", null, name, usage, ""), builder)
 
-  /** Every graft SQL function. [[graft.plans.GraftExtensions]] injects them
-    * when a session is built; `register` adds them to a running session. */
+  /** Every graft SQL function, for SQL text that names `graft_*`.
+    * [[graft.plans.GraftExtensions]] injects them when a session is built;
+    * `register` adds them to a running session. The Column API below
+    * builds the same expressions directly and needs neither. */
   val all: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
     fn("graft_dot", "codegen float-array dot product",
       es => FloatDotProduct(es(0), es(1))),
@@ -200,9 +202,8 @@ object GraftFunctions {
   )
 
   /** Registers each of [[all]] that the session does not already resolve
-    * (check-before-add), so a builder may call `register` once per query
-    * build: re-registering would replace the function and log a warning
-    * each time. */
+    * (check-before-add: re-registering would replace the function and log
+    * a warning each time). Needed only for SQL text naming `graft_*`. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     all.foreach { case (id, info, builder) =>
@@ -210,10 +211,10 @@ object GraftFunctions {
     }
   }
 
-  /** Codegen'd float-array dot product (requires `register(spark)`). */
-  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  /** Codegen'd float-array dot product. */
+  def dot(a: Column, b: Column): Column = column(FloatDotProduct(expr(a), expr(b)))
 
-  /** Codegen'd sorted-array intersection count (requires `register`). */
+  /** Codegen'd sorted-array intersection count. */
   def sortedIntersect(a: Column, b: Column): Column =
-    call_function("graft_sorted_intersect", a, b)
+    column(SortedLongIntersectCount(expr(a), expr(b)))
 }

@@ -441,33 +441,17 @@ object Joins extends QueryModule {
     * broadcasts fine. The final join runs exactly (shuffle_hash hint so
     * the plan doesn't quietly broadcast), so Bloom false positives cannot
     * leak into the answer — the oracle is the PLAIN filtered join, which
-    * proves the reduction lossless. The k positions are the four disjoint
-    * 8-hex-digit md5 slices (portable to the SQL oracle, FPs included). */
+    * proves the reduction lossless. The bit layout is [[Md5Bloom]]'s
+    * (portable to the SQL oracle, FPs included). */
   def bloomReduceJoin(s: SparkSession, d: String): DataFrame = {
     val mBits = 16384L // 256 longs; size ~10 bits/key in production
-    def pos(key: Column, j: Int): Column =
-      conv(substring(md5(key.cast("string")), 1 + 8 * j, 8), 16, 10)
-        .cast("long") % mBits
+    def digest(key: String): Column = md5(col(key).cast("string"))
     val dim = Tables.customer(s, d)
       .filter(col("c_mktsegment") === "BUILDING")
       .select(col("c_custkey"), col("c_nationkey"))
-    val bloom = dim
-      .select(explode(array((0 to 3).map(pos(col("c_custkey"), _)): _*)).as("p"))
-      .select(expr("p div 64").as("word"), (col("p") % 64).as("bit"))
-      .groupBy(col("word"))
-      .agg(bit_or(expr("shiftleft(1L, CAST(bit AS INT))")).as("mask"))
-      .agg(map_from_entries(collect_list(struct(col("word"), col("mask"))))
-        .as("mm"))
-      .select(transform(sequence(lit(0L), lit(255L)),
-        w => coalesce(element_at(col("mm"), w), lit(0L))).as("bloom"))
-    def hit(j: Int): Column = expr(
-      s"(element_at(bloom, CAST(p$j div 64 AS INT) + 1)" +
-        s" & shiftleft(1L, CAST(p$j % 64 AS INT))) != 0")
-    val probed = (0 to 3)
-      .foldLeft(Tables.orders(s, d).crossJoin(broadcast(bloom))) {
-        (df, j) => df.withColumn(s"p$j", pos(col("o_custkey"), j))
-      }
-      .filter((0 to 3).map(hit).reduce(_ && _))
+    val bloom = Md5Bloom.pack(Md5Bloom.words(dim, digest("c_custkey"), mBits), mBits)
+    val probed = Md5Bloom.probe(Tables.orders(s, d), bloom, digest("o_custkey"), mBits)
+      .filter(Md5Bloom.hit)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
     probed.join(dim.hint("shuffle_hash"), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_nationkey"))

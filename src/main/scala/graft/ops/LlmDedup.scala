@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Query, QueryModule, Scratch, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines (SURVEY.md §2.11):
@@ -96,8 +96,6 @@ object LlmDedup extends QueryModule {
     * quadratic pair space is never formed: explode is linear, the join is
     * per-bucket, and verification touches candidates only. */
   private[graft] def lshVerifiedPairs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    graft.functions.TextFunctions.register(s)
     // Whole tokenize→shingle→hash pipeline runs as ONE per-row kernel
     // (graft_shingles3), the 32-function signature as another
     // (graft_minhash32) — interpreted per-element HOF lambdas were the
@@ -181,8 +179,6 @@ object LlmDedup extends QueryModule {
     * identical to the string-set sizes barring a 64-bit hash collision
     * inside one document pair (~2⁻⁶⁴·|A|·|B| — negligible). */
   def ngramJaccardPairs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    graft.functions.TextFunctions.register(s)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("source"),
         graft.functions.TextFunctions.shingles2(col("text")).as("bg"))
@@ -215,8 +211,6 @@ object LlmDedup extends QueryModule {
     * (the documented knob); the sweep itself is a 10× explode of the
     * already-reduced pair table. */
   def thresholdSweep(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    graft.functions.TextFunctions.register(s)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("source"),
         graft.functions.TextFunctions.shingles2(col("text")).as("bg"))
@@ -297,30 +291,15 @@ object LlmDedup extends QueryModule {
     * fixpoint (min reachable id per node), so a DuckDB recursive-CTE
     * oracle converges to the identical labeling.
     *
-    * NOT safe under concurrent jobs on the same session: superseded
-    * checkpoint rounds are identified by diffing global
-    * `sc.getPersistentRDDs` snapshots, so a concurrently-running job's
-    * `localCheckpoint` RDDs could be captured in a round's diff and
-    * unpersisted (unrecoverable — checkpoint lineage is cut). Verify/Bench
-    * run queries strictly sequentially; a multi-threaded caller must
-    * serialize calls into this method.
-    *
     * @param edges (a_id, b_id) pairs; vertices are the ids that appear
     * @return (doc_id, cluster_id = min reachable doc_id) */
   private[graft] def connectedComponents(edges0: DataFrame): DataFrame = {
-    val sc = edges0.sparkSession.sparkContext
-    // Each round's localCheckpoint persists an RDD below the Dataset cache;
+    // Each round's localCheckpoint pins an RDD below the Dataset cache;
     // once round N is materialized, round N-1's blocks are dead (the
-    // lineage is cut). Track the RDD ids each checkpoint adds so superseded
-    // rounds release eagerly — peak cached footprint stays at one labeling
-    // (plus the edge list) instead of one per round.
-    def persistedIds(): Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    def release(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id)
-        .foreach(_.unpersist(blocking = false)))
-    val preEdges = persistedIds()
+    // lineage is cut), so superseded rounds are released eagerly through
+    // their own handle — peak cached footprint stays at one labeling (plus
+    // the edge list) instead of one per round.
     val edges = edges0.localCheckpoint()   // eager: edge generation runs exactly once
-    val edgeIds = persistedIds() -- preEdges
     val sym = edges.unionByName(
       edges.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
     // Fused round 0: labels start at min(self, neighbors) — one groupBy
@@ -333,7 +312,7 @@ object LlmDedup extends QueryModule {
       .agg(least(min(col("nbr")), col("id")).as("label"))
     var converged = false
     var rounds = 0
-    var prevRoundIds: Set[Int] = Set.empty
+    var prevRound: Option[DataFrame] = None
     while (!converged && rounds < 25) {
       val nbr = sym.join(labels, sym("b_id") === labels("id"))
         .groupBy(col("a_id")).agg(min(col("label")).as("nbr_min"))
@@ -349,19 +328,17 @@ object LlmDedup extends QueryModule {
       // without it the plan nests deeper per round and heap/analysis cost
       // grows superlinearly; the old label rides along so convergence is
       // read off the same materialized result (no extra join per round).
-      val preRound = persistedIds()
       val next = stepped.join(parents, stepped("label") === parents("p_id"), "left")
         .select(stepped("id"), col("old"),
           coalesce(col("p_label"), col("label")).as("label"))
         .localCheckpoint()
-      val roundIds = persistedIds() -- preRound
       converged = next.filter(col("label") =!= col("old")).isEmpty
-      release(prevRoundIds)               // round N-1 superseded by round N
-      prevRoundIds = roundIds
+      prevRound.foreach(GraftBridge.releaseCheckpoint)  // round N-1 superseded by round N
+      prevRound = Some(next)
       labels = next.drop("old")
       rounds += 1
     }
-    release(edgeIds)  // final labeling is checkpointed — edges no longer needed
+    GraftBridge.releaseCheckpoint(edges)  // final labeling is checkpointed — edges no longer needed
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
@@ -375,8 +352,6 @@ object LlmDedup extends QueryModule {
     * below any usable MinHash S-curve). The probabilistic sub-quadratic
     * pipeline at production thresholds is [[lshClusters]]. */
   def clusterComponents(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    graft.functions.TextFunctions.register(s)
     // Shingling (tokenize + hash + sort-distinct) is the per-doc CPU cost
     // and the plan reads `docs` three times (prefix explode + both verify
     // fetches); Catalyst has no common-subplan elimination across join
@@ -432,8 +407,6 @@ object LlmDedup extends QueryModule {
     * pair is caught iff any band collides, so no corpus-wide banding
     * join is ever needed for recall. */
   def lshRecall(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    graft.functions.TextFunctions.register(s)
     // Eligibility (≥3 tokens ⟺ ≥1 shingle) is decided on the cheap token
     // count; the expensive shingle arrays are built ONLY for the ≤64
     // docs/block that survive the sample cut.
@@ -536,26 +509,9 @@ object LlmDedup extends QueryModule {
       .select(col("doc_id"), md5(col("text")).as("h"))
     val existing = docs.filter(col("doc_id") % 5 =!= 0)
     val incoming = docs.filter(col("doc_id") % 5 === 0)
-    def pos(j: Int): Column =
-      conv(substring(col("h"), 1 + 8 * j, 8), 16, 10).cast("long") % 4096
-    val bloom = existing
-      .select(explode(array((0 to 3).map(pos): _*)).as("p"))
-      .select(expr("p div 64").as("word"), (col("p") % 64).as("bit"))
-      .groupBy(col("word"))
-      .agg(bit_or(expr("shiftleft(1L, CAST(bit AS INT))")).as("mask"))
-      .agg(map_from_entries(collect_list(struct(col("word"), col("mask"))))
-        .as("m"))
-      .select(transform(sequence(lit(0L), lit(63L)),
-        w => coalesce(element_at(col("m"), w), lit(0L))).as("bloom"))
-    def hit(j: Int): Column = expr(
-      s"(element_at(bloom, CAST(p$j div 64 AS INT) + 1)" +
-        s" & shiftleft(1L, CAST(p$j % 64 AS INT))) != 0")
-    val probed = (0 to 3)
-      .foldLeft(incoming.crossJoin(broadcast(bloom))) {
-        (df, j) => df.withColumn(s"p$j", pos(j))
-      }
-      .withColumn("maybe_seen",
-        (0 to 3).map(hit).reduce(_ && _).cast("int"))
+    val bloom = Md5Bloom.pack(Md5Bloom.words(existing, col("h"), 4096), 4096)
+    val probed = Md5Bloom.probe(incoming, bloom, col("h"), 4096)
+      .withColumn("maybe_seen", Md5Bloom.hit.cast("int"))
       .select(col("doc_id"), col("h"), col("maybe_seen"))
     val seen = existing.select(col("h")).distinct().withColumn("dup_hit", lit(1))
     val verified = probed.filter(col("maybe_seen") === 1)
@@ -602,13 +558,7 @@ object LlmDedup extends QueryModule {
       .select(col("doc_id"), md5(col("text")).as("h"))
     val existing = docs.filter(col("doc_id") % 5 =!= 0)
     val incoming = docs.filter(col("doc_id") % 5 === 0)
-    def pos(j: Int): Column =
-      conv(substring(col("h"), 1 + 8 * j, 8), 16, 10).cast("long") % 4096
-    def bloomWords(df: DataFrame): DataFrame = df
-      .select(explode(array((0 to 3).map(pos): _*)).as("p"))
-      .select(expr("p div 64").as("word"), (col("p") % 64).as("bit"))
-      .groupBy(col("word"))
-      .agg(bit_or(expr("shiftleft(1L, CAST(bit AS INT))")).as("mask"))
+    def bloomWords(df: DataFrame): DataFrame = Md5Bloom.words(df, col("h"), 4096)
     // Run 1: persist the mergeable state artifact.
     bloomWords(existing).write.mode("overwrite").parquet(s"$stateDir/bloom")
     existing.select(col("h")).distinct()
@@ -616,20 +566,8 @@ object LlmDedup extends QueryModule {
     // Run 2: everything below reads only the artifact + the new batch.
     val loadedWords = s.read.parquet(s"$stateDir/bloom")
     val loadedKeys = s.read.parquet(s"$stateDir/keys")
-    val bloom = loadedWords
-      .agg(map_from_entries(collect_list(struct(col("word"), col("mask"))))
-        .as("m"))
-      .select(transform(sequence(lit(0L), lit(63L)),
-        w => coalesce(element_at(col("m"), w), lit(0L))).as("bloom"))
-    def hit(j: Int): Column = expr(
-      s"(element_at(bloom, CAST(p$j div 64 AS INT) + 1)" +
-        s" & shiftleft(1L, CAST(p$j % 64 AS INT))) != 0")
-    val probed = (0 to 3)
-      .foldLeft(incoming.crossJoin(broadcast(bloom))) {
-        (df, j) => df.withColumn(s"p$j", pos(j))
-      }
-      .withColumn("maybe_seen",
-        (0 to 3).map(hit).reduce(_ && _).cast("int"))
+    val probed = Md5Bloom.probe(incoming, Md5Bloom.pack(loadedWords, 4096), col("h"), 4096)
+      .withColumn("maybe_seen", Md5Bloom.hit.cast("int"))
       .select(col("doc_id"), col("h"), col("maybe_seen"))
     // Roll the state forward for the next run: OR-merge the bloom words,
     // union the key store.
@@ -1090,4 +1028,43 @@ object LlmDedup extends QueryModule {
          |ORDER BY t""".stripMargin
     }),
   )
+}
+
+/** The Bloom layout shared by `join_bloom_reduce`, `dd_bloom_incremental`
+  * and `dd_bloom_state`: each key sets k=4 bits of an m-bit array, at the
+  * four disjoint 8-hex-digit slices of its md5 digest mod m (portable to
+  * the SQL oracles, false positives included); the bits OR-fold into
+  * 64-bit words. */
+private[graft] object Md5Bloom {
+  /** Bit position `j` (0..3) of the md5 hex digest `h`. */
+  def pos(h: Column, j: Int, mBits: Long): Column =
+    conv(substring(h, 1 + 8 * j, 8), 16, 10).cast("long") % mBits
+
+  /** (word, mask) rows: the bit_or of the keys' bits per 64-bit word —
+    * a partial+final aggregate, and mergeable across batches by another
+    * bit_or on `word`. */
+  def words(keys: DataFrame, h: Column, mBits: Long): DataFrame = keys
+    .select(explode(array((0 to 3).map(pos(h, _, mBits)): _*)).as("p"))
+    .select(expr("p div 64").as("word"), (col("p") % 64).as("bit"))
+    .groupBy(col("word"))
+    .agg(bit_or(expr("shiftleft(1L, CAST(bit AS INT))")).as("mask"))
+
+  /** ONE row holding `bloom`, the dense array of all mBits/64 words. */
+  def pack(words: DataFrame, mBits: Long): DataFrame = words
+    .agg(map_from_entries(collect_list(struct(col("word"), col("mask"))))
+      .as("m"))
+    .select(transform(sequence(lit(0L), lit(mBits / 64 - 1)),
+      w => coalesce(element_at(col("m"), w), lit(0L))).as("bloom"))
+
+  /** `df` crossed with the broadcast `bloom` row, plus the positions
+    * `p0`..`p3` of digest `h` — the columns [[hit]] reads. */
+  def probe(df: DataFrame, bloom: DataFrame, h: Column, mBits: Long): DataFrame =
+    (0 to 3).foldLeft(df.crossJoin(broadcast(bloom))) {
+      (acc, j) => acc.withColumn(s"p$j", pos(h, j, mBits))
+    }
+
+  /** All four probed bits are set: the key may be present. */
+  def hit: Column = (0 to 3).map(j => expr(
+    s"(element_at(bloom, CAST(p$j div 64 AS INT) + 1)" +
+      s" & shiftleft(1L, CAST(p$j % 64 AS INT))) != 0")).reduce(_ && _)
 }

@@ -43,7 +43,6 @@ object LlmSimilarity extends QueryModule {
     * Norms are computed once per side BEFORE the join (same float ops, so
     * scores are unchanged — just not recomputed per pair). */
   def cosineTopK(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -86,7 +85,6 @@ object LlmSimilarity extends QueryModule {
     * all (a < b) sample pairs — the exact brute-force baseline the ANN
     * arms are measured against. ≤ EvalN² pairs by construction. */
   def topPairs(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = evalSample(Tables.embeddings(s, d))
     val a = e
       .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
@@ -310,7 +308,6 @@ object LlmSimilarity extends QueryModule {
 
   /** Vector norms + self-similarity sanity — map-only battery. */
   def norms(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"),
         sqrt(dotd(col("embedding"), col("embedding"))).as("l2_norm"),
@@ -335,7 +332,6 @@ object LlmSimilarity extends QueryModule {
     * the corpus is never shuffled for its assignment. The nprobe=2 probe
     * side keeps the rank window — the query set is small by definition. */
   def ivfTopK(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(s, d)
     val cent = e.filter(col("vec_id") < 8)
@@ -396,7 +392,6 @@ object LlmSimilarity extends QueryModule {
     * that re-scan is two cheap map passes, while the within-cell pair
     * join dominates — at scale you would checkpoint the assignment. */
   def semDedup(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val cent = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("c_emb"))
@@ -478,7 +473,6 @@ object LlmSimilarity extends QueryModule {
     * DuckDB derives identical buckets, and both branches compute the
     * identical IEEE score, so the distinct-union dedups exactly. */
   def embeddingNearDupAnn(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val sig = srpSignatures(s, d)
     def tableJoin(bucket: String): DataFrame = {
       val a = sig.select(col(bucket).as("bkt"), col("vec_id").as("keep_id"),
@@ -506,7 +500,6 @@ object LlmSimilarity extends QueryModule {
     * ≤ EvalN² work in code at ANY corpus size, never corpus × corpus;
     * signatures ride along in the same sampled scan, so no second pass. */
   def annRecall(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val sig = srpSignaturesOf(evalSample(Tables.embeddings(s, d)))
     val a = sig.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"),
       col("nrm").as("a_norm"), col("bucket0").as("a_b0"), col("bucket1").as("a_b1"))
@@ -541,7 +534,6 @@ object LlmSimilarity extends QueryModule {
     * O(m × k) per query: scoring never touches raw vectors. Scores sum via
     * sorted fold → bit-identical to the DuckDB twin. */
   def pqTopK(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val m = 4; val w = 16
     val e = Tables.embeddings(s, d)
@@ -594,7 +586,6 @@ object LlmSimilarity extends QueryModule {
     * from k-means ([[kmeans]]) instead of data seeds. Residual sums fold
     * value-sorted so the doubles are engine-identical. */
   def ivfPqTopK(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("emb"))
     val cells = e.filter(col("vec_id") < 4)
@@ -708,7 +699,6 @@ object LlmSimilarity extends QueryModule {
     * query sets is the LSH/IVF bucketing above — same contract, bucketed
     * candidates instead of the full corpus. */
   def rangeSearch(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < 3)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -751,7 +741,6 @@ object LlmSimilarity extends QueryModule {
     * is Σ|bucket|² per table, and bucket width (planes per table) is the
     * knob that holds |bucket| bounded as the corpus grows. */
   def knnGraph(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val sig = srpSignatures(s, d)
     def tableJoin(bucket: String): DataFrame = {
       val a = sig.select(col(bucket).as("bkt"), col("vec_id"),
@@ -785,7 +774,6 @@ object LlmSimilarity extends QueryModule {
     * joins are keyed, never all-pairs; recall lift over the SRP-only graph
     * is measured by [[knnRecall]]. */
   def knnDescent(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     // Lazy checkpoints: the SRP bucket-join graph feeds both the forward
     // and reverse edge sets, and the adjacency self-joins — materialize
@@ -837,7 +825,6 @@ object LlmSimilarity extends QueryModule {
     * sf0.001 the % 7 subset is 72 nodes, so the 64-cap already selects a
     * strict subset — the bound is proven engaged at every fixture. */
   def knnRecall(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(s, d).select(col("vec_id"),
       col("embedding"), sqrt(dotd(col("embedding"), col("embedding"))).as("nrm"))
@@ -891,7 +878,6 @@ object LlmSimilarity extends QueryModule {
     * SQL-expressible; pinned against an independent reference
     * implementation in Round8Spec. */
   def mmrRerank(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") % 251 === 0)
@@ -926,7 +912,6 @@ object LlmSimilarity extends QueryModule {
     * stage-2 window is over 20 rows per query. Both stages' folds are
     * sequential and shared with the oracle, so scores are bit-exact. */
   def matryoshkaTopK(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") % 211 === 0)

@@ -169,7 +169,6 @@ object LlmText extends QueryModule {
     * Rows-only (rolling-hash selection isn't reasonably expressible in the
     * SQL oracle); semantics pinned in LlmSpec (identity, shift-robustness). */
   def winnowFingerprint(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TextFunctions.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         graft.functions.TextFunctions.winnow(col("text")).as("fps"))
@@ -770,7 +769,6 @@ object LlmText extends QueryModule {
     * common query term. */
   def hybridRrf(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val lex = bm25Scores(s, d)
       .filter(col("doc_id") =!= 0)
       .orderBy(col("bm25").desc, col("doc_id"))

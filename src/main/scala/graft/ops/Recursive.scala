@@ -21,17 +21,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Recursive extends QueryModule {
 
-  private def views(s: SparkSession, d: String, ts: String*): Unit =
-    ts.foreach(t => Tables.table(s, d, t).createOrReplaceTempView(t))
-
   /** Recursive date spine (1995 Q1, 90 iterations of a 1-row-per-day
     * frontier) LEFT-joined to per-day order counts. Orders aggregate to ≤
     * one row per day BEFORE the join, so the join input is tiny on both
     * sides and broadcastable regardless of fact scale. Money in integer
     * cents (exact on both engines). */
-  def recursiveSeries(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "orders")
-    s.sql(
+  def recursiveSeries(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """WITH RECURSIVE spine(day) AS (
         |  SELECT DATE '1995-01-01'
         |  UNION ALL
@@ -49,15 +45,13 @@ object Recursive extends QueryModule {
         |  COALESCE(daily.cents, 0) AS total_cents
         |FROM spine LEFT JOIN daily ON daily.od = spine.day
         |ORDER BY day""".stripMargin)
-  }
 
   /** Recursive key-chain walk: parent(k) = k div 10, root 0 — an org-chart /
     * BOM-style closure with frontier = live customers per level and depth
     * bounded by log10(max key) (≈6 at any sf; the frontier only shrinks as
     * keys reach 0). Aggregates the whole path per starting customer. */
-  def recursiveChain(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "customer")
-    s.sql(
+  def recursiveChain(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """WITH RECURSIVE chain(c_custkey, node, depth) AS (
         |  SELECT c_custkey, c_custkey, 0 FROM customer
         |  UNION ALL
@@ -66,7 +60,6 @@ object Recursive extends QueryModule {
         |SELECT c_custkey, MAX(depth) AS depth_to_root,
         |  CAST(SUM(node) AS BIGINT) AS path_sum
         |FROM chain GROUP BY c_custkey ORDER BY c_custkey""".stripMargin)
-  }
 
   /** LISTAGG with WITHIN GROUP ordering — deterministic order-sensitive
     * concatenation (DuckDB twin: `string_agg(... ORDER BY ...)`). The
@@ -74,15 +67,13 @@ object Recursive extends QueryModule {
     * concatenated value stays small at any corpus scale; an unbounded
     * LISTAGG is the same OOM shape as an unbounded collect_list and is the
     * documented anti-pattern. */
-  def listAgg(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "customer")
-    s.sql(
+  def listAgg(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT c_mktsegment,
         |  listagg(c_name, ',') WITHIN GROUP (ORDER BY c_name) AS names,
         |  COUNT(*) AS n
         |FROM customer WHERE c_custkey % 100 = 0
         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
-  }
 
   override def catalog: Seq[Query] = Seq(
     // DuckDB DATE + INTERVAL yields TIMESTAMP — cast back to DATE inside the

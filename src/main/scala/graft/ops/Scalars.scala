@@ -133,10 +133,8 @@ object Scalars extends QueryModule {
     * where the inner query references the outer row. Catalyst plans the
     * decorrelated form (rewritten to a window/join), so this stays one
     * shuffle at scale, not a per-row subquery execution. */
-  def sqlLateralTopN(s: SparkSession, d: String): DataFrame = {
-    Seq("customer", "orders")
-      .foreach(t => Tables.table(s, d, t).createOrReplaceTempView(t))
-    s.sql(
+  def sqlLateralTopN(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
         |FROM customer c,
         |LATERAL (
@@ -145,7 +143,6 @@ object Scalars extends QueryModule {
         |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) o
         |WHERE c.c_custkey <= 300
         |ORDER BY c.c_custkey, o.o_totalprice DESC, o.o_orderkey""".stripMargin)
-  }
 
   /** ANSI-safe `try_*` battery: errors become NULLs instead of runtime
     * failures — the behavior a 100-TB batch job needs (one malformed row
@@ -181,14 +178,12 @@ object Scalars extends QueryModule {
         variant_get(col("v"), "$.missing", "bigint").as("k_missing"))
       .orderBy(col("event_id"))
 
-  /** The SQL entry path (`spark.sql` over temp views) with a TPC-H Q5
+  /** The SQL entry path ([[Tables.sql]]) with a TPC-H Q5
     * shape — customer and supplier in the same nation, revenue per nation
     * in one region/year. Exercises Catalyst's SQL parser + join reorder on
     * a 6-table join. */
-  def sqlQ5Shape(s: SparkSession, d: String): DataFrame = {
-    Seq("customer", "orders", "lineitem", "supplier", "nation", "region")
-      .foreach(t => Tables.table(s, d, t).createOrReplaceTempView(t))
-    s.sql(
+  def sqlQ5Shape(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT n_name,
         |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,4))
         |    * CAST(1.0 - l_discount AS DECIMAL(8,4))) AS STRING) AS DOUBLE) AS revenue,
@@ -204,15 +199,12 @@ object Scalars extends QueryModule {
         |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
         |GROUP BY n_name
         |ORDER BY n_name""".stripMargin)
-  }
 
   /** Correlated scalar subquery through the SQL path — Catalyst's
     * RewriteCorrelatedScalarSubquery decorrelates it into a join, so the
     * executed plan is shuffle-join shaped, not nested-loop (SURVEY §4). */
-  def sqlCorrelatedSubquery(s: SparkSession, d: String): DataFrame = {
-    Seq("orders", "customer").foreach(t =>
-      Tables.table(s, d, t).createOrReplaceTempView(t))
-    s.sql(
+  def sqlCorrelatedSubquery(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT o_orderkey, o_custkey
         |FROM orders o
         |WHERE o_totalprice > 2 * (
@@ -220,7 +212,6 @@ object Scalars extends QueryModule {
         |       / COUNT(*)
         |  FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
         |ORDER BY o_orderkey""".stripMargin)
-  }
 
   /** Bitwise battery: AND/OR/XOR, shifts, popcount — the ops behind hash
     * mixing, bitmask flags, and bucket math (the Z-order key and SimHash
@@ -244,10 +235,8 @@ object Scalars extends QueryModule {
     * HAVING filter runs inside the aggregate (partial+final), so only
     * qualifying orderkeys (a tiny set) flow into the join; Catalyst
     * broadcasts them against orders. */
-  def sqlQ18Shape(s: SparkSession, d: String): DataFrame = {
-    Seq("customer", "orders", "lineitem")
-      .foreach(t => Tables.table(s, d, t).createOrReplaceTempView(t))
-    s.sql(
+  def sqlQ18Shape(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT c.c_custkey, o.o_orderkey, t.sum_qty
         |FROM (SELECT l_orderkey,
         |        CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS STRING)
@@ -257,22 +246,18 @@ object Scalars extends QueryModule {
         |JOIN orders o ON o.o_orderkey = t.l_orderkey
         |JOIN customer c ON c.c_custkey = o.o_custkey
         |ORDER BY o.o_orderkey""".stripMargin)
-  }
 
   /** Correlated NOT EXISTS (anti-join decorrelation): market segments of
     * customers who never placed a 400k+ order. Catalyst rewrites the
     * correlated subquery into a left-anti hash join — no per-row
     * subquery execution, one shuffle each side. */
-  def sqlExistsShape(s: SparkSession, d: String): DataFrame = {
-    Seq("customer", "orders")
-      .foreach(t => Tables.table(s, d, t).createOrReplaceTempView(t))
-    s.sql(
+  def sqlExistsShape(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT c_mktsegment, COUNT(*) AS n
         |FROM customer c
         |WHERE NOT EXISTS (SELECT 1 FROM orders o
         |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
-  }
 
   /** Regex battery: extract / extract-all / count / global replace /
     * match-test. Spark's regexp_replace is global by default; the DuckDB
@@ -296,10 +281,8 @@ object Scalars extends QueryModule {
     * rewrites the pair into a left-semi + left-anti hash join on
     * l_orderkey — the decorrelation stress test: two correlated predicates
     * referencing different outer tables, zero per-row subquery execution. */
-  def sqlQ21Shape(s: SparkSession, d: String): DataFrame = {
-    Seq("supplier", "lineitem", "orders")
-      .foreach(t => Tables.table(s, d, t).createOrReplaceTempView(t))
-    s.sql(
+  def sqlQ21Shape(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT s.s_name, COUNT(*) AS numwait
         |FROM supplier s
         |JOIN lineitem l1 ON l1.l_suppkey = s.s_suppkey
@@ -313,7 +296,6 @@ object Scalars extends QueryModule {
         |      AND l3.l_shipdate > o.o_orderdate + INTERVAL '60' DAY)
         |GROUP BY s.s_name
         |ORDER BY numwait DESC, s.s_name LIMIT 25""".stripMargin)
-  }
 
   /** TPC-H Q11 shape — groups whose aggregate exceeds a FRACTION of the
     * global total (scalar subquery in HAVING). The global total is one
@@ -321,9 +303,8 @@ object Scalars extends QueryModule {
     * groups qualify is exact integer arithmetic on both engines (a decimal
     * fraction-threshold would round differently at the boundary). The
     * emitted value is the exact-decimal sum. */
-  def sqlQ11Shape(s: SparkSession, d: String): DataFrame = {
-    Seq("lineitem").foreach(t => Tables.table(s, d, t).createOrReplaceTempView(t))
-    s.sql(
+  def sqlQ11Shape(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """WITH c AS (SELECT l_partkey,
         |    CAST(floor((l_extendedprice * 100.0) + 0.5) AS BIGINT) AS cents
         |  FROM lineitem),
@@ -335,7 +316,6 @@ object Scalars extends QueryModule {
         |GROUP BY l_partkey, t
         |HAVING (CAST(SUM(cents) AS BIGINT) * 1000) > t
         |ORDER BY part_value DESC, l_partkey""".stripMargin)
-  }
 
   /** URL parsing battery (`parse_url` — log/clickstream sanitation):
     * URLs are constructed from part columns ('#' in brand names swapped
@@ -387,27 +367,23 @@ object Scalars extends QueryModule {
     * Explicit IN values as always (never let pivot scan for distincts at
     * scale); empty cells are NULL in Spark's pivot, so the oracle wraps
     * its CASE-counts in NULLIF(.., 0). */
-  def sqlPivot(s: SparkSession, d: String): DataFrame = {
-    Tables.orders(s, d).createOrReplaceTempView("orders")
-    s.sql(
+  def sqlPivot(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT * FROM (SELECT o_orderpriority, o_orderstatus FROM orders)
         |PIVOT (COUNT(*) FOR o_orderstatus IN ('O' AS st_o, 'F' AS st_f, 'P' AS st_p))
         |ORDER BY o_orderpriority""".stripMargin)
-  }
 
   /** SQL UNPIVOT clause (parser twin of the DataFrame `agg_unpivot` melt):
     * wide part metrics → long (metric, val) rows. Spark's UNPIVOT excludes
     * NULL values by default — both source columns are non-null here, and
     * the oracle's UNION ALL form makes the equivalence explicit. */
-  def sqlUnpivot(s: SparkSession, d: String): DataFrame = {
-    Tables.part(s, d).createOrReplaceTempView("part")
-    s.sql(
+  def sqlUnpivot(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT p_partkey, metric, val FROM (
         |  SELECT p_partkey, CAST(p_size AS DOUBLE) AS size,
         |    p_retailprice AS price FROM part)
         |UNPIVOT (val FOR metric IN (size, price))
         |ORDER BY p_partkey, metric""".stripMargin)
-  }
 
   /** Named WINDOW clause (SQL parser surface) + the nth_value analytic:
     * one definition shared by several OVER references — rank on the
@@ -418,9 +394,8 @@ object Scalars extends QueryModule {
     * partitions grow with the corpus — inherent to the per-row analytic
     * output this syntax demo exists to show; the scalable order-statistic
     * forms are the bucket-localized agg_* twins. */
-  def sqlNamedWindow(s: SparkSession, d: String): DataFrame = {
-    Tables.orders(s, d).createOrReplaceTempView("orders")
-    s.sql(
+  def sqlNamedWindow(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT * FROM (
         |  SELECT o_orderpriority, o_orderkey,
         |    rank() OVER w1 AS rk,
@@ -436,7 +411,6 @@ object Scalars extends QueryModule {
         |           ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
         |) t WHERE rk <= 3
         |ORDER BY o_orderpriority, rk""".stripMargin)
-  }
 
   /** Time-interval RANGE frame: per-user rolling 1-hour event count and
     * spend — `RANGE BETWEEN INTERVAL '1' HOUR PRECEDING AND CURRENT ROW`
@@ -445,9 +419,8 @@ object Scalars extends QueryModule {
     * user (hash exchange on user_id); spend is summed in exact cents so
     * the frame's add order can't matter. Timestamps are emitted as epoch
     * micros per the portability rule. */
-  def sqlTimeRangeWindow(s: SparkSession, d: String): DataFrame = {
-    Tables.events(s, d).createOrReplaceTempView("events")
-    s.sql(
+  def sqlTimeRangeWindow(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT user_id, event_id, unix_micros(ts) AS us,
         |  COUNT(*) OVER w AS n_1h,
         |  SUM(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) OVER w AS cents_1h
@@ -455,7 +428,6 @@ object Scalars extends QueryModule {
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts
         |  RANGE BETWEEN INTERVAL '1' HOUR PRECEDING AND CURRENT ROW)
         |ORDER BY user_id, us, event_id""".stripMargin)
-  }
 
   /** GROUP BY ALL / ORDER BY ALL (modern SQL-parser surface, Spark 3.4+):
     * grouping keys inferred as every non-aggregate select item, ordering
@@ -463,16 +435,14 @@ object Scalars extends QueryModule {
     * increasingly assumes. The oracle spells both lists explicitly, so
     * the gate proves Spark's inference picks exactly the intended keys.
     * Money sums route through exact decimal (OracleSafe convention). */
-  def sqlGroupByAll(s: SparkSession, d: String): DataFrame = {
-    Tables.orders(s, d).createOrReplaceTempView("orders")
-    s.sql(
+  def sqlGroupByAll(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
         |  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS STRING)
         |    AS DOUBLE) AS total
         |FROM orders
         |GROUP BY ALL
         |ORDER BY ALL""".stripMargin)
-  }
 
   override def catalog: Seq[Query] = Seq(
     // Explicit key/order lists — equality proves Spark's ALL inference.

@@ -20,15 +20,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * bits. */
 object TpchShapes extends QueryModule {
 
-  private def views(s: SparkSession, d: String, ts: String*): Unit =
-    ts.foreach(t => Tables.table(s, d, t).createOrReplaceTempView(t))
-
   /** Q4 shape — order-priority checking: EXISTS(late line) decorrelates to
     * a left-semi hash join on l_orderkey; the date filter prunes orders
     * before the join. One shuffle each side, tiny output. */
-  def q4(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "orders", "lineitem")
-    s.sql(
+  def q4(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT o_orderpriority, COUNT(*) AS order_count
         |FROM orders o
         |WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -38,15 +34,13 @@ object TpchShapes extends QueryModule {
         |      AND l.l_shipdate > o.o_orderdate + INTERVAL '30' DAY)
         |GROUP BY o_orderpriority
         |ORDER BY o_orderpriority""".stripMargin)
-  }
 
   /** Q7 shape — volume shipping between two nations: the nation pair
     * predicate lands on two broadcast copies of `nation`; lineitem joins
     * orders/supplier on their keys (shuffle), then aggregates by
     * (supp_nation, cust_nation, year) — a handful of groups. */
-  def q7(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "supplier", "lineitem", "orders", "customer", "nation")
-    s.sql(
+  def q7(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT supp_nation, cust_nation, l_year,
         |  CAST(CAST(SUM(vol) AS STRING) AS DOUBLE) AS revenue,
         |  COUNT(*) AS n_lines
@@ -65,14 +59,12 @@ object TpchShapes extends QueryModule {
         |     OR (n1.n_name = 'NATION_11' AND n2.n_name = 'NATION_20')) t
         |GROUP BY supp_nation, cust_nation, l_year
         |ORDER BY supp_nation, cust_nation, l_year""".stripMargin)
-  }
 
   /** Q8 shape — market share of one supplier nation within a customer
     * region, per order year. Revenue in integer cents so the share is one
     * double division of exact BIGINTs (bit-identical across engines). */
-  def q8(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "lineitem", "orders", "customer", "supplier", "nation", "region")
-    s.sql(
+  def q8(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT o_year,
         |  CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN cents ELSE 0 END)
         |    AS BIGINT) AS nation_cents,
@@ -94,15 +86,13 @@ object TpchShapes extends QueryModule {
         |  WHERE r.r_name = 'ASIA') t
         |GROUP BY o_year
         |ORDER BY o_year""".stripMargin)
-  }
 
   /** Q10 shape — returned-item reporting: top-20 customers by revenue lost
     * to returns in one quarter. The HAVING-free aggregate shrinks to one
     * row per customer before the global top-20 (TakeOrderedAndProject —
     * no full sort). Decimal-exact revenue makes the cutoff deterministic. */
-  def q10(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "customer", "orders", "lineitem", "nation")
-    s.sql(
+  def q10(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT c.c_custkey, c.c_name, n.n_name,
         |  CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,4))
         |    * CAST(1.0 - l.l_discount AS DECIMAL(8,4))) AS STRING) AS DOUBLE)
@@ -118,14 +108,12 @@ object TpchShapes extends QueryModule {
         |ORDER BY SUM(CAST(l.l_extendedprice AS DECIMAL(12,4))
         |    * CAST(1.0 - l.l_discount AS DECIMAL(8,4))) DESC, c.c_custkey
         |LIMIT 20""".stripMargin)
-  }
 
   /** Q14 shape — promo revenue share in one month: single-row CASE-ratio
     * aggregate; cents + one double division as in Q8. The part join
     * broadcasts (dimension side). */
-  def q14(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "lineitem", "part")
-    s.sql(
+  def q14(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT
         |  CAST(SUM(CASE WHEN p_type = 'PROMO' THEN cents ELSE 0 END)
         |    AS BIGINT) AS promo_cents,
@@ -141,15 +129,13 @@ object TpchShapes extends QueryModule {
         |  JOIN part p ON p.p_partkey = l.l_partkey
         |  WHERE l.l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
         |    AND l.l_shipdate <  TIMESTAMP '1996-04-01 00:00:00') t""".stripMargin)
-  }
 
   /** Q17 shape — small-quantity-order revenue: correlated scalar AVG
     * subquery per part, decorrelated by Catalyst into an aggregate + join
     * on l_partkey. Quantities are integral doubles, so SUM/COUNT and the
     * 0.2× threshold are add-order-free and bit-identical. */
-  def q17(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "lineitem", "part")
-    s.sql(
+  def q17(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT p.p_brand,
         |  CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,4))) AS STRING)
         |    AS DOUBLE) / 7.0 AS avg_yearly,
@@ -162,14 +148,12 @@ object TpchShapes extends QueryModule {
         |    FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)
         |GROUP BY p.p_brand
         |ORDER BY p.p_brand""".stripMargin)
-  }
 
   /** Q19 shape — disjunctive band predicates (brand × size × quantity):
     * Catalyst pushes the OR-of-ANDs below the join and prunes part columns;
     * the surviving predicate set is a bitmap-style multi-range scan. */
-  def q19(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "lineitem", "part")
-    s.sql(
+  def q19(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT
         |  CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(12,4))
         |    * CAST(1.0 - l.l_discount AS DECIMAL(8,4))) AS STRING) AS DOUBLE)
@@ -183,7 +167,6 @@ object TpchShapes extends QueryModule {
         |        AND l.l_quantity BETWEEN 10 AND 20)
         |   OR (p.p_brand = 'Brand#4' AND p.p_size BETWEEN 1 AND 15
         |        AND l.l_quantity BETWEEN 20 AND 30)""".stripMargin)
-  }
 
   /** Q22 shape — above-average balances with no high-value orders:
     * global-average scalar subquery (one broadcast row) + NOT EXISTS anti
@@ -192,9 +175,8 @@ object TpchShapes extends QueryModule {
     * orders — so the anti-join predicate is price-scoped instead, the same
     * 400k idiom as `sql_exists_shape`.) Balance math in integer cents; the
     * threshold is one double division of exact BIGINTs. */
-  def q22(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "customer", "orders")
-    s.sql(
+  def q22(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """WITH c AS (
         |  SELECT c_custkey, c_custkey % 7 AS cntrycode,
         |    CAST(floor(c_acctbal * 100.0 + 0.5) AS BIGINT) AS cents
@@ -209,7 +191,6 @@ object TpchShapes extends QueryModule {
         |    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
         |GROUP BY cntrycode
         |ORDER BY cntrycode""".stripMargin)
-  }
 
   /** Q2 shape — min-cost supplier. The fixture has no `partsupp`, so the
     * part-supplier cost relation is derived from lineitem: unit price =
@@ -219,10 +200,8 @@ object TpchShapes extends QueryModule {
     * MIN); Catalyst decorrelates the scalar subquery into an aggregate
     * joined on p_partkey, so the plan is two shuffles over the derived cost
     * table, never a per-row subquery. */
-  def q2(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "part", "supplier", "lineitem", "nation", "region")
-    s.sql(q2Sql)
-  }
+  def q2(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d, q2Sql)
 
   /** Q6 shape — forecasting revenue change: pure scan-filter-aggregate, no
     * join. The three pushed predicates (date range, discount band, quantity
@@ -230,10 +209,8 @@ object TpchShapes extends QueryModule {
     * single-row sum is bit-exact. The simplest query in the set — and the
     * one where pushdown matters most at 100 TB (row-group min/max skipping
     * does almost all the work). */
-  def q6(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "lineitem")
-    s.sql(q6Sql)
-  }
+  def q6(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d, q6Sql)
 
   /** Q9 shape — product-type profit by nation × year. No `partsupp`
     * supplycost either, so cost is proxied as 10% of `p_retailprice` (in
@@ -241,10 +218,8 @@ object TpchShapes extends QueryModule {
     * does not). lineitem shuffles once on each fact join key; part /
     * supplier / nation broadcast; profit = revenue_cents − cost_cents is
     * all-integer so SUM is add-order-free. */
-  def q9(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "lineitem", "supplier", "part", "orders", "nation")
-    s.sql(q9Sql)
-  }
+  def q9(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d, q9Sql)
 
   /** Q12 shape — shipping-mode priority counts. The fixture has no
     * l_shipmode/commitdate/receiptdate; l_linestatus stands in as the mode
@@ -252,29 +227,23 @@ object TpchShapes extends QueryModule {
     * The CASE-count pivot (high/low priority per group) is the point of
     * the shape: conditional aggregation after a fact-fact join, two output
     * rows. */
-  def q12(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "orders", "lineitem")
-    s.sql(q12Sql)
-  }
+  def q12(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d, q12Sql)
 
   /** Q13 shape — customer order-count distribution: LEFT OUTER join with
     * the filter in the JOIN CONDITION (not WHERE — customers with zero
     * qualifying orders must survive with c_count = 0), then a second
     * aggregate over the first. Two shuffles: o_custkey, then c_count. */
-  def q13(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "customer", "orders")
-    s.sql(q13Sql)
-  }
+  def q13(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d, q13Sql)
 
   /** Q15 shape — top supplier by quarterly revenue: the revenue CTE is an
     * aggregate view consumed twice (join + MAX scalar subquery). The MAX
     * side collapses to one broadcast row; integer cents make the
     * max-equality cut exact, so ties (if any) all surface — no
     * LIMIT-by-float nondeterminism. */
-  def q15(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "supplier", "lineitem")
-    s.sql(q15Sql)
-  }
+  def q15(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d, q15Sql)
 
   /** Q16 shape — supplier-count by part attribute with a NOT IN exclusion
     * list. The part-supplier relation is the DISTINCT (l_partkey,
@@ -282,10 +251,8 @@ object TpchShapes extends QueryModule {
     * over a non-nullable key plans as a null-aware anti join against a
     * broadcast exclusion set; COUNT(DISTINCT) adds the usual two-phase
     * expand — all linear in the pair table. */
-  def q16(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "part", "supplier", "lineitem")
-    s.sql(q16Sql)
-  }
+  def q16(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d, q16Sql)
 
   /** Q20 shape — dominant-supplier selection: IN over a grouped subquery
     * whose HAVING compares the group's own sum against a correlated
@@ -295,10 +262,8 @@ object TpchShapes extends QueryModule {
     * joined back on l_partkey, and the IN becomes a left-semi hash join —
     * three aggregates, zero per-row subqueries. Quantities are integral
     * doubles, so both sums and the 0.12× threshold are bit-exact. */
-  def q20(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "supplier", "nation", "lineitem", "part")
-    s.sql(q20Sql)
-  }
+  def q20(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d, q20Sql)
 
   /** The SQL for the round-7b shapes is engine-shared: every string below
     * is valid and value-identical in BOTH Spark SQL and DuckDB (integer
@@ -425,9 +390,8 @@ object TpchShapes extends QueryModule {
     * a semi join that emits a boolean instead of dropping rows — the third
     * decorrelation form after left-semi (Q4) and left-anti (Q22). One hash
     * join + one aggregate; no per-row subquery. */
-  def existsFlag(s: SparkSession, d: String): DataFrame = {
-    views(s, d, "customer", "orders")
-    s.sql(
+  def existsFlag(s: SparkSession, d: String): DataFrame =
+    Tables.sql(s, d,
       """SELECT c_mktsegment,
         |  CASE WHEN EXISTS (SELECT 1 FROM orders o
         |    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
@@ -439,7 +403,6 @@ object TpchShapes extends QueryModule {
         |    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
         |    THEN 1 ELSE 0 END
         |ORDER BY c_mktsegment, has_big_order""".stripMargin)
-  }
 
   override def catalog: Seq[Query] = Seq(
     Query("sql_q2_shape", q2, Some(q2Sql)),

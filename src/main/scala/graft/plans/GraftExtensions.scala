@@ -12,10 +12,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   *     (cluster-wide, no code change — the spark-submit path), or
   *   - code: `.withExtensions(new GraftExtensions)` on the session builder.
   *
-  * The per-query `register(spark)` calls inside the operator modules stay
-  * as a self-contained fallback (temp-function registry), so queries also
-  * work on a vanilla session; with extensions installed the same names
-  * resolve session-wide without any per-query setup.
+  * The operator modules need neither: their Column API builds the same
+  * expressions directly. The `graft_*` names serve SQL text; on a session
+  * without the extensions, `GraftFunctions.register(spark)` adds them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -582,7 +582,8 @@ object Sources extends QueryModule {
     s.read.schema(schema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt")
-      .json(s"$dir/nation_*.json")
+      .option("pathGlobFilter", "nation_*.json")
+      .json(dir)
       .agg(count(lit(1)).as("n_rows"),
         sum(when(col("_corrupt").isNotNull, 1L).otherwise(0L)).cast("long")
           .as("n_corrupt"),

@@ -25,8 +25,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * pattern, overwrite-by-epoch, never append). */
 object StreamQueries extends QueryModule {
 
-  /** Unique sink names so re-runs in one JVM (Verify then Bench) never
-    * collide on the memory sink's temp view. */
+  /** Unique sink names: two drains running at once (or a drain beside
+    * another stream of the caller's) never collide on the memory sink's
+    * query name or its temp view, which [[drain]] drops once read. */
   private val seq = new java.util.concurrent.atomic.AtomicLong(0)
   private def sinkName(tag: String): String =
     s"graft_stream_${tag}_${seq.incrementAndGet()}"
@@ -42,46 +43,57 @@ object StreamQueries extends QueryModule {
       .parquet(d))
 
   /** Drain a streaming DataFrame into a memory sink and return the sink
-    * table (Complete for aggregates, Update for stateful emissions).
+    * table (Complete for aggregates, Update for stateful emissions). The
+    * returned DataFrame is analyzed before the sink's temp view is
+    * dropped, so it keeps reading the sink while the caller's session is
+    * left without the view.
     *
-    * CONSTRAINT (r14 advice): [[withStreamSizing]] disables
-    * noDataMicroBatches for every query drained through here, which is
-    * only safe because no registered stream has a WATERMARK-GATED FINAL
-    * EMISSION — Complete/Update sinks re-emit state each batch, and the
-    * Append-mode paths (dedup / interval join / score) emit on arrival.
-    * An Append-mode watermark-finalized aggregation drained through this
-    * helper would silently lose its final windows: route such a query
-    * through its own drain with empty batches enabled. */
+    * CONSTRAINT: [[streamSizing]] disables noDataMicroBatches for every
+    * query drained through here, which is only safe because no registered
+    * stream has a WATERMARK-GATED FINAL EMISSION — Complete/Update sinks
+    * re-emit state each batch, and the Append-mode paths (dedup / interval
+    * join / score) emit on arrival. An Append-mode watermark-finalized
+    * aggregation drained through this helper would silently lose its final
+    * windows: route such a query through its own drain with empty batches
+    * enabled. */
   private def drain(s: SparkSession, streamed: DataFrame, mode: OutputMode,
       tag: String): DataFrame = {
     val name = sinkName(tag)
     // Streaming conf (state partitions, no empty batches) applies from
     // start() — the engine snapshots the session conf when the query
     // starts — and is restored before the caller's batch tail runs.
-    withStreamSizing(s) {
+    withConf(s, streamSizing: _*) {
       val q = streamed.writeStream.outputMode(mode)
         .format("memory").queryName(name).start()
       q.processAllAvailable(); q.stop()
     }
-    s.table(name)
+    val sink = s.table(name)
+    s.catalog.dropTempView(name)
+    sink
   }
 
-  /** Stateful queries need the RocksDB state store; set it for the run and
-    * restore the previous provider after. */
-  private def withRocksDb[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  /** Sets `kvs` on the session for `body`, then puts back each key's
+    * explicit value, or unsets a key that had none (`getOption` would
+    * return the default, and setting that back would leave the key set).
+    * SINGLE-THREADED-DRIVER ASSUMPTION: this mutates session-wide conf, so
+    * a query planned on another thread of the same session during `body`
+    * sees these values too. */
+  private def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val explicit = s.conf.getAll
+    val prev = kvs.map { case (k, _) => k -> explicit.get(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
     try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
   }
 
-  /** Streaming-scoped execution sizing, applied around each streaming
-    * run and restored after (the [[withRocksDb]] pattern):
+  /** Stateful queries need the RocksDB state store. */
+  private val rocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Streaming-scoped execution sizing, applied around each streaming run:
     *
     *  - `spark.sql.shuffle.partitions` → the STATE partition count. A
     *    streaming query pins its state sharding per checkpoint at plan
@@ -109,27 +121,8 @@ object StreamQueries extends QueryModule {
     *    per-partition store opens/commits per query. Correctness is
     *    oracle-gated per query at every sf.
     */
-  private def withStreamSizing[T](s: SparkSession)(body: => T): T = {
-    // SINGLE-THREADED-DRIVER ASSUMPTION (r14 advice, matching withRocksDb):
-    // this mutates session-global conf with try/finally restore. Fine for
-    // the sequential Verify/Bench harness; a concurrent multi-query session
-    // would need a cloned session (s.newSession()) per streaming run so the
-    // 8-partition window can't leak into a concurrently planned query.
-    val pKey = "spark.sql.shuffle.partitions"
-    val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevP = s.conf.get(pKey)
-    val prevN = s.conf.getOption(nKey)
-    s.conf.set(pKey, "8")
-    s.conf.set(nKey, "false")
-    try body
-    finally {
-      s.conf.set(pKey, prevP)
-      prevN match {
-        case Some(v) => s.conf.set(nKey, v)
-        case None => s.conf.unset(nKey)
-      }
-    }
-  }
+  private val streamSizing = Seq("spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
 
   /** Streaming tumbling 1-hour window counts + exact value sums per event
     * type — the `readStream` twin of `ev_tumbling`, watermarked and run in
@@ -194,7 +187,7 @@ object StreamQueries extends QueryModule {
         col("v_ts") >= col("c_ts") - expr("INTERVAL 10 MINUTES") &&
         col("v_ts") <= col("c_ts"))
       .select(col("c_id"), col("v_id"))
-    withStreamSizing(s) {
+    withConf(s, streamSizing: _*) {
       val q = joined.writeStream.trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt)
         .foreachBatch { (df: DataFrame, epoch: Long) =>
@@ -215,7 +208,7 @@ object StreamQueries extends QueryModule {
     * so distinct-emissions → rank ≤ 3 reproduces the final state under ANY
     * micro-batching — that reduction is what makes an Update-mode stateful
     * stream ORACLE-GATABLE. */
-  def streamTopK(s: SparkSession, d: String): DataFrame = withRocksDb(s) {
+  def streamTopK(s: SparkSession, d: String): DataFrame = withConf(s, rocksDb) {
     import graft.functions.{TopK3, TopKEntry}
     import s.implicits._
     class TopKProcessor
@@ -255,7 +248,7 @@ object StreamQueries extends QueryModule {
     * under any batching. Within a micro-batch rows sort by (ts, event_id) —
     * the production contract is per-key ordered ingestion (Kafka keyed
     * partitions); the sort makes an arbitrary batch honor it. */
-  def streamMarkov(s: SparkSession, d: String): DataFrame = withRocksDb(s) {
+  def streamMarkov(s: SparkSession, d: String): DataFrame = withConf(s, rocksDb) {
     import s.implicits._
     class PairProcessor
         extends StatefulProcessor[Long, (Long, Long, Long, String), (String, String)] {
@@ -306,7 +299,7 @@ object StreamQueries extends QueryModule {
     val dataDir = s"$run/data"
     val logDir = s"$run/log"
     val ckpt = s"$run/ckpt"
-    withStreamSizing(s) {
+    withConf(s, streamSizing: _*) {
       val q = streamEvents(s, d)
         .select(col("event_id"), col("event_type"),
           floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))

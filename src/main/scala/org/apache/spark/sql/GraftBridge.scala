@@ -15,6 +15,15 @@ object GraftBridge {
 
   def expr(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** Unpersists the RDD a `localCheckpoint()` Dataset pinned: its analyzed
+    * plan is a `LogicalRDD` over exactly that RDD, so no other job's
+    * persisted RDDs are touched. */
+  def releaseCheckpoint(df: DataFrame): Unit = analyzed(df) match {
+    case r: execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+  }
+
   def addStrategy(spark: SparkSession,
       s: org.apache.spark.sql.execution.SparkStrategy): Unit = {
     val cs = spark.asInstanceOf[classic.SparkSession]

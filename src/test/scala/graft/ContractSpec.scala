@@ -112,13 +112,13 @@ class ContractSpec extends AnyFunSuite {
     * two sweeps keeps every assertion and halves the catalog executions. */
   private def sweep(parts: String): (Map[String, Seq[String]], Map[String, Long]) = {
     val gated = SparkEntry.oracleSql.keySet
-    val prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
+    val prior = sweepSession.conf.get("spark.sql.shuffle.partitions")
+    sweepSession.conf.set("spark.sql.shuffle.partitions", parts)
     try {
       val rows = Map.newBuilder[String, Seq[String]]
       val counts = Map.newBuilder[String, Long]
       SparkEntry.queries.foreach { case (name, fn) =>
-        val df = fn(spark, TestSpark.sf)
+        val df = fn(sweepSession, TestSpark.sf)
         if (gated(name)) {
           val r = df.collect().map(_.toString).toSeq
           rows += name -> r
@@ -126,10 +126,22 @@ class ContractSpec extends AnyFunSuite {
         } else counts += name -> df.count()
       }
       (rows.result(), counts.result())
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
+    } finally sweepSession.conf.set("spark.sql.shuffle.partitions", prior)
   }
-  private lazy val sweepAt1 = sweep("1")
+
+  /** The sweeps run on a session of their own, so what the catalog leaves
+    * in a session can be compared before and after: its temp views, its
+    * `graft_*` functions and its explicitly set conf. */
+  private lazy val sweepSession = spark.newSession()
+  private def sessionSnapshot(): (Seq[String], Seq[String], Map[String, String]) = (
+    sweepSession.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSeq.sorted,
+    sweepSession.catalog.listFunctions().collect().map(_.name)
+      .filter(_.startsWith("graft_")).toSeq.sorted,
+    sweepSession.conf.getAll)
+  private lazy val beforeSweeps = sessionSnapshot()
+  private lazy val sweepAt1 = { beforeSweeps; sweep("1") }
   private lazy val sweepAt7 = sweep("7")
+  private lazy val afterSweeps = { sweepAt1; sweepAt7; sessionSnapshot() }
 
   test("every query runs at sf0.001 and returns a deterministic row count") {
     val gated = SparkEntry.oracleSql.keySet
@@ -160,5 +172,16 @@ class ContractSpec extends AnyFunSuite {
     a.keys.foreach { k =>
       assert(a(k) == b(k), s"$k differs across shuffle partition counts")
     }
+  }
+
+  test("two catalog sweeps leave the session's temp views, graft functions and conf as found") {
+    // ROADMAP aim 3: a query leaves the caller's session as it found it.
+    val (views0, fns0, conf0) = beforeSweeps
+    val (views1, fns1, conf1) = afterSweeps
+    assert(views1 == views0, s"temp views left behind: ${views1.diff(views0)}")
+    assert(fns1 == fns0, s"functions left behind: ${fns1.diff(fns0)}")
+    val changed = (conf0.keySet ++ conf1.keySet).filter(k => conf0.get(k) != conf1.get(k))
+    assert(changed.isEmpty, "conf changed: " +
+      changed.toSeq.sorted.map(k => s"$k: ${conf0.get(k)} -> ${conf1.get(k)}").mkString(", "))
   }
 }

@@ -113,4 +113,25 @@ class TablesSpec extends AnyFunSuite {
       == micros)
     assert(StreamQueries.streamEvents(s, dir).schema("ts").dataType == TimestampType)
   }
+
+  test("Tables.sql binds fixtures in subqueries and CTE bodies, and leaves a same-named view alone") {
+    val s = spark.newSession()
+    s.range(3).toDF("o_custkey").createOrReplaceTempView("orders")
+    val viaSql = Tables.sql(s, TestSpark.sf,
+      """WITH t AS (SELECT o_custkey FROM orders)
+        |SELECT COUNT(*) FROM customer c
+        |WHERE EXISTS (SELECT 1 FROM t WHERE t.o_custkey = c.c_custkey)""".stripMargin)
+      .head().getLong(0)
+    val expected = Tables.customer(s, TestSpark.sf)
+      .join(Tables.orders(s, TestSpark.sf), col("c_custkey") === col("o_custkey"), "left_semi")
+      .count()
+    assert(viaSql == expected && expected > 3)
+    // A self-join gets distinct attribute ids: 25 nations, 5 per region.
+    assert(Tables.sql(s, TestSpark.sf,
+      "SELECT COUNT(*) FROM nation n1 JOIN nation n2 ON n1.n_regionkey = n2.n_regionkey")
+      .head().getLong(0) == 125L)
+    assert(s.table("orders").count() == 3L, "the caller's view was replaced")
+    assert(s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSeq
+      == Seq("orders"))
+  }
 }

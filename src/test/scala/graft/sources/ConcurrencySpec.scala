@@ -15,7 +15,9 @@ import scala.jdk.CollectionConverters._
   * commit-atomicity contract under CONTENTION — the single-writer path is
   * oracle-gated by layout_time_travel / layout_vacuum / layout_cdf. The
   * second test races the cached-lake builds ([[Scratch.lake]]) of four
-  * queries from four threads on one session. */
+  * queries from four threads on one session; the third runs SQL shapes on
+  * two fixture dirs, connected components and a graft kernel from four
+  * threads on one session. */
 class ConcurrencySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -155,5 +157,59 @@ class ConcurrencySpec extends AnyFunSuite {
       (sf.toString +: lakes.map(Scratch.lakeDir(_, sf.toString))).foreach(d =>
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
     }
+  }
+
+  test("four threads run SQL shapes on two fixture dirs, connected components and graft kernels: results equal a serial run") {
+    // The SQL shapes bind their fixture tables in the plan (no shared temp
+    // views to swap between dirs), connected components releases only its
+    // own checkpoints, and GraftFunctions.dot needs no registry write.
+    val sfB = s"${new java.io.File(TestSpark.sf).getParent}/sf0.01"
+    val sqlShapes = Seq("sql_q4_shape", "sql_q7_shape", "sql_lateral_topn",
+      "sql_recursive_chain")
+    val others = Seq("dd_lsh_clusters", "geo_density_clusters", "sim_cosine_topk")
+    // Thread t runs every query, rotated by t; SQL shape i reads sf0.001
+    // when i + t is even and sf0.01 otherwise, so at any moment threads
+    // read the same table names from different dirs.
+    def jobs(t: Int): Seq[(String, String)] = {
+      val all = sqlShapes.zipWithIndex.map { case (q, i) =>
+        q -> (if ((i + t) % 2 == 0) TestSpark.sf else sfB)
+      } ++ others.map(_ -> TestSpark.sf)
+      all.drop(t) ++ all.take(t)
+    }
+    def run(q: String, sf: String): Seq[Row] =
+      SparkEntry.queries(q)(spark, sf).collect().toSeq
+    val serial = (0 until 4).flatMap(jobs).distinct.map(j => j -> run(j._1, j._2)).toMap
+    val start = new CountDownLatch(4)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val got = new java.util.concurrent.ConcurrentHashMap[(Int, String, String), Seq[Row]]()
+    val threads = (0 until 4).map { t =>
+      new Thread(() =>
+        try {
+          start.countDown(); start.await()
+          jobs(t).foreach { case (q, sf) => got.put((t, q, sf), run(q, sf)) }
+        } catch { case e: Throwable => failure.compareAndSet(null, e); () })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join(600000))
+    if (failure.get() != null) throw failure.get()
+    for (t <- 0 until 4; (q, sf) <- jobs(t)) {
+      val rows = got.get((t, q, sf))
+      assert(rows != null, s"thread $t never finished $q at $sf")
+      assert(rows == serial((q, sf)), s"thread $t: $q at $sf differs from the serial run")
+    }
+  }
+
+  test("connected components leaves only its final labeling pinned") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L)).toDF("a_id", "b_id")
+    val labels = graft.ops.LlmDedup.connectedComponents(edges)
+    assert(labels.orderBy("doc_id").as[(Long, Long)].collect().toSeq ==
+      Seq(1L, 2L, 3L, 4L, 5L).map(_ -> 1L) ++ Seq(10L -> 10L, 11L -> 10L))
+    // The edge list and every superseded round were released through their
+    // own checkpoints; only the final labeling stays until CacheHygiene.clear.
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.size == 1, s"pinned RDDs left: $left")
+    left.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
   }
 }
