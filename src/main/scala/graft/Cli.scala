@@ -11,8 +11,9 @@ import org.apache.spark.sql.execution.FormattedMode
 
 /** Developer CLI over the query catalog, on the same [[Session]] config as
   * [[Bench]]:
-  *   - `time <sf> <reps> <query...>`: runs each query `reps` times and prints
-  *     its min and every run, then the total of the mins;
+  *   - `time <sf> <reps> <query...>`: runs each query `reps` times, every
+  *     row and column, and prints its min and every run, then the total of
+  *     the mins;
   *   - `profile <sf> <reps> <query...>`: the same loop, plus each run's
   *     completed stages (duration, tasks, shuffle read/write, input bytes),
   *     longest first;
@@ -77,7 +78,10 @@ object Cli {
       val times = (1 to cmd.reps).map { rep =>
         stages.synchronized { stages.clear() }
         val t0 = System.nanoTime()
-        val rows = fn(spark, cmd.sf).count()
+        // toRdd, not count(): count() plans an aggregate that prunes
+        // every column (and the final sort) it does not need, so it would
+        // time a cheaper query than the one Verify writes out
+        val rows = fn(spark, cmd.sf).queryExecution.toRdd.count()
         val t = (System.nanoTime() - t0) / 1e9
         CacheHygiene.clear(spark)
         if (cmd.profile) {

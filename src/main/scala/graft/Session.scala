@@ -11,7 +11,8 @@ object Session {
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
 
   /** `local[cpus]` with one shuffle partition per core, UTC session time,
-    * no UI, and log level WARN — except WindowExec's, at ERROR. */
+    * no UI, and log level WARN — except WindowExec's and
+    * MapPartitionsRDD's, at ERROR. */
   def local(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -37,9 +38,13 @@ object Session {
     // WindowExec warns on every plan of an unpartitioned window; each such
     // window in the catalog reads a bounded grid or a limit-cut input
     // (PlanAuditSpec), so the warning is routine noise in every run log.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    // MapPartitionsRDD warns on every unpersist of a local checkpoint
+    // (its lineage is truncated); CacheHygiene and the iterative operators
+    // release their checkpoints on purpose, so that warning is noise too.
+    Seq("org.apache.spark.sql.execution.window.WindowExec",
+        "org.apache.spark.rdd.MapPartitionsRDD").foreach(
+      org.apache.logging.log4j.core.config.Configurator.setLevel(_,
+        org.apache.logging.log4j.Level.ERROR))
     spark
   }
 }

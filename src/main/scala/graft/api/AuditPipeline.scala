@@ -2,44 +2,22 @@ package graft.api
 
 import graft.ops.{Aggs, Relational}
 import graft.pii.PiiQueries
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Data GOVERNANCE audits as a public, staged API — the fourth pipeline
-  * alongside [[DedupPipeline]]/[[CorpusPipeline]]/[[RetrievalPipeline]],
-  * bundling the checks a lake owner runs before certifying a dataset:
-  * referential integrity (`rel_ri_audit`), PII discovery
-  * (`pii_scan_report`), first-digit plausibility (`rel_benford`),
-  * distribution drift (`rel_psi_drift`), and categorical independence
-  * (`agg_chi_square`). Each stage returns the SAME DataFrame the gated
-  * query produces (PipelineSpec pins this), so the API inherits every
-  * oracle guarantee; `summary` folds them into one release-note verdict
-  * row per audit — the shape a CI gate consumes.
+/** Data GOVERNANCE audit rollup: the checks a lake owner runs before
+  * certifying a dataset, folded into one release-note verdict row per
+  * audit — the shape a CI gate consumes. The audits themselves are the
+  * oracle-gated queries: referential integrity (`rel_ri_audit`,
+  * [[Relational.riAudit]]), PII discovery (`pii_scan_report`,
+  * [[PiiQueries.scanReport]]), distribution drift (`rel_psi_drift`,
+  * [[Relational.psiDrift]]) and categorical independence
+  * (`agg_chi_square`, [[Aggs.chiSquare]]).
   *
-  * Scale census: every stage is an independent aggregate/anti-join over
+  * Scale census: every audit is an independent aggregate/anti-join over
   * its own table — a scheduler fans them out; `summary` touches only the
   * already-reduced audit outputs. */
-class AuditPipeline {
-
-  /** FK orphan report over the star schema. */
-  def referentialIntegrity(s: SparkSession, dir: String): DataFrame =
-    Relational.riAudit(s, dir)
-
-  /** Column-level PII detector hit rates. */
-  def piiScan(s: SparkSession, dir: String): DataFrame =
-    PiiQueries.scanReport(s, dir)
-
-  /** Benford first-digit deviation of order totals. */
-  def benford(s: SparkSession, dir: String): DataFrame =
-    Relational.benford(s, dir)
-
-  /** PSI drift of event values across half-month periods. */
-  def drift(s: SparkSession, dir: String): DataFrame =
-    Relational.psiDrift(s, dir)
-
-  /** Event-type × day-of-week independence. */
-  def independence(s: SparkSession, dir: String): DataFrame =
-    Aggs.chiSquare(s, dir)
+object AuditPipeline {
 
   /** One verdict row per audit: (audit, n_findings, worst, passed) —
     * the CI-gate rollup. Thresholds are the caller's policy; these
@@ -47,8 +25,8 @@ class AuditPipeline {
     * (the industry "significant shift" bar), and χ² per-cell
     * contributions ≥ 25. */
   def summary(s: SparkSession, dir: String): DataFrame = {
-    def row(name: String, findings: DataFrame, bad: org.apache.spark.sql.Column,
-        worst: org.apache.spark.sql.Column): DataFrame =
+    def row(name: String, findings: DataFrame, bad: Column,
+        worst: Column): DataFrame =
       findings.agg(
         // coalesce: an EMPTY audit table aggregates to NULL, which must
         // read as "0 findings, passed" (vacuously clean), not as a
@@ -60,13 +38,13 @@ class AuditPipeline {
           col("worst").cast("double").as("worst"),
           when(col("n_findings") === 0, 1).otherwise(0).cast("int")
             .as("passed"))
-    row("referential_integrity", referentialIntegrity(s, dir),
+    row("referential_integrity", Relational.riAudit(s, dir),
         col("ok") === 0, col("n_orphans"))
-      .unionByName(row("pii_scan", piiScan(s, dir),
+      .unionByName(row("pii_scan", PiiQueries.scanReport(s, dir),
         col("flagged") === 1, col("hit_rate")))
-      .unionByName(row("psi_drift", drift(s, dir),
+      .unionByName(row("psi_drift", Relational.psiDrift(s, dir),
         col("psi") >= 0.2, col("psi")))
-      .unionByName(row("chi_square", independence(s, dir),
+      .unionByName(row("chi_square", Aggs.chiSquare(s, dir),
         col("contrib") >= 25.0, col("contrib")))
       .orderBy(col("audit"))
   }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Tunables for [[CorpusPipeline]]. Defaults reproduce the oracle-gated
-  * `pipeline_corpus` query exactly (PipelineSpec pins the equivalence).
+/** Tunables for [[CorpusPipeline]]. The default config is the oracle-gated
+  * `pipeline_corpus` query.
   *
   * @param minTokens        drop docs with fewer whitespace tokens
   * @param maxCharsPerToken drop docs whose chars/token ratio is at or
@@ -27,17 +27,18 @@ case class CorpusConfig(
     trainPct: Int = 80,
     valPct: Int = 90)
 
-/** The corpus-construction pipeline as a PUBLIC, composable API — what a
-  * user of the reference engine would actually call, rather than the
-  * registered demo queries. Every stage is `DataFrame => DataFrame` and
-  * lazy, so a chained pipeline compiles into ONE Catalyst plan: Spark
+/** The corpus-construction pipeline as a PUBLIC, composable API; its
+  * default [[run]] is the registered `pipeline_corpus` query, so the
+  * DuckDB oracle checks this path. Every stage is `DataFrame => DataFrame`
+  * and lazy, so a chained pipeline compiles into ONE Catalyst plan: Spark
   * fuses the map-side stages into a single scan+project, and nothing is
   * materialized between stages.
   *
-  * Scale posture (same census as `pipeline_corpus`): the quality filter
-  * and split are map-only; decontamination broadcasts the benchmark
-  * shingle set (the corpus side is never shuffled for the join, only an
-  * anti-join on doc_id); exact dedup is one window over the content hash.
+  * Scale posture: the quality filter and split are map-only;
+  * decontamination broadcasts the benchmark shingle set (the corpus side
+  * is never shuffled for the join, only an anti-join on doc_id); exact
+  * dedup is one window over the content hash; the final agg shuffles on
+  * split×lang — nothing is quadratic or driver-bound at 100 TB.
   */
 class CorpusPipeline(cfg: CorpusConfig = CorpusConfig()) {
 
@@ -83,8 +84,9 @@ class CorpusPipeline(cfg: CorpusConfig = CorpusConfig()) {
         .otherwise("test"))
   }
 
-  /** The full chain over the fixture documents table, ending in the same
-    * per-(split, lang) stats as the `pipeline_corpus` registered query. */
+  /** The full chain over the fixture documents table: quality filter →
+    * benchmark-doc and contamination exclusion → exact dedup → split →
+    * per-(split, lang) corpus stats (`pipeline_corpus` at the defaults). */
   def run(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("text"))

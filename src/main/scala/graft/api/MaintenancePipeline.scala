@@ -4,80 +4,28 @@ import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Lakehouse MAINTENANCE as a public, staged API — the fifth pipeline
-  * alongside [[DedupPipeline]]/[[CorpusPipeline]]/[[RetrievalPipeline]]/
-  * [[AuditPipeline]], bundling what a table owner runs on a schedule:
-  * plan small-file compaction (`layout_compaction`), execute it as an
-  * epoch-addressed rewrite (`layout_compaction_exec`), apply CDC with a
-  * pruned copy-on-write MERGE (`layout_merge_exec`), run SCD2 versioned
-  * upserts (`layout_scd2_exec`), and read any historical snapshot
-  * through the transaction log (`layout_time_travel`). Each stage
-  * returns the SAME DataFrame the gated query produces (PipelineSpec
-  * pins this), so the API inherits every oracle guarantee — including
-  * the `_metadata.file_path`-measured file counts and order-free content
-  * checksums that make the rewrites provable, not just narrated.
+/** Lakehouse MAINTENANCE rollup: what a table owner runs on a schedule,
+  * folded into one verdict row per maintenance op — the shape a
+  * scheduler's post-run check consumes. The ops themselves are the
+  * oracle-gated queries: the executed small-file compaction
+  * (`layout_compaction_exec`, [[Sources.compactionExec]]), the pruned
+  * copy-on-write CDC MERGE (`layout_merge_exec`, [[Sources.mergeExec]])
+  * and snapshot reads through the transaction log (`layout_time_travel`,
+  * [[Sources.timeTravel]]); the rest of the maintenance surface (SCD2,
+  * vacuum, change feed, deletion vectors, stats skipping, z-order, CHECK
+  * constraints) is [[Sources]] and [[graft.sources.Lakehouse]].
   *
-  * Scale census: planning windows run over file manifests
-  * (listing-scale); every rewrite prunes to touched buckets before
-  * reading data; snapshot resolution is joins against the log, never a
-  * driver-side file list. `summary` folds the audits into one verdict
-  * row per maintenance op — the shape a scheduler's post-run check
-  * consumes. */
-class MaintenancePipeline {
-
-  /** The bin-packing merge plan (which files fuse into which groups). */
-  def compactionPlan(s: SparkSession, dir: String): DataFrame =
-    Sources.compactionPlan(s, dir)
-
-  /** The executed compaction: fragmented lake → packed epoch, audited
-    * before/after from real file listings. */
-  def compact(s: SparkSession, dir: String): DataFrame =
-    Sources.compactionExec(s, dir)
-
-  /** Copy-on-write CDC MERGE with file-level pruning. */
-  def merge(s: SparkSession, dir: String): DataFrame =
-    Sources.mergeExec(s, dir)
-
-  /** SCD2 versioned upserts, pruned to touched buckets. */
-  def scd2(s: SparkSession, dir: String): DataFrame =
-    Sources.scd2Exec(s, dir)
-
-  /** Snapshot reads through the transaction log (commit atomicity). */
-  def timeTravel(s: SparkSession, dir: String): DataFrame =
-    Sources.timeTravel(s, dir)
-
-  /** Retention VACUUM: physically deletes files no committed snapshot
-    * references, audited from real before/after listings. */
-  def vacuum(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Lakehouse.vacuum(s, dir)
-
-  /** Row-level change feed reconstructed from the file-level diff of a
-    * copy-on-write commit (no CDC files needed). */
-  def changeFeed(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Lakehouse.changeFeed(s, dir)
-
-  /** Merge-on-read deletes: (path, row_index) sidecar, zero rewrites. */
-  def deleteWithVectors(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Lakehouse.deletionVectors(s, dir)
-
-  /** Min/max stats-based file skipping audit (candidates vs scanned). */
-  def statsSkipping(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Lakehouse.statsSkipping(s, dir)
-
-  /** Z-order vs linear layout pruning, measured from real files. */
-  def zorder(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Lakehouse.zorderExec(s, dir)
-
-  /** CHECK-constraint enforcement: valid/quarantine split audit. */
-  def enforceConstraints(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Lakehouse.checkConstraints(s, dir)
+  * Scale census: every rewrite prunes to touched buckets before reading
+  * data; snapshot resolution is joins against the log, never a
+  * driver-side file list. */
+object MaintenancePipeline {
 
   /** One verdict row per op: (op, files_before, files_after, preserved,
     * passed) — preserved = the op's own invariant (row counts and
     * checksums survive compaction; snapshot 0 unaffected by later
     * commits; merges touch only planned buckets). */
   def summary(s: SparkSession, dir: String): DataFrame = {
-    val c = compact(s, dir).agg(
+    val c = Sources.compactionExec(s, dir).agg(
       sum(col("n_files_before")).cast("long").as("files_before"),
       sum(col("n_files_after")).cast("long").as("files_after"),
       min((col("rows_before") === col("rows_after") &&
@@ -85,13 +33,13 @@ class MaintenancePipeline {
         .as("preserved"))
       .select(lit("compaction").as("op"), col("files_before"),
         col("files_after"), col("preserved"))
-    val m = merge(s, dir).agg(
+    val m = Sources.mergeExec(s, dir).agg(
       max(col("n_files_total")).cast("long").as("files_before"),
       max(col("n_files_rewritten")).cast("long").as("files_after"),
       lit(1).as("preserved"))
       .select(lit("cdc_merge").as("op"), col("files_before"),
         col("files_after"), col("preserved"))
-    val t = timeTravel(s, dir)
+    val t = Sources.timeTravel(s, dir)
       .agg(max(when(col("version") === 0, col("n_files"))).cast("long")
           .as("files_before"),
         max(when(col("version") === 1, col("n_files"))).cast("long")

@@ -162,8 +162,7 @@ object Aggs extends QueryModule {
         org.apache.spark.sql.Encoders.scalaLong))
     Tables.documents(s, d)
       .select(col("lang"),
-        explode(filter(split(lower(col("text")), "\\s+"), t => t =!= ""))
-          .as("token"))
+        explode(Corpus.tokens(col("text"))).as("token"))
       // exact codegen'd pre-count, then weighted sketch updates — identical
       // guarantees (a weighted update IS the MG merge rule), |vocab| UDAF
       // calls instead of |tokens| (same shape as cmsTokens below)
@@ -189,8 +188,7 @@ object Aggs extends QueryModule {
         org.apache.spark.sql.Encoders.scalaLong))
     Tables.documents(s, d)
       .select(col("lang"),
-        explode(filter(split(lower(col("text")), "\\s+"), t => t =!= ""))
-          .as("token"))
+        explode(Corpus.tokens(col("text"))).as("token"))
       // exact codegen'd pre-count, then weighted sketch updates: identical
       // counters (additivity), |vocab| UDAF calls instead of |tokens|
       .groupBy(col("lang"), col("token")).agg(count(lit(1)).as("c"))

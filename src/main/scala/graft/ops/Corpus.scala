@@ -262,40 +262,6 @@ object Corpus extends QueryModule {
       .orderBy(col("lang"), col("seq_id"))
   }
 
-  /** End-to-end corpus build — the full curation pipeline in ONE plan:
-    * quality filter (token count + chars/token band) → benchmark-doc and
-    * contamination exclusion (8-shingle overlap, broadcast bench set) →
-    * exact dedup (min-doc_id representative per content hash, window form,
-    * no self-join) → deterministic hash split → per-(split, lang) corpus
-    * stats. Shuffle census: shingle bucket join is broadcast (no corpus
-    * shuffle), anti-join + dedup window + final agg each shuffle once on
-    * keys that scale (doc_id / content hash / split×lang) — nothing here
-    * is quadratic or driver-bound at 100 TB. */
-  def corpusBuild(s: SparkSession, d: String): DataFrame = {
-    val t = tokens(col("text"))
-    val kept = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("text"),
-        size(t).as("n_tokens"),
-        (length(col("text")).cast("double") / size(t)).as("cpt"))
-      .filter(col("n_tokens") >= 5 && col("cpt") < 12 &&
-        col("doc_id") % 53 =!= 0) // bench docs are never corpus docs
-    val sh = shingles(s, d)
-    val bench = sh.filter(col("doc_id") % 53 === 0).select(col("sh")).distinct()
-    val contaminated = sh.filter(col("doc_id") % 53 =!= 0)
-      .join(broadcast(bench), Seq("sh")).select(col("doc_id")).distinct()
-    val clean = kept.join(contaminated, Seq("doc_id"), "left_anti")
-    val w = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-    val bucket = md5bucket(concat(lit("split:"), col("doc_id").cast("string")), 100)
-    clean.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .withColumn("split",
-        when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test"))
-      .groupBy(col("split"), col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).as("total_tokens"),
-        min(col("doc_id")).as("first_doc"))
-      .orderBy(col("split"), col("lang"))
-  }
-
   /** Per-source document quota (domain caps): keep at most 15 docs per
     * source, chosen by a deterministic md5 ranking — the corpus-mixing
     * primitive that stops one crawl domain from dominating the training
@@ -729,7 +695,7 @@ object Corpus extends QueryModule {
          |  GROUP BY db.doc_id)
          |SELECT doc_id, score FROM scored
          |ORDER BY score DESC, doc_id LIMIT 50""".stripMargin)),
-    Query("pipeline_corpus", corpusBuild, Some(
+    Query("pipeline_corpus", new graft.api.CorpusPipeline().run, Some(
       s"""WITH toks AS (
          |  SELECT doc_id, $sqlToks AS t FROM documents),
          |sh AS (

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Query, QueryModule, Scratch, Tables}
+import graft.ops.Corpus.tokens
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,15 +18,19 @@ import org.apache.spark.sql.functions._
   * (a blocking key would be the scale knob in production). */
 object LlmDedup extends QueryModule {
 
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "\\s+"), t => t =!= "")
-
-  /** Word 3-gram shingles (distinct). */
-  private def shingles(c: Column): Column = {
-    val t = toks(c)
+  /** Word 3-gram shingles (distinct) of a token-array column. Pass a
+    * projected column, not the tokenizer expression: higher-order-function
+    * lambdas run interpreted, outside subexpression elimination, so an
+    * expression inside one is re-evaluated for every element. */
+  private def shingles(t: Column): Column =
     array_distinct(transform(sequence(lit(1), size(t) - 2),
       i => concat_ws("_", element_at(t, i), element_at(t, i + 1),
         element_at(t, i + 2))))
+
+  /** 16 md5 MinHash values `mh0..mh15` over the projected shingle column
+    * `sh`. */
+  private def minhash16: Seq[Column] = (0 until 16).map { i =>
+    array_min(transform(col("sh"), x => md5hash32(x, i))).as(s"mh$i")
   }
 
   /** Portable 32-bit hash (shared with DuckDB): first 8 hex digits of md5,
@@ -58,7 +63,7 @@ object LlmDedup extends QueryModule {
       .orderBy(col("n_tokens").desc, col("doc_id"))
     Tables.documents(s, d)
       .select(col("doc_id"), md5(col("text")).as("content_md5"),
-        size(toks(col("text"))).as("n_tokens"))
+        size(tokens(col("text"))).as("n_tokens"))
       .withColumn("rn", row_number().over(w))
       .groupBy(col("content_md5"))
       .agg(count(lit(1)).as("n_copies"),
@@ -72,13 +77,13 @@ object LlmDedup extends QueryModule {
     * + 4 banded LSH keys of 4 rows each — the per-doc map-only stage of
     * near-dup detection, fully oracle-checkable. */
   def minhashSignatures(s: SparkSession, d: String): DataFrame = {
-    val sh = shingles(col("text"))
-    val mins = (0 until 16).map { i =>
-      array_min(transform(sh, x => md5hash32(x, i))).as(s"mh$i")
-    }
+    // tokens and shingles are projected as columns so the 16 hash lambdas
+    // read them instead of re-evaluating them (see shingles)
     val withSig = Tables.documents(s, d)
-      .filter(size(toks(col("text"))) >= 3)
-      .select(col("doc_id") +: mins: _*)
+      .select(col("doc_id"), tokens(col("text")).as("t"))
+      .filter(size(col("t")) >= 3)
+      .select(col("doc_id"), shingles(col("t")).as("sh"))
+      .select(col("doc_id") +: minhash16: _*)
     val bands = (0 until 4).map { b =>
       md5(concat_ws(",", (0 until 4).map(r => col(s"mh${b * 4 + r}")): _*))
         .as(s"band$b")
@@ -145,7 +150,7 @@ object LlmDedup extends QueryModule {
     * the oracle): bit b set iff the sum of ±1 votes from token-hash bit b
     * is positive. */
   def simhash(s: SparkSession, d: String): DataFrame = {
-    val dtoks = array_distinct(toks(col("text")))
+    val dtoks = array_distinct(tokens(col("text")))
     val hashes = transform(dtoks, t => md5hash32(t, 99))
     // bit b of h without shift-by-column (Spark's shiftright needs a literal
     // count): floor(h / 2^b) % 2 — exact in double for h < 2^32, b ≤ 31.
@@ -169,8 +174,8 @@ object LlmDedup extends QueryModule {
     * predicate no prefix/LSH filter can prune — any shared bigram
     * qualifies), so it is inherently per-block-quadratic and must only
     * ever run on bounded blocks (the blocking key is the scale knob). The
-    * thresholded pipelines ([[clusterComponents]], [[lshClusters]]) are
-    * the sub-quadratic paths.
+    * thresholded pipelines ([[clusterComponents]],
+    * [[graft.api.DedupPipeline]]) are the sub-quadratic paths.
     *
     * Hot-loop design: bigrams are xxhash64-hashed, deduped, and sorted ONCE
     * per document (map side, before the shuffle join); the per-pair work is
@@ -254,7 +259,8 @@ object LlmDedup extends QueryModule {
     * buckets, not per-block all-pairs. At production thresholds (0.7+) the
     * prefix is ~30% of each set; at the permissive t here it is ~90%, so
     * the filter is weak — correctness is unconditional either way, and the
-    * probabilistic high-recall path at scale is [[lshClusters]].
+    * probabilistic high-recall path at scale is
+    * [[graft.api.DedupPipeline]].
     *
     * @param docs (doc_id, lang, source, bg: sorted distinct hashed bigrams)
     * @return qualifying (a_id, b_id) pairs, a_id < b_id, within blocks */
@@ -350,7 +356,7 @@ object LlmDedup extends QueryModule {
     * unconditionally (an LSH generator could not promise that: measured
     * borderline J₂≈0.1 edges here have trigram Jaccard 0.00–0.03, far
     * below any usable MinHash S-curve). The probabilistic sub-quadratic
-    * pipeline at production thresholds is [[lshClusters]]. */
+    * pipeline at production thresholds is [[graft.api.DedupPipeline]]. */
   def clusterComponents(s: SparkSession, d: String): DataFrame = {
     // Shingling (tokenize + hash + sort-distinct) is the per-doc CPU cost
     // and the plan reads `docs` three times (prefix explode + both verify
@@ -366,23 +372,6 @@ object LlmDedup extends QueryModule {
     connectedComponents(prefixFilterEdges(docs, 0.1))
       .orderBy(col("doc_id"))
   }
-
-  /** Full production-shape dedup pipeline, sub-quadratic END TO END:
-    * MinHash-LSH candidates → exact-Jaccard verification at a real
-    * near-dup threshold (trigram J ≥ 0.5) → connected components → min-id
-    * representative. Every stage is linear or per-bucket; nothing forms
-    * the all-pairs space. Oracle: the exact all-pairs recursive-CTE edge
-    * set at the same threshold — LSH recall at J ≥ 0.5 is 1−(1−J²)¹⁶ ≥
-    * 99.0%, and ≥ 1−10⁻¹¹ for the ~0.97-Jaccard clone pairs that actually
-    * clear the threshold, so the verified edge set equals the exact one on
-    * this data (rehearsed at sf0.001/0.01/0.1; deterministic — xxhash64
-    * banding has no runtime randomness). */
-  def lshClusters(s: SparkSession, d: String): DataFrame =
-    connectedComponents(
-      lshVerifiedPairs(s, d)
-        .filter(col("jaccard") >= 0.5)
-        .select(col("a_id"), col("b_id")))
-      .orderBy(col("doc_id"))
 
   /** LSH candidate-generation QUALITY metric — the monitoring query a
     * production dedup pipeline runs before trusting banding at 100 TB:
@@ -412,7 +401,7 @@ object LlmDedup extends QueryModule {
     // docs/block that survive the sample cut.
     val eligible = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("source"), col("text"))
-      .filter(size(toks(col("text"))) >= 3)
+      .filter(size(tokens(col("text"))) >= 3)
     val tk = udaf(graft.functions.TopK64,
       org.apache.spark.sql.catalyst.encoders
         .ExpressionEncoder[graft.functions.TopKEntry]())
@@ -443,17 +432,15 @@ object LlmDedup extends QueryModule {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ids = truePairs.select(col("a_id").as("doc_id"))
       .union(truePairs.select(col("b_id").as("doc_id"))).distinct()
-    val sh = shingles(col("text"))
-    val mins = (0 until 16).map { i =>
-      array_min(transform(sh, x => md5hash32(x, i))).as(s"mh$i")
-    }
     // ids grows with the true-pair corpus — no broadcast hint; AQE
     // measures the persisted side and picks broadcast only while it fits.
     // Reads the sampled docs (already eligibility-filtered), never a
     // fresh corpus scan.
     val sig = docs
       .join(ids, Seq("doc_id"), "left_semi")
-      .select(col("doc_id") +: mins: _*)
+      .select(col("doc_id"), tokens(col("text")).as("t"))
+      .select(col("doc_id"), shingles(col("t")).as("sh"))
+      .select(col("doc_id") +: minhash16: _*)
       .select(col("doc_id") +: (0 until 4).map { b =>
         md5(concat_ws(",",
           (b * 4 until b * 4 + 4).map(i => col(s"mh$i")): _*)).as(s"band$b")
@@ -474,20 +461,15 @@ object LlmDedup extends QueryModule {
       .orderBy(col("n_true"))
   }
 
-  /** Duplicate-group report over the sub-quadratic pipeline: one row per
-    * near-dup cluster with its representative (min doc_id), member count,
-    * and the sorted member list as a string — the "what to delete"
-    * artifact a dedup run actually ships. Same labeling as
-    * dd_lsh_clusters; one extra groupBy on cluster_id. */
-  def dupGroups(s: SparkSession, d: String): DataFrame =
-    lshClusters(s, d)
-      .groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("n_members"),
-        array_join(transform(sort_array(collect_list(col("doc_id"))),
-          m => m.cast("string")), ",").as("members"))
-      .select(col("cluster_id").as("keep_doc_id"), col("n_members"),
-        col("members"))
-      .orderBy(col("keep_doc_id"))
+  /** Duplicate-group report: [[graft.api.DedupPipeline.representatives]]
+    * over the dd_lsh_clusters labeling — one row per near-dup cluster with
+    * its representative (min doc_id), member count, and the sorted member
+    * list as a string, the "what to delete" artifact a dedup run actually
+    * ships. One extra groupBy on cluster_id. */
+  def dupGroups(s: SparkSession, d: String): DataFrame = {
+    val p = new graft.api.DedupPipeline()
+    p.representatives(p.clusters(p.edges(s, d)))
+  }
 
   /** Incremental exact dedup with a Bloom-filter pre-filter — the "new
     * batch vs 100-TB corpus" pattern: probing a compact bit array avoids
@@ -600,7 +582,7 @@ object LlmDedup extends QueryModule {
     * the natural shuffle key at 100 TB. */
   def chunkDedup(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-      .select(col("doc_id"), toks(col("text")).as("t"))
+      .select(col("doc_id"), tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 16)
     val ch = docs.select(col("doc_id"),
       explode(transform(sequence(lit(1), expr("size(t) div 16")),
@@ -908,13 +890,13 @@ object LlmDedup extends QueryModule {
          |FROM labels GROUP BY cluster_id
          |ORDER BY keep_doc_id""".stripMargin
     }),
-    Query("dd_lsh_clusters", lshClusters, Some {
+    Query("dd_lsh_clusters", new graft.api.DedupPipeline().run, Some {
       // Exact trigram-Jaccard ≥ 0.5 edges via an inverted-index join
       // (unnest trigram → join on trigram → shared count per pair): the
       // same edge set as an all-pairs scan — every J > 0 pair shares a
       // trigram — at near-linear cost (verified equal to the quadratic
       // form at sf0.001/0.01). The Spark side's LSH-caught-and-verified
-      // edge set equals this on the fixture data (see lshClusters
+      // edge set equals this on the fixture data (see DedupPipeline's
       // Scaladoc for the recall argument).
       val tg = s"list_distinct(list_transform(generate_series(1, len($sqlToks) - 2), " +
         s"i -> ($sqlToks)[i] || '_' || ($sqlToks)[i+1] || '_' || ($sqlToks)[i+2]))"

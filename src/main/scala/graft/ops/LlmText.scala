@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{Query, QueryModule, Tables}
 import graft.OracleSafe.d2d
+import graft.ops.Corpus.tokens
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,10 +13,6 @@ import org.apache.spark.sql.functions._
   * no UDFs, so whole-stage codegen covers every expression and the plans
   * are scan-bound at 100 TB. */
 object LlmText extends QueryModule {
-
-  /** Tokenize: lowercase, split on whitespace, drop empties. */
-  private def tokens(c: Column): Column =
-    filter(split(lower(c), "\\s+"), t => t =!= "")
 
   private val stopwords = Map(
     "en" -> Seq("the", "and", "of", "to", "in"),

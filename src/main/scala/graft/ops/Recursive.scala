@@ -53,7 +53,7 @@ object Recursive extends QueryModule {
   def recursiveChain(s: SparkSession, d: String): DataFrame =
     Tables.sql(s, d,
       """WITH RECURSIVE chain(c_custkey, node, depth) AS (
-        |  SELECT c_custkey, c_custkey, 0 FROM customer
+        |  SELECT c_custkey, c_custkey AS node, 0 AS depth FROM customer
         |  UNION ALL
         |  SELECT c_custkey, node DIV 10, depth + 1 FROM chain WHERE node > 0
         |)

@@ -66,7 +66,7 @@ class CorpusSpec extends AnyFunSuite {
   }
 
   test("pipeline_corpus: curation only ever removes docs, and removes the right ones") {
-    val out = Corpus.corpusBuild(spark, TestSpark.sf)
+    val out = graft.SparkEntry.queries("pipeline_corpus")(spark, TestSpark.sf)
     val kept = out.agg(sum("n_docs")).head.getLong(0)
     val nonBench = graft.Tables.documents(spark, TestSpark.sf)
       .filter(col("doc_id") % 53 =!= 0).count()
@@ -129,5 +129,16 @@ class CorpusSpec extends AnyFunSuite {
       assert(r.getAs[Long]("n_boiler") <= r.getAs[Long]("n_sh"))
       assert((r.getAs[Int]("keep") == 1) == (f <= 0.20), s"keep flag wrong at $f")
     }
+  }
+
+  test("corpus_interleave: positions are a permutation and round-robin " +
+    "across sources (rank r of every source precedes rank r+1 of any)") {
+    val out = Corpus.interleave(spark, TestSpark.sf).collect()
+    val n = out.length
+    assert(out.map(_.getAs[Long]("pos")).toSet == (0L until n).toSet)
+    val byPos = out.sortBy(_.getAs[Long]("pos"))
+    val ranks = byPos.map(_.getAs[Int]("rk"))
+    assert(ranks.sameElements(ranks.sorted),
+      "interleave must emit all rank-r docs before any rank-(r+1) doc")
   }
 }

@@ -59,7 +59,7 @@ class LlmSpec extends AnyFunSuite {
     val d = docsDir(Seq(
       1L -> base, 2L -> base, 3L -> base.replace("lazy", "sleepy"),
       4L -> "completely different words about spark query engines and columnar io"))
-    val rows = LlmDedup.lshClusters(spark, d)
+    val rows = new graft.api.DedupPipeline().run(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(rows.toSeq == Seq((1L, 1L), (2L, 1L), (3L, 1L)))
   }
