@@ -1,106 +1,37 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line on stdout, plus the same JSON at target/bench.json
   * (belt-and-braces for log-frame-mangled stdout). Per-query numbers are
-  * the MIN across two PASS-SEPARATED full-roster sweeps
-  * ("timing":"min_of_2_passes") so neither single-run load noise nor a
-  * sustained load window spanning adjacent runs can masquerade as a
-  * regression.
+  * the MIN across two pass-separated full-roster [[Run.sweep]]s
+  * ("timing":"min_of_2_passes"), each run a full materialization, so
+  * neither single-run load noise nor a sustained load window spanning
+  * adjacent runs can masquerade as a regression.
   *
   * Failures are LOUD: a query that throws is recorded as -1 sec and listed
-  * in the "failed" array — a regression can never masquerade as a speedup
-  * (the round-1 lesson: a broken query used to time as a ~0.15 s success).
+  * in the "failed" array, so a regression can never masquerade as a
+  * speedup. A pass-2-only failure keeps the pass-1 timing; it is the
+  * signature of a non-idempotent query (state the release between runs
+  * does not cover) and is reported on stderr.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local(Session.cpus)
-    // Warm the JVM/codegen/scan paths once so the first timed query isn't
-    // charged for session startup; queries run in sorted order for
-    // run-to-run comparability.
-    try { SparkEntry.entry(spark).count() } catch { case _: Throwable => () }
-    // Untimed warm-up pass (round-10 verdict: the driver's cold total ran
-    // ~25%/query above the builder's warm band, all of it attributable to
-    // one-time costs, not plans). Three cold sources leave the timed
-    // region: (1) layout_* first-builds write their cached /tmp lakes —
-    // one-time fixture construction (~51 s of the r10 driver run);
-    // (2) one readStream query loads the streaming engine + RocksDB
-    // state-store classes shared by all ev_stream_*; (3) the heaviest
-    // plans pay first-JIT (rec_coverage measured 17.6 s cold vs 5.7 s warm
-    // on identical code — BENCH_NOTES r13 5-run study). The timed loop
-    // below then measures steady-state query cost, which is the number
-    // that actually predicts cluster behavior.
-    // (4) the typed-Aggregator / ObjectHashAggregate path and the
-    // window/grid family pay first-JIT too — the r12 driver run's only
-    // >2× movers were the code-untouched early-alphabet block
-    // (agg_gini_wealth…agg_mann_whitney), i.e. cold cost landing on the
-    // head of the sorted roster. One representative per path warms the
-    // class for the whole catalog.
-    val warmup = SparkEntry.queries.keys.filter(_.startsWith("layout_"))
-      .toSeq.sorted ++ Seq("ev_stream_tumbling", "rec_item_cooccur",
-      "rec_user_topn", "rec_eval_mrr", "rec_coverage",
-      "dd_embed_neardup_ann", "dd_er_score", "rel_rfm",
-      "agg_heavy_hitters", "agg_gini_wealth", "agg_listagg",
-      "ev_interarrival")
-    warmup.foreach { n =>
-      try { SparkEntry.queries(n)(spark, sfDir).count() }
-      catch { case _: Throwable => () }
-      CacheHygiene.clear(spark)
-    }
-    // Each query is timed TWICE and the MIN is reported, but the two runs
-    // are PASS-SEPARATED: the full roster is swept once, then swept again,
-    // and the per-query min is taken across the two sweeps (r13 verdict
-    // directive). Back-to-back min-of-2 (the r12→r13 contract) was still
-    // defeated by sustained load windows — a window lasting longer than
-    // one query's two adjacent runs inflates BOTH, so the min can't
-    // reject it; the r13 driver artifact carried ~44.5 s of exactly that,
-    // in contiguous blocks of the sorted roster (agg_median_2pass 10.69 s
-    // vs 0.77 s committed median, code untouched). With the reruns a full
-    // roster sweep apart (~2+ min), a sustained window hits each query in
-    // at most one pass, and the min rejects it. A real plan regression
-    // still moves both passes.
-    // The FIRST pass alone decides pass/fail, so a flaky second pass can
-    // neither hide a failure nor turn a success into one; a pass-2-only
-    // failure keeps the pass-1 timing but is LOUD on stderr — it is the
-    // signature of a non-idempotent query (state the hygiene clear
-    // doesn't cover), invisible otherwise.
-    val roster = SparkEntry.queries.toSeq.sortBy(_._1)
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val pass1: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame, Option[Double])] =
-      roster.map { case (name, fn) =>
-      val t =
-        try { Some(timeOnce(fn)) }
-        catch {
-          case e: Throwable =>
-            System.err.println(s"BENCH FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-            None
-        }
-      // Outside the timed region: drop blocks a query persisted for its own
-      // action so they can't tax every later query (measured ~+0.25 s/query
-      // of drag over a 140-query run before this).
-      CacheHygiene.clear(spark)
-      (name, fn, t)
-    }
-    val results = pass1.map {
-      case (name, _, None) => (name, -1.0)
-      case (name, fn, Some(t1)) =>
-        val t2 =
-          try { timeOnce(fn) }
-          catch {
-            case e: Throwable =>
-              System.err.println(
-                s"BENCH RERUN FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-              t1
-          }
-        CacheHygiene.clear(spark)
-        (name, math.min(t1, t2))
-    }
+    // Untimed warm-up, so the timed sweep measures steady-state query
+    // cost: session startup, the layout_* lakes' first build (one-time
+    // fixture construction), the streaming engine and RocksDB state-store
+    // classes, and first-JIT of the heaviest plan families (typed
+    // Aggregator / ObjectHashAggregate, window/grid) would otherwise land
+    // on the head of the sorted roster. One representative per path warms
+    // the classes for the whole catalog; BENCH_NOTES.md has the numbers.
+    val warmup = SparkEntry.queries.keys.filter(_.startsWith("layout_")).toSeq.sorted ++
+      Seq("ev_stream_tumbling", "rec_item_cooccur", "rec_user_topn", "rec_eval_mrr",
+        "rec_coverage", "dd_embed_neardup_ann", "dd_er_score", "rel_rfm",
+        "agg_heavy_hitters", "agg_gini_wealth", "agg_listagg", "ev_interarrival")
+    Run.sweep(spark, sfDir, Run.entry +: Run.named(warmup))
+    val results = Run.sweep(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1), passes = 2)
+      .map(o => (o.name, o.best.getOrElse(-1.0)))
     val failed = results.collect { case (n, t) if t < 0 => n }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -126,10 +57,10 @@ object Bench {
       java.nio.file.Files.write(out, line.getBytes("UTF-8"))
     } catch { case e: Throwable => System.err.println(s"bench.json write failed: $e") }
     // Also persist the full per-query map as a repo-tracked PER-ROUND
-    // artifact: BENCH_rN.json archives only a truncated stdout tail (the
-    // r10 judge could diff just 61 of 397 queries), and target/ is
-    // overwritten every run. Round number = max(BENCH_r*.json) + 1 — this
-    // run's map is the artifact of the round currently being built.
+    // artifact: BENCH_rN.json archives only a truncated stdout tail, and
+    // target/ is overwritten every run. Round number = max(BENCH_r*.json)
+    // + 1 — this run's map is the artifact of the round currently being
+    // built.
     try {
       val rx = "BENCH_r(\\d+)\\.json".r
       val n = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)

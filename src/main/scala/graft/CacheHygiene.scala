@@ -10,9 +10,9 @@ import org.apache.spark.sql.SparkSession
   * shingle stream in boilerplate detection), and the connected-components
   * loop pins one `localCheckpoint` RDD for its final labeling. A query
   * builder cannot release those itself — the caller owns the action — so a
-  * long-lived session running many queries (exactly what [[Verify]] and
-  * [[Bench]] do over 140 of them) accumulates dead cached blocks unless
-  * the harness clears between queries. Measured symptom at sf0.1: every
+  * long-lived session running many queries (exactly what [[Run.sweep]]
+  * does for [[Verify]], [[Bench]] and [[Cli]]) accumulates dead cached
+  * blocks unless the runner clears between queries. Measured symptom at sf0.1: every
   * query late in the alphabetical bench order gained ~0.25 s from cache
   * pressure before this existed.
   *
@@ -21,8 +21,8 @@ import org.apache.spark.sql.SparkSession
   * `localCheckpoint` blocks are a correctness dependency — their lineage is
   * truncated, so a cleared checkpoint cannot be recomputed and a later
   * action on a still-live DataFrame fails with a missing-block error.
-  * [[Verify]] and [[Bench]] satisfy this by construction (one terminal
-  * action per query, nothing reused across queries). */
+  * [[Run.sweep]] satisfies this by construction (one action per run,
+  * nothing reused across runs). */
 object CacheHygiene {
   /** Release every cached Dataset (CacheManager) and every persisted RDD
     * (including `localCheckpoint` RDDs, which live below the Dataset

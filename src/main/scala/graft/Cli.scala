@@ -3,23 +3,22 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable.ArrayBuffer
-import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Developer CLI over the query catalog, on the same [[Session]] config as
   * [[Bench]]:
-  *   - `time <sf> <reps> <query...>`: runs each query `reps` times, every
-  *     row and column, and prints its min and every run, then the total of
-  *     the mins;
+  *   - `time <sf> <reps> <query...>`: runs the query list `reps` times
+  *     ([[Run.sweep]]: pass-separated, every row and column), and prints
+  *     each query's min and every run, then the total of the mins;
   *   - `profile <sf> <reps> <query...>`: the same loop, plus each run's
   *     completed stages (duration, tasks, shuffle read/write, input bytes),
   *     longest first;
   *   - `plan [--final] <sf> <outDir|-> <query...>`: writes each query's
   *     formatted plan to `<outDir>/<query>.txt` (`-`: stdout). `--final`
-  *     collects first, so the plan is AQE's post-execution one, with its
+  *     materializes first, so the plan is AQE's post-execution one, with its
   *     runtime decisions (exchange reuse, skew splits, join demotions). */
 object Cli {
   sealed trait Command { def queries: Seq[String] }
@@ -63,38 +62,29 @@ object Cli {
   }
 
   private def time(spark: SparkSession, cmd: Time): Unit = {
-    // NonFatal only: swallowing OOM/linkage errors here would let timing
-    // proceed against a broken session and report garbage.
-    try SparkEntry.entry(spark).count()
-    catch { case NonFatal(e) => System.err.println(s"CLI warmup failed: $e") }
+    Run.sweep(spark, cmd.sf, Seq(Run.entry))
     val stages = ArrayBuffer.empty[StageInfo]
-    if (cmd.profile) spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        stages.synchronized { stages += e.stageInfo }
-    })
-    var total = 0.0
-    cmd.queries.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      val times = (1 to cmd.reps).map { rep =>
-        stages.synchronized { stages.clear() }
-        val t0 = System.nanoTime()
-        // toRdd, not count(): count() plans an aggregate that prunes
-        // every column (and the final sort) it does not need, so it would
-        // time a cheaper query than the one Verify writes out
-        val rows = fn(spark, cmd.sf).queryExecution.toRdd.count()
-        val t = (System.nanoTime() - t0) / 1e9
-        CacheHygiene.clear(spark)
-        if (cmd.profile) {
-          Thread.sleep(300) // let listener events drain
-          println(f"PROFILE $name rep$rep total=$t%.2f s ($rows rows)")
-          printStages(stages.synchronized { stages.toSeq })
-        }
-        t
-      }
-      total += times.min
-      println(f"TIME $name min=${times.min}%.2f all=[${times.map(t => f"$t%.2f").mkString(", ")}]")
+    if (cmd.profile) {
+      GraftBridge.waitUntilEmpty(spark) // the warm-up's stages stay out
+      spark.sparkContext.addSparkListener(new SparkListener {
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+          stages.synchronized { stages += e.stageInfo }
+      })
     }
-    println(f"TIME total_min=$total%.2f over ${cmd.queries.length} queries")
+    val outcomes = Run.sweep(spark, cmd.sf, Run.named(cmd.queries), cmd.reps,
+      after = (name, rep, r) => if (cmd.profile) {
+        // every stage of this run reaches the listener before it is printed
+        GraftBridge.waitUntilEmpty(spark)
+        r.foreach(t => println(f"PROFILE $name rep$rep total=$t%.2f s"))
+        printStages(stages.synchronized { try stages.toSeq finally stages.clear() })
+      })
+    outcomes.foreach { o =>
+      val all = o.runs.map(_.fold(_ => "failed", t => f"$t%.2f")).mkString(", ")
+      println(o.best.fold(s"TIME ${o.name} failed all=[$all]")(
+        t => f"TIME ${o.name} min=$t%.2f all=[$all]"))
+    }
+    println(f"TIME total_min=${outcomes.flatMap(_.best).sum}%.2f over " +
+      s"${outcomes.count(!_.failed)} of ${outcomes.length} queries")
   }
 
   /** The 25 longest stages, then the stage count and summed duration. */
@@ -113,15 +103,11 @@ object Cli {
 
   private def plan(spark: SparkSession, cmd: Plan): Unit = {
     if (cmd.out != "-") Files.createDirectories(Paths.get(cmd.out))
-    cmd.queries.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, cmd.sf)
-      // collect(), not count(): count() plans a NEW query execution and
-      // leaves this one unexecuted (isFinalPlan=false forever).
-      if (cmd.executed) df.collect()
+    Run.sweep(spark, cmd.sf, Run.named(cmd.queries), action = (name, df) => {
+      if (cmd.executed) Run.materialize(df)
       val text = df.queryExecution.explainString(FormattedMode)
       if (cmd.out == "-") println(s"\n========== $name ==========\n$text")
       else println(s"PLAN wrote ${Files.writeString(Paths.get(cmd.out, s"$name.txt"), text)}")
-      CacheHygiene.clear(spark)
-    }
+    })
   }
 }

@@ -14,19 +14,13 @@ object Verify {
 
   /** Writes `<out>/<name>` parquet for each named query (all of them when
     * `names` is empty) and `<out>/oracle_sql.json` holding their oracle
-    * SQL. A failing query is logged and skipped; an unknown name throws. */
+    * SQL. A failing query is reported and skipped ([[Run.sweep]]); an
+    * unknown name throws. */
   def dump(spark: SparkSession, sf: String, out: String, names: Seq[String]): Unit = {
-    val catalog = SparkEntry.queries
-    val selected = if (names.isEmpty) catalog else names.map(n => n -> catalog(n))
+    val selected = if (names.isEmpty) SparkEntry.queries.toSeq else Run.named(names)
     new java.io.File(out).mkdirs()
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sf).coalesce(1).write.mode("overwrite")
-        .parquet(s"$out/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally CacheHygiene.clear(spark)
-    }
+    Run.sweep(spark, sf, selected, action = (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$out/$name"))
     val json = SparkEntry.oracleSql.filter(kv => names.isEmpty || names.contains(kv._1))
       .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
       .mkString("{", ",", "}")

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge.{column, expr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -29,14 +29,6 @@ object TextHashing {
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
     z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
     z ^ (z >>> 31)
-  }
-
-  /** FNV-1a 64 over bytes. */
-  def fnv64(bytes: Array[Byte], from: Int, until: Int): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = from
-    while (i < until) { h ^= (bytes(i) & 0xffL); h *= 0x100000001b3L; i += 1 }
-    h
   }
 
   /** Tokenize (lowercase, whitespace, drop empties) then hash every n-word
@@ -182,10 +174,6 @@ case class WinnowingFingerprint(child: Expression, k: Int, w: Int)
 
 /** Column-level API for the text kernels (SQL names: [[GraftFunctions.all]]). */
 object TextFunctions {
-  /** Same as [[GraftFunctions.register]]: registers every graft function
-    * the session does not already resolve, for SQL text. */
-  def register(spark: SparkSession): Unit = GraftFunctions.register(spark)
-
   def shingles2(c: Column): Column = column(ShingleHashSet(expr(c), 2))
   def shingles3(c: Column): Column = column(ShingleHashSet(expr(c), 3))
   def minhash32(c: Column): Column = column(MinHashSignature(expr(c), 32))

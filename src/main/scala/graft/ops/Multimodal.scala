@@ -78,7 +78,7 @@ object Multimodal extends QueryModule {
     * the same samples character-arithmetically from the source text
     * (the payload's data chunk), never seeing the container the decoder
     * must walk. */
-  private def decodePcm(bytes: Array[Byte]): Seq[(Int, Int, Long, Long, Long, Long)] = {
+  private[ops] def decodePcm(bytes: Array[Byte]): Seq[(Int, Int, Long, Long, Long, Long)] = {
     def fourcc(off: Int): String =
       if (off + 4 <= bytes.length) new String(bytes, off, 4, "US-ASCII") else ""
     if (fourcc(0) != "RIFF" || fourcc(8) != "WAVE") return Seq.empty
@@ -125,10 +125,6 @@ object Multimodal extends QueryModule {
       (c, sr, n.toLong, sum, sq, peak)
     }
   }
-
-  /** Test hook: CodecFuzzSpec feeds [[decodePcm]] corrupted containers. */
-  private[ops] def decodePcmForTest(bytes: Array[Byte]): Seq[(Int, Int, Long, Long, Long, Long)] =
-    decodePcm(bytes)
 
   /** Feature extraction over binary media — a GENUINE decode, not a
     * byte-block stand-in: every [[audioAssets]] payload (a complete
@@ -448,7 +444,7 @@ object Multimodal extends QueryModule {
     * Nil for anything that is not a 24-bpp uncompressed BMP; corrupt
     * sizes/offsets end the decode cleanly (same contract as
     * [[decodePcm]]). */
-  private def decodeBmp(bytes: Array[Byte]): Seq[(Int, Long, Long, Long, Long, Long)] = {
+  private[ops] def decodeBmp(bytes: Array[Byte]): Seq[(Int, Long, Long, Long, Long, Long)] = {
     if (bytes.length < 54 || bytes(0) != 'B' || bytes(1) != 'M') return Seq.empty
     val bb = java.nio.ByteBuffer.wrap(bytes)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -486,10 +482,6 @@ object Multimodal extends QueryModule {
       (c, w.toLong * h, sum, wsum, mn, mx)
     }
   }
-
-  /** Test hook: Round10Spec feeds [[decodeBmp]] malformed containers. */
-  private[ops] def decodeBmpForTest(bytes: Array[Byte]): Seq[(Int, Long, Long, Long, Long, Long)] =
-    decodeBmp(bytes)
 
   /** Per-channel pixel statistics over genuinely decoded BMP images — the
     * image-side completion of the decode story ([[features]] is the audio
@@ -617,7 +609,7 @@ object Multimodal extends QueryModule {
     * misreconstructs any row cannot pass). Returns Nil on any
     * malformation: bad signature, CRC mismatch, truncated chunks,
     * non-RGB8 images, or a broken DEFLATE stream. */
-  private def decodePng(bytes: Array[Byte]): Seq[(Int, Long, Long, Long, Long, Long)] = {
+  private[ops] def decodePng(bytes: Array[Byte]): Seq[(Int, Long, Long, Long, Long, Long)] = {
     val sig = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
     if (bytes.length < 8 || !bytes.slice(0, 8).sameElements(sig)) return Seq.empty
     val bb = java.nio.ByteBuffer.wrap(bytes) // big-endian by default
@@ -720,11 +712,6 @@ object Multimodal extends QueryModule {
       (ch, w.toLong * h, sum, wsum, mn, mx)
     }
   }
-
-  /** Test hook: Round10Spec feeds [[decodePng]] external and malformed
-    * containers. */
-  private[ops] def decodePngForTest(bytes: Array[Byte]): Seq[(Int, Long, Long, Long, Long, Long)] =
-    decodePng(bytes)
 
   /** Per-channel pixel statistics over genuinely decoded COMPRESSED PNGs —
     * same output contract and same closed-form oracle family as
@@ -884,7 +871,7 @@ object Multimodal extends QueryModule {
     * add — the deferred, spec-standard timing that pairs with the
     * decoder's `next == 2^size` rule, one table entry apart by
     * construction); at 4096 the table resets through a CLEAR code. */
-  private def lzwEncode(pixels: Array[Int], minCode: Int): Array[Byte] = {
+  private[ops] def lzwEncode(pixels: Array[Int], minCode: Int): Array[Byte] = {
     val clear = 1 << minCode
     val eoi = clear + 1
     val codes = new java.io.ByteArrayOutputStream()
@@ -978,7 +965,7 @@ object Multimodal extends QueryModule {
     * prefix/suffix links (including the KwKwK case — a code referencing
     * the entry being defined), honor CLEAR resets, and bump the width
     * when the table reaches 2^size. Returns the palette-index stream. */
-  private def lzwDecode(data: Array[Byte], minCode: Int,
+  private[ops] def lzwDecode(data: Array[Byte], minCode: Int,
       maxPixels: Int): Array[Int] = {
     val clear = 1 << minCode
     val eoi = clear + 1
@@ -1044,7 +1031,7 @@ object Multimodal extends QueryModule {
     * malformed: bad magic, missing GCT, local color tables, truncated
     * blocks, or a corrupt LZW stream (the same strict contract as
     * [[decodeBmp]]/[[decodePng]]). */
-  private def decodeGif(bytes: Array[Byte]): Seq[(Long, Long, Long, Long, Long)] = {
+  private[ops] def decodeGif(bytes: Array[Byte]): Seq[(Long, Long, Long, Long, Long)] = {
     if (bytes.length < 14) return Seq.empty
     val magic = new String(bytes, 0, 6, "US-ASCII")
     if (magic != "GIF89a" && magic != "GIF87a") return Seq.empty
@@ -1112,19 +1099,6 @@ object Multimodal extends QueryModule {
       i += 1
     }
     Seq((w.toLong * h, sum, wsum, mn, mx))
-  }
-
-  /** Test hook: GIF interop + malformation cases. */
-  private[ops] def decodeGifForTest(bytes: Array[Byte]): Seq[(Long, Long, Long, Long, Long)] =
-    decodeGif(bytes)
-  private[ops] def lzwRoundTripForTest(px: Array[Int]): Array[Int] = {
-    val enc = lzwEncode(px, 8)
-    // de-frame
-    val data = new java.io.ByteArrayOutputStream()
-    var off = 0
-    var bl = enc(off) & 0xff
-    while (bl > 0) { data.write(enc, off + 1, bl); off += 1 + bl; bl = enc(off) & 0xff }
-    lzwDecode(data.toByteArray, 8, px.length)
   }
 
   /** Pixel statistics over genuinely decoded GIFs — the LZW rung of the
@@ -1249,7 +1223,7 @@ object Multimodal extends QueryModule {
     * blocks mean every AC is zero, but the DC stream exercises the full
     * difference/category/sign-extension machinery and the bit writer
     * performs real 0xFF byte stuffing. */
-  private def encodeJpeg(text: String, w: Int, h: Int): Array[Byte] = {
+  private[ops] def encodeJpeg(text: String, w: Int, h: Int): Array[Byte] = {
     val wb = w / 8; val hb = h / 8; val nb = wb * hb
     // CODEPOINTS, not UTF-8 bytes: the oracle indexes characters
     // (substr/ord), so byte-indexing would desync on any non-ASCII text.
@@ -1313,7 +1287,7 @@ object Multimodal extends QueryModule {
     * dequantization through the zigzag map, and a full 64-coefficient
     * floating IDCT with level shift and clamp. Returns None on any
     * malformation. */
-  private def decodeJpegImage(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] = {
+  private[ops] def decodeJpegImage(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] = {
     if (bytes.length < 4 || (bytes(0) & 0xff) != 0xff || (bytes(1) & 0xff) != 0xd8)
       return None
     var off = 2
@@ -1494,15 +1468,6 @@ object Multimodal extends QueryModule {
     }
     Some((w, h, px))
   }
-
-  /** Test hook: JpegSpec feeds [[decodeJpegImage]] ImageIO-written and
-    * malformed streams. */
-  private[ops] def decodeJpegForTest(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
-    decodeJpegImage(bytes)
-  private[ops] def encodeJpegForTest(text: String, w: Int, h: Int): Array[Byte] =
-    encodeJpeg(text, w, h)
-  private[ops] def jpegAssetsForTest(s: SparkSession, d: String): DataFrame =
-    jpegAssets(s, d)
 
   /** Pixel statistics over genuinely decoded baseline JPEGs — same output
     * contract as [[pngPixelStats]] (channel always 0: grayscale), same

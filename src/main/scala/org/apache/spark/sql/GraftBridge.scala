@@ -24,6 +24,10 @@ object GraftBridge {
     case r: execution.LogicalRDD => r.rdd.unpersist(blocking = false)
   }
 
+  /** Blocks until every event posted so far has reached every listener. */
+  def waitUntilEmpty(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   def addStrategy(spark: SparkSession,
       s: org.apache.spark.sql.execution.SparkStrategy): Unit = {
     val cs = spark.asInstanceOf[classic.SparkSession]

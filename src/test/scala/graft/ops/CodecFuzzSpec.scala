@@ -27,15 +27,15 @@ class CodecFuzzSpec extends AnyFunSuite {
     val sf = TestSpark.sf
     Seq(
       ("bmp", firstPayload(Multimodal.bmpAssets(spark, sf)),
-        (b: Array[Byte]) => Multimodal.decodeBmpForTest(b).size),
+        (b: Array[Byte]) => Multimodal.decodeBmp(b).size),
       ("png", firstPayload(Multimodal.pngAssets(spark, sf)),
-        (b: Array[Byte]) => Multimodal.decodePngForTest(b).size),
+        (b: Array[Byte]) => Multimodal.decodePng(b).size),
       ("gif", firstPayload(Multimodal.gifAssets(spark, sf)),
-        (b: Array[Byte]) => Multimodal.decodeGifForTest(b).size),
+        (b: Array[Byte]) => Multimodal.decodeGif(b).size),
       ("wav", firstPayload(Multimodal.audioAssets(spark, sf)),
-        (b: Array[Byte]) => Multimodal.decodePcmForTest(b).size),
-      ("jpeg", firstPayload(Multimodal.jpegAssetsForTest(spark, sf)),
-        (b: Array[Byte]) => Multimodal.decodeJpegForTest(b).size))
+        (b: Array[Byte]) => Multimodal.decodePcm(b).size),
+      ("jpeg", firstPayload(Multimodal.jpegAssets(spark, sf)),
+        (b: Array[Byte]) => Multimodal.decodeJpegImage(b).size))
   }
 
   // The battery's contract is "the decoder RETURNS" — so non-termination

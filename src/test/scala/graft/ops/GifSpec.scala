@@ -25,7 +25,7 @@ class GifSpec extends AnyFunSuite {
         val v = (img.getRGB(x, y) & 0xff).toLong // blue == red == gray
         sum += v; wsum += (y.toLong * w + x) * v
       }
-      val ours = Multimodal.decodeGifForTest(bytes)
+      val ours = Multimodal.decodeGif(bytes)
       assert(ours.nonEmpty, s"doc $id: our decoder rejected our GIF")
       val (n, s2, ws2, _, _) = ours.head
       assert(n == w.toLong * h && s2 == sum && ws2 == wsum,
@@ -47,7 +47,7 @@ class GifSpec extends AnyFunSuite {
     }
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(img, "gif", bos))
-    val ours = Multimodal.decodeGifForTest(bos.toByteArray)
+    val ours = Multimodal.decodeGif(bos.toByteArray)
     assert(ours.nonEmpty, "our decoder rejected ImageIO's GIF")
     val (n, sum, wsum, mn, mx) = ours.head
     // Both decoders read the SAME encoded bytes — ImageIO's read of its
@@ -70,36 +70,48 @@ class GifSpec extends AnyFunSuite {
     assert(bos.size() > 0 && n == 12288L)
   }
 
+  /** Encodes with [[Multimodal.lzwEncode]], strips its sub-block framing
+    * (length byte, then that many data bytes, until a 0 length) and
+    * decodes the bare code stream. */
+  private def lzwRoundTrip(px: Array[Int]): Array[Int] = {
+    val enc = Multimodal.lzwEncode(px, 8)
+    val data = new java.io.ByteArrayOutputStream()
+    var off = 0
+    var bl = enc(off) & 0xff
+    while (bl > 0) { data.write(enc, off + 1, bl); off += 1 + bl; bl = enc(off) & 0xff }
+    Multimodal.lzwDecode(data.toByteArray, 8, px.length)
+  }
+
   test("LZW round trip on streams that force growth, resets and KwKwK") {
     // KwKwK: the classic ababab... stream emits codes not yet in the
     // decoder's table.
     val kwk = Array.tabulate(64)(i => if (i % 2 == 0) 97 else 98)
-    assert(Multimodal.lzwRoundTripForTest(kwk).toSeq == kwk.toSeq)
+    assert(lzwRoundTrip(kwk).toSeq == kwk.toSeq)
     // Long varied stream: the dictionary passes 512 and 1024 entries, so
     // 9→10→11-bit code widths are exercised on both sides.
     val big = Array.tabulate(20000)(i => (i * 31 + (i * i) % 97) % 256)
-    assert(Multimodal.lzwRoundTripForTest(big).toSeq == big.toSeq)
+    assert(lzwRoundTrip(big).toSeq == big.toSeq)
     // Constant run (maximal dictionary chains on one symbol).
     val run = Array.fill(4096)(7)
-    assert(Multimodal.lzwRoundTripForTest(run).toSeq == run.toSeq)
+    assert(lzwRoundTrip(run).toSeq == run.toSeq)
     // Every byte value, repeated: literals + pairs.
     val all = Array.tabulate(1024)(i => i % 256)
-    assert(Multimodal.lzwRoundTripForTest(all).toSeq == all.toSeq)
+    assert(lzwRoundTrip(all).toSeq == all.toSeq)
   }
 
   test("malformed GIFs are rejected, never mis-decoded") {
     val good = Multimodal.gifAssets(spark, TestSpark.sf)
       .limit(1).collect().head.getAs[Array[Byte]](1)
-    assert(Multimodal.decodeGifForTest(good).nonEmpty)
+    assert(Multimodal.decodeGif(good).nonEmpty)
     def corrupt(mut: Array[Byte] => Unit): Array[Byte] = {
       val b = good.clone(); mut(b); b
     }
-    assert(Multimodal.decodeGifForTest("NOTGIF".getBytes).isEmpty)
-    assert(Multimodal.decodeGifForTest(good.take(10)).isEmpty)
+    assert(Multimodal.decodeGif("NOTGIF".getBytes).isEmpty)
+    assert(Multimodal.decodeGif(good.take(10)).isEmpty)
     // break the magic
-    assert(Multimodal.decodeGifForTest(corrupt(_(0) = 'X'.toByte)).isEmpty)
+    assert(Multimodal.decodeGif(corrupt(_(0) = 'X'.toByte)).isEmpty)
     // truncate mid-LZW-stream
-    assert(Multimodal.decodeGifForTest(good.dropRight(8)).isEmpty)
+    assert(Multimodal.decodeGif(good.dropRight(8)).isEmpty)
   }
 
   test("mm_gif_pixels matches the BMP-family text derivation on a sample") {

@@ -14,7 +14,7 @@ class JpegSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("mm_jpeg_pixels: jpegAssets payloads decode identically under javax.imageio") {
-    val payloads = Multimodal.jpegAssetsForTest(spark, TestSpark.sf)
+    val payloads = Multimodal.jpegAssets(spark, TestSpark.sf)
       .orderBy("doc_id").limit(12).collect()
       .map(r => r.getLong(0) -> r.getAs[Array[Byte]]("payload")).toMap
     val got = SparkEntry.queries("mm_jpeg_pixels")(spark, TestSpark.sf)
@@ -59,7 +59,7 @@ class JpegSpec extends AnyFunSuite {
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(img, "jpg", bos))
     val bytes = bos.toByteArray
-    val dec = Multimodal.decodeJpegForTest(bytes)
+    val dec = Multimodal.decodeJpegImage(bytes)
     assert(dec.isDefined, "our decoder must accept the ImageIO stream")
     val (dw, dh, px) = dec.get
     assert(dw == w && dh == h)
@@ -114,7 +114,7 @@ class JpegSpec extends AnyFunSuite {
     val (eob, el) = acC(0x00); put(eob, el)      // rest zero
     if (nbits > 0) put((1 << (8 - nbits)) - 1, 8 - nbits)
     marker(0xd9)
-    val dec = Multimodal.decodeJpegForTest(out.toByteArray)
+    val dec = Multimodal.decodeJpegImage(out.toByteArray)
     assert(dec.isDefined, "decoder must accept the synthetic stream")
     val (w, h, px) = dec.get
     assert(w == 8 && h == 8)
@@ -138,30 +138,30 @@ class JpegSpec extends AnyFunSuite {
   }
 
   test("decodeJpegImage rejects malformed streams instead of crashing") {
-    val good = Multimodal.jpegAssetsForTest(spark, TestSpark.sf)
+    val good = Multimodal.jpegAssets(spark, TestSpark.sf)
       .orderBy("doc_id").limit(1).collect()(0).getAs[Array[Byte]]("payload")
-    assert(Multimodal.decodeJpegForTest(good).isDefined)
-    assert(Multimodal.decodeJpegForTest(Array[Byte]()).isEmpty, "empty")
-    assert(Multimodal.decodeJpegForTest(good.slice(0, 2)).isEmpty, "SOI only")
-    assert(Multimodal.decodeJpegForTest(good.slice(0, good.length / 2)).isEmpty,
+    assert(Multimodal.decodeJpegImage(good).isDefined)
+    assert(Multimodal.decodeJpegImage(Array[Byte]()).isEmpty, "empty")
+    assert(Multimodal.decodeJpegImage(good.slice(0, 2)).isEmpty, "SOI only")
+    assert(Multimodal.decodeJpegImage(good.slice(0, good.length / 2)).isEmpty,
       "truncated mid-header")
     val noSoi = good.clone(); noSoi(1) = 0x00
-    assert(Multimodal.decodeJpegForTest(noSoi).isEmpty, "bad SOI")
+    assert(Multimodal.decodeJpegImage(noSoi).isEmpty, "bad SOI")
     // PNG bytes through the JPEG decoder must reject cleanly.
     val png = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-    assert(Multimodal.decodeJpegForTest(png).isEmpty, "foreign container")
+    assert(Multimodal.decodeJpegImage(png).isEmpty, "foreign container")
     // A DHT whose declared length is too short for even the 16 bits-bytes
     // must return None, never index past the segment (r12 review: the
     // pre-fix code read the bits array before the length check).
     val shortDht = Array(0xff, 0xd8, 0xff, 0xc4, 0x00, 0x05, 0x00, 0x01,
       0x02).map(_.toByte)
-    assert(Multimodal.decodeJpegForTest(shortDht).isEmpty, "short DHT")
+    assert(Multimodal.decodeJpegImage(shortDht).isEmpty, "short DHT")
   }
 
   test("header walk: fill bytes and TEM skip; RSTn/EOI before the scan reject") {
-    val good = Multimodal.jpegAssetsForTest(spark, TestSpark.sf)
+    val good = Multimodal.jpegAssets(spark, TestSpark.sf)
       .orderBy("doc_id").limit(1).collect()(0).getAs[Array[Byte]]("payload")
-    val base = Multimodal.decodeJpegForTest(good)
+    val base = Multimodal.decodeJpegImage(good)
     assert(base.isDefined)
     // Array equality is referential — compare decoded content.
     def key(o: Option[(Int, Int, Array[Int])]): Option[(Int, Int, Seq[Int])] =
@@ -170,25 +170,25 @@ class JpegSpec extends AnyFunSuite {
       good.slice(0, 2) ++ extra ++ good.drop(2)
     // T.81 B.1.1.2: any number of 0xff fill bytes may precede a marker.
     val filled = insertAfterSoi(Array(0xff.toByte, 0xff.toByte))
-    assert(key(Multimodal.decodeJpegForTest(filled)) == key(base), "fill bytes")
+    assert(key(Multimodal.decodeJpegImage(filled)) == key(base), "fill bytes")
     // TEM (0xff 0x01) is standalone — a length-less marker that the
     // pre-fix walk would have mis-read a u16 "length" after.
     val tem = insertAfterSoi(Array(0xff.toByte, 0x01.toByte))
-    assert(key(Multimodal.decodeJpegForTest(tem)) == key(base), "TEM skip")
+    assert(key(Multimodal.decodeJpegImage(tem)) == key(base), "TEM skip")
     // RSTn and EOI are length-less AND illegal before the scan: the
     // stream must reject, never parse bytes after them as a segment.
     val rst = insertAfterSoi(Array(0xff.toByte, 0xd0.toByte))
-    assert(Multimodal.decodeJpegForTest(rst).isEmpty, "pre-scan RST0")
+    assert(Multimodal.decodeJpegImage(rst).isEmpty, "pre-scan RST0")
     val eoi = insertAfterSoi(Array(0xff.toByte, 0xd9.toByte))
-    assert(Multimodal.decodeJpegForTest(eoi).isEmpty, "pre-scan EOI")
+    assert(Multimodal.decodeJpegImage(eoi).isEmpty, "pre-scan EOI")
     // A zero segment length can never loop or self-alias.
     val zeroLen = insertAfterSoi(Array(0xff.toByte, 0xfe.toByte, 0x00, 0x00))
-    assert(Multimodal.decodeJpegForTest(zeroLen).isEmpty, "len < 2")
+    assert(Multimodal.decodeJpegImage(zeroLen).isEmpty, "len < 2")
     // FF 00 is not a marker outside entropy-coded data — a walk that
     // parsed a "length" after it could be steered to swallow real header
     // segments (review finding, round 13): must reject, not mis-accept.
     val ff00 = insertAfterSoi(Array(0xff.toByte, 0x00.toByte, 0x00, 0x02))
-    assert(Multimodal.decodeJpegForTest(ff00).isEmpty, "FF 00 in header")
+    assert(Multimodal.decodeJpegImage(ff00).isEmpty, "FF 00 in header")
   }
 
   test("encodeJpeg is codepoint-aligned and 7-bit-clamped on non-ASCII text") {
@@ -201,8 +201,8 @@ class JpegSpec extends AnyFunSuite {
     assert(cps.length == 5)
     val expected = cps.map(c => math.min(c, 127)).map(c => c - (c % 2))
     assert(expected.toSeq == Seq(96, 126, 126, 126, 98))
-    val bytes = Multimodal.encodeJpegForTest(text, 40, 8) // 5 blocks across
-    val dec = Multimodal.decodeJpegForTest(bytes)
+    val bytes = Multimodal.encodeJpeg(text, 40, 8) // 5 blocks across
+    val dec = Multimodal.decodeJpegImage(bytes)
     assert(dec.isDefined, "non-ASCII synthesis must decode")
     val (w, h, px) = dec.get
     assert(w == 40 && h == 8)
@@ -223,7 +223,7 @@ class JpegSpec extends AnyFunSuite {
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(img, "jpg", bos))
     val bytes = bos.toByteArray
-    val dec = Multimodal.decodeJpegForTest(bytes)
+    val dec = Multimodal.decodeJpegImage(bytes)
     assert(dec.isDefined, "arbitrary dims must decode")
     val (dw, dh, px) = dec.get
     assert(dw == w && dh == h && px.length == w * h)

@@ -36,7 +36,7 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("minhash bands UDTF: 16 rows per doc, dup docs collide in every band") {
-    graft.functions.TextFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     import graft.functions.TextFunctions._
     val d = docsDir(Seq(1L -> base, 2L -> base,
       4L -> "completely different words about spark query engines and columnar io"))

@@ -48,17 +48,17 @@ class Round10Spec extends AnyFunSuite {
 
   test("decodeBmp refuses malformed containers instead of looping or throwing") {
     // Not a BMP at all / truncated header / bad bpp / truncated pixel data.
-    assert(Multimodal.decodeBmpForTest(Array[Byte]()) == Seq.empty)
-    assert(Multimodal.decodeBmpForTest("hello".getBytes) == Seq.empty)
+    assert(Multimodal.decodeBmp(Array[Byte]()) == Seq.empty)
+    assert(Multimodal.decodeBmp("hello".getBytes) == Seq.empty)
     val real = Multimodal.bmpAssets(spark, TestSpark.sf)
       .orderBy("doc_id").limit(1).collect()(0).getAs[Array[Byte]]("payload")
-    assert(Multimodal.decodeBmpForTest(real).nonEmpty)
-    assert(Multimodal.decodeBmpForTest(real.take(40)) == Seq.empty,
+    assert(Multimodal.decodeBmp(real).nonEmpty)
+    assert(Multimodal.decodeBmp(real.take(40)) == Seq.empty,
       "truncated header")
-    assert(Multimodal.decodeBmpForTest(real.take(real.length - 4)) == Seq.empty,
+    assert(Multimodal.decodeBmp(real.take(real.length - 4)) == Seq.empty,
       "truncated pixel rows")
     val badBpp = real.clone(); badBpp(28) = 8
-    assert(Multimodal.decodeBmpForTest(badBpp) == Seq.empty, "non-24-bpp")
+    assert(Multimodal.decodeBmp(badBpp) == Seq.empty, "non-24-bpp")
   }
 
   test("mm_png_pixels: pngAssets payloads decode identically under javax.imageio") {
@@ -110,7 +110,7 @@ class Round10Spec extends AnyFunSuite {
     }
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(img, "png", bos))
-    val stats = Multimodal.decodePngForTest(bos.toByteArray)
+    val stats = Multimodal.decodePng(bos.toByteArray)
     assert(stats.length == 3, "ImageIO PNG must decode as RGB8")
     stats.foreach { case (c, n, sum, wsum, mn, mx) =>
       assert(n == w.toLong * h)
@@ -133,14 +133,14 @@ class Round10Spec extends AnyFunSuite {
   test("decodePng rejects malformed containers: bad CRC, truncation, wrong type") {
     val real = Multimodal.pngAssets(spark, TestSpark.sf)
       .orderBy("doc_id").limit(1).collect()(0).getAs[Array[Byte]]("payload")
-    assert(Multimodal.decodePngForTest(real).nonEmpty)
-    assert(Multimodal.decodePngForTest(Array[Byte]()) == Seq.empty)
-    assert(Multimodal.decodePngForTest("not a png at all".getBytes) == Seq.empty)
+    assert(Multimodal.decodePng(real).nonEmpty)
+    assert(Multimodal.decodePng(Array[Byte]()) == Seq.empty)
+    assert(Multimodal.decodePng("not a png at all".getBytes) == Seq.empty)
     val badCrc = real.clone()
     badCrc(20) = (badCrc(20) ^ 0x01).toByte // flip a bit inside IHDR data
-    assert(Multimodal.decodePngForTest(badCrc) == Seq.empty,
+    assert(Multimodal.decodePng(badCrc) == Seq.empty,
       "a CRC mismatch must reject the file")
-    assert(Multimodal.decodePngForTest(real.take(real.length / 2)) == Seq.empty,
+    assert(Multimodal.decodePng(real.take(real.length / 2)) == Seq.empty,
       "a truncated chunk stream must reject cleanly")
   }
 
@@ -181,7 +181,7 @@ class Round10Spec extends AnyFunSuite {
       val t = new Thread(r, "png-fdict-probe"); t.setDaemon(true); t
     }
     val fut = exec.submit(new java.util.concurrent.Callable[Int] {
-      def call(): Int = Multimodal.decodePngForTest(png).size
+      def call(): Int = Multimodal.decodePng(png).size
     })
     try {
       val n = fut.get(30, java.util.concurrent.TimeUnit.SECONDS)

@@ -359,7 +359,6 @@ class StreamingSpec extends AnyFunSuite {
       }
     }
     graft.functions.GraftFunctions.register(spark)
-    graft.functions.TextFunctions.register(spark)
     import graft.functions.TextFunctions._
     // Re-shard the fixture docs into 4 files streamed one per trigger, so
     // bucket state genuinely carries across micro-batches.

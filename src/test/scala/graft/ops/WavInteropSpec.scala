@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * read [[Multimodal.audioAssets]] payloads (proving the writer emits
   * real RIFF/WAVE, not a private dialect — including the odd-size LIST
   * chunk + pad byte the RIFF spec requires readers to skip), and
-  * [[Multimodal.decodePcmForTest]] must read an AudioSystem-WRITTEN file
+  * [[Multimodal.decodePcm]] must read an AudioSystem-WRITTEN file
   * (a foreign writer whose chunk layout we don't control). Sample
   * statistics are compared EXACTLY — PCM integer decode has no lossy
   * step, so any container-walk or sample-extraction slip is a hard
@@ -53,7 +53,7 @@ class WavInteropSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getAs[Array[Byte]]("payload"))
     assert(payloads.nonEmpty)
     payloads.foreach { case (id, bytes) =>
-      val ours = Multimodal.decodePcmForTest(bytes)
+      val ours = Multimodal.decodePcm(bytes)
       assert(ours.nonEmpty, s"doc $id: our decoder must accept its own asset")
       val ais: AudioInputStream = AudioSystem.getAudioInputStream(
         new java.io.ByteArrayInputStream(bytes))
@@ -85,7 +85,7 @@ class WavInteropSpec extends AnyFunSuite {
     AudioSystem.write(new AudioInputStream(
       new java.io.ByteArrayInputStream(b16.array()), f16, n16.toLong),
       javax.sound.sampled.AudioFileFormat.Type.WAVE, out16)
-    val dec16 = Multimodal.decodePcmForTest(out16.toByteArray)
+    val dec16 = Multimodal.decodePcm(out16.toByteArray)
     assert(dec16.size == 2, "16-bit stereo must decode both channels")
     (0 until 2).foreach { c =>
       val vals = (0 until n16).map(i => s16(i * 2 + c).toLong)
@@ -103,7 +103,7 @@ class WavInteropSpec extends AnyFunSuite {
     AudioSystem.write(new AudioInputStream(
       new java.io.ByteArrayInputStream(raw8), f8, n8.toLong),
       javax.sound.sampled.AudioFileFormat.Type.WAVE, out8)
-    val dec8 = Multimodal.decodePcmForTest(out8.toByteArray)
+    val dec8 = Multimodal.decodePcm(out8.toByteArray)
     assert(dec8.size == 1, "8-bit mono must decode")
     val vals8 = raw8.map(b => (b & 0xff).toLong - 128L)
     val (_, sr8, n8got, sum8, sq8, peak8) = dec8.head
