@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
@@ -13,30 +14,41 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
 /** Fixture table loaders.
   *
   * Schema source of truth is the Parquet footer (self-describing); we never
-  * sample-infer. Each load reads ONE footer on the driver
-  * ([[footerSchema]]) and hands the schema to `spark.read.schema(…)`, so
-  * opening a table starts no Spark job — `spark.read.parquet(path)` would
-  * read the same footer, but inside a one-task inference job that costs
-  * several times the open itself. The footer is chosen the way Spark's non-merging
-  * inference chooses it: a file path is its own footer; in a directory
-  * tree, `_common_metadata`, else `_metadata`, else the first data file in
-  * path order, skipping hidden (`_`/`.`) names. So a `name.parquet` that is
-  * a directory of many part files loads exactly as a single file does.
+  * sample-infer. Opening a table is one footer read on the calling thread
+  * ([[GraftParquet.footer]], not `readParquetFootersInParallel` and its
+  * thread pool per call) plus one directly built file relation
+  * ([[GraftParquet.relation]]): the relation
+  * `spark.read.schema(footerSchema).parquet(path)` resolves to, without
+  * that read's data-source lookup and path-check thread pool per call.
+  * No Spark job runs (`spark.read.parquet(path)` would start a one-task
+  * inference job), and nothing is cached: every open reads its footer.
+  * The footer is chosen the way Spark's non-merging inference chooses it:
+  * a file path is its own footer; in a directory tree, `_common_metadata`,
+  * else `_metadata`, else the first data file in path order, skipping
+  * hidden (`_`/`.`) names. So a `name.parquet` that is a directory of many
+  * part files (`k=v` partition directories included) loads exactly as a
+  * single file does.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    spark.read.schema(footerSchema(spark, path)).parquet(path)
-  }
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    open(spark, s"$sfDir/$name.parquet")(GraftParquet.schema(spark, _))
 
   /** The schema `spark.read.parquet(path)` infers (without `mergeSchema`),
     * read from one footer on the driver under the session's conf. */
   def footerSchema(spark: SparkSession, path: String): StructType =
-    GraftParquet.schema(spark, footer(spark, path))
+    GraftParquet.schema(spark, footer(GraftParquet.hadoopConf(spark), new Path(path)))
 
-  private def footer(spark: SparkSession, path: String): Footer = {
+  /** One Hadoop conf per open: it qualifies the root, reads the footer of
+    * the file [[footer]] chooses, and `schemaOf` converts that footer. */
+  private def open(spark: SparkSession, path: String)(schemaOf: Footer => StructType): DataFrame = {
     val conf = GraftParquet.hadoopConf(spark)
     val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val qualified = root.makeQualified(fs.getUri, fs.getWorkingDirectory)
+    GraftParquet.relation(spark, qualified, path, schemaOf(footer(conf, qualified)))
+  }
+
+  private def footer(conf: Configuration, root: Path): Footer = {
     val fs = root.getFileSystem(conf)
     def summary(n: String) = n == "_common_metadata" || n == "_metadata"
     def hidden(n: String) = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
@@ -49,7 +61,7 @@ object Tables {
     def named(n: String) = files.find(_.getPath.getName == n)
     val file = named("_common_metadata").orElse(named("_metadata"))
       .orElse(files.find(f => !summary(f.getPath.getName)))
-      .getOrElse(throw new java.io.FileNotFoundException(s"no Parquet data file under $path"))
+      .getOrElse(throw new java.io.FileNotFoundException(s"no Parquet data file under $root"))
     GraftParquet.footer(conf, file)
   }
 
@@ -68,18 +80,18 @@ object Tables {
     * TIMESTAMP_NTZ). Branch on the footer type so both load to the same
     * session-zoned TimestampType column; the NTZ→TZ cast is
     * value-preserving because the harness runs in UTC. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val path = s"$d/events.parquet"
-    normalizeTs(s.read.schema(eventsSchema(s, path)).parquet(path))
-  }
+  def events(s: SparkSession, d: String): DataFrame =
+    normalizeTs(open(s, s"$d/events.parquet")(eventsSchema(s, _)))
 
   /** The footer schema of an events file. Only a `ts` stored as
     * TIMESTAMP(NANOS) needs `spark.sql.legacy.parquet.nanosAsLong`, so
     * only then is it set on the session (before the footer is converted);
     * a µs file leaves the session's conf untouched. Shared with the
     * streaming events source, whose `readStream` needs this schema. */
-  private[graft] def eventsSchema(s: SparkSession, path: String): StructType = {
-    val f = footer(s, path)
+  private[graft] def eventsSchema(s: SparkSession, path: String): StructType =
+    eventsSchema(s, footer(GraftParquet.hadoopConf(s), new Path(path)))
+
+  private def eventsSchema(s: SparkSession, f: Footer): StructType = {
     val cols = f.getParquetMetadata.getFileMetaData.getSchema
     cols.getType(cols.getFieldIndex("ts")).getLogicalTypeAnnotation match {
       case t: TimestampLogicalTypeAnnotation if t.getUnit == TimeUnit.NANOS =>

@@ -9,8 +9,8 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
 /** REGISTERED Structured Streaming queries — §2.10 surfaced in the driver's
   * correctness roster, not just in StreamingSpec. Each query runs a REAL
   * streaming job inside the query function: `readStream` over the fixture
-  * parquet, a watermarked/stateful transform, `processAllAvailable` (the
-  * AvailableNow drain — the backlog is finite), then returns the sink
+  * parquet, a watermarked/stateful transform, an `AvailableNow` drain (the
+  * backlog is finite, so the query ends on its own), then returns the sink
   * contents as an ordered DataFrame. Because the batch twins are
   * oracle-gated and streaming semantics here are deterministic (Complete-
   * mode aggregates; Update-mode state emissions reduced by exact
@@ -63,9 +63,9 @@ object StreamQueries extends QueryModule {
     // start() — the engine snapshots the session conf when the query
     // starts — and is restored before the caller's batch tail runs.
     withConf(s, streamSizing: _*) {
-      val q = streamed.writeStream.outputMode(mode)
+      val q = streamed.writeStream.outputMode(mode).trigger(Trigger.AvailableNow())
         .format("memory").queryName(name).start()
-      q.processAllAvailable(); q.stop()
+      q.awaitTermination()
     }
     val sink = s.table(name)
     s.catalog.dropTempView(name)

@@ -11,7 +11,8 @@ import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
@@ -50,6 +51,41 @@ class TablesSpec extends AnyFunSuite {
         assert(Tables.table(s, sf, t).schema == inferred, s"$path nanosAsLong=$nanos")
       }
     }
+  }
+
+  /** The file relation under a loaded table's plan. */
+  private def relationOf(df: DataFrame): HadoopFsRelation =
+    GraftBridge.analyzed(df).collectFirst {
+      case l: LogicalRelation => l.relation.asInstanceOf[HadoopFsRelation]
+    }.get
+
+  /** `ours` and `theirs` read the same files through equal relations. */
+  private def assertSameRelation(ours: DataFrame, theirs: DataFrame, what: String): Unit = {
+    val (a, b) = (relationOf(ours), relationOf(theirs))
+    assert(a.location.rootPaths == b.location.rootPaths, what)
+    assert(a.partitionSchema == b.partitionSchema && a.dataSchema == b.dataSchema, what)
+    assert(a.options == b.options, what)
+    assert(a.fileFormat.getClass == b.fileFormat.getClass, what)
+    assert(ours.collect().toSeq == theirs.collect().toSeq, what)
+  }
+
+  test("Tables opens the relation spark.read.schema(footerSchema).parquet resolves") {
+    for (sf <- Seq(TestSpark.sf, new java.io.File(TestSpark.sf).getParent + "/sf0.01"); t <- names) {
+      val path = s"$sf/$t.parquet"
+      if (t == "events") assertSameRelation(Tables.events(spark, sf),
+        Tables.normalizeTs(spark.read.schema(Tables.eventsSchema(spark, path)).parquet(path)), path)
+      else assertSameRelation(Tables.table(spark, sf, t),
+        spark.read.schema(Tables.footerSchema(spark, path)).parquet(path), path)
+    }
+    // partition discovery over a k=v directory tree
+    val dir = Scratch.fresh("tables_relation_parted")
+    val parted = s"$dir/p.parquet"
+    spark.range(0, 12, 1, 3).select(col("id"), (col("id") % 3).as("k"))
+      .write.partitionBy("k").parquet(parted)
+    val ours = Tables.table(spark, dir, "p")
+    assertSameRelation(ours,
+      spark.read.schema(Tables.footerSchema(spark, parted)).parquet(parted), parted)
+    assert(relationOf(ours).partitionSchema.fieldNames.toSeq == Seq("k"))
   }
 
   test("footerSchema skips _SUCCESS and .crc files in a Spark-written directory") {
