@@ -295,18 +295,18 @@ object Graph extends QueryModule {
     * fixed-round trajectory, which stays closed-form for the oracle).
     * Each round is label(v) ← min(label(v), min over neighbors) — one
     * union + one keyed min-agg per round, vertex-sharded at any scale;
-    * each round's table is lazily checkpointed (three consumers, the
-    * kcore precedent). Reports per-community sizes after round 4. */
-  /** The co-purchase edge set and its 4-round min-label assignment —
-    * shared by [[labelProp]] and [[modularity]]. Both frames are lazily
-    * checkpointed (multiple consumers each). */
+    * each round's table is checkpointed (three consumers, the kcore
+    * precedent). Reports per-community sizes after round 4. */
+  /** The co-purchase edge set and its 4-round min-label assignment, shared by [[labelProp]] and
+    * [[modularity]]. Checkpointed eagerly (multiple consumers each): two first consumers of a lazy
+    * checkpoint can deadlock (`DAGScheduler.getCacheLocs` vs `RDD.doCheckpoint` locks). */
   private def lpEdgesLabels(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val edges = coEdges(s, d, 2)
-      .localCheckpoint(false)
+      .localCheckpoint()
     val verts = edges.select(col("u").as("id"))
       .unionByName(edges.select(col("v").as("id"))).distinct()
     var labels = verts.select(col("id"), col("id").as("lbl"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     for (_ <- 1 to 4) {
       // Neighbor labels flow along BOTH directions of each edge.
       val fromU = edges.join(labels, edges("u") === labels("id"))
@@ -316,7 +316,7 @@ object Graph extends QueryModule {
       labels = labels.select(col("id"), col("lbl"))
         .unionByName(fromU).unionByName(fromV)
         .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
-        .localCheckpoint(false)
+        .localCheckpoint()
     }
     (edges, labels)
   }

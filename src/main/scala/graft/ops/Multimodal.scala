@@ -1,5 +1,12 @@
 package graft.ops
 
+import java.awt.image.{BufferedImage, IndexColorModel}
+import javax.imageio.ImageIO
+import javax.imageio.stream.MemoryCacheImageInputStream
+import javax.sound.sampled.{AudioFormat, AudioSystem}
+
+import scala.util.control.NonFatal
+
 import graft.{Query, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,16 +17,14 @@ import org.apache.spark.sql.functions._
   *
   * The fixtures carry no real compressed media, so payloads are
   * synthesized deterministically from document text — but inside REAL
-  * containers: [[imageAssets]] emits spec-correct PNG/JPEG headers,
-  * [[audioAssets]] emits complete RIFF/WAVE PCM files whose data chunk
-  * holds the text bytes as samples. The decode step is therefore REAL:
-  * [[features]] runs an actual PCM WAV decoder (container chunk walk,
-  * little-endian fmt parse, interleaved-channel 8-bit-unsigned /
-  * 16-bit-signed sample extraction) inside the `mapPartitions` batch
-  * contract a codec UDF plugs into — the one codec this container can
-  * honestly exercise end-to-end. Image/video stay at header parse +
-  * routing ([[imageDims]], [[sniffRoute]]) because no image codec lib
-  * ships here; their decode would reuse the identical plumbing.
+  * containers written here: RIFF/WAVE PCM ([[audioAssets]]), BMP, PNG,
+  * GIF and baseline JPEG. The decode step is REAL and is the JDK's own:
+  * [[decodePcm]] runs `javax.sound.sampled` and [[decodeImage]] runs
+  * `javax.imageio`, inside the `mapPartitions` batch contract a codec UDF
+  * plugs into. Each decode query's oracle re-derives the decoded samples
+  * from the source text without parsing the container. Header parsing
+  * and format routing ([[imageDims]], [[audioMeta]], [[sniffRoute]]) run
+  * as column expressions over the payload bytes.
   *
   * Scale posture: assets are map-only; feature extraction is
   * embarrassingly parallel per partition with zero shuffle; downstream
@@ -30,7 +35,7 @@ object Multimodal extends QueryModule {
     * arbitrary allocation before one data byte is validated — a corrupt
     * or hostile 100-byte payload declaring 65535×65535 must not OOM (or
     * NegativeArraySizeException via w*h Int overflow) an executor task.
-    * Every pixel decoder checks w·h against this in Long space and
+    * [[decodeImage]] reads w·h from the header first, in Long space, and
     * returns empty above it — the same contract as any other
     * malformation. 2^24 px = 64 MiB of Int, far above any fixture and a
     * sane per-record bound for a fleet codec. */
@@ -62,69 +67,53 @@ object Multimodal extends QueryModule {
       col("meta.height").as("height"))
       .orderBy(col("doc_id"))
 
-  /** REAL PCM WAV decode: walk the RIFF container (fourcc + LE32 size,
-    * exactly as [[audioAssets]] writes it), read the fmt chunk's
-    * little-endian channel/rate/depth fields, then decode the data
-    * chunk's interleaved frames — 8-bit PCM is unsigned-biased
-    * (byte − 128), 16-bit PCM is signed little-endian — and return one
-    * amplitude-statistics row per (asset, channel): frame count, exact
-    * integer sample sum and peak, mean and RMS. Truncated trailing
-    * bytes that don't fill a whole frame are dropped, as a real reader
-    * does. Returns Nil for anything that is not a RIFF/WAVE PCM file.
+  /** PCM WAV decode with the JDK's `javax.sound.sampled.AudioSystem`: it
+    * walks the RIFF container to the fmt and data chunks; the interleaved
+    * frames are then read here — 8-bit PCM is unsigned-biased
+    * (byte − 128), 16-bit PCM is signed little-endian — into one
+    * amplitude-statistics row per channel: (channel, sample rate, frame
+    * count, exact integer sample sum, sum of squares, peak). Truncated
+    * trailing bytes that don't fill a whole frame are dropped. Returns Nil
+    * for anything that is not an 8- or 16-bit PCM WAV, malformed ones
+    * included.
     *
     * All accumulation is integer (Long), so mean = sum/n and
     * rms = sqrt(sq/n) divide identical longs in any engine — this is
     * what lets a byte-level codec be ORACLE-GATED: DuckDB re-derives
     * the same samples character-arithmetically from the source text
-    * (the payload's data chunk), never seeing the container the decoder
-    * must walk. */
-  private[ops] def decodePcm(bytes: Array[Byte]): Seq[(Int, Int, Long, Long, Long, Long)] = {
-    def fourcc(off: Int): String =
-      if (off + 4 <= bytes.length) new String(bytes, off, 4, "US-ASCII") else ""
-    if (fourcc(0) != "RIFF" || fourcc(8) != "WAVE") return Seq.empty
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    var off = 12
-    var ch = 0; var sr = 0; var bits = 0
-    var dataOff = -1; var dataLen = 0
-    var bad = false
-    while (!bad && off + 8 <= bytes.length && dataOff < 0) {
-      val id = fourcc(off)
-      val size = bb.getInt(off + 4)
-      if (size < 0) bad = true // corrupt LE32 size: refuse, don't loop
-      else if (id == "data") { dataOff = off + 8; dataLen = size }
-      else {
-        // fmt fields live at off+10..off+23; a truncated fmt chunk must
-        // not read past the buffer (ch/bits stay 0 → Seq.empty below)
-        if (id == "fmt " && off + 24 <= bytes.length) {
-          ch = bb.getShort(off + 10); sr = bb.getInt(off + 12)
-          bits = bb.getShort(off + 22)
+    * (the payload's data chunk), never seeing the container. */
+  private[ops] def decodePcm(bytes: Array[Byte]): Seq[(Int, Int, Long, Long, Long, Long)] =
+    try {
+      val in = AudioSystem.getAudioInputStream(new java.io.ByteArrayInputStream(bytes))
+      try {
+        val fmt = in.getFormat
+        val ch = fmt.getChannels
+        val bits = fmt.getSampleSizeInBits
+        val pcm = (bits == 8 && fmt.getEncoding == AudioFormat.Encoding.PCM_UNSIGNED) ||
+          (bits == 16 && fmt.getEncoding == AudioFormat.Encoding.PCM_SIGNED && !fmt.isBigEndian)
+        if (ch <= 0 || !pcm) Seq.empty
+        else {
+          val bps = bits / 8
+          val frameBytes = ch * bps
+          // a whole number of frames: AudioInputStream reads whole frames only
+          val data = new Array[Byte](bytes.length / frameBytes * frameBytes)
+          val n = in.readNBytes(data, 0, data.length) / frameBytes
+          (0 until ch).map { c =>
+            var sum = 0L; var sq = 0L; var peak = 0L; var i = 0
+            while (i < n) {
+              val p = i * frameBytes + c * bps
+              val v: Long =
+                if (bits == 8) (data(p) & 0xff).toLong - 128L
+                else ((data(p + 1) << 8) | (data(p) & 0xff)).toShort.toLong
+              sum += v; sq += v * v
+              val a = math.abs(v); if (a > peak) peak = a
+              i += 1
+            }
+            (c, fmt.getSampleRate.toInt, n.toLong, sum, sq, peak)
+          }
         }
-        // advance in Long space (RIFF pads odd chunks to even); a huge
-        // size must end the walk cleanly, not wrap the int offset
-        val next = off.toLong + 8L + size.toLong + (size & 1)
-        if (next > bytes.length) bad = true
-        else off = next.toInt
-      }
-    }
-    if (dataOff < 0 || ch <= 0 || (bits != 8 && bits != 16)) return Seq.empty
-    val bps = bits / 8
-    val frameBytes = ch * bps
-    val n = math.min(dataLen, bytes.length - dataOff) / frameBytes
-    (0 until ch).map { c =>
-      var sum = 0L; var sq = 0L; var peak = 0L; var i = 0
-      while (i < n) {
-        val p = dataOff + i * frameBytes + c * bps
-        val v: Long =
-          if (bits == 8) (bytes(p) & 0xff).toLong - 128L
-          else bb.getShort(p).toLong
-        sum += v; sq += v * v
-        val a = math.abs(v); if (a > peak) peak = a
-        i += 1
-      }
-      (c, sr, n.toLong, sum, sq, peak)
-    }
-  }
+      } finally in.close()
+    } catch { case NonFatal(_) => Seq.empty }
 
   /** Feature extraction over binary media — a GENUINE decode, not a
     * byte-block stand-in: every [[audioAssets]] payload (a complete
@@ -135,7 +124,7 @@ object Multimodal extends QueryModule {
     * RMS, peak. The oracle recomputes the expected samples from the
     * source text characters (8-bit: ord − 128; 16-bit: LE char pairs,
     * interleaved by channel) — it never parses the container, so a pass
-    * proves the chunk walk + fmt decode + frame de-interleave against
+    * proves the writer's container and the frame de-interleave against
     * byte-level first principles. Map-only, zero shuffle; the only
     * non-codegen region is the codec itself, which is irreducibly
     * imperative. */
@@ -349,7 +338,7 @@ object Multimodal extends QueryModule {
     * (byte-rate algebra, data size vs actual payload bytes) and the clip
     * duration. Oracle computes the expected values closed-form from the
     * synthesis formulas — the parser never sees those formulas, only
-    * bytes; Round9Spec re-reads the same fields with an independent
+    * bytes; MultimodalSpec re-reads the same fields with an independent
     * java.nio LITTLE_ENDIAN ByteBuffer decode. */
   def audioMeta(s: SparkSession, d: String): DataFrame = {
     def le(at: String, bytes: Int): String = {
@@ -433,87 +422,107 @@ object Multimodal extends QueryModule {
         unhex(concat(col("header_hex"), col("rows_hex"))).as("payload"))
   }
 
-  /** REAL BMP pixel decode: parse the LE file/info headers (data offset,
-    * width, height, bpp), then walk the pixel rows bottom-up, skipping
-    * each row's 4-byte-boundary pad, and de-interleave the 3 channels.
-    * Emits per-channel statistics including a POSITION-WEIGHTED sum
-    * (Σ (y·w + x)·v over logical row-major pixel index) — the weighted
-    * sum is what proves the decoder reconstructed logical positions: a
-    * reader that forgot the vertical flip or read pad bytes as pixels
-    * produces the same plain sum but a different weighted sum. Returns
-    * Nil for anything that is not a 24-bpp uncompressed BMP; corrupt
-    * sizes/offsets end the decode cleanly (same contract as
-    * [[decodePcm]]). */
-  private[ops] def decodeBmp(bytes: Array[Byte]): Seq[(Int, Long, Long, Long, Long, Long)] = {
-    if (bytes.length < 54 || bytes(0) != 'B' || bytes(1) != 'M') return Seq.empty
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val dataOff = bb.getInt(10)
-    val w = bb.getInt(18); val h = bb.getInt(22)
-    val bpp = bb.getShort(28).toInt
-    val compression = bb.getInt(30)
-    if (dataOff < 54 || w <= 0 || h <= 0 || bpp != 24 || compression != 0)
-      return Seq.empty
-    // Budget first (w.toLong * h cannot overflow Long for Int32 dims),
-    // THEN Long stride math: a corrupted huge w overflows w*3 in Int to
-    // a small/negative stride, and near-2^31 w AND h overflow even
-    // strideL*h in Long — both slip PAST a naive bounds guard and out of
-    // bounds in the pixel walk (both found by CodecFuzzSpec trials).
-    if (w.toLong * h > MaxDecodePixels) return Seq.empty
-    val strideL = (w.toLong * 3 + 3) / 4 * 4
-    if (dataOff.toLong + strideL * h > bytes.length) return Seq.empty
-    val stride = strideL.toInt // fits: dataOff + stride*h ≤ length ≤ 2^31
-    (0 until 3).map { c =>
+  /** Decodes an image payload with the JDK's `javax.imageio` — any format it
+    * reads, BMP, PNG, GIF and JPEG among them. The reader is picked from
+    * the payload's magic bytes and reads from memory
+    * (`ImageIO.read(InputStream)` would cache every call in a temp file).
+    * The header's width × height is checked against [[MaxDecodePixels]]
+    * before any pixel is decoded. Anything malformed, truncated or over
+    * budget returns None: decoders run inside `mapPartitions`, where one
+    * throw on one payload fails the task. A read warning counts as a
+    * failure too — that is how a JPEG truncated mid-scan comes back, with
+    * its missing blocks filled in gray. */
+  private[ops] def decodeImage(bytes: Array[Byte]): Option[BufferedImage] = {
+    val in = new MemoryCacheImageInputStream(new java.io.ByteArrayInputStream(bytes))
+    try {
+      val readers = ImageIO.getImageReaders(in)
+      if (!readers.hasNext) None
+      else {
+        val reader = readers.next()
+        try {
+          var warned = false
+          reader.addIIOReadWarningListener((_, _) => warned = true)
+          reader.setInput(in, true, true)
+          if (reader.getWidth(0).toLong * reader.getHeight(0) > MaxDecodePixels) None
+          else {
+            val img = reader.read(0)
+            if (warned) None else Some(img)
+          }
+        } finally reader.dispose()
+      }
+    } catch { case NonFatal(_) => None }
+    finally in.close()
+  }
+
+  /** Per-channel statistics of a decoded image, one row per raster band in
+    * `bands` (channel c reads band `bands(c)`): pixel count, sum, min, max
+    * and a POSITION-WEIGHTED sum Σ (y·w + x)·v over the logical row-major
+    * pixel index. The weighted sum is what proves the decode reconstructed
+    * positions: a flipped row order or a pad byte read as a pixel gives the
+    * same plain sum but a different weighted sum. An indexed image's value
+    * is its palette red. */
+  private[ops] def channelStats(img: BufferedImage,
+      bands: Seq[Int]): Seq[(Int, Long, Long, Long, Long, Long)] = {
+    val raster = img.getRaster
+    val w = img.getWidth; val h = img.getHeight
+    val value: Int => Int = img.getColorModel match {
+      case icm: IndexColorModel => icm.getRed
+      case _ => identity
+    }
+    bands.zipWithIndex.map { case (band, c) =>
       var sum = 0L; var wsum = 0L
       var mn = Long.MaxValue; var mx = Long.MinValue
-      var fr = 0
-      while (fr < h) {
-        val y = h - 1 - fr // bottom-up storage → logical row
-        val base = dataOff + fr * stride
+      var y = 0
+      while (y < h) {
         var x = 0
         while (x < w) {
-          val v = (bytes(base + x * 3 + c) & 0xff).toLong
+          val v = value(raster.getSample(x, y, band)).toLong
           sum += v; wsum += (y.toLong * w + x) * v
           if (v < mn) mn = v; if (v > mx) mx = v
           x += 1
         }
-        fr += 1
+        y += 1
       }
       (c, w.toLong * h, sum, wsum, mn, mx)
     }
   }
 
-  /** Per-channel pixel statistics over genuinely decoded BMP images — the
-    * image-side completion of the decode story ([[features]] is the audio
-    * side): every [[bmpAssets]] payload runs through [[decodeBmp]] inside
-    * the same `mapPartitions` batch contract, and the oracle re-derives
-    * the expected pixels character-arithmetically from the source text
-    * WITHOUT parsing the container — so a hash match proves the header
-    * parse, the bottom-up row walk, the pad skip, and the channel
-    * de-interleave at the byte level. Round10Spec additionally decodes
-    * the same payloads with the JDK's stock ImageIO BMP reader and gets
-    * identical statistics, proving the writer emits real BMPs, not a
-    * private dialect. Map-only, zero shuffle. */
-  def pixelStats(s: SparkSession, d: String): DataFrame = {
+  /** The image decode inside the `mapPartitions` batch contract (iterate
+    * rows in batches, emit fixed-width rows — the exact contract an
+    * Arrow-batched codec UDF plugs into): every `payload` of `assets` runs
+    * through [[decodeImage]] and [[channelStats]] over `bands`. Map-only,
+    * zero shuffle; an undecodable payload emits no rows. */
+  private def imageStats(s: SparkSession, assets: DataFrame, bands: Seq[Int]): DataFrame = {
     val spark = s
     import spark.implicits._
-    bmpAssets(s, d)
+    assets
       .select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions { rows =>
         rows.grouped(64).flatMap(_.iterator.flatMap { case (id, bytes) =>
-          decodeBmp(bytes).map { case (c, n, sum, wsum, mn, mx) =>
-            (id, c, n, sum, wsum, mn, mx)
+          decodeImage(bytes).toSeq.flatMap(channelStats(_, bands)).map {
+            case (c, n, sum, wsum, mn, mx) => (id, c, n, sum, wsum, mn, mx)
           }
         })
       }
       .toDF("doc_id", "channel", "n_px", "sum_v", "wsum_v", "min_v", "max_v")
-      .select(col("doc_id"), col("channel").cast("int").as("channel"),
+      .select(col("doc_id"), col("channel"),
         col("n_px"), col("sum_v"), col("wsum_v"), col("min_v"), col("max_v"),
         (col("sum_v").cast("double") / col("n_px").cast("double"))
           .as("mean_v"))
-      .orderBy(col("doc_id"), col("channel"))
   }
+
+  /** Per-channel pixel statistics over decoded BMP images — the image-side
+    * completion of the decode story ([[features]] is the audio side).
+    * Channel c is the c-th stored byte of a pixel, B, G, R — raster bands
+    * 2, 1, 0. The oracle re-derives the expected pixels
+    * character-arithmetically from the source text WITHOUT parsing the
+    * container, so a hash match proves the writer's bottom-up rows, row
+    * pad and channel interleave against a stock reader at the byte level.
+    * Map-only, zero shuffle. */
+  def pixelStats(s: SparkSession, d: String): DataFrame =
+    imageStats(s, bmpAssets(s, d), Seq(2, 1, 0))
+      .orderBy(col("doc_id"), col("channel"))
 
   /** PNG asset table with REAL compressed PNGs — the final rung of the
     * decode ladder (WAV: raw samples in a chunked container; BMP: raw
@@ -598,150 +607,14 @@ object Multimodal extends QueryModule {
       .toDF("doc_id", "payload")
   }
 
-  /** REAL PNG decode: verify the signature, walk the big-endian chunk
-    * stream VALIDATING every CRC32 (a corrupt chunk rejects the file, as
-    * the spec requires), parse IHDR (only 8-bit truecolor RGB accepted),
-    * concatenate all IDAT payloads, INFLATE the zlib stream, then undo
-    * the per-row filters — None/Sub/Up/Average/Paeth, the full filter
-    * set, reconstructing each byte from left/up/up-left neighbors exactly
-    * per the PNG specification — and emit the same per-channel statistics
-    * as [[decodeBmp]] (position-weighted sum included, so a decoder that
-    * misreconstructs any row cannot pass). Returns Nil on any
-    * malformation: bad signature, CRC mismatch, truncated chunks,
-    * non-RGB8 images, or a broken DEFLATE stream. */
-  private[ops] def decodePng(bytes: Array[Byte]): Seq[(Int, Long, Long, Long, Long, Long)] = {
-    val sig = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-    if (bytes.length < 8 || !bytes.slice(0, 8).sameElements(sig)) return Seq.empty
-    val bb = java.nio.ByteBuffer.wrap(bytes) // big-endian by default
-    var off = 8
-    var w = -1; var h = -1; var ok = true; var sawEnd = false
-    val idat = new java.io.ByteArrayOutputStream()
-    while (ok && !sawEnd && off + 12 <= bytes.length) {
-      val len = bb.getInt(off)
-      if (len < 0 || off.toLong + 12 + len > bytes.length) ok = false
-      else {
-        val typ = new String(bytes, off + 4, 4, "US-ASCII")
-        val crc = new java.util.zip.CRC32()
-        crc.update(bytes, off + 4, 4 + len)
-        if (crc.getValue.toInt != bb.getInt(off + 8 + len)) ok = false
-        else {
-          typ match {
-            case "IHDR" =>
-              if (len != 13) ok = false
-              else {
-                w = bb.getInt(off + 8); h = bb.getInt(off + 12)
-                val depth = bytes(off + 16); val color = bytes(off + 17)
-                val interlace = bytes(off + 20)
-                if (depth != 8 || color != 2 || interlace != 0) ok = false
-              }
-            case "IDAT" => idat.write(bytes, off + 8, len)
-            case "IEND" => sawEnd = true
-            case _ => () // ancillary chunks skip
-          }
-          off += 12 + len
-        }
-      }
-    }
-    if (!ok || !sawEnd || w <= 0 || h <= 0 || idat.size == 0) return Seq.empty
-    // Budget BEFORE any allocation: also keeps every product below
-    // (stride, h*(1+stride), h*stride) inside Int range.
-    if (w.toLong * h > MaxDecodePixels) return Seq.empty
-    val stride = w * 3
-    val raw = new Array[Byte](h * (1 + stride))
-    // finally, not success-path end(): every early return above leaked
-    // the NATIVE zlib buffer — under a partition of malformed payloads
-    // (the exact load the fuzz battery models) that accumulates off-heap
-    // until GC, invisible to heap sizing.
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(idat.toByteArray)
-      var got = 0
-      while (got < raw.length && !inf.finished()) {
-        val k = inf.inflate(raw, got, raw.length - got)
-        // Zero progress on an unfinished stream is malformed, full stop:
-        // needsInput() covers truncation, but inflate also returns 0 when
-        // needsDictionary() is true (zlib header with FDICT set and a
-        // valid FCHECK, e.g. bytes 78 20) with needsInput()=false — a
-        // CRC-valid hostile payload would otherwise spin this loop
-        // forever and hang the executor task.
-        if (k == 0 && !inf.finished()) return Seq.empty
-        got += k
-      }
-      if (got != raw.length) return Seq.empty
-    } catch { case _: java.util.zip.DataFormatException => return Seq.empty }
-    finally inf.end()
-    // Unfilter in place into the pixel array.
-    val px = new Array[Int](h * stride)
-    var y = 0
-    while (y < h) {
-      val ft = raw(y * (1 + stride)) & 0xff
-      if (ft > 4) return Seq.empty
-      var i = 0
-      while (i < stride) {
-        val f = raw(y * (1 + stride) + 1 + i) & 0xff
-        val a = if (i >= 3) px(y * stride + i - 3) else 0        // left
-        val b = if (y > 0) px((y - 1) * stride + i) else 0       // up
-        val c = if (i >= 3 && y > 0) px((y - 1) * stride + i - 3) else 0
-        val v = ft match {
-          case 0 => f
-          case 1 => (f + a) & 0xff
-          case 2 => (f + b) & 0xff
-          case 3 => (f + (a + b) / 2) & 0xff
-          case 4 => // Paeth predictor
-            val p = a + b - c
-            val pa = math.abs(p - a); val pb = math.abs(p - b)
-            val pc = math.abs(p - c)
-            val pred = if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-            (f + pred) & 0xff
-        }
-        px(y * stride + i) = v
-        i += 1
-      }
-      y += 1
-    }
-    (0 until 3).map { ch =>
-      var sum = 0L; var wsum = 0L
-      var mn = Long.MaxValue; var mx = Long.MinValue
-      var idx = 0
-      while (idx < w * h) {
-        val v = px(idx * 3 + ch).toLong
-        sum += v; wsum += idx.toLong * v
-        if (v < mn) mn = v; if (v > mx) mx = v
-        idx += 1
-      }
-      (ch, w.toLong * h, sum, wsum, mn, mx)
-    }
-  }
-
-  /** Per-channel pixel statistics over genuinely decoded COMPRESSED PNGs —
-    * same output contract and same closed-form oracle family as
-    * [[pixelStats]], but the decode now crosses a zlib DEFLATE stream,
-    * CRC-validated chunk framing, and per-row filter reconstruction. A
-    * hash match proves all three, because any slip changes the
-    * position-weighted sums. Round10Spec additionally (a) reads the same
-    * payloads with ImageIO and (b) feeds OUR decoder PNGs written by
-    * ImageIO (whatever filters it picked), proving interop both
-    * directions. */
-  def pngPixelStats(s: SparkSession, d: String): DataFrame = {
-    val spark = s
-    import spark.implicits._
-    pngAssets(s, d)
-      .select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.grouped(64).flatMap(_.iterator.flatMap { case (id, bytes) =>
-          decodePng(bytes).map { case (c, n, sum, wsum, mn, mx) =>
-            (id, c, n, sum, wsum, mn, mx)
-          }
-        })
-      }
-      .toDF("doc_id", "channel", "n_px", "sum_v", "wsum_v", "min_v", "max_v")
-      .select(col("doc_id"), col("channel").cast("int").as("channel"),
-        col("n_px"), col("sum_v"), col("wsum_v"), col("min_v"), col("max_v"),
-        (col("sum_v").cast("double") / col("n_px").cast("double"))
-          .as("mean_v"))
+  /** Per-channel pixel statistics over COMPRESSED PNGs decoded by ImageIO
+    * (R, G, B in stream order) — same output contract and same closed-form
+    * oracle family as [[pixelStats]], but the decode now crosses a zlib
+    * DEFLATE stream and per-row filter reconstruction. A hash match proves
+    * both, because any slip changes the position-weighted sums. */
+  def pngPixelStats(s: SparkSession, d: String): DataFrame =
+    imageStats(s, pngAssets(s, d), Seq(0, 1, 2))
       .orderBy(col("doc_id"), col("channel"))
-  }
 
   /** Perceptual-hash near-duplicate detection over media content — the
     * image-dedup analog of MinHash/LSH: a 63-bit dHash (each bit = "is
@@ -868,7 +741,7 @@ object Multimodal extends QueryModule {
     * table growth and width bumps, not a literals-plus-clears shortcut —
     * a decoder without a working code table cannot read it. Width grows
     * when the NEXT code would not fit (`nextCode > 2^size` after the
-    * add — the deferred, spec-standard timing that pairs with the
+    * add — the deferred, spec-standard timing that pairs with a
     * decoder's `next == 2^size` rule, one table entry apart by
     * construction); at 4096 the table resets through a CLEAR code. */
   private[ops] def lzwEncode(pixels: Array[Int], minCode: Int): Array[Byte] = {
@@ -938,213 +811,43 @@ object Multimodal extends QueryModule {
       .mapPartitions { rows =>
         rows.map { case (id, text, w, h) =>
           val txt = text.getBytes("UTF-8")
-          val px = Array.tabulate(w * h)(i =>
-            if (i < txt.length) txt(i) & 0xff else ' '.toInt)
-          val out = new java.io.ByteArrayOutputStream()
-          def le16(v: Int): Unit = { out.write(v & 0xff); out.write(v >> 8 & 0xff) }
-          out.write("GIF89a".getBytes("US-ASCII"))
-          le16(w); le16(h)
-          out.write(0xF7) // GCT present, 8-bit color res, 256 entries
-          out.write(0); out.write(0) // background index, aspect
-          var g = 0
-          while (g < 256) { out.write(g); out.write(g); out.write(g); g += 1 }
-          out.write(0x2C) // image descriptor
-          le16(0); le16(0); le16(w); le16(h)
-          out.write(0) // no local table, not interlaced
-          out.write(8) // LZW minimum code size
-          out.write(lzwEncode(px, 8))
-          out.write(0x3B) // trailer
-          (id, out.toByteArray)
+          (id, encodeGif(Array.tabulate(w * h)(i =>
+            if (i < txt.length) txt(i) & 0xff else ' '.toInt), w, h))
         }
       }
       .toDF("doc_id", "payload")
   }
 
-  /** Real GIF LZW DECODER: concatenate the framed sub-blocks, read
-    * variable-width codes LSB-first, rebuild the string table as
-    * prefix/suffix links (including the KwKwK case — a code referencing
-    * the entry being defined), honor CLEAR resets, and bump the width
-    * when the table reaches 2^size. Returns the palette-index stream. */
-  private[ops] def lzwDecode(data: Array[Byte], minCode: Int,
-      maxPixels: Int): Array[Int] = {
-    val clear = 1 << minCode
-    val eoi = clear + 1
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Int](4096)
-    var next = eoi + 1
-    var codeSize = minCode + 1
-    var bitBuf = 0L; var bitCnt = 0; var pos = 0
-    val out = new Array[Int](maxPixels)
-    var n = 0
-    def readCode(): Int = {
-      while (bitCnt < codeSize) {
-        if (pos >= data.length) return -1
-        bitBuf |= (data(pos) & 0xffL) << bitCnt; bitCnt += 8; pos += 1
-      }
-      val c = (bitBuf & ((1L << codeSize) - 1)).toInt
-      bitBuf >>>= codeSize; bitCnt -= codeSize
-      c
-    }
-    val seq = new Array[Int](4096)
-    def expand(code: Int): Int = { // fills seq reversed, returns length
-      var c = code; var l = 0
-      while (c >= clear + 2) { seq(l) = suffix(c); l += 1; c = prefix(c) }
-      seq(l) = c; l + 1
-    }
-    var prev = -1
-    var done = false
-    while (!done) {
-      val code = readCode()
-      if (code < 0 || code == eoi) done = true
-      else if (code == clear) { next = eoi + 1; codeSize = minCode + 1; prev = -1 }
-      else if (prev == -1) {
-        if (code >= clear || n >= maxPixels) return Array.empty
-        out(n) = code; n += 1; prev = code
-      } else {
-        val known = code < next && (code < clear || code >= clear + 2)
-        if (!known && code != next) return Array.empty
-        val l = if (known) expand(code)
-          else { val pl = expand(prev); // KwKwK: prev's string + its first
-            val first = seq(pl - 1)
-            var i = pl; while (i > 0) { seq(i) = seq(i - 1); i -= 1 }
-            seq(0) = first; pl + 1 }
-        if (n + l > maxPixels) return Array.empty
-        var i = l - 1
-        while (i >= 0) { out(n) = seq(i); n += 1; i -= 1 }
-        if (next < 4096) {
-          prefix(next) = prev; suffix(next) = seq(l - 1); next += 1
-          if (next == (1 << codeSize) && codeSize < 12) codeSize += 1
-        }
-        prev = code
-      }
-    }
-    if (n == maxPixels) out else Array.empty
+  /** One w×h GIF89a image of 8-bit palette indices `px` (row-major), with a
+    * 256-entry gray global color table (index = gray value). */
+  private[ops] def encodeGif(px: Array[Int], w: Int, h: Int): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    def le16(v: Int): Unit = { out.write(v & 0xff); out.write(v >> 8 & 0xff) }
+    out.write("GIF89a".getBytes("US-ASCII"))
+    le16(w); le16(h)
+    out.write(0xF7) // GCT present, 8-bit color res, 256 entries
+    out.write(0); out.write(0) // background index, aspect
+    var g = 0
+    while (g < 256) { out.write(g); out.write(g); out.write(g); g += 1 }
+    out.write(0x2C) // image descriptor
+    le16(0); le16(0); le16(w); le16(h)
+    out.write(0) // no local table, not interlaced
+    out.write(8) // LZW minimum code size
+    out.write(lzwEncode(px, 8))
+    out.write(0x3B) // trailer
+    out.toByteArray
   }
 
-  /** REAL GIF decode: verify the GIF87a/89a magic, parse the logical
-    * screen descriptor, read the global color table, skip any extension
-    * blocks (0x21-introduced, sub-block framed), parse the image
-    * descriptor (INCLUDING the four-pass interlace row order, which
-    * ImageIO emits by default — position weights map stream rows back to
-    * logical rows), de-frame and [[lzwDecode]] the code stream, and map
-    * indices through the palette's red channel. Returns Nil for anything
-    * malformed: bad magic, missing GCT, local color tables, truncated
-    * blocks, or a corrupt LZW stream (the same strict contract as
-    * [[decodeBmp]]/[[decodePng]]). */
-  private[ops] def decodeGif(bytes: Array[Byte]): Seq[(Long, Long, Long, Long, Long)] = {
-    if (bytes.length < 14) return Seq.empty
-    val magic = new String(bytes, 0, 6, "US-ASCII")
-    if (magic != "GIF89a" && magic != "GIF87a") return Seq.empty
-    def u16(o: Int): Int = (bytes(o) & 0xff) | (bytes(o + 1) & 0xff) << 8
-    val packed = bytes(10) & 0xff
-    if ((packed & 0x80) == 0) return Seq.empty // need a global color table
-    val gctSize = 2 << (packed & 7)
-    var off = 13
-    if (off + gctSize * 3 > bytes.length) return Seq.empty
-    val palR = new Array[Int](gctSize)
-    var i = 0
-    while (i < gctSize) { palR(i) = bytes(off + i * 3) & 0xff; i += 1 }
-    off += gctSize * 3
-    // Skip extension blocks; require an image descriptor next.
-    while (off < bytes.length && (bytes(off) & 0xff) == 0x21) {
-      off += 2 // introducer + label
-      while (off < bytes.length && bytes(off) != 0) off += (bytes(off) & 0xff) + 1
-      off += 1
-    }
-    if (off + 10 > bytes.length || (bytes(off) & 0xff) != 0x2C) return Seq.empty
-    val w = u16(off + 5); val h = u16(off + 7)
-    val ipacked = bytes(off + 9) & 0xff
-    if (w <= 0 || h <= 0 || (ipacked & 0x80) != 0) return Seq.empty
-    // Budget before lzwDecode's output allocation (u16×u16 can overflow
-    // the Int pixel count AND demand a 16 GiB table otherwise).
-    if (w.toLong * h > MaxDecodePixels) return Seq.empty
-    // Interlaced images store rows in the spec's four passes
-    // (0,8,16… then 4,12… then 2,6… then 1,3,5…): rowOf maps the
-    // stream row to its logical row so position weights stay honest.
-    val interlaced = (ipacked & 0x40) != 0
-    val rowOf: Array[Int] =
-      if (!interlaced) Array.tabulate(h)(identity)
-      else {
-        val order = Array.newBuilder[Int]
-        Seq((0, 8), (4, 8), (2, 4), (1, 2)).foreach { case (start, step) =>
-          var y = start; while (y < h) { order += y; y += step }
-        }
-        order.result()
-      }
-    off += 10
-    if (off >= bytes.length) return Seq.empty
-    val minCode = bytes(off) & 0xff
-    off += 1
-    // De-frame the LZW sub-blocks.
-    val data = new java.io.ByteArrayOutputStream()
-    var bl = if (off < bytes.length) bytes(off) & 0xff else -1
-    while (bl > 0) {
-      if (off + 1 + bl > bytes.length) return Seq.empty
-      data.write(bytes, off + 1, bl)
-      off += 1 + bl
-      bl = if (off < bytes.length) bytes(off) & 0xff else -1
-    }
-    if (bl != 0 || minCode < 2 || minCode > 8) return Seq.empty
-    val idx = lzwDecode(data.toByteArray, minCode, w * h)
-    if (idx.isEmpty) return Seq.empty
-    var sum = 0L; var wsum = 0L
-    var mn = Long.MaxValue; var mx = Long.MinValue
-    i = 0
-    while (i < idx.length) {
-      if (idx(i) >= gctSize) return Seq.empty
-      val v = palR(idx(i)).toLong
-      val logical = rowOf(i / w).toLong * w + i % w
-      sum += v; wsum += logical * v
-      if (v < mn) mn = v; if (v > mx) mx = v
-      i += 1
-    }
-    Seq((w.toLong * h, sum, wsum, mn, mx))
-  }
-
-  /** Pixel statistics over genuinely decoded GIFs — the LZW rung of the
-    * decode ladder: every [[gifAssets]] payload runs through [[decodeGif]]
-    * (full dictionary decode, palette mapping) inside the mapPartitions
-    * codec contract, and the oracle re-derives the pixels character-
-    * arithmetically from the source text without parsing the container —
-    * a hash match proves the LZW round trip at the byte level, position-
-    * weighted so a scrambled decode order cannot pass. GifSpec
-    * additionally proves interop BOTH directions against ImageIO's stock
-    * GIF codec (our files read by it, its files read by us — including a
-    * large image that forces code-width growth and table resets). */
-  def gifPixelStats(s: SparkSession, d: String): DataFrame = {
-    val spark = s
-    import spark.implicits._
-    gifAssets(s, d)
-      .select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.grouped(64).flatMap(_.iterator.flatMap { case (id, bytes) =>
-          decodeGif(bytes).map { case (n, sum, wsum, mn, mx) =>
-            (id, n, sum, wsum, mn, mx)
-          }
-        })
-      }
-      .toDF("doc_id", "n_px", "sum_v", "wsum_v", "min_v", "max_v")
-      .select(col("doc_id"), col("n_px"), col("sum_v"), col("wsum_v"),
-        col("min_v"), col("max_v"),
-        (col("sum_v").cast("double") / col("n_px").cast("double"))
-          .as("mean_v"))
+  /** Pixel statistics over GIFs decoded by ImageIO: the palette red value
+    * of each pixel, with no channel column. The oracle re-derives the
+    * pixels character-arithmetically from the source text without parsing
+    * the container — a hash match proves the LZW round trip at the byte
+    * level, position-weighted so a scrambled decode order cannot pass. */
+  def gifPixelStats(s: SparkSession, d: String): DataFrame =
+    imageStats(s, gifAssets(s, d), Seq(0)).drop("channel")
       .orderBy(col("doc_id"))
-  }
 
   // --- JPEG: the entropy-coding + transform rung of the codec ladder ---
-
-  /** Zigzag index k → natural (row-major v*8+u) coefficient index, per
-    * ITU-T T.81 Figure A.6. */
-  private[ops] val Zigzag: Array[Int] = Array(
-    0, 1, 8, 16, 9, 2, 3, 10,
-    17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34,
-    27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36,
-    29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46,
-    53, 60, 61, 54, 47, 55, 62, 63)
 
   /** Standard luminance Huffman tables (ITU-T T.81 Annex K.3.3): the
     * (bits-per-length, values) pairs every baseline encoder ships. */
@@ -1181,13 +884,6 @@ object Multimodal extends QueryModule {
     out.result()
   }
 
-  /** Cosine/scale tables for the 8×8 DCT basis, StrictMath for cross-JVM
-    * determinism. */
-  private val CosT: Array[Array[Double]] =
-    Array.tabulate(8, 8)((x, u) => StrictMath.cos((2 * x + 1) * u * StrictMath.PI / 16))
-  private val CFac: Array[Double] =
-    Array.tabulate(8)(u => if (u == 0) 1.0 / StrictMath.sqrt(2.0) else 1.0)
-
   /** JPEG asset table with REAL baseline JPEGs — the final rung of the
     * codec ladder (PNG proved DEFLATE + filters; GIF proved LZW; JPEG
     * adds ENTROPY CODING + the transform): each payload is a complete
@@ -1203,8 +899,7 @@ object Multimodal extends QueryModule {
     * reconstructs the source EXACTLY through real quantization: the
     * decode is bit-predictable (the closed-form oracle) while still
     * crossing real Huffman tables, DC-difference categories, stuffed
-    * bytes, dequantization, and a full 64-coefficient IDCT. JpegSpec
-    * proves interop both directions against ImageIO's stock codec. */
+    * bytes, dequantization, and a full 64-coefficient IDCT. */
   def jpegAssets(s: SparkSession, d: String): DataFrame = {
     val spark = s
     import spark.implicits._
@@ -1276,236 +971,17 @@ object Multimodal extends QueryModule {
     out.toByteArray
   }
 
-  /** REAL baseline JPEG decode (grayscale, 1 component, 1×1 sampling):
-    * walk the marker stream (skipping APPn/COM), parse DQT (8-bit
-    * precision, multiple tables per segment), build canonical Huffman
-    * decoders from DHT exactly per T.81 Annex C, reject anything but an
-    * 8-bit single-component SOF0, then entropy-decode the scan — stuffed
-    * 0xFF00 bytes, RSTn handling (predictor reset + byte alignment), DC
-    * difference sign-extension, the GENERAL AC run-length loop (EOB /
-    * ZRL / (run,size) pairs — not just the EOB our own encoder emits),
-    * dequantization through the zigzag map, and a full 64-coefficient
-    * floating IDCT with level shift and clamp. Returns None on any
-    * malformation. */
-  private[ops] def decodeJpegImage(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] = {
-    if (bytes.length < 4 || (bytes(0) & 0xff) != 0xff || (bytes(1) & 0xff) != 0xd8)
-      return None
-    var off = 2
-    val quant = scala.collection.mutable.Map.empty[Int, Array[Int]]
-    // (class, id) → (maxLen-keyed canonical decode map)
-    val huff = scala.collection.mutable.Map.empty[(Int, Int), Map[(Int, Int), Int]]
-    var w = -1; var h = -1; var qId = -1
-    var dcT = -1; var acT = -1
-    var scanAt = -1
-    def u16(i: Int): Int = ((bytes(i) & 0xff) << 8) | (bytes(i + 1) & 0xff)
-    while (scanAt < 0) {
-      if (off + 2 > bytes.length) return None
-      if ((bytes(off) & 0xff) != 0xff) return None
-      val m = bytes(off + 1) & 0xff
-      // Length-less markers first — reading a u16 "length" from what
-      // follows them would mis-skip real data: 0xff is a legal fill byte
-      // before any marker (T.81 B.1.1.2); TEM (0x01) is standalone and
-      // skippable; RSTn/EOI (0xd0–0xd9) carry no length and are illegal
-      // before the scan, so the stream is malformed, not mis-parsed.
-      // FF 00 is NOT a marker at all (the 00 is an escape only inside
-      // entropy-coded data) — parsing a "length" after it would let a
-      // crafted stream swallow real header segments; reject instead.
-      if (m == 0xff) { off += 1 }
-      else if (m == 0x00) return None
-      else if (m == 0x01) { off += 2 }
-      else if (m >= 0xd0 && m <= 0xd9) return None
-      else {
-        if (off + 4 > bytes.length) return None
-        val len = u16(off + 2)
-        if (len < 2 || off + 2 + len > bytes.length) return None
-        m match {
-          case 0xdb =>
-            var p = off + 4
-            while (p < off + 2 + len) {
-              val pq = (bytes(p) & 0xff) >> 4; val tq = bytes(p) & 0x0f
-              if (pq != 0 || p + 65 > off + 2 + len) return None
-              quant(tq) = Array.tabulate(64)(i => bytes(p + 1 + i) & 0xff)
-              p += 65
-            }
-          case 0xc4 =>
-            var p = off + 4
-            while (p < off + 2 + len) {
-              // bounds BEFORE the reads: a declared len too short for even
-              // the 16 bits-bytes must reject, not index past the segment
-              if (p + 17 > off + 2 + len) return None
-              val tc = (bytes(p) & 0xff) >> 4; val th = bytes(p) & 0x0f
-              val bits = Array.tabulate(16)(i => bytes(p + 1 + i) & 0xff)
-              val n = bits.sum
-              if (p + 17 + n > off + 2 + len) return None
-              val vals = Array.tabulate(n)(i => bytes(p + 17 + i) & 0xff)
-              // (length, code) → value, canonical assignment as in encode
-              huff((tc, th)) = huffCodes(bits, vals).map {
-                case (v, (code, l)) => (l, code) -> v
-              }
-              p += 17 + n
-            }
-          case 0xc0 =>
-            if (len < 11) return None
-            if ((bytes(off + 4) & 0xff) != 8) return None
-            h = u16(off + 5); w = u16(off + 7)
-            if ((bytes(off + 9) & 0xff) != 1) return None // 1 component only
-            if ((bytes(off + 11) & 0xff) != 0x11) return None // 1x1 sampling
-            qId = bytes(off + 12) & 0x0f
-          case 0xc2 => return None // progressive unsupported
-          case 0xda =>
-            if (len < 8) return None
-            if ((bytes(off + 4) & 0xff) != 1) return None
-            dcT = (bytes(off + 6) & 0xff) >> 4; acT = bytes(off + 6) & 0x0f
-            scanAt = off + 2 + len
-          case _ => () // APPn / COM / DRI(ignored: no-restart streams) skip
-        }
-        if (scanAt < 0) off += 2 + len
-      }
-    }
-    if (w <= 0 || h <= 0) return None
-    // Budget before the pixel allocation: u16×u16 dims can overflow the
-    // Int w*h (NegativeArraySizeException) or demand gigabytes on a
-    // header nothing has validated yet.
-    if (w.toLong * h > MaxDecodePixels) return None
-    val q = quant.getOrElse(qId, return None)
-    val dcMap = huff.getOrElse((0, dcT), return None)
-    val acMap = huff.getOrElse((1, acT), return None)
-    // Entropy-coded bit reader with un-stuffing and marker detection.
-    var p = scanAt; var acc = 0; var nbits = 0; var hitEnd = false
-    def readBit(): Int = {
-      if (nbits == 0) {
-        if (hitEnd || p >= bytes.length) return -1
-        val b = bytes(p) & 0xff; p += 1
-        if (b == 0xff) {
-          val nx = if (p < bytes.length) bytes(p) & 0xff else -1
-          if (nx == 0x00) p += 1 // stuffed data byte
-          else { hitEnd = true; return -1 } // a real marker ends the scan
-        }
-        acc = b; nbits = 8
-      }
-      nbits -= 1; (acc >> nbits) & 1
-    }
-    def decodeSym(tbl: Map[(Int, Int), Int]): Int = {
-      var code = 0; var l = 0
-      while (l < 16) {
-        val b = readBit(); if (b < 0) return -1
-        code = (code << 1) | b; l += 1
-        tbl.get((l, code)) match {
-          case Some(v) => return v
-          case None => ()
-        }
-      }
-      -1
-    }
-    def receiveExtend(s: Int): Int = {
-      var v = 0
-      for (_ <- 0 until s) { val b = readBit(); if (b < 0) return Int.MinValue; v = (v << 1) | b }
-      if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
-    }
-    // ceil-divide: arbitrary dimensions are legal — edge MCUs carry
-    // padding samples that are decoded and then clipped on write-out
-    val wb = (w + 7) / 8; val hb = (h + 7) / 8
-    val px = new Array[Int](w * h)
-    val coef = new Array[Double](64)
-    var pred = 0
-    var k = 0
-    while (k < wb * hb) {
-      // RSTn between restart intervals: discard the pad bits (byte
-      // align), consume the marker, reset the DC predictor.
-      if (!hitEnd && p + 1 < bytes.length && (bytes(p) & 0xff) == 0xff) {
-        val nx = bytes(p + 1) & 0xff
-        if (nx >= 0xd0 && nx <= 0xd7) { p += 2; pred = 0; nbits = 0 }
-      }
-      java.util.Arrays.fill(coef, 0.0)
-      val t = decodeSym(dcMap); if (t < 0 || t > 11) return None
-      val diff = receiveExtend(t); if (diff == Int.MinValue) return None
-      pred += diff
-      coef(0) = pred.toDouble * q(0)
-      var i = 1
-      var eob = false
-      while (i < 64 && !eob) {
-        val rs = decodeSym(acMap); if (rs < 0) return None
-        val r = rs >> 4; val s = rs & 0x0f
-        if (s == 0) {
-          if (rs == 0xf0) i += 16 // ZRL: 16 zeros
-          else eob = true // EOB
-        } else {
-          i += r
-          if (i > 63) return None
-          val v = receiveExtend(s); if (v == Int.MinValue) return None
-          coef(Zigzag(i)) = v.toDouble * q(i)
-          i += 1
-        }
-      }
-      // Full 2D IDCT + level shift + clamp into the block's pixels.
-      val by = k / wb; val bx = k % wb
-      var y = 0
-      while (y < 8) {
-        var x = 0
-        while (x < 8) {
-          var sum = 0.0
-          var v = 0
-          while (v < 8) {
-            var u = 0
-            while (u < 8) {
-              val c = coef(v * 8 + u)
-              if (c != 0.0)
-                sum += CFac(v) * CFac(u) * c * CosT(y)(v) * CosT(x)(u)
-              u += 1
-            }
-            v += 1
-          }
-          val pix = StrictMath.floor(sum / 4.0 + 128.5).toInt
-          val py = by * 8 + y; val pxx = bx * 8 + x
-          if (py < h && pxx < w) // edge-MCU padding clips away
-            px(py * w + pxx) =
-              if (pix < 0) 0 else if (pix > 255) 255 else pix
-          x += 1
-        }
-        y += 1
-      }
-      k += 1
-    }
-    Some((w, h, px))
-  }
-
-  /** Pixel statistics over genuinely decoded baseline JPEGs — same output
-    * contract as [[pngPixelStats]] (channel always 0: grayscale), same
-    * closed-form oracle family: the even-rounding synthesis makes the
-    * lossy-codec roundtrip exactly predictable, so DuckDB re-derives the
-    * decoded pixels character-arithmetically and a hash match proves the
-    * Huffman stream, the stuffing, the dequantization and the IDCT at
-    * the byte level (position-weighted sums catch any block-order or
-    * in-block slip). */
-  def jpegPixelStats(s: SparkSession, d: String): DataFrame = {
-    val spark = s
-    import spark.implicits._
-    jpegAssets(s, d)
-      .select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.grouped(64).flatMap(_.iterator.flatMap { case (id, bytes) =>
-          decodeJpegImage(bytes).toSeq.map { case (w, h, px) =>
-            var sum = 0L; var wsum = 0L
-            var mn = Long.MaxValue; var mx = Long.MinValue
-            var i = 0
-            while (i < px.length) {
-              val v = px(i).toLong
-              sum += v; wsum += i.toLong * v
-              if (v < mn) mn = v; if (v > mx) mx = v
-              i += 1
-            }
-            (id, 0, w.toLong * h, sum, wsum, mn, mx)
-          }
-        })
-      }
-      .toDF("doc_id", "channel", "n_px", "sum_v", "wsum_v", "min_v", "max_v")
-      .select(col("doc_id"), col("channel").cast("int").as("channel"),
-        col("n_px"), col("sum_v"), col("wsum_v"), col("min_v"), col("max_v"),
-        (col("sum_v").cast("double") / col("n_px").cast("double"))
-          .as("mean_v"))
+  /** Pixel statistics over baseline JPEGs decoded by ImageIO — same output
+    * contract as [[pngPixelStats]] (channel always 0: grayscale), read
+    * from the raw raster sample: `getRGB` would route the gray value
+    * through the linear-gray→sRGB conversion and gamma-shift it. The
+    * even-rounding synthesis makes the lossy roundtrip exactly
+    * predictable, so DuckDB re-derives the decoded pixels
+    * character-arithmetically (position-weighted sums catch any
+    * block-order or in-block slip). */
+  def jpegPixelStats(s: SparkSession, d: String): DataFrame =
+    imageStats(s, jpegAssets(s, d), Seq(0))
       .orderBy(col("doc_id"), col("channel"))
-  }
 
   override def catalog: Seq[Query] = Seq(
     // Closed-form from the jpegAssets synthesis: the even-rounded block
@@ -1676,7 +1152,7 @@ object Multimodal extends QueryModule {
     // source text (the data chunk's bytes), using only the SYNTHESIS
     // formulas for channel count / rate / depth — the container the Spark
     // decoder must actually walk is never parsed here, so equality proves
-    // the real chunk walk + LE fmt decode + frame de-interleave.
+    // the writer's chunk layout + fmt fields + frame interleave.
     Query("mm_features", features, Some(
       """WITH p AS (
         |  SELECT doc_id, text,
@@ -1767,7 +1243,7 @@ object Multimodal extends QueryModule {
     // Identical oracle to mm_pixel_stats: BMP and PNG carry the SAME
     // logical pixels (row-major text mapping, same dims formulas) behind
     // different containers — one first-principles recomputation proves
-    // both decoders, including the PNG side's inflate + unfilter.
+    // both containers, including the PNG side's deflate + row filters.
     Query("mm_png_pixels", pngPixelStats, Some(
       """WITH p AS (
         |  SELECT doc_id, text,

@@ -109,7 +109,9 @@ class ContractSpec extends AnyFunSuite {
     * previously each ran their own pair of full catalog sweeps (~4×398
     * query executions — the dominant term of the whole suite's wall-clock,
     * and the reason the driver's test gate timed out in round 14); sharing
-    * two sweeps keeps every assertion and halves the catalog executions. */
+    * two sweeps keeps every assertion and halves the catalog executions.
+    * Queries run through [[Run.sweep]], which releases what each one
+    * cached before the next starts. */
   private def sweep(parts: String): (Map[String, Seq[String]], Map[String, Long]) = {
     val gated = SparkEntry.oracleSql.keySet
     val prior = sweepSession.conf.get("spark.sql.shuffle.partitions")
@@ -117,16 +119,23 @@ class ContractSpec extends AnyFunSuite {
     try {
       val rows = Map.newBuilder[String, Seq[String]]
       val counts = Map.newBuilder[String, Long]
-      SparkEntry.queries.foreach { case (name, fn) =>
-        val df = fn(sweepSession, TestSpark.sf)
-        if (gated(name)) {
-          val r = df.collect().map(_.toString).toSeq
-          rows += name -> r
-          counts += name -> r.size.toLong
-        } else counts += name -> df.count()
-      }
+      val outcomes = Run.sweep(sweepSession, TestSpark.sf, SparkEntry.queries.toSeq,
+        action = (name, df) =>
+          if (gated(name)) {
+            val r = df.collect().map(_.toString).toSeq
+            rows += name -> r
+            counts += name -> r.size.toLong
+          } else counts += name -> Run.materialize(df))
+      assertRan(outcomes, s"shuffle.partitions=$parts")
       (rows.result(), counts.result())
     } finally sweepSession.conf.set("spark.sql.shuffle.partitions", prior)
+  }
+
+  /** Fails naming every query with a run that threw. */
+  private def assertRan(outcomes: Seq[Run.Outcome], what: String): Unit = {
+    val failed = outcomes.flatMap(o => o.runs.collectFirst { case Left(e) =>
+      s"${o.name}: ${e.getClass.getName}: ${e.getMessage}" })
+    assert(failed.isEmpty, s"$what: ${failed.size} queries failed: ${failed.mkString("; ")}")
   }
 
   /** The sweeps run on a session of their own, so what the catalog leaves
@@ -145,21 +154,24 @@ class ContractSpec extends AnyFunSuite {
 
   test("every query runs at sf0.001 and returns a deterministic row count") {
     val gated = SparkEntry.oracleSql.keySet
-    SparkEntry.queries.foreach { case (name, fn) =>
+    // rows-only queries keep the original same-config double run: their
+    // row counts are not asserted partition-count-invariant
+    // (dd_minhash_pairs' top-100 cut is order-sensitive at the margin)
+    val rowsOnly = SparkEntry.queries.toSeq.filterNot { case (name, _) => gated(name) }
+    val twice = scala.collection.mutable.Map.empty[String, Vector[Long]]
+      .withDefaultValue(Vector.empty)
+    assertRan(Run.sweep(spark, TestSpark.sf, rowsOnly, passes = 2,
+      action = (name, df) => twice(name) = twice(name) :+ Run.materialize(df)),
+      "rows-only double run")
+    SparkEntry.queries.keys.foreach { name =>
       assert(sweepAt1._2(name) > 0, s"$name returned no rows at sf0.001")
       if (gated(name))
         // cross-partitioning count equality (strictly stronger than the
         // previous same-config double run for the gated set)
         assert(sweepAt1._2(name) == sweepAt7._2(name),
           s"$name nondeterministic count")
-      else {
-        // rows-only queries keep the original same-config double run:
-        // their row counts are not asserted partition-count-invariant
-        // (dd_minhash_pairs' top-100 cut is order-sensitive at the margin)
-        val n1 = fn(spark, TestSpark.sf).count()
-        val n2 = fn(spark, TestSpark.sf).count()
-        assert(n1 == n2, s"$name nondeterministic count")
-      }
+      else assert(twice(name).size == 2 && twice(name)(0) == twice(name)(1),
+        s"$name nondeterministic count: ${twice(name)}")
     }
   }
 

@@ -4,7 +4,8 @@ import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Corruption-robustness battery for the whole codec ladder
-  * (BMP / PNG / GIF / WAV / JPEG). The decoders run inside
+  * (BMP / PNG / GIF / JPEG through ImageIO's [[Multimodal.decodeImage]],
+  * WAV through AudioSystem's [[Multimodal.decodePcm]]). The decoders run inside
   * `mapPartitions` over binary columns — at fleet scale a single
   * uncaught exception on one malformed payload kills a task (and with
   * retries, the stage), so the load-bearing contract is NOT "decodes
@@ -21,21 +22,18 @@ class CodecFuzzSpec extends AnyFunSuite {
     df.select("doc_id", "payload").orderBy("doc_id").limit(1)
       .collect()(0).getAs[Array[Byte]]("payload")
 
-  // Each decoder wrapped to a uniform "returns row count" shape; the
-  // value is irrelevant, only normal return matters.
+  // Each format's decoder wrapped to a uniform "returns row count" shape;
+  // the value is irrelevant, only normal return matters.
   private lazy val codecs: Seq[(String, Array[Byte], Array[Byte] => Int)] = {
     val sf = TestSpark.sf
+    val image = (b: Array[Byte]) => Multimodal.decodeImage(b).size
     Seq(
-      ("bmp", firstPayload(Multimodal.bmpAssets(spark, sf)),
-        (b: Array[Byte]) => Multimodal.decodeBmp(b).size),
-      ("png", firstPayload(Multimodal.pngAssets(spark, sf)),
-        (b: Array[Byte]) => Multimodal.decodePng(b).size),
-      ("gif", firstPayload(Multimodal.gifAssets(spark, sf)),
-        (b: Array[Byte]) => Multimodal.decodeGif(b).size),
+      ("bmp", firstPayload(Multimodal.bmpAssets(spark, sf)), image),
+      ("png", firstPayload(Multimodal.pngAssets(spark, sf)), image),
+      ("gif", firstPayload(Multimodal.gifAssets(spark, sf)), image),
       ("wav", firstPayload(Multimodal.audioAssets(spark, sf)),
         (b: Array[Byte]) => Multimodal.decodePcm(b).size),
-      ("jpeg", firstPayload(Multimodal.jpegAssets(spark, sf)),
-        (b: Array[Byte]) => Multimodal.decodeJpegImage(b).size))
+      ("jpeg", firstPayload(Multimodal.jpegAssets(spark, sf)), image))
   }
 
   // The battery's contract is "the decoder RETURNS" — so non-termination

@@ -162,44 +162,6 @@ class LlmSpec extends AnyFunSuite {
     assert(fp(t).intersect(fp("completely different content here entirely")).isEmpty)
   }
 
-  test("multimodal features: real PCM decode of known-byte WAV payloads") {
-    // doc 1 (odd): stereo 16-bit; doc 2 (even): mono 8-bit — both decode
-    // paths, with every data byte 'A' (65) so the expected samples are
-    // closed-form: 16-bit LE pair = 65 + 256*65 = 16705, 8-bit = 65-128.
-    val d = docsDir(Seq(1L -> ("A" * 80), 2L -> ("A" * 80)))
-    val rows = Multimodal.features(spark, d).collect()
-    assert(rows.map(r => (r.getLong(0), r.getInt(1))).toSeq ==
-      Seq((1L, 0), (1L, 1), (2L, 0)), "stereo doc yields 2 channels, mono 1")
-    val stereo = rows.filter(_.getLong(0) == 1L)
-    stereo.foreach { r =>
-      assert(r.getLong(2) == 16000L)            // (1 % 3 + 1) * 8000
-      assert(r.getLong(3) == 20L)               // 80 bytes / (2ch * 2B)
-      assert(r.getLong(4) == 20L * 16705L)      // sum_amp
-      assert(r.getDouble(5) == 16705.0)         // mean
-      assert(r.getDouble(6) == 16705.0)         // rms of a constant
-      assert(r.getLong(7) == 16705L)            // peak
-    }
-    val mono = rows.find(_.getLong(0) == 2L).get
-    assert(mono.getLong(2) == 24000L)           // (2 % 3 + 1) * 8000
-    assert(mono.getLong(3) == 80L)              // 80 bytes / (1ch * 1B)
-    assert(mono.getLong(4) == 80L * (65L - 128L))
-    assert(mono.getDouble(5) == -63.0)
-    assert(mono.getDouble(6) == 63.0)
-    assert(mono.getLong(7) == 63L)
-  }
-
-  test("multimodal features: decoder drops partial trailing frames") {
-    // doc 3 (odd, stereo 16-bit): 7 data bytes = 1 full 4-byte frame + 3
-    // trailing bytes that a real reader must drop
-    val d = docsDir(Seq(3L -> "ABCDEFG"))
-    val rows = Multimodal.features(spark, d).collect()
-    assert(rows.length == 2 && rows.forall(_.getLong(3) == 1L),
-      "exactly one full frame per channel")
-    // frame bytes: ch0 = 'A','B' -> 65 + 256*66 = 16961; ch1 = 'C','D'
-    assert(rows.find(_.getInt(1) == 0).get.getLong(4) == 65L + 256L * 66L)
-    assert(rows.find(_.getInt(1) == 1).get.getLong(4) == 67L + 256L * 68L)
-  }
-
   test("semdedup: flags exactly the known sf0.001 dup, keeps its lower-id twin") {
     val out = LlmSimilarity.semDedup(spark, graft.TestSpark.sf).collect()
     assert(out.length == 500)

@@ -6,31 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Property tests for the round-9 operators — invariants the DuckDB oracle
   * can't express (the oracle gates check value equality; these check the
-  * *mechanics*, e.g. that the JPEG dimension parse really walked the
-  * marker chain rather than pattern-matching one fixed offset). */
+  * *mechanics*). The round's `mm_*` tests are in MultimodalSpec. */
 class Round9Spec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-
-  test("mm_image_dims: parsed dims match the synthesis formulas; JPEG SOF offset varies") {
-    val rows = SparkEntry.queries("mm_image_dims")(spark, TestSpark.sf).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val id = r.getLong(0)
-      val fmt = r.getString(1)
-      assert(fmt == (if (id % 2 == 0) "png" else "jpeg"))
-      assert(r.getInt(2) == (id % 4) * 160 + 320, s"width doc $id")
-      assert(r.getInt(3) == (id % 3) * 120 + 240, s"height doc $id")
-      if (fmt == "jpeg") {
-        // dims_off = SOI(2) + APP0(2 + 16 + id%8) + COM(2 + 4 + id%5) + 7
-        assert(r.getLong(4) == 2 + 2 + 16 + id % 8 + 2 + 4 + id % 5 + 7,
-          s"sof offset doc $id")
-      } else assert(r.getLong(4) == 16L)
-    }
-    // The marker scan must have produced ≥ 2 distinct offsets across the
-    // variable-length APP0/COM segments — a fixed-offset cheat can't.
-    val jpegOffs = rows.filter(_.getString(1) == "jpeg").map(_.getLong(4)).distinct
-    assert(jpegOffs.length >= 2)
-  }
 
   test("text_bpe_encode: equals a canonical lowest-rank-first BPE encode loop") {
     // Independent reference: the textbook BPE encode — repeatedly find the
@@ -153,53 +131,6 @@ class Round9Spec extends AnyFunSuite {
     sorted.sliding(2).foreach {
       case Array(a, b) => assert(a.getDouble(3) <= b.getDouble(2))
       case _ =>
-    }
-  }
-
-  test("mm_audio_meta: fields re-read by an independent java.nio LE decode") {
-    import java.nio.{ByteBuffer, ByteOrder}
-    val payloads = Multimodal.audioAssets(spark, TestSpark.sf)
-      .orderBy("doc_id").limit(8).collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]]("payload")).toMap
-    val got = SparkEntry.queries("mm_audio_meta")(spark, TestSpark.sf)
-      .filter(col("doc_id") < 8).collect()
-    assert(got.nonEmpty)
-    got.foreach { r =>
-      val id = r.getLong(0)
-      val bytes = payloads(id)
-      val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-      assert(new String(bytes.slice(0, 4), "ASCII") == "RIFF")
-      assert(new String(bytes.slice(8, 12), "ASCII") == "WAVE")
-      assert(r.getInt(1) == 1) // valid
-      assert(r.getLong(2) == (bb.getShort(22) & 0xffff).toLong, s"channels doc $id")
-      assert(r.getLong(3) == bb.getInt(24).toLong, s"sample_rate doc $id")
-      assert(r.getLong(4) == (bb.getShort(34) & 0xffff).toLong, s"bits doc $id")
-      // Walk chunks independently to find 'data'.
-      var off = 36
-      while (new String(bytes.slice(off, off + 4), "ASCII") != "data") {
-        val size = bb.getInt(off + 4)
-        off += 8 + size + (size & 1) // RIFF even-boundary pad
-      }
-      assert(r.getLong(6) == off.toLong, s"data_off doc $id")
-      assert(r.getLong(7) == bb.getInt(off + 4).toLong, s"data_len doc $id")
-      assert(r.getInt(5) == 1 && r.getInt(8) == 1) // byte_rate_ok, len_ok
-    }
-  }
-
-  test("mm_image_dims: payload bytes carry a real PNG signature / JPEG SOI") {
-    val payloads = Multimodal.imageAssets(spark, TestSpark.sf)
-      .orderBy("doc_id").limit(4).collect()
-    payloads.foreach { r =>
-      val id = r.getLong(0)
-      val bytes = r.getAs[Array[Byte]]("payload")
-      if (id % 2 == 0) {
-        assert(bytes.take(8).map(_ & 0xff).toSeq ==
-          Seq(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a))
-        // IHDR chunk type at bytes 12-15
-        assert(new String(bytes.slice(12, 16), "ASCII") == "IHDR")
-      } else {
-        assert((bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xd8)
-      }
     }
   }
 }
