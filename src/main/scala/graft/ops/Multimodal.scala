@@ -460,16 +460,19 @@ object Multimodal extends QueryModule {
     * pixel index. The weighted sum is what proves the decode reconstructed
     * positions: a flipped row order or a pad byte read as a pixel gives the
     * same plain sum but a different weighted sum. An indexed image's value
-    * is its palette red. */
+    * is its palette red. An image with fewer bands than `bands` asks for
+    * gives no rows: ImageIO also reads payloads the query's format does not
+    * describe (an 8-bpp BMP, a gray PNG) into a one-band raster. */
   private[ops] def channelStats(img: BufferedImage,
       bands: Seq[Int]): Seq[(Int, Long, Long, Long, Long, Long)] = {
     val raster = img.getRaster
+    val read = if (raster.getNumBands > bands.max) bands else Nil
     val w = img.getWidth; val h = img.getHeight
     val value: Int => Int = img.getColorModel match {
       case icm: IndexColorModel => icm.getRed
       case _ => identity
     }
-    bands.zipWithIndex.map { case (band, c) =>
+    read.zipWithIndex.map { case (band, c) =>
       var sum = 0L; var wsum = 0L
       var mn = Long.MaxValue; var mx = Long.MinValue
       var y = 0
@@ -487,12 +490,18 @@ object Multimodal extends QueryModule {
     }
   }
 
+  /** [[channelStats]] over `bands` of one payload's [[decodeImage]]; empty,
+    * never a throw, for a payload that is not such an image. */
+  private[ops] def imageRows(bytes: Array[Byte],
+      bands: Seq[Int]): Seq[(Int, Long, Long, Long, Long, Long)] =
+    decodeImage(bytes).toSeq.flatMap(channelStats(_, bands))
+
   /** The image decode inside the `mapPartitions` batch contract (iterate
     * rows in batches, emit fixed-width rows — the exact contract an
     * Arrow-batched codec UDF plugs into): every `payload` of `assets` runs
-    * through [[decodeImage]] and [[channelStats]] over `bands`. Map-only,
-    * zero shuffle; an undecodable payload emits no rows. */
-  private def imageStats(s: SparkSession, assets: DataFrame, bands: Seq[Int]): DataFrame = {
+    * through [[imageRows]]. Map-only, zero shuffle; an undecodable payload
+    * emits no rows. */
+  private[ops] def imageStats(s: SparkSession, assets: DataFrame, bands: Seq[Int]): DataFrame = {
     val spark = s
     import spark.implicits._
     assets
@@ -500,7 +509,7 @@ object Multimodal extends QueryModule {
       .as[(Long, Array[Byte])]
       .mapPartitions { rows =>
         rows.grouped(64).flatMap(_.iterator.flatMap { case (id, bytes) =>
-          decodeImage(bytes).toSeq.flatMap(channelStats(_, bands)).map {
+          imageRows(bytes, bands).map {
             case (c, n, sum, wsum, mn, mx) => (id, c, n, sum, wsum, mn, mx)
           }
         })

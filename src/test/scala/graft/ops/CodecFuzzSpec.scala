@@ -4,8 +4,9 @@ import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Corruption-robustness battery for the whole codec ladder
-  * (BMP / PNG / GIF / JPEG through ImageIO's [[Multimodal.decodeImage]],
-  * WAV through AudioSystem's [[Multimodal.decodePcm]]). The decoders run inside
+  * (BMP / PNG / GIF / JPEG through ImageIO's [[Multimodal.decodeImage]]
+  * and the per-channel statistics, WAV through AudioSystem's
+  * [[Multimodal.decodePcm]]). The decoders run inside
   * `mapPartitions` over binary columns — at fleet scale a single
   * uncaught exception on one malformed payload kills a task (and with
   * retries, the stage), so the load-bearing contract is NOT "decodes
@@ -22,18 +23,20 @@ class CodecFuzzSpec extends AnyFunSuite {
     df.select("doc_id", "payload").orderBy("doc_id").limit(1)
       .collect()(0).getAs[Array[Byte]]("payload")
 
-  // Each format's decoder wrapped to a uniform "returns row count" shape;
-  // the value is irrelevant, only normal return matters.
+  // Each format's decode + statistics path, exactly as its query runs it
+  // (image: decodeImage then channelStats over that format's raster bands),
+  // wrapped to a uniform "returns row count" shape; the value is
+  // irrelevant, only normal return matters.
   private lazy val codecs: Seq[(String, Array[Byte], Array[Byte] => Int)] = {
     val sf = TestSpark.sf
-    val image = (b: Array[Byte]) => Multimodal.decodeImage(b).size
+    def image(bands: Int*) = (b: Array[Byte]) => Multimodal.imageRows(b, bands).size
     Seq(
-      ("bmp", firstPayload(Multimodal.bmpAssets(spark, sf)), image),
-      ("png", firstPayload(Multimodal.pngAssets(spark, sf)), image),
-      ("gif", firstPayload(Multimodal.gifAssets(spark, sf)), image),
+      ("bmp", firstPayload(Multimodal.bmpAssets(spark, sf)), image(2, 1, 0)),
+      ("png", firstPayload(Multimodal.pngAssets(spark, sf)), image(0, 1, 2)),
+      ("gif", firstPayload(Multimodal.gifAssets(spark, sf)), image(0)),
       ("wav", firstPayload(Multimodal.audioAssets(spark, sf)),
         (b: Array[Byte]) => Multimodal.decodePcm(b).size),
-      ("jpeg", firstPayload(Multimodal.jpegAssets(spark, sf)), image))
+      ("jpeg", firstPayload(Multimodal.jpegAssets(spark, sf)), image(0)))
   }
 
   // The battery's contract is "the decoder RETURNS" — so non-termination

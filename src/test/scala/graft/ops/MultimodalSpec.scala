@@ -80,6 +80,33 @@ class MultimodalSpec extends AnyFunSuite {
       "truncated pixel rows")
   }
 
+  test("image stats emit no rows for one-band payloads: 8-bpp BMP, gray PNG") {
+    // ImageIO reads 8-bpp BMPs and gray PNGs into one raster band; the BMP
+    // and PNG queries read bands 2,1,0 and 0,1,2. Such a payload must give
+    // no rows inside mapPartitions, not an out-of-range band read that
+    // fails the task. The fixture BMP relabelled 8-bpp (no palette) is
+    // refused by ImageIO's header read; it too gives no rows.
+    def written(fmt: String, imageType: Int): Array[Byte] = {
+      val bos = new ByteArrayOutputStream()
+      assert(ImageIO.write(new BufferedImage(5, 3, imageType), fmt, bos))
+      bos.toByteArray
+    }
+    val badBpp = firstPayload(Multimodal.bmpAssets(spark, TestSpark.sf)).clone()
+    badBpp(28) = 8 // biBitCount
+    val oneBand = Seq(
+      "8-bpp BMP" -> (written("bmp", BufferedImage.TYPE_BYTE_INDEXED), Seq(2, 1, 0)),
+      "gray PNG" -> (written("png", BufferedImage.TYPE_BYTE_GRAY), Seq(0, 1, 2)))
+    oneBand.foreach { case (what, (b, _)) =>
+      assert(Multimodal.decodeImage(b).exists(_.getRaster.getNumBands == 1),
+        s"ImageIO reads the $what into one band")
+    }
+    (oneBand :+ ("fixture BMP relabelled 8-bpp" -> (badBpp, Seq(2, 1, 0)))).foreach {
+      case (what, (b, bands)) =>
+        val rows = Multimodal.imageStats(spark, Seq((0L, b)).toDF("doc_id", "payload"), bands)
+        assert(rows.collect().isEmpty, s"$what gives no rows")
+    }
+  }
+
   // --- PNG ---
 
   test("mm_png_pixels: pngAssets payloads decode identically under javax.imageio") {
@@ -312,7 +339,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   // --- the decode budget ---
 
-  test("decode budget: 65535x65535 BMP, PNG, GIF and JPEG headers return empty") {
+  test("decode budget: over-budget BMP, PNG, GIF and JPEG headers return empty") {
     def le32(b: Array[Byte], at: Int, v: Int): Unit =
       ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).putInt(at, v)
     def le16(b: Array[Byte], at: Int, v: Int): Unit =
@@ -343,13 +370,11 @@ class MultimodalSpec extends AnyFunSuite {
     def empty(fmt: String, b: Array[Byte]): Unit =
       assert(withDeadline(s"decodeImage on a $fmt budget header")(
         Multimodal.decodeImage(b)).isEmpty, s"$fmt must return empty")
-    Seq("bmp" -> bmp _, "png" -> png _, "gif" -> gif _, "jpeg" -> jpeg _).foreach {
-      case (fmt, make) => empty(s"$fmt ${huge}x$huge", make(huge, huge))
-    }
-    // ImageIO's BMP reader refuses pixel data larger than the declared file
-    // size and its JPEG reader dimensions over 65500, both in their own
-    // header read. These headers pass every reader's own checks, so only
-    // the budget stands between them and a multi-GiB raster.
+    // Headers every reader's own checks accept. A 65535x65535 BMP or JPEG
+    // would not test the budget: ImageIO's BMP reader refuses pixel data
+    // larger than the file-size field and its JPEG reader dimensions over
+    // 65500. Here only the budget stands between each header and a
+    // multi-GiB raster.
     Seq("bmp" -> bmp(huge, 4096), "png" -> png(huge, huge), "gif" -> gif(huge, huge),
       "jpeg" -> jpeg(65500, 65500)).foreach { case (fmt, b) =>
       val in = ImageIO.createImageInputStream(new ByteArrayInputStream(b))
